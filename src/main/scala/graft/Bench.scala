@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main. Prints ONE JSON line:
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}
@@ -28,33 +27,6 @@ object Bench {
   ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
 
   private def sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-  // 16 executor threads per child: measured over the full 59-query suite
-  // at sf0.1, local[16] lands 25% under local[4] (73 s vs 98 s) — the
-  // heavy joins/aggs are parallelism-bound while the short queries are
-  // launch-bound either way; past 16 the GC/scheduler overhead on a
-  // 32-hardware-thread box eats the gain.
-  private def cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-
-  private def session(): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // small-exchange parallelism floor — same rationale and value as
-      // GraftSession.builder (CPU-dense small shuffles were AQE-
-      // coalesced to 1-3 tasks and ran serial; see the blast-radius
-      // note there: with parallelismFirst=true the floor governs
-      // exchanges under ~parallelism × 1 MB total, by design).
-      // Env-overridable (r17) so floor-vs-stock A/B probes can
-      // interleave without a rebuild; default unchanged.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PART", "64k"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   def main(args: Array[String]): Unit =
     if (args.length >= 2 && args(0) == "--single") runSingle(args(1))
     else runSuite()
@@ -69,7 +41,7 @@ object Bench {
     * measurement (the r4 suite showed those accumulate and convoy).
     */
   private def runSingle(csv: String): Unit = {
-    val spark = session()
+    val spark = GraftSession.getOrCreate()
     val minReps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
     // 6 (was 4): the improving-while->20% loop exists to report
     // steady-state cost, but codegen-wide plans (e.g. the 30-slot l2g
@@ -305,7 +277,7 @@ object Bench {
     val fromFallback: Map[String, Double] =
       if (missing.isEmpty) Map.empty
       else {
-        val spark = session()
+        val spark = GraftSession.getOrCreate()
         val m = missing.map { name =>
           val t0 = System.nanoTime()
           val n = try SparkEntry.queries(name)(spark, sfDir).count()

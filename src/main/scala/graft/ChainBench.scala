@@ -1,7 +1,6 @@
 package graft
 
 import graft.steps.Steps
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end genetics-lifecycle chain benchmark, driven through the
@@ -86,11 +85,7 @@ object ChainBench {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val work = args.lift(1).getOrElse("target/chainbench")
-    val spark = SparkSession.builder()
-      .appName("graft-chain-bench")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate()
     // Size shuffle partitions to the INPUT, not the core count — the
     // engine's stated scale contract ("size shuffle.partitions to the
     // corpus"). At 58M input rows a fixed 32 partitions put ~2M wide
@@ -101,7 +96,7 @@ object ChainBench {
     val nInput = spark.read.parquet(s"${args.headOption
       .getOrElse("/root/testdata/sf0.1")}/lineitem.parquet").count()
     val shufflePartitions = math.min(1024L,
-      math.max(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toLong,
+      math.max(spark.sparkContext.defaultParallelism.toLong,
         nInput / 500000L)).toInt
     spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions)
     System.err.println(s"[chain] input=$nInput rows -> " +

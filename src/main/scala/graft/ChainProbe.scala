@@ -54,17 +54,13 @@ object ChainProbe {
     val src = args.headOption.getOrElse("target/chain_r13_x100")
     val work = args.lift(1).getOrElse("target/chainprobe")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .appName("graft-chain-probe")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate()
 
     // same input-sized shuffle sizing as ChainBench, against the
     // LARGEST input this probe will shuffle (the cloned loci)
     val nLoci = spark.read.parquet(s"$src/finemap_loci").count()
     val shufflePartitions = math.min(1024L,
-      math.max(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toLong,
+      math.max(spark.sparkContext.defaultParallelism.toLong,
         nLoci * factor / 500000L)).toInt
     spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions)
     System.err.println(s"[probe] base loci=$nLoci rows -> " +

@@ -2,39 +2,22 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Measurement tooling (optimization rounds): dump
   * `explain("formatted")` for registered queries to files, one per
   * query, so plan-shape claims (Exchange counts, join strategies,
   * PushedFilters) are checkable without running Spark.
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> [name1,name2,...]
-  * (no filter = every registered query). Plans are captured with the
-  * same session configuration the bench children use (local[$CPUS],
-  * shuffle.partitions=$CPUS) so the dumped plan is the benched plan.
+  * (no filter = every registered query). Plans are captured on the
+  * bench children's session ([[GraftSession.getOrCreate]]) so the
+  * dumped plan is the benched plan.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
     val only = args.lift(2).map(_.split(",").map(_.trim).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // mirror the two bench-child settings the dump session used to
-      // omit (r17): the AQE floor is runtime-only but belongs here for
-      // the claim to hold exactly, and a non-UTC host timezone can
-      // fold timestamp expressions differently at PLAN time, making a
-      // dumped plan diverge from the benched plan
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        "64k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.getOrCreate()
     Files.createDirectories(Paths.get(outDir))
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }

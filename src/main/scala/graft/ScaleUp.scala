@@ -148,23 +148,18 @@ object ScaleUp {
     val (srcDir, destDir, factorS) = (args(0), args(1), args(2))
     val tpch = args.length > 3 && args(3) == "tpch"
     val factor = factorS.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate()
+    val cpus = spark.sparkContext.defaultParallelism
     if (tpch) {
-      scaleTpch(spark, srcDir, destDir, factor, cpus.toInt)
+      scaleTpch(spark, srcDir, destDir, factor, cpus)
       spark.stop()
       return
     }
     scaleDocuments(spark.read.parquet(s"$srcDir/documents.parquet"), factor)
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .write.mode("overwrite").parquet(s"$destDir/documents.parquet")
     scaleEmbeddings(spark.read.parquet(s"$srcDir/embeddings.parquet"), factor)
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .write.mode("overwrite").parquet(s"$destDir/embeddings.parquet")
     println(s"SCALEUP done: $destDir at $factor x " +
       s"docs=${spark.read.parquet(s"$destDir/documents.parquet").count()} " +

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
@@ -47,15 +46,7 @@ object StreamCardProbe {
     val arrivals = args.lift(1).map(_.toInt).getOrElse(10000)
     val chunks = args.lift(2).map(_.toInt).getOrElse(20)
     val decades = Seq(100, 1000, 10000)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .appName("graft-stream-card-probe")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate()
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 

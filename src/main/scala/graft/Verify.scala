@@ -1,20 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate()
     new java.io.File(outDir).mkdirs()
     // optional filter (comma-separated names) for focused re-checks;
     // the driver sets no filter and dumps everything
@@ -36,7 +27,6 @@ object Verify {
     // enforced unconditionally (every digest is partition-count
     // invariant — see Goldens.expected)
     val sfTag = new java.io.File(sfDir).getName
-    val enforceGoldens = true
     val goldenRows = scala.collection.mutable.ArrayBuffer.empty[String]
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -54,17 +44,15 @@ object Verify {
           val ok = got == exp
           goldenRows += s"""{"query": ${jq(name)}, "expected": ${jq(exp)},
             | "actual": ${jq(got)}, "match": $ok,
-            | "enforced": $enforceGoldens}""".stripMargin.replace("\n", "")
-          if (!ok && enforceGoldens) {
+            | "enforced": true}""".stripMargin.replace("\n", "")
+          if (!ok) {
             System.err.println(
               s"[verify] $name GOLDEN MISMATCH: expected $exp got $got")
             import spark.implicits._
             Seq(s"golden digest mismatch: expected $exp got $got")
               .toDF("__verify_error")
               .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-          } else if (!ok)
-            System.err.println(s"[verify] $name golden differs (UNENFORCED" +
-              s" at $cpus cpus): expected $exp got $got")
+          }
         }
       }
       catch { case e: Throwable =>

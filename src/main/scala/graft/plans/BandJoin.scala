@@ -28,12 +28,12 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   *
   * Two surfaces:
   *  - [[BandJoin.bandJoin]]: the explicit compositional operator;
-  *  - [[BandJoinRewrite]]: a `Rule[LogicalPlan]` injected via
-  *    [[GraftExtensions]] (`spark.sql.extensions=graft.plans.GraftExtensions`
-  *    or `GraftSession.builder`) that applies the same rewrite
-  *    automatically to inner joins whose ONLY usable predicates are a
-  *    range band — the exact shape Catalyst would otherwise execute as
-  *    BroadcastNestedLoopJoin.
+  *  - [[BandJoinRewrite]]: a `Rule[LogicalPlan]`, registered once on
+  *    every session [[graft.GraftSession]] builds (through
+  *    [[GraftExtensions]] on `spark.sql.extensions`), that applies the
+  *    same rewrite automatically to inner joins whose ONLY usable
+  *    predicates are a range band — the exact shape Catalyst would
+  *    otherwise execute as BroadcastNestedLoopJoin.
   */
 object BandJoin {
 

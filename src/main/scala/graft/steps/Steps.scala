@@ -1046,13 +1046,7 @@ object GraftCli {
       println(Steps.usage)
       return
     }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .appName(s"graft-${args.head}")
-      .getOrCreate()
+    val spark = graft.GraftSession.getOrCreate()
     // SPARK_GRAFT_PROFILE=1: dump the step's costliest Spark stages
     // (executor-CPU-ranked) to stderr on exit — the shared profiler,
     // for attributing step-cost differences between CLI, chain, and

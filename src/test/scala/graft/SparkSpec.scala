@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared deterministic local session for specs, mirroring the
   * reference's test harness (reference: src/utils/spark.py:10-39 —
-  * local master, shuffle.partitions=1).
+  * local master, shuffle.partitions=1). Built by the production factory,
+  * so specs run the CLI's and the bench's session config.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -16,17 +17,5 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[2]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "1")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = GraftSession.getOrCreate("local[2]", 1)
 }

@@ -40,38 +40,33 @@ class BandJoinSpec extends SparkSpec {
     }
   }
 
+  // the rule is registered on the shared session by GraftSession
   test("rewrite rule: fires on equi-free range joins, result unchanged") {
-    val rule = BandJoinRewrite(spark)
-    withRule(rule) {
-      // no equi conjunct — the BroadcastNestedLoopJoin shape
-      val df = points.join(intervals, col("pos").between(col("lo"), col("hi")))
-      val optimized = df.queryExecution.optimizedPlan
-      assert(optimized.toString.contains("_graft_band"),
-        "rule should have injected band keys")
-      assert(optimized.toString.toLowerCase.contains("explode"))
-      val expected = points.select("pos").as[Long].collect().flatMap { p =>
-        intervals.collect().filter(r => p >= r.getLong(1) && p <= r.getLong(2))
-          .map(r => (p, r.getString(3)))
-      }.toSet
-      val got = df.select(col("pos"), col("name")).collect()
-        .map(r => (r.getLong(0), r.getString(1))).toSet
-      assert(got == expected)
-    }
+    // no equi conjunct — the BroadcastNestedLoopJoin shape
+    val df = points.join(intervals, col("pos").between(col("lo"), col("hi")))
+    val optimized = df.queryExecution.optimizedPlan
+    assert(optimized.toString.contains("_graft_band"),
+      "rule should have injected band keys")
+    assert(optimized.toString.toLowerCase.contains("explode"))
+    val expected = points.select("pos").as[Long].collect().flatMap { p =>
+      intervals.collect().filter(r => p >= r.getLong(1) && p <= r.getLong(2))
+        .map(r => (p, r.getString(3)))
+    }.toSet
+    val got = df.select(col("pos"), col("name")).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSet
+    assert(got == expected)
   }
 
   test("rewrite rule: leaves equi joins, hinted joins, and outer joins alone") {
-    val rule = BandJoinRewrite(spark)
-    withRule(rule) {
-      val equi = points.join(intervals,
-        col("chrom") === col("ichrom") && col("pos").between(col("lo"), col("hi")))
-      assert(!equi.queryExecution.optimizedPlan.toString.contains("_graft_band"))
-      val hinted = points.join(broadcast(intervals),
-        col("pos").between(col("lo"), col("hi")))
-      assert(!hinted.queryExecution.optimizedPlan.toString.contains("_graft_band"))
-      val outer = points.join(intervals,
-        col("pos").between(col("lo"), col("hi")), "left")
-      assert(!outer.queryExecution.optimizedPlan.toString.contains("_graft_band"))
-    }
+    val equi = points.join(intervals,
+      col("chrom") === col("ichrom") && col("pos").between(col("lo"), col("hi")))
+    assert(!equi.queryExecution.optimizedPlan.toString.contains("_graft_band"))
+    val hinted = points.join(broadcast(intervals),
+      col("pos").between(col("lo"), col("hi")))
+    assert(!hinted.queryExecution.optimizedPlan.toString.contains("_graft_band"))
+    val outer = points.join(intervals,
+      col("pos").between(col("lo"), col("hi")), "left")
+    assert(!outer.queryExecution.optimizedPlan.toString.contains("_graft_band"))
   }
 
   test("auto width follows the typical interval length under skew") {
@@ -104,28 +99,10 @@ class BandJoinSpec extends SparkSpec {
   }
 
   test("rewrite rule: disabled by conf") {
-    val rule = BandJoinRewrite(spark)
     spark.conf.set("spark.graft.bandJoin.enabled", "false")
-    try withRule(rule) {
+    try {
       val df = points.join(intervals, col("pos").between(col("lo"), col("hi")))
       assert(!df.queryExecution.optimizedPlan.toString.contains("_graft_band"))
     } finally spark.conf.unset("spark.graft.bandJoin.enabled")
-  }
-
-  test("extensions class registers the rule without error") {
-    // instantiation + registration is what spark.sql.extensions invokes;
-    // the builder accessors are private[sql], so the rule's effect is
-    // asserted via the experimental-hook tests above instead
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(ext)
-  }
-
-  /** Run `body` with the rule injected into the shared session via the
-    * public experimental hook, restoring the previous set afterwards
-    * (the production path is GraftExtensions at session build time). */
-  private def withRule(rule: BandJoinRewrite)(body: => Unit): Unit = {
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ rule
-    try body finally spark.experimental.extraOptimizations = prev
   }
 }
