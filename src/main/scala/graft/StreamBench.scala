@@ -25,6 +25,11 @@ import org.apache.spark.sql.streaming.Trigger
   *     band-bucket keyed flatMapGroupsWithState over the native
   *     MinHash signatures; state = one entry per live bucket, each
   *     holding ≤ maxBucket signatures.
+  *  3b. `minhash_near_dup_evict_tws` —
+  *     [[graft.streaming.StreamingDedup.nearDupFlagsEvictingTws]]:
+  *     workload 3's banding and cap on transformWithState (RocksDB
+  *     provider), with per-bucket event-time timers that evict
+  *     buckets idle past the watermark horizon.
   *  4. `minhash_near_dup_hot` — workload 3 plus a degenerate hot
   *     bucket (2,000 near-identical arrivals that all land in the
   *     same 16 band buckets — the batch operator's hot-bucket spec
@@ -95,66 +100,15 @@ object StreamBench {
           id, text)
       }
 
-    // SPARK_GRAFT_STREAM_ONLY=name1,name2 runs a subset (attribution
-    // experiments); SPARK_GRAFT_STACKPROF=1 samples all runnable
-    // threads during each workload and dumps the top frames — the
-    // poor-man's profiler that attributes where a micro-batch loop's
-    // CPU actually goes (state-store scans vs kernel vs shuffle).
+    // SPARK_GRAFT_STREAM_ONLY=name1,name2 runs a subset
     val onlyW = sys.env.get("SPARK_GRAFT_STREAM_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    val stackProf = sys.env.get("SPARK_GRAFT_STACKPROF").contains("1")
 
     def run(name: String, feed: Array[(Long, String)],
             build: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
       : (String, Long, Long, Double, Long, Double) = {
       if (onlyW.exists(!_.contains(name)))
         return (name, 0L, 0L, -1.0, 0L, 0.0)
-      val samples = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-      @volatile var sampling = stackProf
-      val sampler = new Thread(() => {
-        while (sampling) {
-          Thread.getAllStackTraces.forEach { (t, frames) =>
-            // threads blocked in native waits (epoll, process pipes,
-            // parked pools, GC reference handling) report RUNNABLE —
-            // drop them so percentages are of CPU-burning samples
-            def idleNative(f: StackTraceElement): Boolean = {
-              val c = f.getClassName
-              val m = f.getMethodName
-              f.isNativeMethod && (
-                m.contains("epoll") || m.contains("Wait") ||
-                m.contains("wait") || m.contains("park") ||
-                m.contains("sleep") || m.contains("read") ||
-                m.contains("accept") || m.contains("poll") ||
-                c.startsWith("java.lang.Process") ||
-                c.startsWith("java.lang.ref."))
-            }
-            if (t.getState == Thread.State.RUNNABLE && frames.nonEmpty &&
-                !idleNative(frames.head)) {
-              // first interesting frame: graft kernel, state store, or
-              // streaming-exec machinery; samples matching none are
-              // tallied under "(other)" so the printed percentages are
-              // of ALL runnable samples, not just the attributed ones
-              val key = frames.find { f =>
-                val c = f.getClassName
-                c.startsWith("graft.") ||
-                  c.contains("state.HDFSBackedStateStore") ||
-                  c.contains("streaming.state") ||
-                  c.contains("FlatMapGroupsWithState") ||
-                  c.contains("WatermarkTracker")
-              } match {
-                case Some(f) =>
-                  f.getClassName.replaceAll("\\$.*", "") + "." + f.getMethodName
-                case None =>
-                  "(other) " + frames.head.getClassName
-                    .split("\\.").take(4).mkString(".")
-              }
-              samples.merge(key, 1L, (a, b) => a + b)
-            }
-          }
-          Thread.sleep(5)
-        }
-      })
-      if (stackProf) { sampler.setDaemon(true); sampler.start() }
       val source = MemoryStream[Arrival]
       val out = build(source.toDF().toDF("ts", "doc_id", "text"))
       var rowsOut = 0L
@@ -195,16 +149,6 @@ object StreamBench {
       drainAndSample()
       val sec = (System.nanoTime() - t0) / 1e9
       query.stop()
-      sampling = false
-      if (stackProf) {
-        import scala.jdk.CollectionConverters._
-        val top = samples.asScala.toSeq.sortBy(-_._2).take(16)
-        val tot = math.max(1L, samples.asScala.values.map(Long2long).sum)
-        System.err.println(s"[stackprof] $name (${tot} samples)")
-        top.foreach { case (k, v) =>
-          System.err.println(f"[stackprof]   ${v * 100.0 / tot}%5.1f%% $k")
-        }
-      }
       System.err.println(f"[stream] $name%-24s in=${feed.length} out=$rowsOut " +
         f"${feed.length / sec}%.0f rows/s stateRows=$stateRowsMax " +
         f"stateMB=${stateBytesMax / 1e6}%.1f")
@@ -255,32 +199,20 @@ object StreamBench {
     }
     val r3 = run("minhash_near_dup", corpus, nearDupBuild(64))
 
-    // workload 3b: the WATERMARK-BOUNDED variant — event-time timeout
-    // evicts buckets idle past the horizon, so the bucket COUNT is
-    // bounded by arrival rate × watermark like the exact-dedup digest
-    // state (semantic trade: near-dups arriving further apart than the
-    // horizon are not flagged). state_rows_max must come in UNDER the
-    // non-evicting run's live-bucket total.
-    val r3b = run("minhash_near_dup_evict", corpus, in =>
-      graft.streaming.StreamingDedup
-        .nearDupFlagsEvicting(in, "text", "doc_id")
-        .toDF()
-        .select(col("docId").cast("long").as("doc_id"),
-          col("band"), col("matchedDocId"), col("similarity")))
-
-    // workload 3c: the same eviction semantics on the arbitrary-state
-    // v2 API (transformWithState, RocksDB provider): eviction via
-    // PER-KEY TIMERS indexed by expiry — O(expired) per batch — where
-    // the v1 event-time timeout above deserializes every live bucket
-    // every micro-batch (profiled at 53% of workload 3b's CPU). The
-    // overhead gap between 3b and 3c IS that scan, measured.
-    val r3c = {
+    // workload 3b: the WATERMARK-BOUNDED variant on transformWithState
+    // (RocksDB provider) — per-bucket event-time timers evict buckets
+    // idle past the horizon, so the bucket COUNT is bounded by arrival
+    // rate × watermark like the exact-dedup digest state (semantic
+    // trade: near-dups arriving further apart than the horizon are not
+    // flagged). state_rows_max must come in UNDER the non-evicting
+    // run's live-bucket total.
+    val r3b = {
       val prev = spark.conf
         .getOption("spark.sql.streaming.stateStore.providerClass")
       val prevChangelog = spark.conf.getOption(
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
       spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+        graft.streaming.StreamingDedup.RocksDbProviderClass)
       // changelog checkpointing: commit the per-batch DELTA instead of
       // re-snapshotting the full RocksDB instance every micro-batch —
       // the per-batch fixed cost that dominates at bench-sized batches
@@ -302,7 +234,7 @@ object StreamBench {
         }
         // restore the changelog knob to its PRIOR value (not a blind
         // unset — a session launched with the knob pinned must leave
-        // r3c under the same config it entered with)
+        // r3b under the same config it entered with)
         prevChangelog match {
           case Some(p) => spark.conf.set(
             "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", p)
@@ -389,7 +321,7 @@ object StreamBench {
 
     // skipped workloads (SPARK_GRAFT_STREAM_ONLY filter) report sec<0
     // and are left out of the artifact line
-    val js = (Seq(r1, r2, r3, r3b, r3c, r4).filter(_._4 >= 0).map(entry(_)) ++
+    val js = (Seq(r1, r2, r3, r3b, r4).filter(_._4 >= 0).map(entry(_)) ++
       (if (r5._1._4 >= 0) Seq(entry(r5._1, r5._2)) else Nil))
       .mkString("{", ",", "}")
     println(s"""{"stream_bench":$js,"scale":$factor,"docs":$total,""" +

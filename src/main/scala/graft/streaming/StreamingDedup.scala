@@ -18,7 +18,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * an arriving document is flagged when any stored bucket-mate's
   * signature agrees on ≥ `threshold` of the minima. Per-bucket caps
   * bound both state size and comparison cost, mirroring the batch
-  * hot-bucket cap.
+  * hot-bucket cap. [[nearDupFlagsEvictingTws]] additionally bounds the
+  * bucket count by the watermark, expiring idle buckets on
+  * `transformWithState` event-time timers.
   */
 object StreamingDedup {
 
@@ -55,21 +57,17 @@ object StreamingDedup {
   case class BandedDocT(ts: java.sql.Timestamp, band: Int, bandHash: Long,
                         docId: String, sig: Seq[Long])
   case class BucketState(sigs: List[(String, Seq[Long])])
-  /** [[nearDupFlagsEvicting]]'s state — a SEPARATE class from
-    * [[BucketState]] so the processing-time variant's state-store
-    * schema (and any existing checkpoints of it) stays untouched, and
-    * deliberately FLAT: `sigsFlat` holds the stored signatures
+  /** [[nearDupFlagsEvictingTws]]'s per-bucket `ValueState` — a
+    * SEPARATE class from [[BucketState]] so the processing-time
+    * variant's state-store schema (and any existing checkpoints of it)
+    * stays untouched, and FLAT: `sigsFlat` holds the stored signatures
     * row-major with a fixed stride (`sigsFlat.length / docIds.length`
     * minima per signature) instead of a nested
-    * `List[(String, Seq[Long])]`. The engine's event-time-timeout
-    * pass deserializes EVERY live bucket's state object EVERY
-    * micro-batch to find expired keys (getAllState → getStateObject),
-    * and a stack profile put 53% of the evicting workload's CPU in
-    * exactly that deserialization — primitive arrays bulk-copy out of
-    * the state row, nested collections materialize thousands of
-    * objects per bucket. `expireAtMs` mirrors the registered
-    * event-time timeout so the data branch can detect a lapsed
-    * bucket without a timeout firing. */
+    * `List[(String, Seq[Long])]`, so a state read or write is a bulk
+    * primitive-array copy rather than thousands of small objects per
+    * bucket. `expireAtMs` is the bucket's horizon and the timestamp of
+    * its one registered timer, so the data branch can detect a lapsed
+    * bucket before the timer fires. */
   case class EvictBucketState(docIds: Array[String], sigsFlat: Array[Long],
                               expireAtMs: Long)
   case class NearDupFlag(docId: String, band: Int, matchedDocId: String,
@@ -95,10 +93,10 @@ object StreamingDedup {
       .as[BandedDoc]
   }
 
-  /** Shared per-arrival bucket kernel of both stateful near-dup
-    * operators: compare `sig` against every stored bucket-mate
-    * (flagging estimated Jaccard ≥ threshold), then store it under the
-    * per-bucket cap. Returns the updated signature list. */
+  /** Per-arrival bucket kernel of [[nearDupFlags]]: compare `sig`
+    * against every stored bucket-mate (flagging estimated Jaccard ≥
+    * threshold), then store it under the per-bucket cap. Returns the
+    * updated signature list. [[evictStep]] is its flat port. */
   private[streaming] def compareAndStore(
       docId: String, sig: Seq[Long], band: Int,
       sigs0: List[(String, Seq[Long])], threshold: Double, maxBucket: Int,
@@ -162,121 +160,11 @@ object StreamingDedup {
         })
   }
 
-  /** [[nearDupFlags]] with WATERMARK-BOUNDED bucket state: the same
-    * banding and per-bucket signature cap, but keyed state carries an
-    * EVENT-time timeout — a bucket that receives no arrival for
-    * `evictAfter` of event time past the watermark is removed by the
-    * engine. This bounds the bucket COUNT by (arrival rate ×
-    * watermark horizon) instead of by distinct corpus content — the
-    * same state contract as [[exactDedup]]'s digest state — at the
-    * documented semantic trade: near-duplicates are not flagged
-    * against each other once the watermark has passed the bucket's
-    * horizon (last arrival + `evictAfterMs`). The horizon is honoured
-    * in the DATA branch too: when new data for a lapsed bucket lands
-    * in the same micro-batch its timeout would have fired, the engine
-    * delivers it with `hasTimedOut=false` and the stale state intact —
-    * the kernel checks the stored expiry against the current watermark
-    * and drops the lapsed signatures before comparing, so past-horizon
-    * flagging cannot depend on micro-batch boundaries. (Arrivals
-    * between the horizon and horizon + watermark delay may still
-    * compare — watermark granularity, the same slack every
-    * watermark-bounded operator carries.)
-    *
-    * Unlike a processing-time timeout, event-time expiry is driven by
-    * the data's own watermark, so `processAllAvailable` settles and
-    * the eviction is deterministic and testable (see the operator
-    * spec and STREAMBENCH state maxima).
-    *
-    * The dominant cost of carrying event-time timeouts is the
-    * engine's per-micro-batch timed-out-key pass, which deserializes
-    * EVERY live bucket's state object — so the state is stored FLAT
-    * ([[EvictBucketState]]: primitive long array + id array, not a
-    * nested signature list), making that per-bucket deserialization a
-    * bulk array copy. A stack profile attributed 53% of this
-    * operator's CPU to the nested-state deserialization before the
-    * change. State + timeout are also re-written only when the
-    * signature rows or the horizon actually change — on a feed whose
-    * max event time advances every batch the horizon moves with it,
-    * so this skip pays off mainly for capped hot buckets and same-ts
-    * redeliveries; the flat layout is the structural win.
-    *
-    * Note: this variant's state schema changed in r13 (flat
-    * [[EvictBucketState]] replaces the nested signature list) — a
-    * streaming job restarted over a pre-r13 checkpoint of THIS
-    * operator must start a fresh checkpoint dir. The capped
-    * processing-time variant's schema is untouched. Checkpoint
-    * continuity across library upgrades is NOT a supported contract
-    * for this library's stateful operators: a restart over a
-    * checkpoint written by an older state schema is expected to FAIL
-    * Spark's state-schema compatibility check — a deliberate breaking
-    * change recorded in CHANGELOG.md, not an incidental one. */
-  def nearDupFlagsEvicting(docs: DataFrame, textCol: String, idCol: String,
-                           tsCol: String = "ts",
-                           threshold: Double = 0.7, maxBucket: Int = 64,
-                           shingleSize: Int = 3, numHashes: Int = 64,
-                           bands: Int = 16,
-                           watermark: String = "10 minutes",
-                           evictAfterMs: Long = 10 * 60 * 1000L)
-    : Dataset[NearDupFlag] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val rowsPerBand = numHashes / bands
-    // project/cast FIRST, watermark AFTER: an alias or cast applied on
-    // top of a watermarked column mints a new attribute without the
-    // watermark tag, and the event-time-timeout check then fails
-    val banded = docs
-      .select(col(tsCol).cast("timestamp").as("ts"),
-        col(idCol).cast("string").as("docId"),
-        graft.plans.SketchFunctions
-          .minhashSignature(col(textCol), shingleSize, numHashes).as("sig"))
-      .withWatermark("ts", watermark)
-      .select(col("ts"), col("docId"), col("sig"),
-        explode(graft.operators.Dedup.lshBandKeys(col("sig"), bands,
-          rowsPerBand)).as("bk"))
-      .select(col("ts"), col("bk.band").as("band"),
-        col("bk.bandHash").as("bandHash"), col("docId"), col("sig"))
-      .as[BandedDocT]
-    banded
-      .groupByKey(d => (d.band, d.bandHash))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(
-        (key: (Int, Long), batch: Iterator[BandedDocT],
-         state: GroupState[EvictBucketState]) =>
-          evictingKernel(key, batch, state, threshold, maxBucket,
-            evictAfterMs))
-  }
-
-  /** The per-bucket kernel of [[nearDupFlagsEvicting]], extracted so
-    * the same-micro-batch lapse path is directly unit-testable with
-    * `TestGroupState` — through `processAllAvailable` the engine's
-    * extra timeout batch always runs before new data can reach a
-    * lapsed bucket, so that path can never be exercised end-to-end
-    * deterministically. */
-  private[streaming] def evictingKernel(
-      key: (Int, Long), batch: Iterator[BandedDocT],
-      state: GroupState[EvictBucketState],
-      threshold: Double, maxBucket: Int, evictAfterMs: Long)
-    : Iterator[NearDupFlag] = {
-    if (state.hasTimedOut) {
-      state.remove()
-      Iterator.empty
-    } else {
-      val prior = state.getOption
-      val step = evictStep(prior, state.getCurrentWatermarkMs(), key._1,
-        batch, threshold, maxBucket, evictAfterMs)
-      if (step.write) {
-        state.update(step.next)
-        state.setTimeoutTimestamp(step.next.expireAtMs)
-      }
-      step.flags.iterator
-    }
-  }
-
-  /** One bucket-batch of the evicting near-dup computation, shared by
-    * the flatMapGroupsWithState kernel and the transformWithState
-    * processor: lapse check against the current watermark, flat
-    * compare+store, horizon that never regresses. `write` is false
-    * when neither the signature rows nor the horizon changed. */
+  /** One bucket-batch of [[nearDupFlagsEvictingTws]]: lapse check
+    * against the current watermark, flat compare+store (the
+    * stride-packed port of [[compareAndStore]]), horizon that never
+    * regresses. `write` is false when neither the signature rows nor
+    * the horizon changed. */
   private[streaming] case class EvictStep(next: EvictBucketState,
                                           write: Boolean,
                                           flags: Seq[NearDupFlag])
@@ -286,8 +174,9 @@ object StreamingDedup {
       threshold: Double, maxBucket: Int, evictAfterMs: Long): EvictStep = {
     // honour the horizon in the data branch: a lapsed bucket (stored
     // expiry behind the watermark) receiving data in the very
-    // micro-batch its timeout would have fired is delivered with the
-    // stale state intact — drop the lapsed signatures BEFORE comparing
+    // micro-batch its timer fires sees the rows before the timer, with
+    // the stale state intact — drop the lapsed signatures BEFORE
+    // comparing
     val lapsed = prior.exists(_.expireAtMs <= wm)
     var ids: Array[String] =
       prior match { case Some(s) if !lapsed => s.docIds; case _ => Array.empty }
@@ -337,8 +226,8 @@ object StreamingDedup {
     // REGRESS a live bucket's stored horizon (an out-of-order
     // straggler's ts would otherwise re-register an EARLIER expiry,
     // shrinking the documented last-arrival + horizon bound). The
-    // engine requires a timeout strictly beyond the current watermark
-    // (a late straggler's ts can sit behind it).
+    // horizon sits strictly beyond the current watermark (a late
+    // straggler's ts can sit behind it), so no bucket is born lapsed.
     val base = if (maxTs != Long.MinValue) maxTs else wm
     val floor0 = if (lapsed) Long.MinValue
       else prior.map(_.expireAtMs).getOrElse(Long.MinValue)
@@ -348,30 +237,7 @@ object StreamingDedup {
     EvictStep(EvictBucketState(ids, flat, expireAt), write, out.toSeq)
   }
 
-  /** Live-bucket cardinality above which the v2 (timer-indexed)
-    * CONFIGURATION wins. Two measured views back the number:
-    *
-    *  - DEPLOYMENT view (STREAMBENCH_r14 decade table, v1 on the
-    *    default in-memory HDFS-backed provider vs v2 on RocksDB —
-    *    the configs each variant actually ships with): v1 is ~1.4
-    *    s/batch cheaper at 1.6k live buckets (in-memory map beats any
-    *    store constant when state is small and hot), v1 pays a
-    *    sustained ~0.3-0.4 s/batch more from ~16k buckets up.
-    *  - DESIGN view (STREAMBENCH_r15 same-provider re-measurement,
-    *    BOTH variants on RocksDB — isolating the operator design from
-    *    the provider): v2 is equal-or-faster at every decade and
-    *    decisively faster at 153k live buckets (quiet floors 19.6 vs
-    *    35.6 s = ~0.8 s/batch of v1's per-micro-batch timed-out-key
-    *    scan with nothing expiring; O(batches × live buckets) vs
-    *    O(expired) timer fires).
-    *
-    * So the auto pick encodes the deployment trade: below the
-    * threshold, v1 on its default in-memory provider is the cheapest
-    * config; above it, v2+RocksDB. Each document populates ~`bands`
-    * buckets, so live buckets ≈ distinct live docs × bands. */
-  val EvictionAutoLiveBucketThreshold = 16000L
-
-  /** The provider class the v2 (transformWithState) path requires. */
+  /** The state store provider [[nearDupFlagsEvictingTws]] requires. */
   val RocksDbProviderClass: String =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
@@ -379,93 +245,40 @@ object StreamingDedup {
     spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
       .exists(_.contains("RocksDB"))
 
-  /** [[nearDupFlagsEvicting]] (v1) / [[nearDupFlagsEvictingTws]] (v2)
-    * behind one selector, keyed on (SESSION STATE-STORE PROVIDER,
-    * declared cardinality):
+  /** [[nearDupFlags]] with WATERMARK-BOUNDED bucket state, on the
+    * arbitrary-state API (`transformWithState`): the same banding and
+    * per-bucket signature cap, but each live bucket carries one
+    * event-time timer at its horizon (last arrival + `evictAfterMs`),
+    * and the bucket is removed once the watermark passes it. This
+    * bounds the bucket COUNT by (arrival rate × watermark horizon)
+    * instead of by distinct corpus content — the same state contract
+    * as [[exactDedup]]'s digest state — at the documented semantic
+    * trade: near-duplicates are not flagged against each other once
+    * the watermark has passed the bucket's horizon. The horizon is
+    * honoured in the DATA branch too: rows for a lapsed bucket that
+    * land in the micro-batch its timer fires are compared only after
+    * the lapsed signatures are dropped ([[evictStep]]), so
+    * past-horizon flagging cannot depend on micro-batch boundaries.
+    * (Arrivals between the horizon and horizon + watermark delay may
+    * still compare — watermark granularity, the same slack every
+    * watermark-bounded operator carries.)
     *
-    *  - `eviction = "v1"`: event-time-timeout eviction on the
-    *    flatMapGroupsWithState API. Cheapest at LOW live-bucket
-    *    cardinality on the DEFAULT in-memory provider; pays a
-    *    per-micro-batch full-state timed-out-key scan that grows with
-    *    live buckets.
-    *  - `eviction = "v2"`: timer-indexed eviction on the
-    *    transformWithState API — O(expired) expiry, the 100 TB scale
-    *    path. Requires the RocksDB state store provider; validated
-    *    here at plan-construction time (the engine otherwise fails at
-    *    query start with a provider error that doesn't name the fix).
-    *  - `eviction = "auto"`:
-    *      - session already on RocksDB → v2 unconditionally: the
-    *        same-provider decade table (STREAMBENCH_r15, both variants
-    *        on RocksDB) shows v2 equal-or-faster at EVERY decade
-    *        (19.6 vs 35.6 s at 153k live buckets), so once the
-    *        provider constant is paid there is no cardinality at which
-    *        v1 wins.
-    *      - default in-memory provider → picks by DECLARED cardinality:
-    *        `declaredDistinctDocs × bands` live buckets against
-    *        [[EvictionAutoLiveBucketThreshold]] (the measured
-    *        STREAMBENCH_r14 deployment-config crossover — v1's
-    *        in-memory map beats any store constant when state is small
-    *        and hot). A stream cannot observe its own future
-    *        cardinality, so the declaration is the caller's; left
-    *        undeclared (-1), auto takes the scale-safe side (v2): the
-    *        v1 penalty is unbounded in cardinality while the v2
-    *        penalty is a bounded per-batch constant. The v2 pick on a
-    *        non-RocksDB session FAILS here with the conf to set —
-    *        silently proceeding would error at query start anyway.
+    * Timers are indexed by expiry in the state store, so expiry work
+    * is O(expired buckets) per micro-batch, not O(live buckets).
+    * Unlike a processing-time timeout, event-time expiry is driven by
+    * the data's own watermark, so `processAllAvailable` settles and
+    * eviction is deterministic and testable. State ([[EvictBucketState]])
+    * and timer are re-written only when the signature rows or the
+    * horizon change.
     *
-    * Flags are identical between the two variants on the same feed
-    * (same [[evictStep]] kernel; STREAMBENCH_r14 cross-checked flag
-    * equality at every decade). */
-  def nearDupFlagsEvictingAuto(docs: DataFrame, textCol: String,
-                               idCol: String, tsCol: String = "ts",
-                               eviction: String = "auto",
-                               declaredDistinctDocs: Long = -1L,
-                               threshold: Double = 0.7, maxBucket: Int = 64,
-                               shingleSize: Int = 3, numHashes: Int = 64,
-                               bands: Int = 16,
-                               watermark: String = "10 minutes",
-                               evictAfterMs: Long = 10 * 60 * 1000L)
-    : Dataset[NearDupFlag] = {
-    val onRocksDb = sessionOnRocksDb(docs.sparkSession)
-    val pick = eviction.toLowerCase match {
-      case "v1" | "v2" => eviction.toLowerCase
-      case "auto" =>
-        if (onRocksDb) "v2" // same-provider table: v2 >= v1 everywhere
-        else if (declaredDistinctDocs >= 0 && declaredDistinctDocs * bands <
-          EvictionAutoLiveBucketThreshold) "v1"
-        else "v2"
-      case other => throw new IllegalArgumentException(
-        s"eviction must be v1|v2|auto, got '$other'")
-    }
-    require(pick == "v1" || onRocksDb,
-      s"nearDupFlagsEvictingAuto picked eviction=v2 (requested " +
-        s"'$eviction', declaredDistinctDocs=$declaredDistinctDocs, " +
-        s"bands=$bands) which requires the RocksDB state store " +
-        "provider, but this session's " +
-        "spark.sql.streaming.stateStore.providerClass is not set to " +
-        s"it. Set it to $RocksDbProviderClass before starting the " +
-        "query, or declare a sub-threshold cardinality " +
-        s"(declaredDistinctDocs x bands < " +
-        s"$EvictionAutoLiveBucketThreshold) to select v1.")
-    if (pick == "v1")
-      nearDupFlagsEvicting(docs, textCol, idCol, tsCol, threshold,
-        maxBucket, shingleSize, numHashes, bands, watermark, evictAfterMs)
-    else
-      nearDupFlagsEvictingTws(docs, textCol, idCol, tsCol, threshold,
-        maxBucket, shingleSize, numHashes, bands, watermark, evictAfterMs)
-  }
-
-  /** [[nearDupFlagsEvicting]] on the arbitrary-state v2 API
-    * (`transformWithState`): identical semantics (same [[evictStep]]
-    * kernel), but eviction runs on PER-KEY TIMERS indexed by expiry in
-    * the RocksDB state store — firing is O(expired keys), where the
-    * v1 API's event-time timeout pass deserializes EVERY live bucket's
-    * state EVERY micro-batch to find expired keys (a stack profile put
-    * 53% of the v1 operator's CPU there; the overhead is O(batches ×
-    * live buckets), which at 100 TB bucket cardinality is the
-    * difference between a constant-factor and an unbounded-relative
-    * cost). Requires the RocksDB state store provider
-    * (`spark.sql.streaming.stateStore.providerClass`). */
+    * Requires the RocksDB state store provider: construction fails
+    * with an `IllegalArgumentException` naming
+    * `spark.sql.streaming.stateStore.providerClass` unless the session
+    * sets it to [[RocksDbProviderClass]]. Checkpoint continuity across
+    * library upgrades is NOT a supported contract for this library's
+    * stateful operators: a restart over a checkpoint written by an
+    * older state schema is expected to FAIL Spark's state-schema
+    * compatibility check (see CHANGELOG.md). */
   def nearDupFlagsEvictingTws(docs: DataFrame, textCol: String, idCol: String,
                               tsCol: String = "ts",
                               threshold: Double = 0.7, maxBucket: Int = 64,
@@ -483,6 +296,9 @@ object StreamingDedup {
         "error that doesn't name the fix).")
     import spark.implicits._
     val rowsPerBand = numHashes / bands
+    // project/cast FIRST, watermark AFTER: an alias or cast applied on
+    // top of a watermarked column mints a new attribute without the
+    // watermark tag, and the event-time check then fails
     val banded = docs
       .select(col(tsCol).cast("timestamp").as("ts"),
         col(idCol).cast("string").as("docId"),

@@ -53,52 +53,27 @@ class StreamingDedupSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("evicting near-dup flags: watermark expiry forgets idle buckets") {
-    // event-time timeout makes eviction deterministic under
+  private val providerConf = "spark.sql.streaming.stateStore.providerClass"
+
+  /** Run `body` with the state store provider set (or unset, for the
+    * default provider), restoring the session's prior value after. */
+  private def withProvider[T](provider: Option[String])(body: => T): T = {
+    val prior = spark.conf.getOption(providerConf)
+    def put(v: Option[String]): Unit =
+      v.fold(spark.conf.unset(providerConf))(spark.conf.set(providerConf, _))
+    put(provider)
+    try body finally put(prior)
+  }
+
+  test("transformWithState evicting near-dup: watermark expiry forgets idle buckets") {
+    // event-time timers make eviction deterministic under
     // processAllAvailable: d2 (1 min after d1) flags against d1's
     // stored signature; d3 — the same text arriving 40 min later,
     // long past d1/d2's bucket horizon (10 min watermark + 10 min
     // evict) — must NOT flag: the bucket state was removed, not
     // merely idle. An unrelated doc keeps the watermark honest.
     implicit val sqlCtx = spark.sqlContext
-    val base = "the quick brown fox jumps over the lazy dog " * 5
-    def ts(min: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 ${10 + min / 60}%02d:${min % 60}%02d:00")
-    val input = MemoryStream[(java.sql.Timestamp, String, String)]
-    val q = nearDupFlagsEvicting(
-      input.toDF().toDF("ts", "doc_id", "text"), "text", "doc_id")
-      .writeStream.format("memory").queryName("neardupevict")
-      .outputMode("append").start()
-    try {
-      input.addData((ts(0), "d1", base))
-      q.processAllAvailable()
-      input.addData((ts(1), "d2", base + "extra tail token"))
-      q.processAllAvailable()
-      // advance the watermark far past d1/d2's horizon (unrelated doc)
-      input.addData((ts(35), "w1", "completely unrelated words here"))
-      q.processAllAvailable()
-      input.addData((ts(40), "d3", base))
-      q.processAllAvailable()
-      val flags = spark.table("neardupevict")
-        .select("docId", "matchedDocId").as[(String, String)]
-        .collect().toSet
-      assert(flags.exists { case (a, b) => Set(a, b) == Set("d1", "d2") },
-        s"d2 must flag against d1: $flags")
-      assert(!flags.exists { case (a, b) => a == "d3" || b == "d3" },
-        s"d3 arrived past the evict horizon and must not flag: $flags")
-    } finally q.stop()
-  }
-
-  test("transformWithState evicting near-dup matches the v1 semantics") {
-    // same scenario as the v1 evicting test: d2 flags against d1;
-    // d3 (same text, 40 min later, past the horizon) must not flag.
-    // The v2 operator runs eviction on per-key RocksDB timers instead
-    // of a full-state timeout scan — semantics must be identical.
-    implicit val sqlCtx = spark.sqlContext
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withProvider(Some(RocksDbProviderClass)) {
       val base = "the quick brown fox jumps over the lazy dog " * 5
       def ts(min: Int) = java.sql.Timestamp.valueOf(
         f"2024-01-01 ${10 + min / 60}%02d:${min % 60}%02d:00")
@@ -112,6 +87,7 @@ class StreamingDedupSpec extends SparkSpec {
         q.processAllAvailable()
         input.addData((ts(1), "d2", base + "extra tail token"))
         q.processAllAvailable()
+        // advance the watermark far past d1/d2's horizon (unrelated doc)
         input.addData((ts(35), "w1", "completely unrelated words here"))
         q.processAllAvailable()
         input.addData((ts(40), "d3", base))
@@ -124,55 +100,60 @@ class StreamingDedupSpec extends SparkSpec {
         assert(!flags.exists { case (a, b) => a == "d3" || b == "d3" },
           s"d3 arrived past the evict horizon and must not flag: $flags")
       } finally q.stop()
-    } finally prevProvider match {
-      case Some(p) =>
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None =>
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
+  test("transformWithState evicting near-dup requires the RocksDB provider at construction") {
+    // on the default provider the operator fails AT CONSTRUCTION with a
+    // message naming the conf to set (the engine would otherwise fail
+    // at query start with an error that doesn't name the fix)
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(String, String, java.sql.Timestamp)]
+    val docs = input.toDF().toDF("doc_id", "text", "ts")
+    withProvider(None) {
+      val e = intercept[IllegalArgumentException](
+        nearDupFlagsEvictingTws(docs, "text", "doc_id"))
+      assert(e.getMessage.contains(providerConf))
+      assert(e.getMessage.contains("RocksDB"))
+    }
+    withProvider(Some(RocksDbProviderClass)) {
+      assert(nearDupFlagsEvictingTws(docs, "text", "doc_id")
+        .queryExecution.logical.toString().contains("TransformWithState"))
+    }
+  }
+
+  private def doc(id: String, tsMs: Long, sig: Seq[Long]) =
+    BandedDocT(new java.sql.Timestamp(tsMs), 0, 42L, id, sig)
+
   test("evicting kernel drops lapsed signatures when data and timeout collide") {
-    // The engine delivers data for a lapsed bucket with
-    // hasTimedOut=false and the stale state intact when new rows land
-    // in the same micro-batch the timeout would have fired (in real
-    // streaming, data racing the watermark-advancing batch). The
-    // kernel's data-branch watermark check must drop the lapsed
-    // signatures BEFORE comparing — past-horizon flagging must not
-    // depend on micro-batch boundaries. processAllAvailable cannot
-    // reproduce this (the extra timeout batch always runs first), so
-    // the kernel is driven directly via TestGroupState.
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
-    def doc(id: String, tsMs: Long, sig: Seq[Long]) =
-      BandedDocT(new java.sql.Timestamp(tsMs), 0, 42L, id, sig)
+    // Rows for a lapsed bucket can arrive in the same micro-batch its
+    // timer fires (in real streaming, data racing the
+    // watermark-advancing batch), and are handled with the stale state
+    // intact. The kernel's data-branch watermark check must drop the
+    // lapsed signatures BEFORE comparing — past-horizon flagging must
+    // not depend on micro-batch boundaries. processAllAvailable cannot
+    // reproduce this (the watermark-advancing batch always fires the
+    // timer first), so the kernel is driven directly.
     val sig = Seq.tabulate(8)(_.toLong)
     val evictAfterMs = 10 * 60 * 1000L
     val storedExpire = 1000000L + evictAfterMs // d1's horizon
+    val stored = Some(EvictBucketState(Array("d1"), sig.toArray, storedExpire))
     // watermark has passed the stored expiry: the bucket is lapsed
     val wm = storedExpire + 1
-    val lapsed = TestGroupState.create[EvictBucketState](
-      org.apache.spark.api.java.Optional.of(EvictBucketState(Array("d1"), sig.toArray, storedExpire)),
-      GroupStateTimeout.EventTimeTimeout, 0L,
-      org.apache.spark.api.java.Optional.of(java.lang.Long.valueOf(wm)), false)
-    val flags = StreamingDedup.evictingKernel(
-      (0, 42L), Iterator(doc("d3", wm + 1000L, sig)), lapsed,
-      threshold = 0.7, maxBucket = 64, evictAfterMs = evictAfterMs).toList
-    assert(flags.isEmpty,
-      s"past-horizon arrival flagged against lapsed signatures: $flags")
-    val after = lapsed.get
-    assert(after.docIds.toList == List("d3"),
-      s"lapsed signatures must be replaced, got ${after.docIds.toList}")
-    assert(after.expireAtMs > wm, "new expiry must sit beyond the watermark")
+    val step = evictStep(stored, wm, 0, Iterator(doc("d3", wm + 1000L, sig)),
+      threshold = 0.7, maxBucket = 64, evictAfterMs = evictAfterMs)
+    assert(step.flags.isEmpty,
+      s"past-horizon arrival flagged against lapsed signatures: ${step.flags}")
+    assert(step.write, "lapsed signatures must be replaced in state")
+    assert(step.next.docIds.toList == List("d3"),
+      s"lapsed signatures must be replaced, got ${step.next.docIds.toList}")
+    assert(step.next.expireAtMs > wm, "new expiry must sit beyond the watermark")
     // control: same arrival while the bucket is still within horizon
-    val live = TestGroupState.create[EvictBucketState](
-      org.apache.spark.api.java.Optional.of(EvictBucketState(Array("d1"), sig.toArray, storedExpire)),
-      GroupStateTimeout.EventTimeTimeout, 0L,
-      org.apache.spark.api.java.Optional.of(java.lang.Long.valueOf(storedExpire - 1)), false)
-    val flags2 = StreamingDedup.evictingKernel(
-      (0, 42L), Iterator(doc("d3", storedExpire, sig)), live,
-      threshold = 0.7, maxBucket = 64, evictAfterMs = evictAfterMs).toList
-    assert(flags2.exists(f => f.docId == "d3" && f.matchedDocId == "d1"),
-      s"in-horizon arrival must flag: $flags2")
+    val live = evictStep(stored, storedExpire - 1, 0,
+      Iterator(doc("d3", storedExpire, sig)),
+      threshold = 0.7, maxBucket = 64, evictAfterMs = evictAfterMs)
+    assert(live.flags.exists(f => f.docId == "d3" && f.matchedDocId == "d1"),
+      s"in-horizon arrival must flag: ${live.flags}")
   }
 
   test("evicting kernel skips state writes when nothing advances") {
@@ -180,7 +161,6 @@ class StreamingDedupSpec extends SparkSpec {
     // as its stored horizon base must not rewrite state: no new
     // signature stored (cap), no horizon advance (same last-arrival)
     // — the write-skip fires exactly when neither component moved
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
     val sig = Seq.tabulate(8)(_.toLong)
     val otherSig = Seq.tabulate(8)(i => 100L + i) // below threshold
     val evictAfterMs = 10 * 60 * 1000L
@@ -192,17 +172,12 @@ class StreamingDedupSpec extends SparkSpec {
     // bucket at cap 1, holding d1; d2 arrives at the same horizon
     // with a non-matching signature → no flag, no store (cap), no
     // horizon advance → state must stay untouched
-    val st = TestGroupState.create[EvictBucketState](
-      org.apache.spark.api.java.Optional.of(EvictBucketState(Array("d1"), sig.toArray, storedExpire)),
-      GroupStateTimeout.EventTimeTimeout, 0L,
-      org.apache.spark.api.java.Optional.of(java.lang.Long.valueOf(baseTs - 1)), false)
-    val flags = StreamingDedup.evictingKernel(
-      (0, 42L),
-      Iterator(BandedDocT(new java.sql.Timestamp(baseTs + 1), 0, 42L,
-        "d2", otherSig)),
-      st, threshold = 0.7, maxBucket = 1, evictAfterMs = evictAfterMs).toList
-    assert(flags.isEmpty)
-    assert(!st.isUpdated,
+    val step = evictStep(
+      Some(EvictBucketState(Array("d1"), sig.toArray, storedExpire)),
+      baseTs - 1, 0, Iterator(doc("d2", baseTs + 1, otherSig)),
+      threshold = 0.7, maxBucket = 1, evictAfterMs = evictAfterMs)
+    assert(step.flags.isEmpty)
+    assert(!step.write,
       "state rewritten although neither signatures nor horizon advanced")
   }
 
@@ -211,35 +186,27 @@ class StreamingDedupSpec extends SparkSpec {
     // an EARLIER expiry: the bucket's bound is last arrival + horizon,
     // and regressing it would evict signatures before their documented
     // lifetime (and could drop flags the capped variant emits)
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
     val sig = Seq.tabulate(8)(_.toLong)
     val otherSig = Seq.tabulate(8)(i => 100L + i)
     val evictAfterMs = 10 * 60 * 1000L
     val freshTs = 10000000L
     val storedExpire = freshTs + evictAfterMs
-    val st = TestGroupState.create[EvictBucketState](
-      org.apache.spark.api.java.Optional.of(EvictBucketState(Array("d1"), sig.toArray, storedExpire)),
-      GroupStateTimeout.EventTimeTimeout, 0L,
-      org.apache.spark.api.java.Optional.of(java.lang.Long.valueOf(freshTs - 1)), false)
     // straggler: event time far BEHIND the fresh arrival that set the
     // stored horizon (its own base + evict would be much earlier)
-    StreamingDedup.evictingKernel(
-      (0, 42L),
-      Iterator(BandedDocT(new java.sql.Timestamp(freshTs - 5 * 60 * 1000L), 0, 42L,
-        "d2", otherSig)),
-      st, threshold = 0.7, maxBucket = 64, evictAfterMs = evictAfterMs).toList
-    assert(st.get.expireAtMs >= storedExpire,
-      s"straggler shrank the horizon: ${st.get.expireAtMs} < $storedExpire")
+    val step = evictStep(
+      Some(EvictBucketState(Array("d1"), sig.toArray, storedExpire)),
+      freshTs - 1, 0, Iterator(doc("d2", freshTs - 5 * 60 * 1000L, otherSig)),
+      threshold = 0.7, maxBucket = 64, evictAfterMs = evictAfterMs)
+    assert(step.next.expireAtMs >= storedExpire,
+      s"straggler shrank the horizon: ${step.next.expireAtMs} < $storedExpire")
   }
 
   test("flat evictStep kernel is flag-parity with the list kernel on random feeds") {
-    // the v1/v2 evicting operators share evictStep, whose flat
-    // (stride-packed) compare+store is a port of the processing-time
-    // variant's List-based compareAndStore — random feeds (duplicate
-    // ids, varying bucket pressure, thresholds) must produce the SAME
-    // flag multiset and the same stored membership, or the two
-    // operator families silently diverge
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
+    // the evicting operator's evictStep is a flat (stride-packed) port
+    // of the capped variant's List-based compareAndStore — random feeds
+    // (duplicate ids, varying bucket pressure, thresholds) must produce
+    // the SAME flag multiset and the same stored membership, or the two
+    // operators silently diverge
     val rnd = new scala.util.Random(11)
     for (trial <- 1 to 50) {
       val sigLen = 4 + rnd.nextInt(5)
@@ -250,31 +217,24 @@ class StreamingDedupSpec extends SparkSpec {
         val id = "d" + rnd.nextInt(6) // collisions on purpose
         val sig = Seq.tabulate(sigLen)(j =>
           (rnd.nextInt(3) + j * 10).toLong) // overlapping minima
-        BandedDocT(new java.sql.Timestamp(1000000L + i * 1000L), 0, 7L,
-          id, sig)
+        doc(id, 1000000L + i * 1000L, sig)
       }
       // list kernel (the processing-time variant's path)
       val outList = scala.collection.mutable.ArrayBuffer.empty[NearDupFlag]
       var sigs = List.empty[(String, Seq[Long])]
       docs.foreach { d =>
-        sigs = StreamingDedup.compareAndStore(d.docId, d.sig, 0, sigs,
+        sigs = compareAndStore(d.docId, d.sig, 0, sigs,
           threshold, maxBucket, outList)
       }
       // flat kernel (fresh state, watermark far behind — no lapse)
-      val st = TestGroupState.create[EvictBucketState](
-        org.apache.spark.api.java.Optional.empty[EvictBucketState](),
-        GroupStateTimeout.EventTimeTimeout, 0L,
-        org.apache.spark.api.java.Optional.of(java.lang.Long.valueOf(0L)),
-        false)
-      val outFlat = StreamingDedup.evictingKernel(
-        (0, 7L), docs.iterator, st, threshold, maxBucket,
-        evictAfterMs = 600000L).toList
+      val step = evictStep(None, 0L, 0, docs.iterator, threshold, maxBucket,
+        evictAfterMs = 600000L)
       def canon(fs: Iterable[NearDupFlag]) =
         fs.map(f => (f.docId, f.matchedDocId,
           math.round(f.similarity * 1e9))).toSeq.sorted
-      assert(canon(outFlat) == canon(outList),
-        s"trial $trial: flags diverged\nflat=$outFlat\nlist=$outList")
-      assert(st.get.docIds.toSet == sigs.map(_._1).toSet,
+      assert(canon(step.flags) == canon(outList),
+        s"trial $trial: flags diverged\nflat=${step.flags}\nlist=$outList")
+      assert(step.next.docIds.toSet == sigs.map(_._1).toSet,
         s"trial $trial: stored membership diverged")
     }
   }
@@ -301,52 +261,5 @@ class StreamingDedupSpec extends SparkSpec {
         Set(a, b) == Set("d1", "d2") })
       assert(!flags.exists { case (a, b) => a == "dX" || b == "dX" })
     } finally q.stop()
-  }
-
-  test("eviction selector: v1|v2|auto routes to the right variant, " +
-    "auto by (provider, declared cardinality)") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(String, String, java.sql.Timestamp)]
-    val docs = input.toDF().toDF("doc_id", "text", "ts")
-    // the two variants sit on different streaming APIs, visible in the
-    // logical plan: v1 = FlatMapGroupsWithState, v2 = TransformWithState
-    def planOf(eviction: String, declared: Long = -1L): String =
-      nearDupFlagsEvictingAuto(docs, "text", "doc_id",
-        eviction = eviction, declaredDistinctDocs = declared)
-        .queryExecution.logical.toString()
-    val providerConf = "spark.sql.streaming.stateStore.providerClass"
-    // --- default (in-memory) provider session ---
-    assert(planOf("v1").contains("FlatMapGroupsWithState"))
-    // auto below the measured deployment crossover (16k live buckets
-    // at 16 bands = 1000 docs) -> v1
-    assert(planOf("auto", declared = 100).contains("FlatMapGroupsWithState"))
-    // any v2 pick on a non-RocksDB session fails AT CONSTRUCTION with
-    // a message naming the conf to set (the engine would otherwise
-    // fail at query start with an error that doesn't name the fix)
-    for ((ev, decl) <- Seq(("v2", -1L), ("auto", 100000L), ("auto", -1L))) {
-      val e = intercept[IllegalArgumentException](planOf(ev, decl))
-      assert(e.getMessage.contains(providerConf), s"($ev, $decl)")
-      assert(e.getMessage.contains("RocksDB"), s"($ev, $decl)")
-    }
-    val bad = intercept[IllegalArgumentException](planOf("v3"))
-    assert(bad.getMessage.contains("v1|v2|auto"))
-    // --- RocksDB provider session ---
-    val prior = spark.conf.getOption(providerConf)
-    spark.conf.set(providerConf, StreamingDedup.RocksDbProviderClass)
-    try {
-      assert(planOf("v2").contains("TransformWithState"))
-      assert(planOf("auto", declared = 100000).contains("TransformWithState"))
-      assert(planOf("auto").contains("TransformWithState"))
-      // provider already RocksDB -> v2 even below the cardinality
-      // crossover: the same-provider decade table (STREAMBENCH_r15)
-      // shows v2 equal-or-faster at every decade once the store
-      // constant is paid
-      assert(planOf("auto", declared = 100).contains("TransformWithState"))
-      // explicit v1 stays honored regardless of provider
-      assert(planOf("v1").contains("FlatMapGroupsWithState"))
-    } finally prior match {
-      case Some(p) => spark.conf.set(providerConf, p)
-      case None => spark.conf.unset(providerConf)
-    }
   }
 }

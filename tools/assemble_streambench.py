@@ -10,16 +10,12 @@ deriving the continuity line from the recorded JSON makes that
 failure mode impossible by construction.
 
 Usage:
-  python3 tools/assemble_streambench.py <recorded.json> <prev_artifact.json|-> <round> [out] [probe=<probe.json>]
+  python3 tools/assemble_streambench.py <recorded.json> <prev_artifact.json|-> <round> [out]
 
 <recorded.json>  the one-line JSON StreamBench prints
                  ({"stream_bench":{...},"scale":..,"docs":..,"canary":{..}})
 <prev_artifact>  last round's STREAMBENCH_r{N-1}.json, or "-" for none
 <round>          this round number (e.g. 13)
-probe=           optional: the one-line JSON graft.StreamCardProbe prints
-                 (the live-bucket-cardinality decade table for the v1 vs
-                 v2 evicting near-dup variants); folded in verbatim plus
-                 a computed growth note
 
 Driver-side tooling only — the Scala library never imports any of this.
 """
@@ -29,13 +25,7 @@ import sys
 
 def main():
     rec_path, prev_path, rnd = sys.argv[1], sys.argv[2], int(sys.argv[3])
-    rest = sys.argv[4:]
-    probe_path = None
-    for a in list(rest):
-        if a.startswith("probe="):
-            probe_path = a.split("=", 1)[1]
-            rest.remove(a)
-    out = rest[0] if rest else f"STREAMBENCH_r{rnd}.json"
+    out = sys.argv[4] if len(sys.argv) > 4 else f"STREAMBENCH_r{rnd}.json"
     result = json.load(open(rec_path))
     cur = result["stream_bench"]
 
@@ -55,8 +45,8 @@ def main():
             "tools/assemble_streambench.py - not hand-written")
 
     evict = {}
-    if "minhash_near_dup" in cur and "minhash_near_dup_evict" in cur:
-        base, ev = cur["minhash_near_dup"], cur["minhash_near_dup_evict"]
+    if "minhash_near_dup" in cur and "minhash_near_dup_evict_tws" in cur:
+        base, ev = cur["minhash_near_dup"], cur["minhash_near_dup_evict_tws"]
         ratio = base["rows_per_sec"] / max(1, ev["rows_per_sec"])
         evict = {
             "capped_rows_per_sec": base["rows_per_sec"],
@@ -69,27 +59,6 @@ def main():
             "state_mb_max": f"{base['state_mb_max']} -> {ev['state_mb_max']}",
         }
 
-    card = {}
-    if probe_path:
-        probe_doc = json.load(open(probe_path))
-        p = probe_doc["bucket_cardinality_probe"]
-        card = {"recorded": probe_doc}
-        ds = p.get("decades", [])
-        if len(ds) >= 2:
-            # computed growth note: per-batch v1-minus-v2 gap across the
-            # live-bucket decades (the O(batches x live buckets) scan
-            # term v2's expiry-indexed timers avoid)
-            gaps = [f"{d['distinct_docs']} docs ({d['v1_state_rows']} "
-                    f"state rows): {d['v1_minus_v2_per_batch_ms']} ms"
-                    for d in ds]
-            card["per_batch_v1_minus_v2_gap"] = "; ".join(gaps)
-            card["flags_equal_all_decades"] = all(
-                d.get("flags_equal", False) for d in ds)
-            card["_source"] = (
-                f"recorded by graft.StreamCardProbe ({probe_path}); gap "
-                "line computed here by tools/assemble_streambench.py - "
-                "not hand-written")
-
     doc = {
         "what": (f"r{rnd} streaming throughput/state report: stateful "
                  "streaming surfaces on a MemoryStream fed the ScaleUp "
@@ -101,8 +70,6 @@ def main():
         "continuity_vs_prev_round": continuity,
         "evicting_vs_capped": evict,
     }
-    if card:
-        doc["bucket_cardinality_v1_vs_v2"] = card
     with open(out, "w") as f:
         json.dump(doc, f, indent=1)
         f.write("\n")
