@@ -55,6 +55,28 @@ object GraftSession {
     // --conf for deployments that prefer the stock 1m floor.
     "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "64k",
     "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    // Spark keeps generated classes in an LRU of this many entries
+    // (stock 100) and compiles again any plan whose class was evicted.
+    // A long-lived session re-runs plans that need more distinct
+    // classes than that (measured as the compiles of a run with an
+    // unbounded cache: a perfbench chain run 177, query_mix 170, scale
+    // 300; one Verify pass at sf0.01 1718). At 100 a re-run evicts each
+    // class before it comes back to it, so every lookup misses: a timed
+    // pass compiled 153-175 classes on chain, 80-133 on query_mix and
+    // 211-238 on scale (4-vCPU VM), and the JIT re-optimised every
+    // fresh copy. At 2048 the same passes compile 0, 0-6 and 18-26
+    // (plans the warm-up did not run, e.g. the noop sink where it
+    // wrote parquet): query_mix wall -21%, chain -18%. 2048 is the next
+    // power of two above Verify's 1718; the tier-1 test JVM compiles
+    // 5051 distinct classes, mostly plans run once: at 2048 it
+    // recompiles only 285 of them, and an unbounded cache would hold
+    // 20 MB more metaspace to save those.
+    // Cost: the retained classes' metaspace, 224 -> 239 MB after one
+    // Verify pass at sf0.01. A one-shot spark-submit per step sees no
+    // change: only a re-executed plan benefits. A static conf, read
+    // once per JVM at the first compile, so it takes effect only
+    // through this builder.
+    "spark.sql.codegen.cache.maxEntries" -> "2048",
     "spark.serializer" -> "org.apache.spark.serializer.KryoSerializer",
     "spark.sql.session.timeZone" -> "UTC",
     // the events test table (TESTDATA.md) stores ns timestamps, which

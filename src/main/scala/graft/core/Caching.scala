@@ -58,11 +58,14 @@ class CacheHandle(level: StorageLevel = StorageLevel.MEMORY_AND_DISK) {
     * scale a reliable checkpoint / write-and-read-back is the
     * equivalent with the same plan-truncation property.
     *
+    * The checkpointed partitions are stored at the handle's level
+    * (Spark adds disk to it, as every local checkpoint does).
+    *
     * Release discipline: `cacheManager.clearCache()` does NOT drop
     * checkpointed RDDs, so frames persisted this way MUST be released
     * through this handle (register it query-scoped). */
   def persistTruncated(df: DataFrame): DataFrame = synchronized {
-    val cp = df.localCheckpoint(eager = false)
+    val cp = df.localCheckpoint(eager = false, level)
     checkpointed += cp
     cp
   }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.SparkConf
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graft.SessionRules
 
@@ -37,6 +38,26 @@ class GraftSessionSpec extends SparkSpec {
     assert(effective("spark.sql.session.timeZone") == "UTC")
     assert(effective("spark.sql.adaptive.coalescePartitions.minPartitionSize") == "64k")
     assert(effective("spark.sql.extensions") == "graft.plans.GraftExtensions")
+    assert(effective("spark.sql.codegen.cache.maxEntries") == "2048")
+    val sized = new SparkConf(false).set("spark.sql.codegen.cache.maxEntries", "7")
+    assert((sized.getAll.toMap ++ GraftSession.settings("local[2]", 1, sized))
+      .apply("spark.sql.codegen.cache.maxEntries") == "7")
+  }
+
+  test("a re-executed plan reuses its generated classes past Spark's stock 100-entry cache") {
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    // every plan's generated code is distinct: the literals are inlined
+    def round(): Long = {
+      val before = compiles.getCount
+      (1 to 150).foreach { i =>
+        spark.range(3).selectExpr(s"id * 7919 + ${i}L AS x")
+          .write.format("noop").mode("overwrite").save()
+      }
+      compiles.getCount - before
+    }
+    val first = round()
+    assert(first > 100, s"the first round compiled $first classes, no more than the stock cache holds")
+    assert(round() == 0)
   }
 
   test("the extension is listed once, after any the launcher registers") {

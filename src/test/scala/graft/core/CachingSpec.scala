@@ -1,6 +1,8 @@
 package graft.core
 
 import graft.SparkSpec
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
 /** The materialize() topological guard: concurrent counts give earlier
   * submissions a head start, so a parent registered AFTER its dependent
@@ -47,6 +49,21 @@ class CachingSpec extends SparkSpec {
       assert(parent.storageLevel.useMemory || parent.storageLevel.useDisk)
       assert(child.storageLevel.useMemory || child.storageLevel.useDisk)
       assert(child.count() == 5)
+    } finally h.release(blocking = true)
+  }
+
+  test("persistTruncated stores the checkpoint at the handle's storage level") {
+    import spark.implicits._
+    val h = CacheHandle(StorageLevel.MEMORY_ONLY_SER)
+    val cp = h.persistTruncated((1 to 20).toDF("v").filter($"v" % 3 === 0))
+    try {
+      h.materialize()
+      val levels = cp.queryExecution.analyzed.collect {
+        case l: LogicalRDD => l.rdd.getStorageLevel
+      }
+      assert(levels.nonEmpty, "no LogicalRDD leaf behind the truncated frame")
+      assert(levels.forall(l => !l.deserialized && l.useMemory), levels.mkString(","))
+      assert(cp.count() == 6)
     } finally h.release(blocking = true)
   }
 }

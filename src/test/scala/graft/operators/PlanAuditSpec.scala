@@ -282,7 +282,8 @@ class PlanAuditSpec extends SparkSpec {
     // maxPartitionBytes so the small test files are not packed into a
     // single split (openCost packing would hide the layout).
     val dir = java.nio.file.Files.createTempDirectory("spread_guard").toString
-    val docs = (1L to 64L)
+    val parallelism = spark.sparkContext.defaultParallelism
+    val docs = (1L to math.max(64L, 2L * parallelism))
       .map(i => (i, s"alpha beta corpus document number $i", "en", "web"))
       .toDF("doc_id", "text", "lang", "source")
     try {
@@ -295,9 +296,11 @@ class PlanAuditSpec extends SparkSpec {
         val p1 = plan(graft.queries.Q.decontamination(spark, dir))
         assert(p1.contains("REPARTITION_BY_NUM"),
           s"spread() missing on a single-partition input:\n$p1")
-        // pre-partitioned layout (>= defaultParallelism files): no-op
-        docs.repartition(spark.sparkContext.defaultParallelism,
-            col("doc_id"))
+        // pre-partitioned layout (>= defaultParallelism files): no-op.
+        // Round-robin from one partition puts rows in every file; a
+        // hash layout can leave some empty, and an empty partition
+        // writes no file.
+        docs.coalesce(1).repartition(parallelism)
           .write.mode("overwrite").parquet(s"$dir/documents.parquet")
         val p2 = plan(graft.queries.Q.decontamination(spark, dir))
         assert(!p2.contains("REPARTITION_BY_NUM"),
