@@ -169,9 +169,12 @@ object StreamBench {
 
     // workload 1: full ingest chain (quality + dedup + decontamination)
     val benchmark = docs0.limit(50)
-    val r1 = run("ingest_chain", corpus, in =>
+    val ingestCache = graft.core.CacheHandle()
+    val r1 = try run("ingest_chain", corpus, in =>
       graft.streaming.StreamingIngest.ingest(in, benchmark,
-        "text", "doc_id", minQuality = 0.0, maxBenchCoverage = 0.6))
+        "text", "doc_id", minQuality = 0.0, maxBenchCoverage = 0.6,
+        cache = ingestCache))
+    finally ingestCache.release()
 
     // workload 2: incremental exact dedup against a static corpus index
     // (the original 1x corpus stands in the index; its clones arrive)

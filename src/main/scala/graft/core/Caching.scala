@@ -21,11 +21,18 @@ import org.apache.spark.storage.StorageLevel
   * handle.release()           // drop the signature cache
   * }}}
   *
-  * Pass [[CacheHandle.disabled]] to opt out of caching entirely (pure
-  * recomputation — the right call when the persisted subtree would be
-  * larger than the cluster's storage memory, e.g. a full shingle
-  * inverted index over a 100 TB corpus whose source scan is cheap
-  * columnar parquet).
+  * Contract: every cache-bearing operator takes its handle as a
+  * REQUIRED argument — there is no default handle, so nothing an
+  * operator persists is left without an owner. The caller either
+  * passes a `CacheHandle()` and releases it after the terminal action
+  * (a production step, a test), registers it with [[CacheHandle.queryScoped]]
+  * so a shared-session harness frees it through
+  * [[CacheHandle.releaseQueryScoped]] (a lazily built registered
+  * query), or passes [[CacheHandle.disabled]] to opt out of caching
+  * entirely (pure recomputation — the right call when the persisted
+  * subtree would be larger than the cluster's storage memory, e.g. a
+  * full shingle inverted index over a 100 TB corpus whose source scan
+  * is cheap columnar parquet).
   */
 class CacheHandle(level: StorageLevel = StorageLevel.MEMORY_AND_DISK) {
   private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -37,7 +44,7 @@ class CacheHandle(level: StorageLevel = StorageLevel.MEMORY_AND_DISK) {
     df
   }
 
-  /** Persist `df` with PLAN TRUNCATION: a (lazy) local checkpoint.
+  /** Persist `df` with PLAN TRUNCATION: a non-eager local checkpoint.
     *
     * [[persist]] leaves an InMemoryRelation in the logical plan, and
     * every scan site of the cached frame EMBEDS its full cached
@@ -49,24 +56,31 @@ class CacheHandle(level: StorageLevel = StorageLevel.MEMORY_AND_DISK) {
     * leaf `LogicalRDD` (optimization guide §3: "materialising an
     * intermediate result … truncates the plan"), so each consumer
     * costs one scan-leaf node regardless of how complex the frame's
-    * own plan was. The checkpoint is NON-EAGER: no job runs here
-    * (under AQE the exchange stages of the frame's plan do run at
-    * first materialisation, exactly as the persist path pays them);
-    * [[materialize]] counts these frames like persisted ones. The
-    * trade: checkpointed partitions store row-based (vs columnar
+    * own plan was; [[materialize]] counts these frames like persisted
+    * ones.
+    *
+    * Jobs DO run here under AQE: `Dataset.checkpoint` executes the
+    * frame's physical plan to obtain its RDD, and `AdaptiveSparkPlanExec`
+    * runs every shuffle stage of that plan synchronously while doing
+    * so. Only the final (post-shuffle) stage — the one whose partitions
+    * the checkpoint stores — waits for the first action. A frame with
+    * no exchange runs no job here.
+    *
+    * The trade: checkpointed partitions store row-based (vs columnar
     * cache) and are not fault-tolerant to executor loss — at cluster
     * scale a reliable checkpoint / write-and-read-back is the
-    * equivalent with the same plan-truncation property.
-    *
-    * The checkpointed partitions are stored at the handle's level
-    * (Spark adds disk to it, as every local checkpoint does).
+    * equivalent with the same plan-truncation property. They are
+    * stored at the handle's level (Spark adds disk to it, as every
+    * local checkpoint does).
     *
     * Release discipline: `cacheManager.clearCache()` does NOT drop
     * checkpointed RDDs, so frames persisted this way MUST be released
-    * through this handle (register it query-scoped). */
-  def persistTruncated(df: DataFrame): DataFrame = synchronized {
+    * through this handle. The checkpoint (and the shuffle stages it
+    * runs) happens outside the handle's lock; only the bookkeeping
+    * holds it, so concurrent callers do not serialise their stages. */
+  def persistTruncated(df: DataFrame): DataFrame = {
     val cp = df.localCheckpoint(eager = false, level)
-    checkpointed += cp
+    synchronized { checkpointed += cp }
     cp
   }
 
@@ -128,19 +142,6 @@ class CacheHandle(level: StorageLevel = StorageLevel.MEMORY_AND_DISK) {
 object CacheHandle {
   def apply(): CacheHandle = new CacheHandle()
   def apply(level: StorageLevel): CacheHandle = new CacheHandle(level)
-
-  /** Global A/B gate for plan-truncating persists: ON by default;
-    * `-Dgraft.plan.truncate=off` / `GRAFT_PLAN_TRUNCATE=off` replays
-    * the plan-embedding InMemoryRelation shape (measurement hook for
-    * interleaved A/B legs without a rebuild). */
-  private[graft] def truncateOn: Boolean =
-    !sys.props.get("graft.plan.truncate")
-      .orElse(sys.env.get("GRAFT_PLAN_TRUNCATE")).contains("off")
-
-  /** [[CacheHandle.persistTruncated]] under the [[truncateOn]] gate. */
-  private[graft] def persistMaybeTruncated(h: CacheHandle,
-                                           df: DataFrame): DataFrame =
-    if (truncateOn) h.persistTruncated(df) else h.persist(df)
 
   /** Topological order for [[CacheHandle.materialize]]: parents (frames
     * whose analyzed plan is a subtree of another frame's plan) first.

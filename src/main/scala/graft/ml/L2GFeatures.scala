@@ -391,10 +391,11 @@ object L2GFeatures {
     // returns the single non-null value — identical to first(ignoreNulls).
     // Scalar max keeps every aggregation buffer slot a MUTABLE primitive,
     // so the merge runs as a codegen'd HashAggregate; the r12 shape
-    // (one struct slot per family, [[featureMatrixStruct]]) had immutable
-    // buffer types and silently planned as Sort + SortAggregate — a full
-    // sort of the multi-million-row union (its stage: 25.2 of 48 steady
-    // CPU-s at sf0.1; the HashAggregate stage measures 14.6).
+    // (one struct slot per family merged by first(ignoreNulls)) had
+    // immutable buffer types and silently planned as Sort +
+    // SortAggregate — a full sort of the multi-million-row union (its
+    // stage: 25.2 of 48 steady CPU-s at sf0.1; the HashAggregate stage
+    // measures 14.6).
     // Measured trade (sf0.1, fresh-JVM bench protocol): the struct
     // shape RECORDS 1-3 s faster — SortAggregate is pre-compiled
     // library code with zero per-query JIT warmup, while the wide
@@ -411,10 +412,8 @@ object L2GFeatures {
     require(featCols.nonEmpty,
       "featureMatrix needs at least one non-key feature column")
     // Multi-owner columns are REJECTED, not resolved: the factory never
-    // produces them, and the two merge shapes would resolve them
-    // differently (max-across-owners here vs first-owner coalesce in
-    // [[featureMatrixStruct]]) — silently divergent semantics for the
-    // flat/struct parity the A/B twin exists to guarantee.
+    // produces them, and max-across-owners would silently pick one
+    // family's value over another's.
     require(famCols.flatten.size == featCols.size,
       "feature columns must be owned by exactly one family; multi-owner: " +
         famCols.flatten.groupBy(identity).collect {
@@ -436,48 +435,6 @@ object L2GFeatures {
       .groupBy("studyLocusId", "geneId")
       .agg(max(col(featCols.head)).as(featCols.head),
         featCols.tail.map(c => max(col(c)).as(c)): _*)
-      .na.fill(0.0)
-  }
-
-  /** A/B twin of [[featureMatrix]] kept for measurement: the r12 shape
-    * (one nullable struct slot per family, merged by first(ignoreNulls)).
-    * Plans as Sort + SortAggregate — struct buffers are immutable. */
-  def featureMatrixStruct(features: Seq[DataFrame]): DataFrame = {
-    import org.apache.spark.sql.types.{StructField, StructType}
-    val keys = Seq("studyLocusId", "geneId")
-    val famCols: Seq[Seq[String]] =
-      features.map(_.columns.toSeq.filterNot(keys.contains))
-    // same single-owner contract as [[featureMatrix]], so the A/B twins
-    // are defined on exactly the same input space
-    require(famCols.flatten.size == famCols.flatten.distinct.size,
-      "feature columns must be owned by exactly one family; multi-owner: " +
-        famCols.flatten.groupBy(identity).collect {
-          case (c, owners) if owners.size > 1 => c
-        }.mkString(", "))
-    val famType: Seq[StructType] = features.zip(famCols).map { case (f, fc) =>
-      StructType(fc.map(c => StructField(c, f.schema(c).dataType,
-        nullable = true)))
-    }
-    val padded = features.zipWithIndex.map { case (f, i) =>
-      f.select(col("studyLocusId") +: col("geneId") +:
-        features.indices.map { j =>
-          (if (j == i) struct(famCols(j).map(col): _*).cast(famType(j))
-           else lit(null).cast(famType(j))).as(s"_fam$j")
-        }: _*)
-    }
-    val merged = padded
-      .reduce(_.unionByName(_))
-      .groupBy("studyLocusId", "geneId")
-      .agg(first(col("_fam0"), ignoreNulls = true).as("_fam0"),
-        features.indices.tail.map(j =>
-          first(col(s"_fam$j"), ignoreNulls = true).as(s"_fam$j")): _*)
-    val featCols = famCols.flatten.distinct
-    val expanded = featCols.map { c =>
-      val owner = features.indices.find(j => famCols(j).contains(c)).get
-      col(s"_fam$owner.$c").as(c)
-    }
-    merged
-      .select(col("studyLocusId") +: col("geneId") +: expanded: _*)
       .na.fill(0.0)
   }
 
@@ -516,7 +473,7 @@ object L2GFeatures {
     * Sharing policy (measured at sf0.1): the ARRAY-heavy credible sets
     * are never persisted — their columnar cache conversion costs more
     * than re-running the codegen'd source aggregation. What IS
-    * persisted (when `persistShared`, on `cache`) are the FLAT frames
+    * persisted (on `cache`) are the FLAT frames
     * each consumed by ≥2 subplans — the exploded transcript
     * consequences (fused tag block + coloc-extension + confidence),
     * the flat credible-set projection, and the local coloc aggregate
@@ -524,39 +481,31 @@ object L2GFeatures {
     * are appended IN-FRAME by [[appendNeighbourhoodCols]], so the big
     * per-family local aggregates have a single consumer and are never
     * persisted. Callers release via `cache.release()` after the
-    * terminal action on the matrix. */
-  /** r17: the factory's shared frames are persisted PLAN-TRUNCATED by
-    * default — each shared frame goes through
-    * [[graft.core.CacheHandle.persistTruncated]] (lazy local
-    * checkpoint), so every one of its scan sites contributes a leaf
-    * node to the consumer plan instead of re-embedding the frame's
-    * full subtree (the r16 q_ml_l2g_features plan carried 51 embedded
-    * cache subtrees over 1,856 lines; planning + codegen were ~3-4 s
-    * of its ~6 s recorded cost). `GRAFT_PLAN_TRUNCATE=off` replays the
-    * r16 InMemoryRelation shape (A/B measurement hook, like
-    * GRAFT_L2G_MERGE). */
-  private[graft] def persistSharedFrame(cache: graft.core.CacheHandle,
-                                        df: DataFrame): DataFrame =
-    graft.core.CacheHandle.persistMaybeTruncated(cache, df)
-
-  def computeFeatureMatrix(in: Inputs, persistShared: Boolean = true,
-                           cache: graft.core.CacheHandle =
-                             graft.core.CacheHandle()): DataFrame = {
-    def shared(df: DataFrame): DataFrame =
-      if (persistShared) persistSharedFrame(cache, df) else df
+    * terminal action on the matrix.
+    *
+    * The shared frames are persisted PLAN-TRUNCATED through
+    * [[graft.core.CacheHandle.persistTruncated]] (local checkpoint), so
+    * every one of their scan sites contributes a leaf node to the
+    * consumer plan instead of re-embedding the frame's full subtree
+    * (the InMemoryRelation shape carried 51 embedded cache subtrees
+    * over 1,856 lines in the q_ml_l2g_features plan; planning + codegen
+    * were ~3-4 s of its ~6 s recorded cost). */
+  def computeFeatureMatrix(in: Inputs,
+                           cache: graft.core.CacheHandle): DataFrame = {
     // tags feed exactly one join (the fused tag-family block) — no persist
     val tags = in.tags.getOrElse(explodedTags(in.credSets))
-    val cons = in.variantIndex.map(vi => shared(explodedConsequences(vi)))
+    val cons = in.variantIndex.map(vi =>
+      cache.persistTruncated(explodedConsequences(vi)))
     // flat credible-set projection (no locus array): consumed by the
     // coloc right-side mapping, the coloc extension, the confidence
     // feature, and the gene-count window — persisting it once spares
     // each of those a recompute of the caller's source aggregation,
     // and unlike the array-bearing frame it columnar-caches cheaply.
     // A caller-persisted projection (Inputs.flatCred) is used as-is.
-    val flatCred = in.flatCred.getOrElse(shared(in.credSets.select(
-      in.credSets.columns.filter(Seq("studyLocusId", "studyId", "variantId",
-        "chromosome", "position", "confidence").contains).map(col)
-        .toIndexedSeq: _*)))
+    val flatCred = in.flatCred.getOrElse(cache.persistTruncated(
+      in.credSets.select(in.credSets.columns.filter(Seq("studyLocusId",
+        "studyId", "variantId", "chromosome", "position", "confidence")
+        .contains).map(col).toIndexedSeq: _*)))
     val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
     // ---- fused tag-keyed families (distance + VEP + isProteinCoding):
@@ -627,7 +576,7 @@ object L2GFeatures {
       (in.genes, cons) match {
         case (Some(g), Some(tc)) =>
           // two consumers (the union + the extension's anti-join probe)
-          val local = shared(
+          val local = cache.persistTruncated(
             colocFeatures(c, in.studyLoci.getOrElse(flatCred), si))
           // the extension's zero rows carry local features = 0.0 —
           // exactly the matrix zero-fill for those keys — so the
@@ -656,12 +605,7 @@ object L2GFeatures {
     // family subplan inside ONE shuffle stage, and concurrent branches
     // racing a still-uncached parent would recompute its partitions
     // redundantly (measured 2x end-to-end at sf0.1)
-    if (persistShared) cache.materialize()
-    // -Dgraft.l2g.merge=struct / GRAFT_L2G_MERGE=struct replays the
-    // r12 merge shape (A/B measurement hook)
-    if (sys.props.get("graft.l2g.merge")
-        .orElse(sys.env.get("GRAFT_L2G_MERGE")).contains("struct"))
-      featureMatrixStruct(frames.toSeq)
-    else featureMatrix(frames.toSeq)
+    cache.materialize()
+    featureMatrix(frames.toSeq)
   }
 }

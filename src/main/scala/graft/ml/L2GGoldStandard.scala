@@ -179,8 +179,7 @@ object L2GGoldStandard {
     * reference: src/gentropy/dataset/l2g_gold_standard.py:33-66 */
   def fromOtgCuration(curation: DataFrame, distances: DataFrame,
                       overlaps: DataFrame, interactions: DataFrame,
-                      cache: graft.core.CacheHandle =
-                        graft.core.CacheHandle()): DataFrame = {
+                      cache: graft.core.CacheHandle): DataFrame = {
     val gs = cache.persist(fromCuration(curation, distances))
     val unique = cache.persist(filterUniqueAssociations(gs, overlaps))
     // compute the caches NOW: the terminal action evaluates the

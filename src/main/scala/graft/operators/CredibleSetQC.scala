@@ -24,7 +24,7 @@ object CredibleSetQC {
       ldIndex: Option[DataFrame] = None,
       studyIndex: Option[DataFrame] = None,
       ldMinR2: Double = 0.8,
-      cache: graft.core.CacheHandle = graft.core.CacheHandle()): DataFrame = {
+      cache: graft.core.CacheHandle): DataFrame = {
     val filtered = credSets
       .withColumn("_p",
         col("pValueMantissa") * pow(lit(10.0), col("pValueExponent")))

@@ -95,8 +95,7 @@ object Decontamination {
                               minOverlap: Int = 1,
                               expectedShingles: Long = 1000000L,
                               numBits: Long = 8388608L,
-                              cache: graft.core.CacheHandle =
-                                graft.core.CacheHandle()): DataFrame = {
+                              cache: graft.core.CacheHandle): DataFrame = {
     // persisted: the bloom build (eager), the size aggregate, and the
     // broadcast join all read the benchmark shingles — without the
     // persist the MB-scale benchmark is shingled three times
@@ -125,8 +124,7 @@ object Decontamination {
                        shingleSize: Int = 3,
                        minCoverage: Double = 0.8,
                        bloomPrefilter: Boolean = false,
-                       cache: graft.core.CacheHandle =
-                         graft.core.CacheHandle()): DataFrame = {
+                       cache: graft.core.CacheHandle): DataFrame = {
     val pairs =
       if (bloomPrefilter)
         contaminationPairsBloom(corpus, benchmark, textCol, idCol, shingleSize,

@@ -121,7 +121,7 @@ object Dedup {
       df: DataFrame, textCol: String, idCol: String,
       shingleSize: Int = 3, numHashes: Int = 64, bands: Int = 16,
       threshold: Double = 0.7, maxBandBucket: Int = 100000,
-      cache: graft.core.CacheHandle = graft.core.CacheHandle()): DataFrame = {
+      cache: graft.core.CacheHandle): DataFrame = {
     val rowsPerBand = numHashes / bands
     // native one-pass signature (the HOF formulation re-tokenises per
     // hash component through the interpreter — ~100x slower)
@@ -242,8 +242,7 @@ object Dedup {
   def ngramJaccardPairs(df: DataFrame, textCol: String, idCol: String,
                         shingleSize: Int = 3, threshold: Double = 0.8,
                         maxShingleDF: Int = AdaptiveShingleDF,
-                        cache: graft.core.CacheHandle =
-                          graft.core.CacheHandle()): DataFrame =
+                        cache: graft.core.CacheHandle): DataFrame =
     shinglePairStats(df, textCol, idCol, shingleSize, maxShingleDF, cache)
       .withColumn("jaccard",
         col("common").cast("double") / (col("nA") + col("nB") - col("common")))
@@ -269,8 +268,7 @@ object Dedup {
   def containmentPairs(df: DataFrame, textCol: String, idCol: String,
                        shingleSize: Int = 3, threshold: Double = 0.9,
                        maxShingleDF: Int = AdaptiveShingleDF,
-                       cache: graft.core.CacheHandle =
-                         graft.core.CacheHandle()): DataFrame =
+                       cache: graft.core.CacheHandle): DataFrame =
     shinglePairStats(df, textCol, idCol, shingleSize, maxShingleDF, cache)
       .select(explode(array(
         struct(col("idA").as("idSub"), col("idB").as("idSuper"),
@@ -405,8 +403,7 @@ object Dedup {
   def connectedComponents(pairs: DataFrame, aCol: String = "idA",
                           bCol: String = "idB",
                           maxIter: Int = 30,
-                          cache: graft.core.CacheHandle =
-                            graft.core.CacheHandle()): DataFrame =
+                          cache: graft.core.CacheHandle): DataFrame =
     connectedComponentsWithRounds(pairs, aCol, bCol, maxIter,
       cache = cache)._1
 
@@ -427,8 +424,7 @@ object Dedup {
       pairs: DataFrame, aCol: String = "idA", bCol: String = "idB",
       maxIter: Int = 30,
       unionFindThreshold: Long = UnionFindThreshold,
-      cache: graft.core.CacheHandle =
-        graft.core.CacheHandle()): (DataFrame, Int) = {
+      cache: graft.core.CacheHandle): (DataFrame, Int) = {
     // canonical orientation: every edge points large → small
     var edges = pairs
       .select(greatest(col(aCol), col(bCol)).as("u"),
@@ -551,8 +547,7 @@ object Dedup {
   def keepClusterCanonical(df: DataFrame, idCol: String,
                            pairs: DataFrame, aCol: String = "idA",
                            bCol: String = "idB",
-                           cache: graft.core.CacheHandle =
-                             graft.core.CacheHandle()): DataFrame = {
+                           cache: graft.core.CacheHandle): DataFrame = {
     val losers = connectedComponents(pairs, aCol, bCol, cache = cache)
       .filter(col("id") =!= col("comp"))
       .select(col("id").as(idCol))
@@ -569,8 +564,7 @@ object Dedup {
     * Two hash groupBys over the duplication-rate-sized label frame. */
   def clusterSizeHistogram(pairs: DataFrame, aCol: String = "idA",
                            bCol: String = "idB",
-                           cache: graft.core.CacheHandle =
-                             graft.core.CacheHandle()): DataFrame =
+                           cache: graft.core.CacheHandle): DataFrame =
     connectedComponents(pairs, aCol, bCol, cache = cache)
       .groupBy("comp").agg(count(lit(1)).as("cluster_size"))
       .groupBy("cluster_size").agg(count(lit(1)).as("n_clusters"))
@@ -590,8 +584,7 @@ object Dedup {
   def keepClusterBest(df: DataFrame, idCol: String, scoreCol: String,
                       pairs: DataFrame, aCol: String = "idA",
                       bCol: String = "idB",
-                      cache: graft.core.CacheHandle =
-                        graft.core.CacheHandle()): DataFrame = {
+                      cache: graft.core.CacheHandle): DataFrame = {
     val labels = connectedComponents(pairs, aCol, bCol, cache = cache)
     val members = df.select(col(idCol).as("id"), col(scoreCol).as("_s"))
       .join(labels, Seq("id"))
@@ -639,8 +632,7 @@ object Dedup {
     * distinct spans. */
   def spanDedup(df: DataFrame, textCol: String, idCol: String,
                 blockTokens: Int = 10,
-                cache: graft.core.CacheHandle =
-                  graft.core.CacheHandle()): DataFrame = {
+                cache: graft.core.CacheHandle): DataFrame = {
     require(blockTokens > 0, "blockTokens must be positive")
     val b = blockTokens
     val tk = filter(split(trim(col(textCol)), "\\s+"), t => t =!= "")
@@ -696,7 +688,7 @@ object Dedup {
       df: DataFrame, textCol: String, idCol: String,
       shingleSize: Int = 3, numHashes: Int = 64, bands: Int = 16,
       threshold: Double = 0.5,
-      cache: graft.core.CacheHandle = graft.core.CacheHandle()): DataFrame = {
+      cache: graft.core.CacheHandle): DataFrame = {
     val rowsPerBand = numHashes / bands
     val signed = cache.persist(spread(df, idCol).select(col(idCol).as("id"),
       graft.plans.SketchFunctions
@@ -736,8 +728,7 @@ object Dedup {
     * same codegen reason as [[minhashDupPairsMd5]]. */
   def simhashDupPairsMd5(df: DataFrame, textCol: String, idCol: String,
                          maxHamming: Int = 3,
-                         cache: graft.core.CacheHandle =
-                           graft.core.CacheHandle()): DataFrame = {
+                         cache: graft.core.CacheHandle): DataFrame = {
     val bits = 60
     val qBits = bits / 4 // 15-bit quarters
     // one pass per document (tokenise once, md5 each token once, ±1

@@ -109,8 +109,7 @@ object ImportanceSampling {
   def dsirScores(corpus: DataFrame, target: DataFrame, textCol: String,
                  idCol: String, buckets: Int = 1 << 14,
                  alpha: Double = 1.0,
-                 cache: graft.core.CacheHandle =
-                   graft.core.CacheHandle()): DataFrame = {
+                 cache: graft.core.CacheHandle): DataFrame = {
     require(buckets > 0, "buckets must be positive")
     require(alpha > 0.0, "alpha must be positive")
     val fc = cache.persist(featureRows(corpus, textCol, idCol, buckets))
@@ -139,8 +138,7 @@ object ImportanceSampling {
   def dsirSelect(corpus: DataFrame, target: DataFrame, textCol: String,
                  idCol: String, k: Int, buckets: Int = 1 << 14,
                  alpha: Double = 1.0, seed: Long = 42L,
-                 cache: graft.core.CacheHandle =
-                   graft.core.CacheHandle()): DataFrame = {
+                 cache: graft.core.CacheHandle): DataFrame = {
     require(k > 0, "k must be positive")
     val scores = dsirScores(corpus, target, textCol, idCol, buckets,
       alpha, cache)

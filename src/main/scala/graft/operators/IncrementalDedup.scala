@@ -130,8 +130,7 @@ object IncrementalDedup {
     */
   def mergeComponents(labels: DataFrame, newPairs: DataFrame,
                       aCol: String = "idA", bCol: String = "idB",
-                      cache: graft.core.CacheHandle =
-                        graft.core.CacheHandle()): DataFrame = {
+                      cache: graft.core.CacheHandle): DataFrame = {
     val l = labels.select(col("id"), col("comp"))
     val ends = newPairs.select(col(aCol).as("id"))
       .unionByName(newPairs.select(col(bCol).as("id")))
@@ -188,8 +187,7 @@ object IncrementalDedup {
                               numHashes: Int = 64, bands: Int = 16,
                               threshold: Double = 0.5,
                               maxBandBucket: Int = 100000,
-                              cache: graft.core.CacheHandle =
-                                graft.core.CacheHandle()): DataFrame = {
+                              cache: graft.core.CacheHandle): DataFrame = {
     val rowsPerBand = numHashes / bands
     val arrivals = cache.persist(arrivalSigs)
     // `all` feeds explodeBands AND both candidate-pair signature

@@ -103,7 +103,7 @@ object LDClumping {
     * `cache`: the slim (5 key columns + exploded tag) frame feeds two
     * consumers (lead dedup + the candidate join); persisting it keeps
     * the pass count over `associations` at two — one to build the tag
-    * frame, one for the output back-join. Without a handle each
+    * frame, one for the output back-join. Without the persist each
     * consumer re-evaluates the upstream (column pruning makes the
     * branches' exchanges non-identical, so ReuseExchange cannot
     * dedupe them — measured 3 full upstream scans). Pass
@@ -123,8 +123,7 @@ object LDClumping {
     * spec pins this on non-injective inputs. Leave at 0 (default)
     * for the join production plan. */
   def clump(associations: DataFrame,
-            cache: graft.core.CacheHandle =
-              graft.core.CacheHandle(),
+            cache: graft.core.CacheHandle,
             windowPathMaxRows: Long = 0L): DataFrame = {
     if (windowPathMaxRows > 0L &&
         associations.count() <= windowPathMaxRows)

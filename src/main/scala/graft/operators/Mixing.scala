@@ -232,8 +232,7 @@ object Mixing {
                              valFrac: Double = 0.05,
                              testFrac: Double = 0.05,
                              salt: String = "split",
-                             cache: graft.core.CacheHandle =
-                               graft.core.CacheHandle()): DataFrame = {
+                             cache: graft.core.CacheHandle): DataFrame = {
     require(valFrac >= 0 && testFrac >= 0 && valFrac + testFrac <= 1)
     val labels = graft.operators.Dedup
       .connectedComponents(pairs, aCol, bCol, cache = cache)

@@ -151,8 +151,7 @@ object Overlaps {
     * action on the returned frame, or pass `CacheHandle.disabled` to
     * recompute the explode per consumer instead. */
   def findOverlaps(credSet: DataFrame, intraStudy: Boolean = false,
-                   cache: graft.core.CacheHandle =
-                     graft.core.CacheHandle()): DataFrame = {
+                   cache: graft.core.CacheHandle): DataFrame = {
     val tags = cache.persist(explodeLoci(credSet))
     // peaks feed BOTH align joins; without the persist the whole
     // self-join + distinct pyramid is evaluated once per side (exchange

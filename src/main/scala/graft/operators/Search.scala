@@ -45,8 +45,7 @@ object Search {
     * never-re-scan posture as [[IncrementalDedup]]). The one action
     * is the two-scalar stats aggregate. */
   def bm25IndexBuild(docs: DataFrame, textCol: String, idCol: String,
-                     cache: graft.core.CacheHandle =
-                       graft.core.CacheHandle()): Bm25Index = {
+                     cache: graft.core.CacheHandle): Bm25Index = {
     val tf = cache.persist(termFrequencies(docs, textCol, idCol))
     val dl = tf.groupBy("id").agg(sum("tf").as("dl"))
     val st = dl.agg(count(lit(1)).as("n"), avg("dl").as("a")).head()
@@ -86,8 +85,7 @@ object Search {
   def bm25IndexAppend(index: Bm25Index, batch: DataFrame, textCol: String,
                       idCol: String,
                       assertNewIds: Boolean = false,
-                      cache: graft.core.CacheHandle =
-                        graft.core.CacheHandle()): Bm25Index = {
+                      cache: graft.core.CacheHandle): Bm25Index = {
     val tfB = cache.persist(termFrequencies(batch, textCol, idCol))
     if (assertNewIds) {
       val clash = tfB.select("id").distinct()
@@ -167,8 +165,7 @@ object Search {
                       queryIdCol: String = "query_id",
                       queryTextCol: String = "qtext",
                       k: Int = 10, k1: Double = 1.2, b: Double = 0.75,
-                      cache: graft.core.CacheHandle =
-                        graft.core.CacheHandle()): DataFrame = {
+                      cache: graft.core.CacheHandle): DataFrame = {
     require(k > 0, "k must be positive")
     val qterms = queryTerms(queries, queryIdCol, queryTextCol)
     val vocab = qterms.select("term").distinct()
@@ -225,8 +222,7 @@ object Search {
                queryIdCol: String = "query_id",
                queryTextCol: String = "qtext",
                k: Int = 10, k1: Double = 1.2, b: Double = 0.75,
-               cache: graft.core.CacheHandle =
-                 graft.core.CacheHandle()): DataFrame = {
+               cache: graft.core.CacheHandle): DataFrame = {
     require(k > 0, "k must be positive")
     val tf = cache.persist(termFrequencies(docs, textCol, idCol))
     val dl = tf.groupBy("id").agg(sum("tf").as("dl"))

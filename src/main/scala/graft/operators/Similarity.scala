@@ -128,8 +128,7 @@ object Similarity {
                     dupPairs: DataFrame, k: Int,
                     retrieveFactor: Int = 3,
                     aCol: String = "idA", bCol: String = "idB",
-                    cache: graft.core.CacheHandle =
-                      graft.core.CacheHandle()): DataFrame = {
+                    cache: graft.core.CacheHandle): DataFrame = {
     require(k > 0 && retrieveFactor >= 1,
       "k and retrieveFactor must be positive")
     val labels = Dedup.connectedComponents(dupPairs, aCol, bCol,
@@ -308,8 +307,7 @@ object Similarity {
   def kmeansFit(embeddings: DataFrame, k: Int, maxIter: Int = 20,
                 tol: Double = 1e-6, seed: Long = 42L,
                 idCol: String = "id", vecCol: String = "embedding",
-                cache: graft.core.CacheHandle =
-                  graft.core.CacheHandle()): KMeansModel = {
+                cache: graft.core.CacheHandle): KMeansModel = {
     require(k > 0, "k must be positive")
     require(maxIter > 0, "maxIter must be positive")
     val e = cache.persist(
@@ -1034,8 +1032,7 @@ object Similarity {
   def semanticDupPairs(embeddings: DataFrame, centroids: DataFrame,
                        threshold: Double = 0.9,
                        maxCellSize: Long = 100000L,
-                       cache: graft.core.CacheHandle =
-                         graft.core.CacheHandle()): DataFrame = {
+                       cache: graft.core.CacheHandle): DataFrame = {
     // bounded by contract: the seed frame is small (it previously
     // broadcast); id-ascending order makes NearestCells' ties-by-index
     // equal ties-by-smaller-centId. Zero-norm centroids are dropped:

@@ -231,8 +231,7 @@ object TextAnalysis {
   def termCooccurrence(docs: DataFrame, textCol: String, idCol: String,
                        minPairCount: Int = 2, maxDocTerms: Int = 1000,
                        stopDfFrac: Double = 0.5,
-                       cache: graft.core.CacheHandle =
-                         graft.core.CacheHandle()): DataFrame = {
+                       cache: graft.core.CacheHandle): DataFrame = {
     require(stopDfFrac > 0.0 && stopDfFrac <= 1.0,
       "stopDfFrac must be in (0, 1]")
     // TermCounts entries are distinct per doc by construction — the

@@ -99,6 +99,7 @@ object Goldens {
     expected.keys.toSeq.sorted.foreach { name =>
       graft.SparkEntry.queries(name)(spark, sfDir)
         .coalesce(1).write.mode("overwrite").parquet(s"$out/$name")
+      graft.core.CacheHandle.releaseQueryScoped()
       val d = canonicalDigest(spark.read.parquet(s"$out/$name"))
       println(s"""GOLDEN "$name" "$tag" -> "$d",""")
     }

@@ -568,14 +568,14 @@ object Q {
   /** Exact n-gram Jaccard near-dup pairs. */
   def ngramJaccard(s: SparkSession, dir: String): DataFrame =
     Dedup.ngramJaccardPairs(t(s, dir, "documents"), "text", "doc_id",
-      shingleSize = 3, threshold = 0.4)
+      shingleSize = 3, threshold = 0.4, cache = queryCache)
       .select(col("idA"), col("idB"), q(col("jaccard"), 6).as("jaccard_q6"))
 
   /** Directed shingle-containment pairs — near-supersets a Jaccard
     * threshold misses (short doc embedded in a long one). */
   def dedupContainment(s: SparkSession, dir: String): DataFrame =
     Dedup.containmentPairs(t(s, dir, "documents"), "text", "doc_id",
-      shingleSize = 3, threshold = 0.5)
+      shingleSize = 3, threshold = 0.5, cache = queryCache)
       .select(col("idSub").as("id_sub"), col("idSuper").as("id_super"),
         q(col("containment"), 6).as("containment_q6"))
 
@@ -583,7 +583,8 @@ object Q {
     * earlier (by (doc_id, block index)) anywhere in the corpus is cut
     * and the survivors re-joined. */
   def dedupSpans(s: SparkSession, dir: String): DataFrame =
-    Dedup.spanDedup(t(s, dir, "documents"), "text", "doc_id", blockTokens = 10)
+    Dedup.spanDedup(t(s, dir, "documents"), "text", "doc_id",
+      blockTokens = 10, cache = queryCache)
 
   /** Upper-triangle covariance entries of the embedding corpus,
     * computed from the ONE-PASS native sufficient-statistics aggregate
@@ -650,7 +651,7 @@ object Q {
     val qs = Seq((1L, "spark window agg"), (2L, "customer order query"),
       (3L, "vector hash join")).toDF("query_id", "qtext")
     Search.bm25TopK(t(s, dir, "documents"),
-        "text", "doc_id", qs, k = 10)
+        "text", "doc_id", qs, k = 10, cache = queryCache)
       .select(col("query_id"), col("rank"), col("doc_id"),
         q(col("score"), 6).as("score_q6"))
   }
@@ -664,14 +665,14 @@ object Q {
     val docs = t(s, dir, "documents")
     // one index build = one corpus tokenise pass shared by both
     // systems (bm25SearchIndex ≡ bm25TopK is spec-pinned)
-    val idx = Search.bm25IndexBuild(docs, "text", "doc_id")
-    val sys1 = Search.bm25SearchIndex(idx, qs, k = 10)
+    val idx = Search.bm25IndexBuild(docs, "text", "doc_id", cache = queryCache)
+    val sys1 = Search.bm25SearchIndex(idx, qs, k = 10, cache = queryCache)
     val sys2 = Search.bm25SearchIndex(idx, qs, k = 10,
       // b > 0 keeps sys2 length-normalised: with b = 0 the score is
       // dl-independent and same-tf docs tie EXACTLY, so the rank cut
       // hinges on float summation order (= partition count) — the
       // hash compare then flips between 4- and 8-core runs
-      k1 = 0.5, b = 0.35)
+      k1 = 0.5, b = 0.35, cache = queryCache)
     Search.rrfFuse(Seq(sys1, sys2), k = 10)
       .select(col("query_id"), col("rank"), col("doc_id"),
         q(col("score"), 6).as("score_q6"))
@@ -686,7 +687,7 @@ object Q {
       (3L, "vector hash join")).toDF("query_id", "qtext")
     val lex = Search.bm25TopK(
         spread(s, t(s, dir, "documents"), col("doc_id")), "text", "doc_id", qs,
-        k = 10)
+        k = 10, cache = queryCache)
       .select("query_id", "rank", "doc_id")
     val emb = t(s, dir, "embeddings").select(col("vec_id").as("id"),
       col("embedding").cast("array<double>").as("embedding"))
@@ -714,7 +715,7 @@ object Q {
   def dsirSelect(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
     ImportanceSampling.dsirSelect(docs, docs.filter(col("lang") === "en"),
-        "text", "doc_id", k = 100, buckets = 4096)
+        "text", "doc_id", k = 100, buckets = 4096, cache = queryCache)
       .select(col("doc_id"), col("lang"), col("logw_nano"),
         q(col("gumbel_key"), 6).as("gumbel_q6"))
   }
@@ -730,7 +731,7 @@ object Q {
   def textCooccurrence(s: SparkSession, dir: String): DataFrame =
     TextAnalysis.termCooccurrence(
         t(s, dir, "documents"), "text", "doc_id",
-        minPairCount = 5, stopDfFrac = 0.9)
+        minPairCount = 5, stopDfFrac = 0.9, cache = queryCache)
       .select(col("term_a"), col("term_b"), col("n_pairs"),
         col("df_a"), col("df_b"), q(col("pmi"), 6).as("pmi_q6"))
 
@@ -971,6 +972,15 @@ object Q {
     * are backed by checkpointed RDDs that `cacheManager.clearCache()`
     * cannot see — only this handle's release() drops them. */
   private val l2gSrcCache =
+    graft.core.CacheHandle.queryScoped(graft.core.CacheHandle())
+
+  /** Cache handle of every other registered query that persists: the
+    * operators' intermediates (dedup signatures, BM25 postings,
+    * clumping tag frames, gold-standard expansions) and the builders'
+    * own shared inputs. Query-scoped, so a shared-session harness
+    * frees them through `CacheHandle.releaseQueryScoped()` after each
+    * query's terminal action. */
+  private val queryCache =
     graft.core.CacheHandle.queryScoped(graft.core.CacheHandle())
 
   /** The r12 lifecycle chain's fine-mapping locus extraction as an
@@ -1274,7 +1284,7 @@ object Q {
         col("embedding").cast("array<double>").as("embedding"))
     val pairs = Similarity.bruteForceDupPairs(emb, threshold = 0.4)
     Similarity.hardNegatives(emb, emb.filter(col("id") < 5),
-        pairs, k = 5, retrieveFactor = 4)
+        pairs, k = 5, retrieveFactor = 4, cache = queryCache)
       .select(col("queryId"), col("neighbourId"), col("rank").cast("long").as("rank"),
         q(col("similarity"), 4).as("sim_q4"))
   }
@@ -1324,7 +1334,8 @@ object Q {
   /** MinHash LSH near-dup pairs (xxhash64 — no SQL oracle). */
   def minhashPairs(s: SparkSession, dir: String): DataFrame =
     Dedup.minhashDupPairs(t(s, dir, "documents"), "text", "doc_id",
-      shingleSize = 3, numHashes = 64, bands = 16, threshold = 0.5)
+      shingleSize = 3, numHashes = 64, bands = 16, threshold = 0.5,
+      cache = queryCache)
 
   /** SimHash near-dup pairs (no SQL oracle). */
   def simhashPairs(s: SparkSession, dir: String): DataFrame =
@@ -1423,13 +1434,14 @@ object Q {
   /** MinHash LSH pairs, md5-anchored variant (SQL oracle). */
   def minhashPairsMd5(s: SparkSession, dir: String): DataFrame =
     Dedup.minhashDupPairsMd5(t(s, dir, "documents"), "text", "doc_id",
-      shingleSize = 3, numHashes = 64, bands = 16, threshold = 0.5)
+      shingleSize = 3, numHashes = 64, bands = 16, threshold = 0.5,
+      cache = queryCache)
       .select(col("idA"), col("idB"), q(col("similarity"), 6).as("sim_q6"))
 
   /** SimHash pairs, md5-anchored 60-bit variant (SQL oracle). */
   def simhashPairsMd5(s: SparkSession, dir: String): DataFrame =
     Dedup.simhashDupPairsMd5(t(s, dir, "documents"), "text", "doc_id",
-      maxHamming = 3)
+      maxHamming = 3, cache = queryCache)
 
   /** Near-dup clusters: connected components over the md5-anchored
     * MinHash pair graph — (docId, componentId) with componentId = min
@@ -1438,8 +1450,9 @@ object Q {
     * whole pairs→clusters path. */
   def dedupComponents(s: SparkSession, dir: String): DataFrame = {
     val pairs = Dedup.minhashDupPairsMd5(t(s, dir, "documents"), "text",
-      "doc_id", shingleSize = 3, numHashes = 64, bands = 16, threshold = 0.5)
-    Dedup.connectedComponents(pairs)
+      "doc_id", shingleSize = 3, numHashes = 64, bands = 16, threshold = 0.5,
+      cache = queryCache)
+    Dedup.connectedComponents(pairs, cache = queryCache)
       .select(col("id").cast("long").as("docId"),
         col("comp").cast("long").as("componentId"))
   }
@@ -1490,8 +1503,9 @@ object Q {
   /** Size histogram of the minhash near-dup clusters. */
   def dedupClusterHistogram(s: SparkSession, dir: String): DataFrame = {
     val pairs = Dedup.minhashDupPairsMd5(t(s, dir, "documents"), "text",
-      "doc_id", shingleSize = 3, numHashes = 64, bands = 16, threshold = 0.5)
-    Dedup.clusterSizeHistogram(pairs)
+      "doc_id", shingleSize = 3, numHashes = 64, bands = 16, threshold = 0.5,
+      cache = queryCache)
+    Dedup.clusterSizeHistogram(pairs, cache = queryCache)
   }
 
   /** Quality-aware dedup survivors: per minhash near-dup cluster keep
@@ -1499,8 +1513,9 @@ object Q {
   def dedupKeepBest(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
     val pairs = Dedup.minhashDupPairsMd5(docs, "text", "doc_id",
-      shingleSize = 3, numHashes = 64, bands = 16, threshold = 0.5)
-    Dedup.keepClusterBest(docs, "doc_id", "n_chars", pairs)
+      shingleSize = 3, numHashes = 64, bands = 16, threshold = 0.5,
+      cache = queryCache)
+    Dedup.keepClusterBest(docs, "doc_id", "n_chars", pairs, cache = queryCache)
       .select(col("doc_id"), col("n_chars"))
   }
 
@@ -1510,9 +1525,10 @@ object Q {
   def splitLeakageSafe(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
     val pairs = Dedup.minhashDupPairsMd5(docs, "text", "doc_id",
-      shingleSize = 3, numHashes = 64, bands = 16, threshold = 0.5)
+      shingleSize = 3, numHashes = 64, bands = 16, threshold = 0.5,
+      cache = queryCache)
     Mixing.assignSplitLeakageSafe(docs, "doc_id", pairs,
-        valFrac = 0.2, testFrac = 0.2)
+        valFrac = 0.2, testFrac = 0.2, cache = queryCache)
       .select(col("doc_id"), col("split"))
   }
 
@@ -1551,7 +1567,7 @@ object Q {
       docs.filter(col("doc_id") % 5 === 0), "text", "doc_id")
     IncrementalDedup.incrementalMinhashPairs(arrivals, index,
         numHashes = 64, bands = 16, threshold = 0.5,
-        maxBandBucket = Int.MaxValue)
+        maxBandBucket = Int.MaxValue, cache = queryCache)
       .select(col("idA"), col("idB"), q(col("similarity"), 6).as("sim_q6"))
   }
 
@@ -1563,7 +1579,7 @@ object Q {
       docs.filter(col("doc_id") % 5 === 0), "text", "doc_id", md5Base = true)
     IncrementalDedup.incrementalMinhashPairs(arrivals, index,
         numHashes = 64, bands = 16, threshold = 0.5,
-        maxBandBucket = Int.MaxValue)
+        maxBandBucket = Int.MaxValue, cache = queryCache)
       .select(col("idA"), col("idB"), q(col("similarity"), 6).as("sim_q6"))
   }
 
@@ -1670,7 +1686,8 @@ object Q {
     val docs = t(s, dir, "documents")
     Decontamination.contaminationPairsBloom(
       docs,
-      docs.filter(col("doc_id") % 37 === 0), "text", "doc_id")
+      docs.filter(col("doc_id") % 37 === 0), "text", "doc_id",
+      cache = queryCache)
       .filter(col("corpusId") =!= col("benchId") && col("coverage") >= 0.6)
       .select(col("corpusId"), col("benchId"), col("overlap"),
         col("benchShingles"), q(col("coverage"), 6).as("coverage_q6"))
@@ -1698,7 +1715,7 @@ object Q {
       .select(col("vec_id").as("id"),
         col("embedding").cast("array<double>").as("embedding"))
     Similarity.semanticDupPairs(emb, emb.filter(col("id") % 100 === 0),
-      threshold = 0.4)
+      threshold = 0.4, cache = queryCache)
       .select(col("cell"), col("idA"), col("idB"),
         q(col("similarity"), 6).as("sim_q6"))
   }
@@ -1779,7 +1796,7 @@ object Q {
                             windowPathMaxRows: Long): DataFrame = {
     // deterministic synthesis: p-value injective in the variant key so
     // the running-window tie order cannot differ between engines
-    val slim = t(s, dir, "lineitem")
+    val synth = t(s, dir, "lineitem")
       // pre-partition on the groupBy keys so the synthesis aggregation
       // runs in parallel off one reused exchange instead of a partial
       // agg inside the serial single-row-group scan task (max() only —
@@ -1798,20 +1815,21 @@ object Q {
         (-(col("vKey") % 12) - 4).cast("int").as("pValueExponent"),
         array(struct(concat(lit("v"), col("vKey") + 1).as("tagVariantId"),
           col("maxR2").as("r2Overall"))).as("ldSet"))
-      // clump reads its input twice (slim tag frame + output back-join);
-      // on a parquet-backed StudyLocus the second pass is a pruned scan,
-      // but this query's input is an expensive synthesis groupBy. Persist
-      // the SLIM synthesized columns and derive the wide arrays after the
-      // cache point — the columnar cache then stores only scalars + the
-      // 1-element ldSet, mirroring what parquet column pruning gives a
-      // real caller (caching the full wide rows measured SLOWER than the
-      // double recompute: array-of-struct decode ≈ the synthesis itself)
-      .persist()
+    // clump reads its input twice (slim tag frame + output back-join);
+    // on a parquet-backed StudyLocus the second pass is a pruned scan,
+    // but this query's input is an expensive synthesis groupBy. Persist
+    // the SLIM synthesized columns and derive the wide arrays after the
+    // cache point — the columnar cache then stores only scalars + the
+    // 1-element ldSet, mirroring what parquet column pruning gives a
+    // real caller (caching the full wide rows measured SLOWER than the
+    // double recompute: array-of-struct decode ≈ the synthesis itself)
+    val slim = queryCache.persist(synth)
     val assoc = slim
       .withColumn("locus", array(struct(col("variantId"),
         lit(1.0).as("posteriorProbability"))))
       .withColumn("qualityControls", lit(null).cast("array<string>"))
-    LDClumping.clump(assoc, windowPathMaxRows = windowPathMaxRows)
+    LDClumping.clump(assoc, cache = queryCache,
+        windowPathMaxRows = windowPathMaxRows)
       .select(col("studyId"), col("chromosome"), col("variantId"),
         array_contains(coalesce(col("qualityControls"), array()),
           LDClumping.LdClumpedFlag).as("ldClumped"))
@@ -1886,8 +1904,8 @@ object Q {
     // lineitem groupBy once per persisted consumer — at bench scale
     // those duplicated source aggregations and their serial
     // materialisation jobs cost more than the feature math itself.
-    // r17: persists go through the plan-truncating gate (lazy local
-    // checkpoint — see L2GFeatures.truncatePlans): every scan site of
+    // r17: persists are plan-truncating (local checkpoint — see
+    // CacheHandle.persistTruncated): every scan site of
     // a shared frame is then a LogicalRDD leaf instead of an embedded
     // InMemoryRelation subtree, collapsing the 1,856-line / 51-cache-
     // subtree formatted plan whose planning+codegen dominated this
@@ -1897,7 +1915,7 @@ object Q {
     // e2eTagsCache).
     l2gSrcCache.release()
     val srcCache = l2gSrcCache
-    val flatCred = L2GFeatures.persistSharedFrame(srcCache,
+    val flatCred = srcCache.persistTruncated(
       spread(s, t(s, dir, "lineitem"), col("l_orderkey"))
       .groupBy(col("l_orderkey"))
       .agg(min(col("l_partkey")).as("_leadPart"),
@@ -1940,7 +1958,7 @@ object Q {
         (col("_sk") + 1000).as("studyId"))
     // tiny (500 rows) but read by the studyLoci union AND the study
     // index — persist so the orders aggregation runs once
-    val qtlLociP = L2GFeatures.persistSharedFrame(srcCache, qtlLoci)
+    val qtlLociP = srcCache.persistTruncated(qtlLoci)
     // both studyLoci and studyIndex now derive from the two caches
     // above — no separate persists or counts; each consumer pays a
     // cache scan plus a 500-row union
@@ -2058,7 +2076,8 @@ object Q {
       concat(lit("g"), col("p_partkey") % 60).as("targetA"),
       concat(lit("g"), (col("p_partkey") * 7 + 1) % 60).as("targetB"),
       ((col("p_partkey") % 100) / 100.0).as("scoring"))
-    L2GGoldStandard.fromOtgCuration(curation, distances, overlaps, interactions)
+    L2GGoldStandard.fromOtgCuration(curation, distances, overlaps,
+        interactions, cache = queryCache)
       .select(col("studyLocusId"), col("studyId"), col("variantId"),
         col("geneId"), col("goldStandardSet"),
         array_join(array_sort(col("sources")), ",").as("sources_str"))
@@ -2418,7 +2437,7 @@ object Q {
       .withColumn("locus", array(struct(col("variantId"),
         lit(1.0).as("posteriorProbability"))))
       .withColumn("qualityControls", lit(null).cast("array<string>"))
-    LDClumping.clump(assoc)
+    LDClumping.clump(assoc, cache = queryCache)
       .select(col("studyId"), col("chromosome"), col("variantId"),
         array_contains(coalesce(col("qualityControls"), array()),
           LDClumping.LdClumpedFlag).as("ldClumped"))
@@ -2503,7 +2522,8 @@ object Q {
       concat(lit("g"), col("p_partkey") % 60).as("targetA"),
       concat(lit("g"), (col("p_partkey") * 7 + 1) % 60).as("targetB"),
       ((col("p_partkey") % 100) / 100.0).as("scoring"))
-    L2GGoldStandard.fromOtgCuration(curation, distances, overlaps, interactions)
+    L2GGoldStandard.fromOtgCuration(curation, distances, overlaps,
+        interactions, cache = queryCache)
       .select(col("studyLocusId"), col("studyId"), col("variantId"),
         col("geneId"), col("goldStandardSet"),
         array_join(array_sort(col("sources")), ",").as("sources_str"))

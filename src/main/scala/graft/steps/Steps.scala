@@ -76,14 +76,16 @@ object Steps {
   private def write(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").parquet(path)
 
-  /** Run a cache-bearing operator, write its result, and release the
-    * operator's persisted frames. Per-step spark-submit never needs
-    * the release (JVM exit drops caches), but a long-lived session
-    * chaining many steps would otherwise accumulate them. */
-  private def writeReleasing(path: String)(
-      body: graft.core.CacheHandle => DataFrame): Unit = {
+  /** Run a cache-bearing step with a fresh handle and release the
+    * operators' persisted frames once its writes are done. Per-step
+    * spark-submit never needs the release (JVM exit drops caches), but
+    * a long-lived session chaining many steps would otherwise
+    * accumulate them — and plan-truncated frames (local checkpoints)
+    * are invisible to `clearCache()`, so this release is their only
+    * reclamation path. */
+  private def releasing(body: graft.core.CacheHandle => Unit): Unit = {
     val handle = graft.core.CacheHandle()
-    try write(body(handle), path) finally handle.release()
+    try body(handle) finally handle.release()
   }
 
   val registry: Map[String, Step] = Seq(
@@ -104,30 +106,30 @@ object Steps {
 
     Step("ld_based_clumping",
       "Flag leads explained by a stronger lead in high LD",
-      (s, a) => writeReleasing(a("out"))(h =>
-        LDClumping.clump(read(s, a("in")), cache = h))),
+      (s, a) => releasing(h => write(
+        LDClumping.clump(read(s, a("in")), cache = h), a("out")))),
 
     Step("colocalisation",
       "COLOC + eCAVIAR over credible-set overlaps",
-      // writeReleasing is load-bearing in a chained session: findOverlaps
+      // the release is load-bearing in a chained session: findOverlaps
       // persists the exploded tags AND the peak pairs (corpus-scale at
       // 10x), and leaking them starved every later stage of storage
       // memory (the ChainBench 10x run measured the NEXT stage at
       // 17x/decade before this release)
-      (s, a) => writeReleasing(a("out")) { h =>
+      (s, a) => releasing { h =>
         // both methods take their fused O(tags)+O(intersection) scale
         // paths; method=coloc_classic / ecaviar_classic keep the
         // aligned-overlaps formulation for parity runs
         def tags = h.persist(Overlaps.explodeLoci(read(s, a("in"))))
         def overlaps = Overlaps.findOverlaps(read(s, a("in")), cache = h)
-        a.get("method").map(_.toLowerCase) match {
+        write(a.get("method").map(_.toLowerCase) match {
           case Some("ecaviar") => Coloc.eCaviarFused(tags)
           case Some("coloc") | None => Coloc.colocaliseFused(tags)
           case Some("ecaviar_classic") => Coloc.eCaviar(overlaps)
           case Some("coloc_classic") => Coloc.colocalise(overlaps)
           case Some(other) =>
             throw new IllegalArgumentException(s"Unknown method '$other'")
-        }
+        }, a("out"))
       }),
 
     Step("pics",
@@ -230,7 +232,7 @@ object Steps {
 
     Step("l2g_feature_matrix",
       "Locus-to-gene feature matrix (distance/coloc/VEP/other families)",
-      (s, a) => write(
+      (s, a) => releasing(h => write(
         L2GFeatures.computeFeatureMatrix(L2GFeatures.Inputs(
           credSets = read(s, a("credible_sets")),
           variantIndex = a.get("variant_index").map(read(s, _)),
@@ -238,16 +240,17 @@ object Steps {
           distances = a.get("distances").map(read(s, _)),
           coloc = a.get("colocalisation").map(read(s, _)),
           studyIndex = a.get("study_index").map(read(s, _)),
-          studyLoci = a.get("study_loci").map(read(s, _)))), a("out"))),
+          studyLoci = a.get("study_loci").map(read(s, _))), cache = h),
+        a("out")))),
 
     Step("l2g_gold_standard",
       "Gold-standard labels: curation + negatives, overlap-dedup, interaction cleanup",
-      (s, a) => write(
+      (s, a) => releasing(h => write(
         graft.ml.L2GGoldStandard.fromOtgCuration(
           curation = read(s, a("curation")),
           distances = read(s, a("distances")),
           overlaps = read(s, a("overlaps")),
-          interactions = read(s, a("interactions"))), a("out"))),
+          interactions = read(s, a("interactions")), cache = h), a("out")))),
 
     Step("l2g_train",
       "Train the L2G GBT: grouped hold-out + grouped K-fold CV + final fit",
@@ -296,14 +299,14 @@ object Steps {
 
     Step("credible_set_qc",
       "Lead p-value + purity filters, best-BF dedup, optional LD clump",
-      (s, a) => write(
+      (s, a) => releasing(h => write(
         CredibleSetQC.credibleSetQc(read(s, a("in")),
           pValueThreshold = a.double("p_value_threshold", 1e-5),
           purityMinR2 = a.double("purity_min_r2", 0.01),
           clump = a.bool("clump", false),
           ldIndex = a.get("ld_index").map(read(s, _)),
           studyIndex = a.get("study_index").map(read(s, _)),
-          ldMinR2 = a.double("ld_min_r2", 0.8)), a("out"))),
+          ldMinR2 = a.double("ld_min_r2", 0.8), cache = h), a("out")))),
 
     Step("foldx_ingestion",
       "FoldX ddG dataset into amino-acid variant annotations",
@@ -464,13 +467,14 @@ object Steps {
 
     Step("cooccurrence",
       "Term co-occurrence + PMI with stop/fat-doc caps",
-      (s, a) => writeReleasing(a("out")) { h =>
+      (s, a) => releasing(h => write(
         TextAnalysis.termCooccurrence(read(s, a("in")),
           a.get("text_col").getOrElse("text"),
           a.get("id_col").getOrElse("doc_id"),
           minPairCount = a.int("min_pairs", 2),
           maxDocTerms = a.int("max_doc_terms", 1000),
-          stopDfFrac = a.double("stop_df_frac", 0.5), cache = h) }),
+          stopDfFrac = a.double("stop_df_frac", 0.5), cache = h),
+        a("out")))),
 
     Step("quality_filter",
       "Gopher-style hard-rule filter; survivors to out, per-rule audit to out_audit",
@@ -506,32 +510,26 @@ object Steps {
 
     Step("kmeans_fit",
       "Full-corpus Lloyd k-means: writes (id, cell); centroids to out_centroids",
-      (s, a) => {
-        val h = graft.core.CacheHandle()
-        try {
-          val in = read(s, a("in"))
-          val id = a.get("id_col").getOrElse("id")
-          val vec = a.get("vec_col").getOrElse("embedding")
-          val m = Similarity.kmeansFit(in, a.int("k", 16),
-            maxIter = a.int("max_iter", 20), tol = a.double("tol", 1e-6),
-            seed = a.int("seed", 42).toLong, idCol = id, vecCol = vec,
-            cache = h)
-          write(Similarity.kmeansAssign(in, m.centroids, id, vec)
-            .select("id", "cell"), a("out"))
-          a.get("out_centroids").foreach(p =>
-            write(Similarity.kmeansCentroids(s, m), p))
-        } finally h.release()
+      (s, a) => releasing { h =>
+        val in = read(s, a("in"))
+        val id = a.get("id_col").getOrElse("id")
+        val vec = a.get("vec_col").getOrElse("embedding")
+        val m = Similarity.kmeansFit(in, a.int("k", 16),
+          maxIter = a.int("max_iter", 20), tol = a.double("tol", 1e-6),
+          seed = a.int("seed", 42).toLong, idCol = id, vecCol = vec,
+          cache = h)
+        write(Similarity.kmeansAssign(in, m.centroids, id, vec)
+          .select("id", "cell"), a("out"))
+        a.get("out_centroids").foreach(p =>
+          write(Similarity.kmeansCentroids(s, m), p))
       }),
 
     Step("bm25_index_build",
       "Build + persist a BM25 postings index (term-range-sorted for pruning)",
-      (s, a) => {
-        val h = graft.core.CacheHandle()
-        try Search.bm25IndexWrite(Search.bm25IndexBuild(read(s, a("in")),
+      (s, a) => releasing(h =>
+        Search.bm25IndexWrite(Search.bm25IndexBuild(read(s, a("in")),
           a.get("text_col").getOrElse("text"),
-          a.get("id_col").getOrElse("doc_id"), cache = h), a("out"))
-        finally h.release()
-      }),
+          a.get("id_col").getOrElse("doc_id"), cache = h), a("out")))),
 
     Step("bm25_index_append",
       "Fold an arrival batch into a persisted BM25 index (no corpus " +
@@ -544,22 +542,20 @@ object Steps {
           java.nio.file.Paths.get(a("index")).toAbsolutePath.normalize,
           "bm25_index_append: out must not equal index (write to a new " +
             "generation dir, then swap)")
-        val h = graft.core.CacheHandle()
-        try Search.bm25IndexWrite(Search.bm25IndexAppend(
+        releasing(h => Search.bm25IndexWrite(Search.bm25IndexAppend(
           Search.bm25IndexRead(s, a("index")), read(s, a("in")),
           a.get("text_col").getOrElse("text"),
           a.get("id_col").getOrElse("doc_id"),
-          assertNewIds = a.bool("assert_new_ids", true), cache = h), a("out"))
-        finally h.release()
+          assertNewIds = a.bool("assert_new_ids", true), cache = h), a("out")))
       }),
 
     Step("bm25_search",
       "Search a persisted BM25 index with a query batch",
-      (s, a) => writeReleasing(a("out")) { h =>
+      (s, a) => releasing(h => write(
         Search.bm25SearchIndex(Search.bm25IndexRead(s, a("index")),
           read(s, a("queries")),
           k = a.int("k", 10), k1 = a.double("k1", 1.2),
-          b = a.double("b", 0.75), cache = h) }),
+          b = a.double("b", 0.75), cache = h), a("out")))),
 
     Step("rrf_fuse",
       "Reciprocal-rank-fuse ranking parquets (in=a,b,... each query_id,rank,doc_id)",
@@ -569,25 +565,25 @@ object Steps {
 
     Step("bm25_topk",
       "BM25 top-k documents per query (queries=parquet with query_id,qtext)",
-      (s, a) => writeReleasing(a("out")) { h =>
+      (s, a) => releasing(h => write(
         Search.bm25TopK(read(s, a("in")),
           a.get("text_col").getOrElse("text"),
           a.get("id_col").getOrElse("doc_id"),
           read(s, a("queries")),
           k = a.int("k", 10), k1 = a.double("k1", 1.2),
-          b = a.double("b", 0.75), cache = h) }),
+          b = a.double("b", 0.75), cache = h), a("out")))),
 
     Step("dedup_spans",
       "Remove corpus-wide duplicated token blocks (fixed-window substring dedup)",
-      (s, a) => writeReleasing(a("out")) { h =>
+      (s, a) => releasing(h => write(
         Dedup.spanDedup(read(s, a("in")),
           a.get("text_col").getOrElse("text"),
           a.get("id_col").getOrElse("doc_id"),
-          blockTokens = a.int("block_tokens", 10), cache = h) }),
+          blockTokens = a.int("block_tokens", 10), cache = h), a("out")))),
 
     Step("dedup_containment",
       "Directed shingle-containment pairs (near-supersets Jaccard misses)",
-      (s, a) => writeReleasing(a("out")) { h =>
+      (s, a) => releasing(h => write(
         Dedup.containmentPairs(read(s, a("in")),
           a.get("text_col").getOrElse("text"),
           a.get("id_col").getOrElse("doc_id"),
@@ -596,15 +592,15 @@ object Steps {
           // explicit stop-shingle cap opt-out of the adaptive default
           // (pre-r9 fixed behaviour: max_shingle_df=100000)
           maxShingleDF = a.int("max_shingle_df", Dedup.AdaptiveShingleDF),
-          cache = h) }),
+          cache = h), a("out")))),
 
     Step("dedup_minhash",
       "MinHash+LSH near-duplicate pairs on a document table",
-      (s, a) => writeReleasing(a("out")) { h =>
+      (s, a) => releasing(h => write(
         Dedup.minhashDupPairs(read(s, a("in")),
           a.get("text_col").getOrElse("text"),
           a.get("id_col").getOrElse("doc_id"),
-          threshold = a.double("threshold", 0.7), cache = h) }),
+          threshold = a.double("threshold", 0.7), cache = h), a("out")))),
 
     Step("dedup_index_build",
       "Build a persistable dedup index: kind=exact (digest,canonicalId) or kind=minhash (id,sig)",
@@ -638,36 +634,29 @@ object Steps {
 
     Step("dedup_incremental_minhash",
       "Near-dup pairs of an arrival batch vs a (id,sig) signature index; optional merged index",
-      (s, a) => {
+      (s, a) => releasing { h =>
         val index = read(s, a("index"))
         val text = a.get("text_col").getOrElse("text")
         val id = a.get("id_col").getOrElse("doc_id")
-        val handle = graft.core.CacheHandle()
-        try {
-          val arrSigs = IncrementalDedup.minhashIndex(read(s, a("in")), text, id,
-            shingleSize = a.int("shingle_size", 3),
-            numHashes = a.int("num_hashes", 64))
-          write(IncrementalDedup.incrementalMinhashPairs(arrSigs, index,
-            numHashes = a.int("num_hashes", 64),
-            bands = a.int("bands", 16),
-            threshold = a.double("threshold", 0.5),
-            maxBandBucket = a.int("max_band_bucket", 100000),
-            cache = handle), a("out"))
-          a.get("out_index").foreach(p =>
-            write(IncrementalDedup.mergedMinhashIndex(index, arrSigs), p))
-        } finally handle.release()
+        val arrSigs = IncrementalDedup.minhashIndex(read(s, a("in")), text, id,
+          shingleSize = a.int("shingle_size", 3),
+          numHashes = a.int("num_hashes", 64))
+        write(IncrementalDedup.incrementalMinhashPairs(arrSigs, index,
+          numHashes = a.int("num_hashes", 64),
+          bands = a.int("bands", 16),
+          threshold = a.double("threshold", 0.5),
+          maxBandBucket = a.int("max_band_bucket", 100000),
+          cache = h), a("out"))
+        a.get("out_index").foreach(p =>
+          write(IncrementalDedup.mergedMinhashIndex(index, arrSigs), p))
       }),
 
     Step("dedup_merge_components",
       "Fold a batch of new near-dup pairs into standing component labels",
-      (s, a) => {
-        val handle = graft.core.CacheHandle()
-        try write(IncrementalDedup.mergeComponents(
-          read(s, a("labels")), read(s, a("pairs")),
-          a.get("a_col").getOrElse("idA"), a.get("b_col").getOrElse("idB"),
-          cache = handle), a("out"))
-        finally handle.release()
-      }),
+      (s, a) => releasing(h => write(IncrementalDedup.mergeComponents(
+        read(s, a("labels")), read(s, a("pairs")),
+        a.get("a_col").getOrElse("idA"), a.get("b_col").getOrElse("idB"),
+        cache = h), a("out")))),
 
     Step("profile",
       "One-pass column profile (col_name, metric, value); cols=a,b,c",
@@ -686,13 +675,14 @@ object Steps {
 
     Step("decontaminate",
       "Flag corpus documents whose n-grams cover a benchmark document",
-      (s, a) => writeReleasing(a("out")) { h =>
+      (s, a) => releasing(h => write(
         Decontamination.flagContaminated(
           read(s, a("in")), read(s, a("benchmark")),
           a.get("text_col").getOrElse("text"),
           a.get("id_col").getOrElse("doc_id"),
           minCoverage = a.double("min_coverage", 0.8),
-          bloomPrefilter = a.bool("bloom", false), cache = h) }),
+          bloomPrefilter = a.bool("bloom", false), cache = h),
+        a("out")))),
 
     Step("tfidf_top_terms",
       "Top-k TF-IDF terms per document (smoothed sklearn idf)",
@@ -704,21 +694,22 @@ object Steps {
 
     Step("dedup_semantic",
       "SemDeDup-style within-cluster embedding near-dup pairs",
-      (s, a) => writeReleasing(a("out")) { h =>
+      (s, a) => releasing(h => write(
         Similarity.semanticDupPairs(read(s, a("in")),
           read(s, a("centroids")),
           threshold = a.double("threshold", 0.9),
           // hot-cell cap (quadratic guard); raise — or Long.MaxValue to
           // disable — when a dominant cluster's pairs must be kept
-          maxCellSize = a.long("max_cell_size", 100000L), cache = h) }),
+          maxCellSize = a.long("max_cell_size", 100000L), cache = h),
+        a("out")))),
 
     Step("dedup_cluster_canonical",
       "Transitive near-dup clusters from a pair table; keep one survivor per cluster",
-      (s, a) => writeReleasing(a("out")) { h =>
+      (s, a) => releasing(h => write(
         Dedup.keepClusterCanonical(read(s, a("in")),
           a.get("id_col").getOrElse("doc_id"), read(s, a("pairs")),
           a.get("a_col").getOrElse("idA"), a.get("b_col").getOrElse("idB"),
-          cache = h) }),
+          cache = h), a("out")))),
 
     Step("mix_sample",
       "Downsample each source to a target token mix (weights: src=w,src=w)",
@@ -837,11 +828,11 @@ object Steps {
 
     Step("hard_negatives",
       "Per-query top-k similar items excluding the query's near-dup cluster",
-      (s, a) => write(
+      (s, a) => releasing(h => write(
         graft.operators.Similarity.hardNegatives(
           read(s, a("in")), read(s, a("queries")), read(s, a("pairs")),
           a.long("k", 10L).toInt,
-          a.long("retrieve_factor", 3L).toInt), a("out"))),
+          a.long("retrieve_factor", 3L).toInt, cache = h), a("out")))),
 
     Step("quantile_normalize",
       "Percent-rank a score column within its domain for cross-domain thresholds",
@@ -853,25 +844,25 @@ object Steps {
 
     Step("dedup_keep_best",
       "Keep the highest-score member of each near-dup cluster (pairs input)",
-      (s, a) => write(
+      (s, a) => releasing(h => write(
         graft.operators.Dedup.keepClusterBest(
           read(s, a("in")), a.get("id_col").getOrElse("doc_id"),
           a.get("score_col").getOrElse("quality"),
-          read(s, a("pairs"))), a("out"))),
+          read(s, a("pairs")), cache = h), a("out")))),
 
     Step("split_leakage_safe",
       "Train/val/test split hashed on the near-dup cluster representative",
-      (s, a) => write(
+      (s, a) => releasing(h => write(
         graft.operators.Mixing.assignSplitLeakageSafe(
           read(s, a("in")), a.get("id_col").getOrElse("doc_id"),
           read(s, a("pairs")),
           valFrac = a.double("val_frac", 0.05),
-          testFrac = a.double("test_frac", 0.05)), a("out"))),
+          testFrac = a.double("test_frac", 0.05), cache = h), a("out")))),
 
     Step("dsir_select",
       "DSIR importance resampling: keep the k corpus rows whose hashed " +
         "n-gram mix best matches the target sample (Gumbel-top-k)",
-      (s, a) => write(
+      (s, a) => releasing(h => write(
         graft.operators.ImportanceSampling.dsirSelect(
           read(s, a("in")), read(s, a("target")),
           a.get("text_col").getOrElse("text"),
@@ -879,7 +870,7 @@ object Steps {
           a.long("k", 1000L).toInt,
           a.long("buckets", 1L << 14).toInt,
           a.double("alpha", 1.0),
-          a.long("seed", 42L)), a("out"))),
+          a.long("seed", 42L), cache = h), a("out")))),
 
     Step("stratified_sample",
       "Keep exactly n rows per stratum under the deterministic md5 draw (mode=window|agg)",

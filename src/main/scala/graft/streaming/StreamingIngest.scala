@@ -40,8 +40,7 @@ object StreamingIngest {
              idCol: String, minQuality: Double = 0.2,
              maxBenchCoverage: Double = 0.6, shingleSize: Int = 3,
              watermark: String = "10 minutes",
-             cache: graft.core.CacheHandle =
-               graft.core.CacheHandle()): DataFrame = {
+             cache: graft.core.CacheHandle): DataFrame = {
     val annotated = docs
       .withColumn("language", TextAnalysis.languageId(col(textCol)))
       .withColumn("qualityScore", TextAnalysis.qualityScore(col(textCol)))

@@ -108,8 +108,8 @@ class L2GFamiliesSpec extends SparkSpec {
     assert(out(("sl1", "g1")).getAs[Long]("proteinGeneCount500kb") == 1)
   }
 
-  test("flat-max matrix merge ≡ the struct-first r12 shape, and plans " +
-    "as a HashAggregate (no sort of the union)") {
+  test("flat-max matrix merge keeps each column's single owner value, " +
+    "zero-fills, and plans as a HashAggregate (no sort of the union)") {
     // three families with overlapping and disjoint keys, nulls inside a
     // family frame, and a long count column — the shapes the factory
     // actually produces
@@ -122,15 +122,21 @@ class L2GFamiliesSpec extends SparkSpec {
       .toDF("studyLocusId", "geneId", "geneCount500kb")
     val fams = Seq(famA, famB, famC)
     val flat = L2GFeatures.featureMatrix(fams)
-    val structShape = L2GFeatures.featureMatrixStruct(fams)
-    assert(flat.columns.toSeq == structShape.columns.toSeq)
+    assert(flat.columns.toSeq == Seq("studyLocusId", "geneId",
+      "distanceTssMean", "vepMean", "eQtlColocH4Maximum", "geneCount500kb"))
     val key = (r: org.apache.spark.sql.Row) => (r.getString(0), r.getString(1))
     val fm = flat.collect().map(r => key(r) -> r.toSeq).toMap
-    val sm = structShape.collect().map(r => key(r) -> r.toSeq).toMap
-    assert(fm == sm, s"flat=$fm\nstruct=$sm")
-    // zero-fill covers keys absent from a family, and nulls INSIDE a
-    // family frame fill too
-    assert(fm(("sl3", "g4")) == Seq("sl3", "g4", 0.0, 0.0, 0.0, 0L))
+    // every key of any family, each column carrying its owner's value;
+    // the struct-slot first(ignoreNulls) merge this shape replaced
+    // produced the same map
+    val expected = Map(
+      ("sl1", "g1") -> Seq("sl1", "g1", 0.5, 0.25, 0.7, 0L),
+      ("sl1", "g2") -> Seq("sl1", "g2", 0.9, 0.1, 0.0, 3L),
+      ("sl2", "g1") -> Seq("sl2", "g1", 0.3, 0.0, 0.0, 1L),
+      // zero-fill covers keys absent from a family, and nulls INSIDE a
+      // family frame fill too
+      ("sl3", "g4") -> Seq("sl3", "g4", 0.0, 0.0, 0.0, 0L))
+    assert(fm == expected, s"flat=$fm")
     // the plan promise: mutable primitive buffers keep the merge a
     // hash aggregate — no Sort + SortAggregate over the padded union
     val p = flat.queryExecution.executedPlan.toString
@@ -139,21 +145,16 @@ class L2GFamiliesSpec extends SparkSpec {
       s"matrix merge demoted to a sort aggregate:\n$p")
   }
 
-  test("both matrix merge shapes reject a column owned by two families") {
-    // multi-owner columns were previously resolved DIFFERENTLY by the
-    // two shapes (max-across-owners vs first-owner coalesce), which
-    // would have silently broken the flat ≡ struct parity above; the
-    // factory never produces them, so the contract now rejects them
+  test("the matrix merge rejects a column owned by two families") {
+    // max-across-owners would silently pick one family's value over
+    // another's; the factory never produces multi-owner columns, so
+    // the contract rejects them
     val famA = Seq(("sl1", "g1", 0.5)).toDF("studyLocusId", "geneId", "f1")
     val famB = Seq(("sl1", "g1", 0.7)).toDF("studyLocusId", "geneId", "f1")
-    val eFlat = intercept[IllegalArgumentException] {
+    val e = intercept[IllegalArgumentException] {
       L2GFeatures.featureMatrix(Seq(famA, famB))
     }
-    assert(eFlat.getMessage.contains("f1"))
-    val eStruct = intercept[IllegalArgumentException] {
-      L2GFeatures.featureMatrixStruct(Seq(famA, famB))
-    }
-    assert(eStruct.getMessage.contains("f1"))
+    assert(e.getMessage.contains("f1"))
   }
 
   test("GBT model trains on the feature matrix and separates classes") {

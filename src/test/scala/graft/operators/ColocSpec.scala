@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.core.CacheHandle
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -115,7 +116,7 @@ class ColocSpec extends SparkSpec {
           "'variantId', t._1, 'logBF', t._2, 'posteriorProbability', t._3," +
           "'beta', t._4, 'pValueMantissa', CAST(1.0 AS FLOAT)," +
           "'pValueExponent', -8))").as("locus"))
-    val classic = Coloc.colocalise(Overlaps.findOverlaps(cred))
+    val classic = Coloc.colocalise(Overlaps.findOverlaps(cred, cache = CacheHandle()))
     val fused = Coloc.colocaliseFused(Overlaps.explodeLoci(cred))
     val cols = Seq("leftStudyLocusId", "rightStudyLocusId",
       "numberColocalisingVariants", "h0", "h1", "h2", "h3", "h4",
@@ -158,7 +159,7 @@ class ColocSpec extends SparkSpec {
           "'variantId', t._1, 'logBF', t._2, 'posteriorProbability', t._3," +
           "'beta', t._4, 'pValueMantissa', CAST(1.0 AS FLOAT)," +
           "'pValueExponent', -8))").as("locus"))
-    val classic = Coloc.eCaviar(Overlaps.findOverlaps(cred))
+    val classic = Coloc.eCaviar(Overlaps.findOverlaps(cred, cache = CacheHandle()))
     val fused = Coloc.eCaviarFused(Overlaps.explodeLoci(cred))
     val cols = Seq("leftStudyLocusId", "rightStudyLocusId",
       "numberColocalisingVariants", "clpp", "betaRatioSignAverage")
@@ -192,7 +193,7 @@ class ColocSpec extends SparkSpec {
           "'beta', t._4, 'pValueMantissa', CAST(1.0 AS FLOAT)," +
           "'pValueExponent', -8))").as("locus"))
     val classic = Coloc.colocalise(
-      Overlaps.findOverlaps(cred, intraStudy = true)).collect()
+      Overlaps.findOverlaps(cred, intraStudy = true, cache = CacheHandle())).collect()
     val fused = Coloc.colocaliseFused(Overlaps.explodeLoci(cred),
       intraStudy = true).collect()
     assert(classic.length == fused.length && classic.nonEmpty)

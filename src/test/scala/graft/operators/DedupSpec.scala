@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.core.CacheHandle
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
@@ -31,7 +32,8 @@ class DedupSpec extends SparkSpec {
 
   test("minhash LSH finds near and exact dups, not unrelated docs") {
     val pairs = Dedup.minhashDupPairs(docs, "text", "doc_id",
-      shingleSize = 3, numHashes = 64, bands = 16, threshold = 0.5)
+      shingleSize = 3, numHashes = 64, bands = 16, threshold = 0.5,
+      cache = CacheHandle())
       .select("idA", "idB").as[(Long, Long)].collect().toSet
     assert(pairs.contains((1L, 2L))) // identical -> sig identical
     assert(pairs.contains((1L, 5L))) // identical after normalisation
@@ -65,7 +67,7 @@ class DedupSpec extends SparkSpec {
 
   test("ngram jaccard computes exact overlap coefficient") {
     val pairs = Dedup.ngramJaccardPairs(docs, "text", "doc_id",
-      shingleSize = 3, threshold = 0.4)
+      shingleSize = 3, threshold = 0.4, cache = CacheHandle())
       .as[(Long, Long, Double)].collect()
       .map(p => (p._1, p._2) -> p._3).toMap
     assert(math.abs(pairs((1L, 2L)) - 1.0) < 1e-12)
@@ -86,15 +88,15 @@ class DedupSpec extends SparkSpec {
       (12L, "totally unrelated words about database engines here")
     ).toDF("doc_id", "text")
     val got = Dedup.containmentPairs(embedded, "text", "doc_id",
-      shingleSize = 3, threshold = 0.9)
+      shingleSize = 3, threshold = 0.9, cache = CacheHandle())
       .as[(Long, Long, Double)].collect().toSeq
     assert(got == Seq((11L, 10L, 1.0)))
     // a Jaccard threshold at the same strictness never sees the pair
     assert(Dedup.ngramJaccardPairs(embedded, "text", "doc_id",
-      shingleSize = 3, threshold = 0.9).count() == 0L)
+      shingleSize = 3, threshold = 0.9, cache = CacheHandle()).count() == 0L)
     // near-equal-size docs can emit both directions
     val both = Dedup.containmentPairs(docs, "text", "doc_id",
-      shingleSize = 3, threshold = 0.8)
+      shingleSize = 3, threshold = 0.8, cache = CacheHandle())
       .select("idSub", "idSuper").as[(Long, Long)].collect().toSet
     assert(both.contains((1L, 2L)) && both.contains((2L, 1L)))
     // containment(1→3) = 6/7 ≥ 0.8 both ways (7 shingles each, 6 shared)
@@ -109,20 +111,21 @@ class DedupSpec extends SparkSpec {
       .map(i => (i.toLong, s"lorem ipsum dolor unique$i token$i word$i"))
       .toDF("doc_id", "text")
     val unCapped = Dedup.ngramJaccardPairs(docs, "text", "doc_id",
-      threshold = 0.0)
+      threshold = 0.0, cache = CacheHandle())
     assert(unCapped.count() == 60L * 59 / 2)
     // the boilerplate shingle has DF=60 > 10: dropped from the index,
     // no candidate pairs remain, nothing quadratic reaches the join
     val capped = Dedup.ngramJaccardPairs(docs, "text", "doc_id",
-      threshold = 0.0, maxShingleDF = 10)
+      threshold = 0.0, maxShingleDF = 10, cache = CacheHandle())
     assert(capped.count() == 0)
     // default cap leaves ordinary corpora untouched
     val normal = Seq((1L, "a b c d e"), (2L, "a b c d x"), (3L, "zz yy xx ww vv"))
       .toDF("doc_id", "text")
     val withDefault = Dedup.ngramJaccardPairs(normal, "text", "doc_id",
-      threshold = 0.1).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      threshold = 0.1,
+      cache = CacheHandle()).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val withHugeCap = Dedup.ngramJaccardPairs(normal, "text", "doc_id",
-      threshold = 0.1, maxShingleDF = Int.MaxValue)
+      threshold = 0.1, maxShingleDF = Int.MaxValue, cache = CacheHandle())
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(withDefault == withHugeCap && withDefault == Set((1L, 2L)))
   }
@@ -143,9 +146,10 @@ class DedupSpec extends SparkSpec {
       .map(i => (i.toLong, s"lorem ipsum dolor unique$i token$i word$i"))
       .toDF("doc_id", "text")
     assert(Dedup.ngramJaccardPairs(big, "text", "doc_id",
-      threshold = 0.0).count() == 0)
+      threshold = 0.0, cache = CacheHandle()).count() == 0)
     assert(Dedup.ngramJaccardPairs(big, "text", "doc_id",
-      threshold = 0.0, maxShingleDF = 100000).count() == 1100L * 1099 / 2)
+      threshold = 0.0, maxShingleDF = 100000,
+      cache = CacheHandle()).count() == 1100L * 1099 / 2)
   }
 
   test("native sketch expressions match the HOF formulations exactly") {
@@ -174,12 +178,14 @@ class DedupSpec extends SparkSpec {
   }
 
   test("md5 anchor variants behave like the xxhash64 family") {
-    val m = Dedup.minhashDupPairsMd5(docs, "text", "doc_id", threshold = 0.5)
+    val m = Dedup.minhashDupPairsMd5(docs, "text", "doc_id", threshold = 0.5,
+      cache = CacheHandle())
       .select("idA", "idB").as[(Long, Long)].collect().toSet
     assert(m.contains((1L, 2L))) // identical
     assert(m.contains((1L, 5L))) // identical after normalisation
     assert(!m.exists(p => p._1 == 4L || p._2 == 4L)) // unrelated never pairs
-    val s = Dedup.simhashDupPairsMd5(docs, "text", "doc_id", maxHamming = 10)
+    val s = Dedup.simhashDupPairsMd5(docs, "text", "doc_id", maxHamming = 10,
+      cache = CacheHandle())
       .select("idA", "idB", "hamming").as[(Long, Long, Long)].collect()
       .map(p => (p._1, p._2) -> p._3).toMap
     assert(s((1L, 2L)) == 0L)
@@ -192,10 +198,11 @@ class DedupSpec extends SparkSpec {
     // bucket holds all 40 docs
     val docs = (0 until 40).map(i => (i.toLong, "same text for every doc here"))
       .toDF("doc_id", "text")
-    val unCapped = Dedup.minhashDupPairs(docs, "text", "doc_id")
+    val unCapped = Dedup.minhashDupPairs(docs, "text", "doc_id",
+      cache = CacheHandle())
     assert(unCapped.count() == 40L * 39 / 2)
     val capped = Dedup.minhashDupPairs(docs, "text", "doc_id",
-      maxBandBucket = 10)
+      maxBandBucket = 10, cache = CacheHandle())
     assert(capped.count() == 0)
   }
 
@@ -219,7 +226,7 @@ class DedupSpec extends SparkSpec {
       }
       val expected = nodes.map(v => v -> reach(v).min).toMap
       val got = Dedup.connectedComponents(
-        edges.toDF("idA", "idB"), maxIter = n)
+        edges.toDF("idA", "idB"), maxIter = n, cache = CacheHandle())
         .as[(Long, Long)].collect().toMap
       assert(got == expected, s"trial $trial: $got vs $expected")
     }
@@ -233,7 +240,7 @@ class DedupSpec extends SparkSpec {
     val edges = (0L until (n - 1).toLong).map(i => (i, i + 1)).toDF("idA", "idB")
     // threshold 0 forces pure star contraction (no union-find handoff)
     val (labels, rounds) = Dedup.connectedComponentsWithRounds(
-      edges, unionFindThreshold = 0L)
+      edges, unionFindThreshold = 0L, cache = CacheHandle())
     val comps = labels.as[(Long, Long)].collect().toMap
     assert(comps.size == n && comps.values.forall(_ == 0L))
     val bound = (math.log(n) / math.log(2)).ceil.toInt + 2
@@ -245,9 +252,10 @@ class DedupSpec extends SparkSpec {
     val edges = Seq.fill(60)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
       .filter(e => e._1 != e._2).toDF("idA", "idB")
     val viaStars = Dedup.connectedComponentsWithRounds(
-      edges, unionFindThreshold = 0L)._1.as[(Long, Long)].collect().toMap
+      edges, unionFindThreshold = 0L,
+      cache = CacheHandle())._1.as[(Long, Long)].collect().toMap
     val viaFinish = Dedup.connectedComponentsWithRounds(
-      edges)._1.as[(Long, Long)].collect().toMap
+      edges, cache = CacheHandle())._1.as[(Long, Long)].collect().toMap
     assert(viaFinish == viaStars)
     // larger sparse graph (long chains + isolated pairs + duplicate and
     // reversed edges): the two independent implementations must agree
@@ -257,9 +265,10 @@ class DedupSpec extends SparkSpec {
       if (a == b) Nil else Seq((a, b), (b, a)) // reversed duplicates
     }.toDF("idA", "idB")
     val bigStars = Dedup.connectedComponentsWithRounds(
-      big, unionFindThreshold = 0L)._1.as[(Long, Long)].collect().toMap
+      big, unionFindThreshold = 0L,
+      cache = CacheHandle())._1.as[(Long, Long)].collect().toMap
     val bigFinish = Dedup.connectedComponentsWithRounds(
-      big)._1.as[(Long, Long)].collect().toMap
+      big, cache = CacheHandle())._1.as[(Long, Long)].collect().toMap
     assert(bigStars == bigFinish)
     assert(bigStars.forall { case (id, comp) => comp <= id })
   }
@@ -268,7 +277,7 @@ class DedupSpec extends SparkSpec {
     val edges = (0L until 19L).map(i => (i, i + 1)).toDF("idA", "idB")
     assertThrows[IllegalStateException] {
       Dedup.connectedComponentsWithRounds(
-        edges, maxIter = 1, unionFindThreshold = 0L)._1.count()
+        edges, maxIter = 1, unionFindThreshold = 0L, cache = CacheHandle())._1.count()
     }
   }
 
@@ -280,7 +289,8 @@ class DedupSpec extends SparkSpec {
       (3L, "g h i g h i j"),     // blocks "g h i" | "g h i" | "j": within-doc repeat
       (4L, "")                   // empty doc: 0 blocks
     ).toDF("doc_id", "text")
-    val out = Dedup.spanDedup(corpus, "text", "doc_id", blockTokens = 3)
+    val out = Dedup.spanDedup(corpus, "text", "doc_id", blockTokens = 3,
+      cache = CacheHandle())
       .orderBy("doc_id")
       .as[(Long, String, Long, Long)].collect()
     assert(out(0) == ((1L, "a b c d e f", 2L, 0L)))
@@ -296,7 +306,8 @@ class DedupSpec extends SparkSpec {
       (11L, "w1 w2 w3 w4"),
       (12L, "w1 w2 w3 w4")
     ).toDF("doc_id", "text")
-    val out = Dedup.spanDedup(corpus, "text", "doc_id", blockTokens = 4)
+    val out = Dedup.spanDedup(corpus, "text", "doc_id", blockTokens = 4,
+      cache = CacheHandle())
       .orderBy("doc_id")
       .as[(Long, String, Long, Long)].collect()
     assert(out(0) == ((10L, "w1 w2 w3 w4", 1L, 0L)))
@@ -312,18 +323,20 @@ class DedupSpec extends SparkSpec {
       (i, Seq.fill(6 + rnd.nextInt(20))(words(rnd.nextInt(words.size)))
         .mkString(" "))
     }.toDF("doc_id", "text")
-    val once = Dedup.spanDedup(corpus, "text", "doc_id", blockTokens = 4)
+    val once = Dedup.spanDedup(corpus, "text", "doc_id", blockTokens = 4,
+      cache = CacheHandle())
     assert(once.filter(col("n_removed") > 0).count() > 0) // dups existed
     val twice = Dedup.spanDedup(
       once.select(col("doc_id"), col("clean_text").as("text")),
-      "text", "doc_id", blockTokens = 4)
+      "text", "doc_id", blockTokens = 4, cache = CacheHandle())
     assert(twice.filter(col("n_removed") > 0).count() === 0L)
   }
 
   test("keepClusterCanonical deletes transitive duplicates, keeps minima") {
     // clusters {1,2,3} (via 1-2, 2-3) and {5,6}; 4 unpaired
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("idA", "idB")
-    val kept = Dedup.keepClusterCanonical(docs, "doc_id", pairs)
+    val kept = Dedup.keepClusterCanonical(docs, "doc_id", pairs,
+      cache = CacheHandle())
       .select("doc_id").as[Long].collect().toSet
     assert(kept == Set(1L, 4L, 5L))
   }
@@ -332,7 +345,7 @@ class DedupSpec extends SparkSpec {
     // clusters: {1,2,3}, {5,6}, {7,8} → one size-3, two size-2
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (7L, 8L))
       .toDF("idA", "idB")
-    val got = Dedup.clusterSizeHistogram(pairs)
+    val got = Dedup.clusterSizeHistogram(pairs, cache = CacheHandle())
       .as[(Long, Long)].collect().toMap
     assert(got == Map(3L -> 1L, 2L -> 2L))
   }
@@ -344,18 +357,21 @@ class DedupSpec extends SparkSpec {
     // cluster {1,2,3}: best q = 0.9 held by 2 and 3 → 2 survives;
     // 4 and 9 are unpaired and survive regardless of score
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("idA", "idB")
-    val kept = Dedup.keepClusterBest(docs, "doc_id", "q", pairs)
+    val kept = Dedup.keepClusterBest(docs, "doc_id", "q", pairs,
+      cache = CacheHandle())
       .select("doc_id").as[Long].collect().toSet
     assert(kept == Set(2L, 4L, 9L))
     // min-id canonical would have kept 1 — the quality override is real
-    val canon = Dedup.keepClusterCanonical(docs, "doc_id", pairs)
+    val canon = Dedup.keepClusterCanonical(docs, "doc_id", pairs,
+      cache = CacheHandle())
       .select("doc_id").as[Long].collect().toSet
     assert(canon == Set(1L, 4L, 9L))
     // an all-null-score cluster still dedups (to the min id) instead
     // of electing no winner and keeping every member
     val nullDocs = Seq((1L, Option.empty[Double]), (2L, Option.empty[Double]),
       (9L, Option(1.0))).toDF("doc_id", "q")
-    val keptNull = Dedup.keepClusterBest(nullDocs, "doc_id", "q", pairs)
+    val keptNull = Dedup.keepClusterBest(nullDocs, "doc_id", "q", pairs,
+      cache = CacheHandle())
       .select("doc_id").as[Long].collect().toSet
     assert(keptNull == Set(1L, 9L))
   }

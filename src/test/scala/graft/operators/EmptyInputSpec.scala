@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.core.CacheHandle
 import org.apache.spark.sql.DataFrame
 
 /** Empty-input sweep: a scheduled 100 TB pipeline will eventually feed
@@ -18,23 +19,30 @@ class EmptyInputSpec extends SparkSpec {
 
   test("dedup family on an empty corpus") {
     assert(Dedup.exactDedup(emptyDocs, "text", "doc_id").count() === 0L)
-    assert(Dedup.minhashDupPairs(emptyDocs, "text", "doc_id").count() === 0L)
-    assert(Dedup.ngramJaccardPairs(emptyDocs, "text", "doc_id").count() === 0L)
-    assert(Dedup.connectedComponents(emptyPairs).count() === 0L)
+    assert(Dedup.minhashDupPairs(emptyDocs, "text", "doc_id",
+      cache = CacheHandle()).count() === 0L)
+    assert(Dedup.ngramJaccardPairs(emptyDocs, "text", "doc_id",
+      cache = CacheHandle()).count() === 0L)
+    assert(Dedup.connectedComponents(emptyPairs,
+      cache = CacheHandle()).count() === 0L)
   }
 
   test("span dedup, bm25, chunking, quality rules, temperature mix on " +
     "empty inputs; kmeans/pca fail loudly instead of mislabelling") {
     import org.apache.spark.sql.functions.lit
-    assert(Dedup.spanDedup(emptyDocs, "text", "doc_id").count() === 0L)
+    assert(Dedup.spanDedup(emptyDocs, "text", "doc_id",
+      cache = CacheHandle()).count() === 0L)
     val qs = Seq((1L, "some query")).toDF("query_id", "qtext")
-    assert(Search.bm25TopK(emptyDocs, "text", "doc_id", qs).count() === 0L)
+    assert(Search.bm25TopK(emptyDocs, "text", "doc_id", qs,
+      cache = CacheHandle()).count() === 0L)
     assert(Search.bm25TopK(Seq((1L, "a doc")).toDF("doc_id", "text"),
       "text", "doc_id",
-      Seq.empty[(Long, String)].toDF("query_id", "qtext")).count() === 0L)
-    val emptyIdx = Search.bm25IndexBuild(emptyDocs, "text", "doc_id")
+      Seq.empty[(Long, String)].toDF("query_id", "qtext"),
+      cache = CacheHandle()).count() === 0L)
+    val emptyIdx = Search.bm25IndexBuild(emptyDocs, "text", "doc_id",
+      cache = CacheHandle())
     assert(emptyIdx.nDocs === 0L && emptyIdx.avgdl === 0.0)
-    assert(Search.bm25SearchIndex(emptyIdx, qs).count() === 0L)
+    assert(Search.bm25SearchIndex(emptyIdx, qs, cache = CacheHandle()).count() === 0L)
     assert(TextAnalysis.chunkDocuments(emptyDocs, "text", "doc_id", 8)
       .count() === 0L)
     val flags = TextAnalysis.qualityRuleFlags(emptyDocs, "text", "doc_id")
@@ -48,7 +56,7 @@ class EmptyInputSpec extends SparkSpec {
       0.5, 100L).count() === 0L)
     val emptyVecs = Seq.empty[(Long, Seq[Double])].toDF("id", "embedding")
     assertThrows[IllegalArgumentException] {
-      Similarity.kmeansFit(emptyVecs, k = 2)
+      Similarity.kmeansFit(emptyVecs, k = 2, cache = CacheHandle())
     }
     assertThrows[IllegalArgumentException] {
       Similarity.pcaFit(emptyVecs, k = 2)
@@ -56,7 +64,8 @@ class EmptyInputSpec extends SparkSpec {
   }
 
   test("containment, embedding pooling, cluster labelling on empty inputs") {
-    assert(Dedup.containmentPairs(emptyDocs, "text", "doc_id").count() === 0L)
+    assert(Dedup.containmentPairs(emptyDocs, "text", "doc_id",
+      cache = CacheHandle()).count() === 0L)
     val emptyVecs = Seq.empty[(Long, Seq[Double])].toDF("doc", "embedding")
     assert(Similarity.poolEmbeddings(emptyVecs, "doc").count() === 0L)
     assert(Similarity.poolEmbeddings(emptyVecs, "doc", method = "max")
@@ -77,7 +86,8 @@ class EmptyInputSpec extends SparkSpec {
     assert(IncrementalDedup.incrementalExactDedup(emptyDocs, fullIdx,
       "text", "doc_id").count() === 0L)
     assert(IncrementalDedup.mergeComponents(
-      Seq.empty[(Long, Long)].toDF("id", "comp"), emptyPairs).count() === 0L)
+      Seq.empty[(Long, Long)].toDF("id", "comp"), emptyPairs,
+      cache = CacheHandle()).count() === 0L)
   }
 
   test("decontamination, mixing, upsert, profiler on empty inputs") {
@@ -136,9 +146,10 @@ class EmptyInputSpec extends SparkSpec {
     val docs = Seq((1L, "a b c"), (2L, "x y z")).toDF("doc_id", "text")
     // empty corpus: nothing to select, no division by zero
     assert(ImportanceSampling.dsirSelect(emptyDocs, docs, "text",
-      "doc_id", k = 3).count() === 0L)
+      "doc_id", k = 3, cache = CacheHandle()).count() === 0L)
     // empty target: smoothing keeps log-ratios finite, all docs score
-    val s = ImportanceSampling.dsirScores(docs, emptyDocs, "text", "doc_id")
+    val s = ImportanceSampling.dsirScores(docs, emptyDocs, "text", "doc_id",
+      cache = CacheHandle())
     assert(s.count() === 2L)
     assert(s.filter($"logw_nano".isNull).count() === 0L)
     assert(TextAnalysis.bigramLogProbScores(emptyDocs, "text", "doc_id")

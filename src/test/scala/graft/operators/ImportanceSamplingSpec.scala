@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.core.CacheHandle
 import org.apache.spark.sql.functions._
 
 class ImportanceSamplingSpec extends SparkSpec {
@@ -55,14 +56,14 @@ class ImportanceSamplingSpec extends SparkSpec {
 
   test("target-like documents outscore alien ones and win the selection") {
     val scores = ImportanceSampling.dsirScores(corpus, target, "text",
-      "doc_id", buckets = 1 << 10)
+      "doc_id", buckets = 1 << 10, cache = CacheHandle())
       .as[(Long, Long, Long)].collect().map(r => r._1 -> r._2).toMap
     val sci = (1 to 20).map(i => scores(i.toLong))
     val spam = (21 to 40).map(i => scores(i.toLong))
     assert(sci.min > spam.max,
       s"science min ${sci.min} vs spam max ${spam.max}")
     val picked = ImportanceSampling.dsirSelect(corpus, target, "text",
-      "doc_id", k = 10, buckets = 1 << 10)
+      "doc_id", k = 10, buckets = 1 << 10, cache = CacheHandle())
       .select("doc_id").as[Long].collect().toSet
     assert(picked.size == 10)
     // log-ratio gap dwarfs the Gumbel noise here, so all winners are science
@@ -71,11 +72,12 @@ class ImportanceSamplingSpec extends SparkSpec {
 
   test("scores and selection are exactly invariant to partitioning") {
     val a = ImportanceSampling.dsirSelect(corpus, target, "text",
-      "doc_id", k = 7, buckets = 1 << 10)
+      "doc_id", k = 7, buckets = 1 << 10, cache = CacheHandle())
       .select("doc_id", "logw_nano", "gumbel_key")
       .orderBy("doc_id").collect().toSeq
     val b = ImportanceSampling.dsirSelect(corpus.repartition(13),
-      target.repartition(3), "text", "doc_id", k = 7, buckets = 1 << 10)
+      target.repartition(3), "text", "doc_id", k = 7, buckets = 1 << 10,
+      cache = CacheHandle())
       .select("doc_id", "logw_nano", "gumbel_key")
       .orderBy("doc_id").collect().toSeq
     assert(a == b) // integer-quantised sums: bit-exact, not approximate
@@ -84,7 +86,7 @@ class ImportanceSamplingSpec extends SparkSpec {
   test("empty documents score zero; the model stays bucket-bounded") {
     val withEmpty = corpus.unionByName(Seq((99L, "")).toDF("doc_id", "text"))
     val s = ImportanceSampling.dsirScores(withEmpty, target, "text",
-      "doc_id", buckets = 64)
+      "doc_id", buckets = 64, cache = CacheHandle())
       .filter(col("doc_id") === 99L).as[(Long, Long, Long)].head()
     assert(s == ((99L, 0L, 0L)))
     assert(ImportanceSampling.dsirModel(withEmpty, target, "text",
@@ -94,9 +96,9 @@ class ImportanceSamplingSpec extends SparkSpec {
   test("seed changes the draw but not the weights") {
     val k = 15
     val s1 = ImportanceSampling.dsirSelect(corpus, target, "text",
-      "doc_id", k, buckets = 1 << 10, seed = 1L)
+      "doc_id", k, buckets = 1 << 10, seed = 1L, cache = CacheHandle())
     val s2 = ImportanceSampling.dsirSelect(corpus, target, "text",
-      "doc_id", k, buckets = 1 << 10, seed = 2L)
+      "doc_id", k, buckets = 1 << 10, seed = 2L, cache = CacheHandle())
     val w1 = s1.select("doc_id", "logw_nano").as[(Long, Long)].collect().toMap
     val w2 = s2.select("doc_id", "logw_nano").as[(Long, Long)].collect().toMap
     w1.keySet.intersect(w2.keySet)

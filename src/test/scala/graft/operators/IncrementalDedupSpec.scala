@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.core.CacheHandle
 import org.apache.spark.sql.functions._
 
 class IncrementalDedupSpec extends SparkSpec {
@@ -60,7 +61,8 @@ class IncrementalDedupSpec extends SparkSpec {
   test("incrementalMinhashPairs equals full run restricted to arrival pairs") {
     val all = corpus.unionByName(arrivals)
     val full = Dedup.minhashDupPairsMd5(all, "text", "doc_id",
-        shingleSize = 3, numHashes = 64, bands = 16, threshold = 0.5)
+        shingleSize = 3, numHashes = 64, bands = 16, threshold = 0.5,
+        cache = CacheHandle())
       .select("idA", "idB").as[(Long, Long)].collect().toSet
     val expected = full.filter(p => p._1 >= 100 || p._2 >= 100)
 
@@ -69,7 +71,7 @@ class IncrementalDedupSpec extends SparkSpec {
     val arrSigs = IncrementalDedup.minhashIndex(arrivals, "text", "doc_id",
       md5Base = true)
     val incr = IncrementalDedup.incrementalMinhashPairs(arrSigs, idx,
-        numHashes = 64, bands = 16, threshold = 0.5)
+        numHashes = 64, bands = 16, threshold = 0.5, cache = CacheHandle())
       .select("idA", "idB").as[(Long, Long)].collect().toSet
     assert(incr == expected)
     assert(expected.nonEmpty) // exact dups guarantee the three pairs below
@@ -88,7 +90,7 @@ class IncrementalDedupSpec extends SparkSpec {
     val arrSigs = IncrementalDedup.minhashIndex(rearrivals, "text", "doc_id",
       md5Base = true)
     val out = IncrementalDedup.incrementalMinhashPairs(arrSigs, idx,
-        numHashes = 64, bands = 16, threshold = 0.5)
+        numHashes = 64, bands = 16, threshold = 0.5, cache = CacheHandle())
       .select("idA", "idB").as[(Long, Long)].collect().toList
     assert(out.distinct == out) // no fan-out duplicates
     assert(out.contains((5L, 104L))) // the re-arrived id still pairs
@@ -103,10 +105,10 @@ class IncrementalDedupSpec extends SparkSpec {
       md5Base = true)
     val empty = sigs.limit(0)
     val capped = IncrementalDedup.incrementalMinhashPairs(sigs, empty,
-      maxBandBucket = 10).count()
+      maxBandBucket = 10, cache = CacheHandle()).count()
     assert(capped == 0L)
     val uncapped = IncrementalDedup.incrementalMinhashPairs(sigs, empty,
-      maxBandBucket = Int.MaxValue).count()
+      maxBandBucket = Int.MaxValue, cache = CacheHandle()).count()
     assert(uncapped == 780L)
   }
 
@@ -118,10 +120,12 @@ class IncrementalDedupSpec extends SparkSpec {
     val (batch1, batch2) = all.splitAt(all.size / 2)
     val p1 = batch1.toDF("idA", "idB")
     val p2 = batch2.toDF("idA", "idB")
-    val standing = Dedup.connectedComponents(p1)
-    val incremental = IncrementalDedup.mergeComponents(standing, p2)
+    val standing = Dedup.connectedComponents(p1, cache = CacheHandle())
+    val incremental = IncrementalDedup.mergeComponents(standing, p2,
+      cache = CacheHandle())
       .as[(Long, Long)].collect().toSet
-    val full = Dedup.connectedComponents(all.toDF("idA", "idB"))
+    val full = Dedup.connectedComponents(all.toDF("idA", "idB"),
+      cache = CacheHandle())
       .as[(Long, Long)].collect().toSet
     assert(incremental === full)
   }
@@ -130,7 +134,7 @@ class IncrementalDedupSpec extends SparkSpec {
     val standing = Seq((1L, 1L), (2L, 1L), (10L, 10L), (11L, 10L))
       .toDF("id", "comp")
     val batch = Seq((100L, 2L), (100L, 11L)).toDF("idA", "idB")
-    val out = IncrementalDedup.mergeComponents(standing, batch)
+    val out = IncrementalDedup.mergeComponents(standing, batch, cache = CacheHandle())
       .as[(Long, Long)].collect().toMap
     assert(out === Map(1L -> 1L, 2L -> 1L, 10L -> 1L, 11L -> 1L, 100L -> 1L))
   }
@@ -139,7 +143,7 @@ class IncrementalDedupSpec extends SparkSpec {
     val standing = Seq((1L, 1L), (2L, 1L), (10L, 10L), (11L, 10L))
       .toDF("id", "comp")
     val batch = Seq((200L, 201L)).toDF("idA", "idB")
-    val out = IncrementalDedup.mergeComponents(standing, batch)
+    val out = IncrementalDedup.mergeComponents(standing, batch, cache = CacheHandle())
       .as[(Long, Long)].collect().toMap
     assert(out === Map(1L -> 1L, 2L -> 1L, 10L -> 10L, 11L -> 10L,
       200L -> 200L, 201L -> 200L))
@@ -152,7 +156,8 @@ class IncrementalDedupSpec extends SparkSpec {
       md5Base = true).select("id", "sig") // simulate parquet round-trip shape
     val arrSigs = IncrementalDedup.minhashIndex(arrivals, "text", "doc_id",
       md5Base = true)
-    val n = IncrementalDedup.incrementalMinhashPairs(arrSigs, idx).count()
+    val n = IncrementalDedup.incrementalMinhashPairs(arrSigs, idx,
+      cache = CacheHandle()).count()
     assert(n >= 3L)
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.core.CacheHandle
 
 class KMeansSpec extends SparkSpec {
   import spark.implicits._
@@ -12,7 +13,8 @@ class KMeansSpec extends SparkSpec {
   }.toDF("id", "embedding")
 
   test("kmeansFit separates two blobs and converges under maxIter") {
-    val m = Similarity.kmeansFit(blobs, k = 2, maxIter = 20, tol = 1e-9)
+    val m = Similarity.kmeansFit(blobs, k = 2, maxIter = 20, tol = 1e-9,
+      cache = CacheHandle())
     assert(m.iterations < 20)
     assert(m.maxShift <= 1e-9)
     val cellsByBlob = Similarity.kmeansAssign(blobs, m.centroids)
@@ -28,8 +30,10 @@ class KMeansSpec extends SparkSpec {
   }
 
   test("kmeansFit is deterministic for a fixed seed") {
-    val a = Similarity.kmeansFit(blobs, k = 3, maxIter = 5, seed = 7L)
-    val b = Similarity.kmeansFit(blobs, k = 3, maxIter = 5, seed = 7L)
+    val a = Similarity.kmeansFit(blobs, k = 3, maxIter = 5, seed = 7L,
+      cache = CacheHandle())
+    val b = Similarity.kmeansFit(blobs, k = 3, maxIter = 5, seed = 7L,
+      cache = CacheHandle())
     assert(a.centroids.map(_.toSeq).toSeq == b.centroids.map(_.toSeq).toSeq)
     assert(a.iterations == b.iterations)
   }
@@ -39,7 +43,7 @@ class KMeansSpec extends SparkSpec {
     val tiny = Seq(
       (1L, Seq(0.0, 0.0)), (2L, Seq(1.0, 1.0)), (3L, Seq(2.0, 2.0)),
       (4L, Seq(0.0, 0.0))).toDF("id", "embedding")
-    val m = Similarity.kmeansFit(tiny, k = 4, maxIter = 10)
+    val m = Similarity.kmeansFit(tiny, k = 4, maxIter = 10, cache = CacheHandle())
     assert(m.centroids.length == 4)
     assert(m.centroids.forall(_.forall(v => !v.isNaN && !v.isInfinite)))
   }
@@ -53,13 +57,13 @@ class KMeansSpec extends SparkSpec {
   }
 
   test("kmeansCentroids feeds semanticDupPairs' centroid contract") {
-    val m = Similarity.kmeansFit(blobs, k = 2, maxIter = 10)
+    val m = Similarity.kmeansFit(blobs, k = 2, maxIter = 10, cache = CacheHandle())
     val cdf = Similarity.kmeansCentroids(spark, m)
     assert(cdf.columns.toSeq == Seq("id", "embedding"))
     assert(cdf.count() == 2)
     val pairs = Similarity.semanticDupPairs(
       blobs.select($"id", $"embedding".cast("array<double>").as("embedding")),
-      cdf, threshold = 0.999)
+      cdf, threshold = 0.999, cache = CacheHandle())
     // within-blob near-parallel vectors pair up; none across blobs
     assert(pairs.count() > 0)
   }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.core.CacheHandle
 import graft.ml.L2GFeatures
 import org.apache.spark.sql.functions._
 
@@ -21,7 +22,7 @@ class LDClumpingL2GSpec extends SparkSpec {
     ).toDF("studyId", "chromosome", "variantId", "pValueMantissa",
       "pValueExponent", "ldSet", "locus")
       .withColumn("qualityControls", lit(null).cast("array<string>"))
-    val out = LDClumping.clump(df)
+    val out = LDClumping.clump(df, cache = CacheHandle())
     val flags = out.select(col("chromosome"), col("variantId"),
       array_contains(coalesce(col("qualityControls"), array()),
         LDClumping.LdClumpedFlag).as("clumped"),
@@ -58,7 +59,7 @@ class LDClumpingL2GSpec extends SparkSpec {
       }.toDF("studyId", "chromosome", "variantId", "pValueMantissa",
         "pValueExponent", "ldSet", "locus")
         .withColumn("qualityControls", lit(null).cast("array<string>"))
-      val joined = LDClumping.clump(df)
+      val joined = LDClumping.clump(df, cache = CacheHandle())
         .select(col("studyId"), col("chromosome"), col("variantId"),
           col("pValueMantissa"),
           array_contains(coalesce(col("qualityControls"), array()),
@@ -93,9 +94,11 @@ class LDClumpingL2GSpec extends SparkSpec {
       .as[(String, Boolean)].collect().toSet
     val expect = Set(("v1", false), ("v2", true), ("v3", false))
     // under the bound (window path), over it (join path), and default
-    assert(flags(LDClumping.clump(df, windowPathMaxRows = 10)) == expect)
-    assert(flags(LDClumping.clump(df, windowPathMaxRows = 2)) == expect)
-    assert(flags(LDClumping.clump(df)) == expect)
+    assert(flags(LDClumping.clump(df, windowPathMaxRows = 10,
+      cache = CacheHandle())) == expect)
+    assert(flags(LDClumping.clump(df, windowPathMaxRows = 2,
+      cache = CacheHandle())) == expect)
+    assert(flags(LDClumping.clump(df, cache = CacheHandle())) == expect)
   }
 
   test("LD clumping breaks p-value ties deterministically (lead id asc)") {
@@ -114,7 +117,8 @@ class LDClumpingL2GSpec extends SparkSpec {
           "pValueExponent", "ldSet", "locus")
         .withColumn("qualityControls", lit(null).cast("array<string>"))
         .repartition(parts)
-      LDClumping.clump(df, windowPathMaxRows = windowPathMaxRows)
+      LDClumping.clump(df, windowPathMaxRows = windowPathMaxRows,
+        cache = CacheHandle())
         .select(col("variantId"),
           array_contains(coalesce(col("qualityControls"), array()),
             LDClumping.LdClumpedFlag).as("clumped"))
@@ -136,7 +140,8 @@ class LDClumpingL2GSpec extends SparkSpec {
       .toDF("studyId", "chromosome", "variantId", "pValueMantissa",
         "pValueExponent", "ldSet", "locus")
       .withColumn("qualityControls", lit(null).cast("array<string>"))
-    val cached = LDClumping.clump(df).select("variantId", "qualityControls")
+    val cached = LDClumping.clump(df,
+      cache = CacheHandle()).select("variantId", "qualityControls")
     val plain = LDClumping.clump(df, cache = graft.core.CacheHandle.disabled)
       .select("variantId", "qualityControls")
     assert(cached.exceptAll(plain).isEmpty && plain.exceptAll(cached).isEmpty)
@@ -155,7 +160,7 @@ class LDClumpingL2GSpec extends SparkSpec {
     }.toDF("studyId", "chromosome", "variantId", "pValueMantissa",
       "pValueExponent", "ldSet", "locus")
       .withColumn("qualityControls", lit(null).cast("array<string>"))
-    val flagged = LDClumping.clump(df)
+    val flagged = LDClumping.clump(df, cache = CacheHandle())
       .filter(array_contains(coalesce(col("qualityControls"), array()),
         LDClumping.LdClumpedFlag))
       .select("variantId").as[String].collect()

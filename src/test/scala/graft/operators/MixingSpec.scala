@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.core.CacheHandle
 import org.apache.spark.sql.functions._
 
 class MixingSpec extends SparkSpec {
@@ -253,7 +254,7 @@ class MixingSpec extends SparkSpec {
     val docs = (1L to 200L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("idA", "idB")
     val safe = Mixing.assignSplitLeakageSafe(docs, "doc_id", pairs,
-        valFrac = 0.3, testFrac = 0.3)
+        valFrac = 0.3, testFrac = 0.3, cache = CacheHandle())
       .select("doc_id", "split").as[(Long, String)].collect().toMap
     assert(Set(safe(1L), safe(2L), safe(3L)).size == 1)
     assert(safe(10L) == safe(11L))

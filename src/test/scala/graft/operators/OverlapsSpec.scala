@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.core.CacheHandle
 import org.apache.spark.sql.functions._
 
 case class Tag(variantId: String, logBF: Option[Double],
@@ -56,7 +57,7 @@ class OverlapsSpec extends SparkSpec {
   }
 
   test("aligned tags keep the union of both credible sets") {
-    val overlaps = Overlaps.findOverlaps(credSet)
+    val overlaps = Overlaps.findOverlaps(credSet, cache = CacheHandle())
     val ac = overlaps.filter(col("leftStudyLocusId") === "A" &&
       col("rightStudyLocusId") === "C")
     val tags = ac.select("tagVariantId").as[String].collect().toSet

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.core.CacheHandle
 import org.apache.spark.sql.functions._
 
 /** Decontamination, TF-IDF, and SemDeDup-style semantic dedup. */
@@ -44,7 +45,7 @@ class PipelineOpsSpec extends SparkSpec {
       .contaminationPairs(corpus, bench, "text", "doc_id")
       .collect().map(key).toSet
     val bloomed = Decontamination
-      .contaminationPairsBloom(corpus, bench, "text", "doc_id")
+      .contaminationPairsBloom(corpus, bench, "text", "doc_id", cache = CacheHandle())
     assert(bloomed.collect().map(key).toSet == exact)
     // the prefilter must sit in the corpus scan stage, before the join
     val p = bloomed.queryExecution.executedPlan.toString
@@ -61,7 +62,8 @@ class PipelineOpsSpec extends SparkSpec {
       (11L, "beta gamma delta zeta eta")   // covered 2/3 by doc 1
     ).toDF("doc_id", "text")
     val out = Decontamination
-      .flagContaminated(corpus, bench, "text", "doc_id", minCoverage = 0.8)
+      .flagContaminated(corpus, bench, "text", "doc_id", minCoverage = 0.8,
+        cache = CacheHandle())
       .collect().map(r => r.getAs[Long]("doc_id") -> r).toMap
     assert(out(1L).getAs[Boolean]("isContaminated"))
     assert(out(1L).getAs[Long]("worstBenchId") == 10L)
@@ -134,7 +136,8 @@ class PipelineOpsSpec extends SparkSpec {
       (3L, vec(0.1, 0.9))    // near B, no in-cell partner above threshold
     ).toDF("id", "embedding")
     val seeds = emb.filter(col("id") % 100 === 0)
-    val pairs = Similarity.semanticDupPairs(emb, seeds, threshold = 0.99)
+    val pairs = Similarity.semanticDupPairs(emb, seeds, threshold = 0.99,
+      cache = CacheHandle())
       .collect().map(r => (r.getAs[Long]("idA"), r.getAs[Long]("idB")) -> r)
       .toMap
     // cell 0 = {0, 1, 2} (all pairwise cos > 0.99), cell 100 = {3, 100}
@@ -152,10 +155,11 @@ class PipelineOpsSpec extends SparkSpec {
     val emb = (0 until n).map(i => (i.toLong, Array(1.0, i * 1e-4)))
       .toDF("id", "embedding")
     val seed = emb.filter(col("id") === 0L)
-    val unCapped = Similarity.semanticDupPairs(emb, seed, threshold = 0.0)
+    val unCapped = Similarity.semanticDupPairs(emb, seed, threshold = 0.0,
+      cache = CacheHandle())
     assert(unCapped.count() == n.toLong * (n - 1) / 2)
     val capped = Similarity.semanticDupPairs(emb, seed, threshold = 0.0,
-      maxCellSize = n - 1L)
+      maxCellSize = n - 1L, cache = CacheHandle())
     assert(capped.count() == 0L)
   }
 }

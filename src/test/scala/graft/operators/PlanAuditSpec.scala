@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.core.CacheHandle
 import graft.ml.L2GFeatures
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -333,7 +334,8 @@ class PlanAuditSpec extends SparkSpec {
   test("DSIR selection broadcasts the bucket model and cuts top-k " +
     "with per-partition heaps, never a global sort or cartesian") {
     val p = plan(ImportanceSampling.dsirSelect(docs,
-      docs.filter($"doc_id" <= 2L), "text", "doc_id", k = 2, buckets = 64))
+      docs.filter($"doc_id" <= 2L), "text", "doc_id", k = 2, buckets = 64,
+      cache = CacheHandle()))
     assert(p.contains("TakeOrderedAndProject"),
       s"top-k cut is not TakeOrdered:\n$p")
     // the only nested-loop joins are the broadcast one-row totals
@@ -515,10 +517,21 @@ class PlanAuditSpec extends SparkSpec {
     // plan and the sweep would pass vacuously. Prove the detector
     // actually sees the inner plan by feeding it the r12 regression
     // shapes it exists to catch.
-    import graft.ml.L2GFeatures
+    // the r12 matrix merge: one nullable struct slot per family, merged
+    // by first(ignoreNulls) — struct buffers are immutable, so it plans
+    // as Sort + SortAggregate
     val famA = Seq(("sl1", "g1", 0.5)).toDF("studyLocusId", "geneId", "f1")
     val famB = Seq(("sl1", "g1", 0.7)).toDF("studyLocusId", "geneId", "f2")
-    val structPlan = L2GFeatures.featureMatrixStruct(Seq(famA, famB))
+    def slot(c: String) = struct(col(c)).cast(s"struct<$c:double>")
+    def noSlot(c: String) = lit(null).cast(s"struct<$c:double>")
+    val structPlan = famA
+      .select(col("studyLocusId"), col("geneId"), slot("f1").as("_fam0"),
+        noSlot("f2").as("_fam1"))
+      .unionByName(famB.select(col("studyLocusId"), col("geneId"),
+        noSlot("f1").as("_fam0"), slot("f2").as("_fam1")))
+      .groupBy("studyLocusId", "geneId")
+      .agg(first(col("_fam0"), ignoreNulls = true).as("_fam0"),
+        first(col("_fam1"), ignoreNulls = true).as("_fam1"))
       .queryExecution.executedPlan
     assert(planTraps(structPlan).exists(_.contains("sortAgg=")),
       s"sweep failed to see the SortAggregate through AQE:\n$structPlan")

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.core.CacheHandle
 
 class SearchSpec extends SparkSpec {
   import spark.implicits._
@@ -48,7 +49,8 @@ class SearchSpec extends SparkSpec {
   test("bm25TopK ranks docs with more query-term mass first; ranks are " +
     "1-based and bounded by k") {
     val qs = Seq((7L, "spark")).toDF("query_id", "qtext")
-    val hits = Search.bm25TopK(corpus, "text", "doc_id", qs, k = 10)
+    val hits = Search.bm25TopK(corpus, "text", "doc_id", qs, k = 10,
+      cache = CacheHandle())
       .orderBy("rank").as[(Long, Long, Long, Double)].collect()
     // docs 1 and 3 contain "spark"; doc 1 has tf=2 and is shorter-normalised
     assert(hits.map(_._3).toSeq == Seq(1L, 3L))
@@ -59,7 +61,8 @@ class SearchSpec extends SparkSpec {
 
   test("bm25TopK scores a multi-term query additively and caps at k") {
     val qs = Seq((1L, "spark duck"), (2L, "pond")).toDF("query_id", "qtext")
-    val out = Search.bm25TopK(corpus, "text", "doc_id", qs, k = 1)
+    val out = Search.bm25TopK(corpus, "text", "doc_id", qs, k = 1,
+      cache = CacheHandle())
     val byQuery = out.as[(Long, Long, Long, Double)].collect()
       .groupBy(_._1).map { case (qid, rows) => (qid, rows.toSeq) }
     // doc 3 matches both terms of query 1 — beats single-term docs
@@ -71,18 +74,19 @@ class SearchSpec extends SparkSpec {
     "equals the inline bm25TopK, and the term prune pushes down") {
     val dir = java.nio.file.Files.createTempDirectory("bm25idx").toString
     val qs = Seq((1L, "spark duck"), (2L, "pond")).toDF("query_id", "qtext")
-    val built = Search.bm25IndexBuild(corpus, "text", "doc_id")
+    val built = Search.bm25IndexBuild(corpus, "text", "doc_id", cache = CacheHandle())
     assert(built.nDocs == 4L)
     Search.bm25IndexWrite(built, dir)
     val loaded = Search.bm25IndexRead(spark, dir)
     assert(loaded.nDocs == built.nDocs && loaded.avgdl == built.avgdl)
-    val viaIndex = Search.bm25SearchIndex(loaded, qs, k = 3)
+    val viaIndex = Search.bm25SearchIndex(loaded, qs, k = 3, cache = CacheHandle())
       .as[(Long, Long, Long, Double)].collect().toSet
-    val inline = Search.bm25TopK(corpus, "text", "doc_id", qs, k = 3)
+    val inline = Search.bm25TopK(corpus, "text", "doc_id", qs, k = 3,
+      cache = CacheHandle())
       .as[(Long, Long, Long, Double)].collect().toSet
     assert(viaIndex == inline)
     // the query-vocabulary IN predicate reaches the parquet scan
-    val p = Search.bm25SearchIndex(loaded, qs, k = 3)
+    val p = Search.bm25SearchIndex(loaded, qs, k = 3, cache = CacheHandle())
       .queryExecution.executedPlan.toString
     assert(p.contains("PushedFilters") && p.contains("In(term"),
       s"term prune not pushed to the postings scan:\n$p")
@@ -94,17 +98,17 @@ class SearchSpec extends SparkSpec {
       (10L, "spark spark spark streaming joins the pond"),
       (11L, "entirely unrelated words only")).toDF("doc_id", "text")
     val appended = Search.bm25IndexAppend(
-      Search.bm25IndexBuild(corpus, "text", "doc_id"),
-      batch, "text", "doc_id")
+      Search.bm25IndexBuild(corpus, "text", "doc_id", cache = CacheHandle()),
+      batch, "text", "doc_id", cache = CacheHandle())
     val rebuilt = Search.bm25IndexBuild(
-      corpus.unionByName(batch), "text", "doc_id")
+      corpus.unionByName(batch), "text", "doc_id", cache = CacheHandle())
     assert(appended.nDocs == rebuilt.nDocs)
     assert(math.abs(appended.avgdl - rebuilt.avgdl) < 1e-9)
     assert(appended.postings.count() == rebuilt.postings.count())
     val qs = Seq((1L, "spark pond")).toDF("query_id", "qtext")
-    val a = Search.bm25SearchIndex(appended, qs, k = 5)
+    val a = Search.bm25SearchIndex(appended, qs, k = 5, cache = CacheHandle())
       .select("rank", "doc_id").as[(Long, Long)].collect().toSeq
-    val b = Search.bm25SearchIndex(rebuilt, qs, k = 5)
+    val b = Search.bm25SearchIndex(rebuilt, qs, k = 5, cache = CacheHandle())
       .select("rank", "doc_id").as[(Long, Long)].collect().toSeq
     assert(a == b)
     assert(a.map(_._2).contains(10L))
@@ -139,7 +143,8 @@ class SearchSpec extends SparkSpec {
       (4L, "common z")
     ).toDF("doc_id", "text")
     val qs = Seq((1L, "common"), (2L, "rare")).toDF("query_id", "qtext")
-    val out = Search.bm25TopK(even, "text", "doc_id", qs, k = 1)
+    val out = Search.bm25TopK(even, "text", "doc_id", qs, k = 1,
+      cache = CacheHandle())
       .as[(Long, Long, Long, Double)].collect()
       .map(r => (r._1, r._4)).toMap
     assert(out(2L) > out(1L))
@@ -151,7 +156,8 @@ class SearchSpec extends SparkSpec {
     val sc = corpus.select(
       concat(lit("doc-"), $"doc_id").as("doc_id"), $"text")
     val qs = Seq((7L, "spark")).toDF("query_id", "qtext")
-    val hits = Search.bm25TopK(sc, "text", "doc_id", qs, k = 10)
+    val hits = Search.bm25TopK(sc, "text", "doc_id", qs, k = 10,
+      cache = CacheHandle())
       .orderBy("rank").as[(Long, Long, String, Double)].collect()
     assert(hits.map(_._3).toSeq == Seq("doc-1", "doc-3"))
     assert(hits.map(_._2).toSeq == Seq(1L, 2L))

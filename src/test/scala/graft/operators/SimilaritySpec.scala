@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.core.CacheHandle
 import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSpec {
@@ -314,7 +315,8 @@ class SimilaritySpec extends SparkSpec {
     assert(pairs.select("idA", "idB").as[(Long, Long)].collect().toSet ==
       Set((1L, 2L)))
     val negs = Similarity.hardNegatives(emb,
-        emb.filter($"id" === 1L), pairs, k = 2, retrieveFactor = 3)
+        emb.filter($"id" === 1L), pairs, k = 2, retrieveFactor = 3,
+        cache = CacheHandle())
       .orderBy("rank")
       .select("neighbourId").as[Long].collect().toSeq
     // cosine order from (1,0): 2 (excluded dup), 3, 4, 5 → top-2 = 3, 4

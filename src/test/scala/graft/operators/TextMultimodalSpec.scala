@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.core.CacheHandle
 import org.apache.spark.sql.functions._
 
 class TextMultimodalSpec extends SparkSpec {
@@ -167,7 +168,7 @@ class TextMultimodalSpec extends SparkSpec {
       (3L, "left right noise"), (4L, "solo noise"),
       (5L, "left other noise")).toDF("doc_id", "text")
     val out = TextAnalysis.termCooccurrence(docs, "text", "doc_id",
-      minPairCount = 2, stopDfFrac = 0.9)
+      minPairCount = 2, stopDfFrac = 0.9, cache = CacheHandle())
       .as[(String, String, Long, Long, Long, Double)].collect()
     // noise (df 5 = N) is capped out of the pair space
     assert(!out.exists(r => r._1 == "noise" || r._2 == "noise"))
@@ -177,7 +178,8 @@ class TextMultimodalSpec extends SparkSpec {
     assert(math.abs(lr._6 - math.log(15.0 / 12.0)) < 1e-9)
     // a fat-doc cap of 1 distinct term empties the pair space
     assert(TextAnalysis.termCooccurrence(docs, "text", "doc_id",
-      minPairCount = 1, maxDocTerms = 1, stopDfFrac = 0.9).count() == 0L)
+      minPairCount = 1, maxDocTerms = 1, stopDfFrac = 0.9,
+      cache = CacheHandle()).count() == 0L)
   }
 
   test("chunkDocuments reconstruction: zero-overlap chunks concatenate " +

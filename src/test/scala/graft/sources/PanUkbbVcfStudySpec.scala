@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.SparkSpec
+import graft.core.CacheHandle
 import org.apache.spark.sql.functions._
 
 /** Pan-UKBB LD alignment, VCF export and study-index flows. */
@@ -116,7 +117,7 @@ class PanUkbbVcfStudySpec extends SparkSpec {
       ("sl3", 1.0f, -8, 0.001, 1.0)) // purity too low -> dropped
       .toDF("studyLocusId", "pValueMantissa", "pValueExponent",
         "purityMinR2", "credibleSetLog10BF")
-    val out = CredibleSetQC.credibleSetQc(cs).collect()
+    val out = CredibleSetQC.credibleSetQc(cs, cache = CacheHandle()).collect()
     assert(out.length == 1)
     assert(out.head.getString(0) == "sl1" && out.head.getDouble(4) == 10.0)
   }

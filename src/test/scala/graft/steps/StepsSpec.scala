@@ -347,6 +347,38 @@ class StepsSpec extends SparkSpec {
     assert(spark.read.parquet(cents).count() == 2)
   }
 
+  test("l2g_feature_matrix releases its shared frames after the write") {
+    // the factory persists its shared frames as local checkpoints,
+    // which clearCache() cannot see: only the step's own handle release
+    // frees them in a long-lived session
+    val cs = tmp("l2g_cs")
+    val dist = tmp("l2g_dist")
+    val genes = tmp("l2g_genes")
+    val out = tmp("l2g_out")
+    Seq(("sl1", "v1", "s1", "1", 100000L), ("sl2", "v3", "s2", "1", 300000L))
+      .toDF("studyLocusId", "variantId", "studyId", "chromosome", "position")
+      .withColumn("locus", array(
+        struct(col("variantId"), lit(0.8).as("posteriorProbability")),
+        struct(lit("v2").as("variantId"), lit(0.2).as("posteriorProbability"))))
+      .write.parquet(cs)
+    Seq(("v1", "g1", 1000L, 2000L), ("v2", "g2", 5000L, 6000L),
+      ("v3", "g1", 250000L, 260000L))
+      .toDF("variantId", "geneId", "distanceFromTss", "distanceFromFootprint")
+      .write.parquet(dist)
+    Seq(("g1", "protein_coding", "1", 100000L), ("g2", "lncRNA", "1", 150000L))
+      .toDF("id", "biotype", "chromosome", "tss").write.parquet(genes)
+    val sc = spark.sparkContext
+    val persistedBefore = sc.getPersistentRDDs.keySet
+    val storedBefore = sc.getRDDStorageInfo.map(_.id).toSet
+    Steps.runFromArgs(spark, Seq("l2g_feature_matrix", s"credible_sets=$cs",
+      s"distances=$dist", s"gene_index=$genes", s"out=$out"))
+    assert(spark.read.parquet(out).count() > 0)
+    val persisted = sc.getPersistentRDDs.keySet -- persistedBefore
+    val stored = sc.getRDDStorageInfo.map(_.id).toSet -- storedBefore
+    assert(persisted.isEmpty, s"step left persisted RDDs: $persisted")
+    assert(stored.isEmpty, s"step left RDD storage: $stored")
+  }
+
   test("mix_temperature step flattens the source mix") {
     val in = tmp("mt_in")
     val out = tmp("mt_out")

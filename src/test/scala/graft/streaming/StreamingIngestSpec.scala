@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.core.CacheHandle
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 class StreamingIngestSpec extends SparkSpec {
@@ -20,7 +21,7 @@ class StreamingIngestSpec extends SparkSpec {
     val input = MemoryStream[(Long, String, java.sql.Timestamp)]
     val docs = input.toDF().toDF("doc_id", "text", "ts")
     val q = StreamingIngest.ingest(docs, benchmark, "text", "doc_id",
-      minQuality = 0.5, maxBenchCoverage = 0.6)
+      minQuality = 0.5, maxBenchCoverage = 0.6, cache = CacheHandle())
       .writeStream.format("memory").queryName("ingest")
       .outputMode("append").start()
     try {
@@ -59,7 +60,7 @@ class StreamingIngestSpec extends SparkSpec {
     val input = MemoryStream[(Long, String, java.sql.Timestamp)]
     val docs = input.toDF().toDF("doc_id", "text", "ts")
     val q = StreamingIngest.ingest(docs, benchmark, "text", "doc_id",
-      minQuality = 0.0, maxBenchCoverage = 0.5)
+      minQuality = 0.0, maxBenchCoverage = 0.5, cache = CacheHandle())
       .writeStream.format("memory").queryName("ingest2")
       .outputMode("append").start()
     try {
