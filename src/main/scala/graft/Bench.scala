@@ -1,526 +1,79 @@
 package graft
 
-/** Benchmark main. Prints ONE JSON line:
-  * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Per-query timing main over the registered queries. Prints ONE JSON
+  * line:
+  * {"metric":"total","value":N,"unit":"sec","queries":{...},"nq":N,
+  * "detail":"BENCH_full.json","sf":...}
   *
-  * Round-5 harness: one forked JVM per query. The r3/r4 single-JVM suite
-  * convoyed late queries (accumulated broadcast relations pending
-  * weak-reference GC, storage eviction, code-cache pressure): the same jar
-  * replayed standalone ran 4-16x faster than its in-suite number, and
-  * clearCache()+GC caps did not cure it. A query's honest cost is what a
-  * fresh JVM pays for it — so the parent re-execs itself (same classpath,
-  * `--single <name>`) per query and sums the child-reported seconds. The
-  * reported time covers plan+execute of the query only, not JVM/session
-  * startup, matching how a per-query spark-submit would be read.
+  * `SPARK_GRAFT_SF_DIR` picks the input tables (default sf0.1) and
+  * `SPARK_GRAFT_QUERIES` (comma-separated names, `r_*` rehearsal names
+  * included) narrows the run. Everything runs in one JVM on the
+  * production session; each query is consumed in full through the
+  * `noop` sink [[Reps]] times and its fastest rep recorded. A failed
+  * query records -1 and stays out of the total. The layered,
+  * interleaved A/B benchmark is `perfbench/` (see BENCHMARK.json).
   */
 object Bench {
-  // Spark 4.x on JDK 17 needs these opens when SparkSession is created
-  // outside spark-submit; mirrors build.sbt / JavaModuleOptions.
-  private val addOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
+  val Reps = 2
 
-  private def sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-  def main(args: Array[String]): Unit =
-    if (args.length >= 2 && args(0) == "--single") runSingle(args(1))
-    else runSuite()
+  /** Run every column and operator of `df`; `count()` would let
+    * Catalyst prune the plan down to a scan. */
+  def consume(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
 
-  /** Child mode: run a small batch of queries in this fresh JVM, printing
-    * each query's cost. Per query: k=2 reps, min reported — rep 1 pays
-    * one-time JVM costs (janino codegen compilation, parquet/reflection
-    * init) that belong to the session, not the query; rep 2 is the query's
-    * steady-state cost. Caches are dropped between reps so rep 2 re-executes
-    * the full plan; between queries we additionally System.gc() + pause so
-    * the ContextCleaner can release dead broadcast relations before the next
-    * measurement (the r4 suite showed those accumulate and convoy).
-    */
-  private def runSingle(csv: String): Unit = {
-    val spark = GraftSession.getOrCreate()
-    val minReps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
-    // 6 (was 4): the improving-while->20% loop exists to report
-    // steady-state cost, but codegen-wide plans (e.g. the 30-slot l2g
-    // matrix merge) still improve >20% at rep 4 — the old cap recorded
-    // compiler residue as query cost for exactly the plans that are
-    // fastest at scale. The loop still stops the moment improvement
-    // flattens, so narrow plans pay nothing extra.
-    val maxReps = sys.env.getOrElse("SPARK_GRAFT_MAX_REPS", "6").toInt
-    // SPARK_GRAFT_PROFILE=1: dump each query's costliest stages to
-    // stderr (executor-CPU-ranked) — profiling in the REAL bench JVM
-    // (24g, local[16]); a small-heap test JVM GC-distorts attribution
-    val profiler = graft.core.StageProfiler.ifEnabled(spark, "profile")
-    csv.split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>
-      var best = Double.MaxValue
-      var n = -1L
-      try {
-        var rep = 0
-        var go = true
-        while (go) {
-          val t0 = System.nanoTime()
-          n = SparkEntry.queries.getOrElse(name,
-            SparkEntry.rehearsalQueries(name))(spark, sfDir).count()
-          val sec = (System.nanoTime() - t0) / 1e9
-          rep += 1
-          // per-rep diagnostic (stderr, not part of the artifact): how
-          // much of the recorded min is JIT/codegen warmup vs steady
-          // state is invisible from the single BENCHQ line
-          System.err.println(f"[bench] rep $name $rep sec=$sec%.2f")
-          // keep repeating while a heavy query is still JIT-warming
-          // (each rep improving the best by >20%) so the reported
-          // number is the steady-state cost, not compiler residue;
-          // queries over 10 s get a third rep unconditionally — their
-          // run-to-run variance makes a 2-rep min unreliable
-          go = rep < minReps ||
-            (rep < maxReps && best > 3.0 && sec < best * 0.8) ||
-            (rep < 3 && math.min(best, sec) > 10.0)
-          best = math.min(best, sec)
-          // end-of-query release of handle-persisted frames BEFORE the
-          // wholesale cache wipe, so object-level CacheHandle
-          // bookkeeping never points at unpersisted frames
-          graft.core.CacheHandle.releaseQueryScoped()
-          spark.sharedState.cacheManager.clearCache()
-        }
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-        best = -1.0
-        // a query that threw mid-rep may have left query-scoped
-        // persisted frames behind — tear down here too, or they
-        // pollute every later measurement in this child JVM. Guarded:
-        // if the SESSION is what died, the teardown must not escape
-        // this catch and abort the batch's remaining queries.
-        try {
-          graft.core.CacheHandle.releaseQueryScoped()
-          spark.sharedState.cacheManager.clearCache()
-        } catch { case _: Throwable => () }
-      }
-      println(f"BENCHQ $name $best%.6f rows=$n")
-      profiler.foreach(_.dump(name))
-      System.gc()
-      Thread.sleep(300)
+  /** Seconds (build + plan + execute) of each query's fastest rep, or
+    * -1 when any rep failed. Caches are released after every rep, so
+    * each rep re-executes the full plan. */
+  def timeQueries(spark: SparkSession, sfDir: String,
+                  names: Seq[String]): Seq[(String, Double)] = {
+    val reps = Seq.fill(Reps)(SparkEntry.runEach(spark, sfDir, names) {
+      (name, build) =>
+        val t0 = System.nanoTime()
+        consume(build())
+        val sec = (System.nanoTime() - t0) / 1e9
+        System.err.println(f"[bench] $name%-28s $sec%8.2f s")
+        sec
+    } { (_, _) => -1.0 }.toMap)
+    names.map { n =>
+      val secs = reps.map(_(n))
+      n -> (if (secs.exists(_ < 0)) -1.0 else secs.min)
     }
-    spark.stop()
-    sys.exit(0)
   }
 
-  /** Queries whose steady-state cost exceeds ~1.5 s at sf0.1 (per the
-    * r9 full map). Each runs in its OWN child JVM: sharing a fork with
-    * 6 neighbours measured +6..30% suite-context drift on these
-    * (broadcast/code-cache accumulation — q_ml_l2g_features 8.82 s in
-    * the r9 suite vs 7.9±5% standalone), and any name added to the
-    * registry reshuffled every positional batch, moving numbers with
-    * no code change. Solo forks make the recorded number identical to
-    * a standalone replay by construction; sub-1.5 s queries stay
-    * batched (drift there is bounded by their own size). */
-  private val heavySolo: Set[String] = Set(
-    "q_ml_l2g_features", "q_gx_finemap_e2e", "q_gx_overlaps_coloc_e2e",
-    "q_gx_ecaviar_fused_e2e",
-    "q_ml_l2g_gold_standard", "q_gx_coloc", "q_gx_window_clump",
-    "q_gx_rsid_gnomad_map", "q_gx_ecaviar", "q_gx_cluster_top1",
-    "q_gx_intra_overlaps", "q_ml_l2g_distance", "q_dedup_keep_best",
-    "q_search_rrf", "q_search_hybrid", "q_gx_pics", "q_text_cooccurrence",
-    "q_gx_locus_breaker", "q_gx_ld_clump", "q_dedup_decontaminate_bloom",
-    "q_dedup_containment", "q_dedup_minhash", "q_dedup_ngram_jaccard",
-    "q_gx_ancestry_agg", "q_j4_interval_band_join", "q_dsir_select")
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val only = sys.env.get("SPARK_GRAFT_QUERIES")
+    val spark = GraftSession.getOrCreate()
+    val results = timeQueries(spark, sfDir, SparkEntry.selected(only))
+    spark.stop()
+    val total = results.map(_._2).filter(_ >= 0).sum
 
-  /** Canary protocol (see runSuite): pinned cheap query + its
-    * fresh-session forked cost, measured at r11 on the quiesced build
-    * box. The gate retries recording while the canary runs >25% over. */
-  private val CanaryQuery = "q_w1_top1_per_group"
-  // The pinned reference is a measurement from one specific build box —
-  // on any other host it would fail all 3 attempts and burn 2x45 s
-  // quiesce sleeps per suite. SPARK_GRAFT_CANARY_REF re-pins it for the
-  // host (measure CanaryQuery once in a fresh forked JVM); <= 0 disables
-  // the retry loop entirely (the ratio is still echoed for the reader).
-  private val CanaryRefSec =
-    sys.env.get("SPARK_GRAFT_CANARY_REF").map(v =>
-      v.toDoubleOption.getOrElse(throw new IllegalArgumentException(
-        s"SPARK_GRAFT_CANARY_REF must be a number (e.g. 0.65), got '$v'")))
-      .getOrElse(0.65)
-  private val CanaryMaxRatio = 1.25
-
-  private def runSuite(): Unit = {
-    // Wall-clock budget (r16): the r15 driver bench was killed at its
-    // timeout (rc=124, parsed=null) because the repeat protocol outgrew
-    // the wall window — leaving the round with NO independent perf
-    // record, which is strictly worse than a lower-repeat one. The suite
-    // now carries its own deadline and degrades instead of dying:
-    // per-query repeat overrides are skipped first, then tail-band
-    // repeats, then heavy repeats (each fork is budget-checked before
-    // launch), and if even the FIRST pass runs low the remaining
-    // children fall back to single-shot reps. Every drop is recorded in
-    // the artifact ("degraded":true + "dropped" list) so a reader knows
-    // which figures are single-shot. <= 0 disables the budget.
-    val wallBudgetSec =
-      sys.env.getOrElse("SPARK_GRAFT_WALL_BUDGET", "2700").toDouble
-    val suiteStart = System.nanoTime()
-    def elapsedSec: Double = (System.nanoTime() - suiteStart) / 1e9
-    def remainingSec: Double = wallBudgetSec - elapsedSec
-    // reserve keeps room for the fallback pass + artifact write after
-    // the last allowed fork; est is a deliberate over-estimate (reps x
-    // first-pass cost + JVM/session startup) so degradation starts
-    // before the deadline, never after
-    val BudgetReserveSec = 60.0
-    val ForkOverheadSec = 15.0
-    val dropped = scala.collection.mutable.ListBuffer.empty[String]
-    def budgetAllows(est: Double, what: String): Boolean = {
-      val ok = wallBudgetSec <= 0 || remainingSec - BudgetReserveSec > est
-      if (!ok) {
-        dropped += what
-        System.err.println(f"[bench] budget: dropping $what " +
-          f"(est $est%.0f s, remaining $remainingSec%.0f s)")
-      }
-      ok
+    // The full-precision map goes to BENCH_full.json; a filtered run
+    // must not clobber the committed full-suite artifact.
+    if (only.isEmpty) {
+      val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
+        .mkString("{", ",", "}")
+      java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_full.json"),
+        s"""{"metric":"total","value":$total,"unit":"sec",""" +
+          s""""queries":$qs,"sf":"$sfDir"}""" + "\n")
     }
 
-    val only = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").map(_.trim).toSet)
-    // rehearsal-only names (r_*) run ONLY when explicitly requested —
-    // the default suite stays exactly the registered driver contract
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n))) ++
-      only.toSeq.flatMap(_.toSeq)
-        .filter(SparkEntry.rehearsalQueries.contains).sorted
-    val javaBin = new java.io.File(
-      new java.io.File(sys.props("java.home"), "bin"), "java").getAbsolutePath
-    val classpath = sys.props("java.class.path")
-    // Child heap: a handful of queries at sf0.1 needs far less than the 48g
-    // suite JVM; 24g matches the judge's standalone-replay protocol.
-    val childMem = sys.env.getOrElse("SPARK_GRAFT_CHILD_MEM", "24g")
-    // ~7 queries per JVM balances isolation (bounded broadcast/code-cache
-    // accumulation) against the ~10s JVM+session startup per fork.
-    val batchSize = sys.env.getOrElse("SPARK_GRAFT_BATCH", "7").toInt
-    val base = Seq(javaBin) ++ addOpens ++ Seq(
-      s"-Xmx$childMem",
-      // cap GC service threads so they don't convoy the executor pool —
-      // but do NOT cap the JIT compiler pool: with CICompilerCount=4 the
-      // C2 queue lags the flood of wholestage-codegen classes a wide
-      // plan emits, and its hot loops run interpreted for tens of
-      // seconds (q_ml_l2g_features measured 22.7 s capped vs 10.4 s
-      // with the default pool on a 32-vCPU host; light queries are
-      // unaffected). The local[16] children leave headroom for the
-      // default compiler pool.
-      "-XX:ParallelGCThreads=8", "-XX:ConcGCThreads=2",
-      // every rep regenerates wholestage-codegen classes (fresh expr
-      // ids → new class text), and a wide plan's reps overflow the
-      // 240m default code cache → JIT deopt → interpreted stages ran
-      // 8x the CPU (measured on q_ml_l2g_features rep 3: 25 → 205
-      // CPU-s for the same stage). Room + flushing keeps reps honest.
-      "-XX:ReservedCodeCacheSize=512m", "-XX:+UseCodeCacheFlushing",
-      "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-      "-cp", classpath, "graft.Bench", "--single")
-
-    // Canary-gated recording: the committed artifact's trust problem is
-    // machine-state inflation (a late-session suite measured a uniform
-    // ~1.14x over the same code's quiesced cost). Before recording, fork
-    // a pinned cheap query whose fresh-session cost is committed here;
-    // if it runs >25% over, quiesce and retry, and either way ECHO the
-    // final canary ratio into the artifact so a reader can judge how
-    // much machine state the numbers carry.
-    val canaryRatio: Double =
-      if (only.nonEmpty) -1.0 // filtered probe runs skip the gate
-      else {
-        var ratio = -1.0
-        var attempt = 0
-        // ref <= 0: single measurement, no gate (unknown host)
-        val maxAttempts = if (CanaryRefSec > 0) 3 else 1
-        while (attempt < maxAttempts && (ratio < 0 || ratio > CanaryMaxRatio)) {
-          if (attempt > 0) {
-            System.err.println(f"[bench] canary ratio $ratio%.2f > " +
-              f"$CanaryMaxRatio — quiescing before retry")
-            System.gc(); Thread.sleep(45000)
-          }
-          val sec = runForked(base :+ CanaryQuery).toMap
-            .getOrElse(CanaryQuery, -1.0)
-          ratio = if (sec > 0 && CanaryRefSec > 0) sec / CanaryRefSec else -1.0
-          System.err.println(f"[bench] canary $CanaryQuery $sec%.2f s " +
-            f"(ref $CanaryRefSec%.2f, ratio $ratio%.2f)")
-          attempt += 1
-        }
-        ratio
-      }
-
-    val (heavy, light) = names.partition(n =>
-      // rehearsal (r_*) workloads are the heaviest scaled shapes in the
-      // registry — batching them with light queries is exactly the
-      // suite-context drift solo forks exist to remove
-      heavySolo.contains(n) || n.startsWith("r_"))
-    val batches = heavy.map(Seq(_)) ++ light.grouped(batchSize).toSeq
-    // First pass always runs to completion — without it there is no
-    // artifact at all — but if the budget is already 3/4 spent the
-    // remaining children degrade to single-rep mode (weaker protocol,
-    // full coverage) rather than let the parent be killed mid-suite.
-    var fastMode = false
-    val fromForks: Map[String, Double] = batches.flatMap { batch =>
-      if (!fastMode && wallBudgetSec > 0 &&
-          remainingSec < wallBudgetSec * 0.25) {
-        fastMode = true
-        dropped += "first_pass_multi_rep"
-        System.err.println(f"[bench] budget: first pass degrading to " +
-          f"single-rep children (remaining $remainingSec%.0f s)")
-      }
-      val env = if (fastMode)
-        Map("SPARK_GRAFT_REPS" -> "1", "SPARK_GRAFT_MAX_REPS" -> "1")
-      else Map.empty[String, String]
-      runForked(base :+ batch.mkString(","), env)
-    }.toMap
-    fromForks.toSeq.sortBy(_._1).foreach { case (n, s) =>
-      System.err.println(f"[bench] $n%-28s $s%8.2f s")
-    }
-
-    // Any query a child failed to report (crash, launch failure) is measured
-    // in-process so the bench still covers every query.
-    val missing = names.filterNot(fromForks.contains)
-    val fromFallback: Map[String, Double] =
-      if (missing.isEmpty) Map.empty
-      else {
-        val spark = GraftSession.getOrCreate()
-        val m = missing.map { name =>
-          val t0 = System.nanoTime()
-          val n = try SparkEntry.queries(name)(spark, sfDir).count()
-            catch { case e: Throwable =>
-              System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); -1L }
-          // a failed query records -1 (matching the forked path), not
-          // its time-to-failure — which would otherwise enter the
-          // total and the repeat protocol as a legitimate measurement
-          val s = if (n < 0) -1.0 else (System.nanoTime() - t0) / 1e9
-          graft.core.CacheHandle.releaseQueryScoped()
-          spark.sharedState.cacheManager.clearCache()
-          System.err.println(f"[bench] $name%-28s $s%8.2f s  rows=$n (in-process)")
-          name -> s
-        }.toMap
-        spark.stop()
-        m
-      }
-
-    val firstPass = fromForks ++ fromFallback
-
-    // Per-query repeat protocol (r13): a single-shot fresh-JVM number
-    // for a heavy query carries up to 3x machine-state noise the
-    // start-of-run canary cannot see (r12: q_gx_ecaviar_fused_e2e
-    // 2.31 vs 6.90 s, same code, canaries 1.16/1.17). Every query
-    // whose first-pass wall exceeds the threshold is re-forked
-    // (repeatRuns - 1) more times, INTERLEAVED round-robin across the
-    // heavy set so slow machine-state drift decorrelates from any one
-    // query, and the recorded value is the MEDIAN of its fresh-JVM
-    // runs; the cheap tail stays single-shot to bound suite time.
-    val repeatRuns = sys.env.getOrElse("SPARK_GRAFT_REPEATS", "3").toInt
-    val repThreshold =
-      sys.env.getOrElse("SPARK_GRAFT_REPEAT_THRESHOLD", "2.0").toDouble
-    // Tail band (r14): the only unexplained r12->r13 movements were
-    // single-shot sub-2 s queries on untouched code (q_profile_documents
-    // +0.73 s etc.) — noise a one-shot number cannot distinguish from a
-    // regression. Queries in (tailThreshold, repThreshold] are re-run
-    // (repeatRuns - 1) more times in BATCHED forks — batched-fork
-    // context like their first pass (the tail-only batch membership is
-    // not identical to the first pass's full-light-set batches, so the
-    // comparability is approximate, not exact) — and recorded as
-    // median-of-runs with a spread, same as the heavy set. heavySolo
-    // queries are excluded like r_ names: their first pass was a SOLO
-    // fork, and a batched repeat would mix two fork contexts in one
-    // median. Below the tail threshold a query's absolute movement is
-    // bounded by its own size and stays single-shot.
-    val tailThreshold =
-      sys.env.getOrElse("SPARK_GRAFT_TAIL_THRESHOLD", "0.8").toDouble
-    val repeatNames = if (only.nonEmpty) Seq.empty[String]
-      else names.filter(n => firstPass.get(n).exists(_ > repThreshold))
-    val tailNames = if (only.nonEmpty) Seq.empty[String]
-      else names.filter(n => !n.startsWith("r_") && !heavySolo.contains(n) &&
-        firstPass.get(n).exists(v => v > tailThreshold && v <= repThreshold))
-    // Per-query repeat overrides: queries whose recorded spread has
-    // repeatedly exceeded ~20% of their median need more fresh-JVM
-    // samples for the median to converge. q_gx_overlaps_coloc_e2e is
-    // multi-cache dependent (fused-tags + peak-pair frames) and was
-    // the widest spread-to-median heavy query in r14 (2.23 s on a
-    // 5.90 s median); its materialization tail needs >3 samples.
-    // Gated on repeats being enabled: SPARK_GRAFT_REPEATS=1 means "no
-    // repeats", so the override must not force 4 extra solo forks.
-    val perQueryRepeats: Map[String, Int] =
-      if (repeatRuns > 1)
-        Map("q_gx_overlaps_coloc_e2e" -> math.max(repeatRuns, 5))
-      else Map.empty
-    def repeatsFor(name: String): Int =
-      perQueryRepeats.getOrElse(name, repeatRuns)
-    val maxRepeatRuns = (perQueryRepeats.values.toSeq :+ repeatRuns).max
-    // estimated fork wall cost: child reps x first-pass cost + startup;
-    // deliberately conservative so budget degradation leads the deadline
-    def estSolo(name: String): Double =
-      firstPass.getOrElse(name, 3.0) * 2.5 + ForkOverheadSec
-    def estBatch(batch: Seq[String]): Double =
-      batch.map(firstPass.getOrElse(_, 1.0)).sum * 2.5 + ForkOverheadSec
-    val extraRuns: Map[String, Seq[Double]] =
-      if ((repeatNames.isEmpty && tailNames.isEmpty) || maxRepeatRuns <= 1)
-        Map.empty
-      else {
-        val collected = scala.collection.mutable.Map
-          .empty[String, List[Double]].withDefaultValue(Nil)
-        // Phase order = inverse drop priority under the wall budget:
-        // heavy repeats run first (most protocol value per second), tail
-        // repeats second, per-query override rounds last — so when the
-        // deadline bites, overrides are skipped first, then tail, then
-        // heavy, matching the degradation the artifact promises. Heavy
-        // rounds stay interleaved round-robin across the heavy set so
-        // slow machine-state drift decorrelates from any one query.
-        for (round <- 2 to repeatRuns; name <- repeatNames)
-          if (budgetAllows(estSolo(name), s"repeat:$name:$round")) {
-            System.err.println(s"[bench] repeat $round/${repeatsFor(name)} $name")
-            runForked(base :+ name).foreach { case (n, s) =>
-              collected(n) = collected(n) :+ s
-            }
-          }
-        for (round <- 2 to repeatRuns; batch <- tailNames.grouped(batchSize))
-          if (budgetAllows(estBatch(batch),
-              s"tail:${batch.head}+${batch.size - 1}:$round")) {
-            System.err.println(
-              s"[bench] tail repeat $round/$repeatRuns ${batch.mkString(",")}")
-            runForked(base :+ batch.mkString(",")).foreach { case (n, s) =>
-              collected(n) = collected(n) :+ s
-            }
-          }
-        for (round <- (repeatRuns + 1) to maxRepeatRuns;
-             name <- repeatNames if round <= repeatsFor(name))
-          if (budgetAllows(estSolo(name), s"override:$name:$round")) {
-            System.err.println(s"[bench] repeat $round/${repeatsFor(name)} $name")
-            runForked(base :+ name).foreach { case (n, s) =>
-              collected(n) = collected(n) :+ s
-            }
-          }
-        collected.toMap
-      }
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.isEmpty) -1.0
-      else if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-    }
-    val runsMap: Map[String, Seq[Double]] = (repeatNames ++ tailNames).map { n =>
-      n -> (firstPass.get(n).toSeq ++ extraRuns.getOrElse(n, Nil))
-    }.toMap
-    // a repeat fork that fails records the -1 sentinel into its runs;
-    // the median must be taken over the SUCCESSFUL runs only (else one
-    // failed repeat flips median([3.0,-1,-1]) to -1 and silently drops
-    // a query that produced a valid first-pass measurement), falling
-    // back to -1 only when no run succeeded
-    val results = firstPass ++ runsMap.collect {
-      case (n, runs) if runs.nonEmpty => n -> median(runs.filter(_ >= 0))
-    }
-    // failed queries record the -1 sentinel; it must not enter the
-    // total (which would otherwise shift by -1 s per failure)
-    val total = results.values.filter(_ >= 0).sum
-
-    // Full-precision per-query map → BENCH_full.json next to the build.
-    // The driver records only a ~2000-char stdout tail; the 80+-query
-    // map stopped fitting on one line in round 7 (the artifact's
-    // "parsed" went null). Best-effort: never fail the bench over it.
-    // Only the FULL suite writes it — a SPARK_GRAFT_QUERIES-filtered
-    // run (rehearsal probes) must not clobber the committed artifact.
-    val fullQs = results.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    def f2c(v: Double): String =
+    // The stdout line must survive a ~2000-char tail capture: queries in
+    // descending cost at 2 decimals, cut off at 1800 chars; `nq` and
+    // `detail` point at the complete map.
+    def f2(v: Double): String =
       if (v < 0) "-1"
       else BigDecimal(v).setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
-    val canaryJson =
-      s""""canary":{"query":"$CanaryQuery","ref_sec":$CanaryRefSec,""" +
-        s""""ratio":${f2c(canaryRatio)}}"""
-    // Self-describing totals: raw totals are comparable across rounds
-    // only at equal canary ratio (r11 131.74 s @0.97 vs r12 143.15 s
-    // @1.17 read as a regression until normalised) — embed the
-    // canary-normalised figure and say so in the artifact itself.
-    val normTotal = if (canaryRatio > 0) total / canaryRatio else -1.0
-    val repeatsJson = runsMap.toSeq.sortBy(_._1).map { case (n, runs) =>
-      // "runs" lists every attempt verbatim (incl. -1 failures, so the
-      // artifact shows them); median/spread cover the successes only
-      val ok = runs.filter(_ >= 0)
-      val spread = if (ok.nonEmpty) ok.max - ok.min else -1.0
-      "\"" + n + "\":{\"runs\":[" + runs.map(f2c).mkString(",") +
-        s"],\"median\":${f2c(median(ok))},\"spread\":${f2c(spread)}}"
-    }.mkString("{", ",", "}")
-    val degraded = dropped.nonEmpty
-    val droppedJson = dropped.take(40).map("\"" + _ + "\"")
-      .mkString("[", ",", "]")
-    val perQueryJson = perQueryRepeats.toSeq.sortBy(_._1)
-      .map { case (n, k) => "\"" + n + "\":" + k }.mkString("{", ",", "}")
-    val protocolJson =
-      s""""protocol":{"repeat_threshold_sec":$repThreshold,""" +
-        s""""tail_threshold_sec":$tailThreshold,""" +
-        s""""repeat_runs":$repeatRuns,""" +
-        s""""per_query_repeats":$perQueryJson,""" +
-        s""""wall_budget_sec":$wallBudgetSec,""" +
-        s""""elapsed_sec":${f2c(elapsedSec)},""" +
-        s""""degraded":$degraded,"dropped_forks":${dropped.size},""" +
-        s""""dropped":$droppedJson,"note":"queries over """ +
-        """repeat_threshold are recorded as the median of repeat_runs """ +
-        """interleaved solo fresh-JVM runs (per_query_repeats overrides """ +
-        """the run count for the named queries); queries in the """ +
-        """(tail_threshold, repeat_threshold] band as the median of """ +
-        """repeat_runs batched-fork runs (spread = max - min for """ +
-        """both); when elapsed approaches wall_budget_sec the suite """ +
-        """degrades instead of dying — override rounds drop first, """ +
-        """then tail repeats, then heavy repeats (each listed in """ +
-        """dropped, degraded=true) — so a degraded artifact has """ +
-        """fewer samples, never missing queries; totals are """ +
-        """comparable across rounds only at equal """ +
-        """canary ratio — use normalized_total (= value / """ +
-        """canary.ratio) for cross-round reads"}"""
-    if (only.isEmpty)
-      try java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("BENCH_full.json"),
-        s"""{"metric":"total","value":$total,"unit":"sec",""" +
-          s""""normalized_total":${f2c(normTotal)},$canaryJson,""" +
-          s"""$protocolJson,"repeats":$repeatsJson,""" +
-          s""""queries":$fullQs,"sf":"$sfDir"}""" + "\n")
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] BENCH_full.json write failed: ${e.getMessage}")
-      }
-
-    // Stdout line, budgeted to survive the tail capture: queries in
-    // descending cost (the expensive ones are what gets graded), values
-    // at 2 decimals, truncated before the line outgrows the capture
-    // window; `nq` + `detail` point at the complete map.
-    def f2(v: Double): String =
-      if (v < 0) "-1" else BigDecimal(v).setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
-    val lineTail =
-      s"""},"nq":${results.size},"normalized_total":${f2(normTotal)},""" +
-        s"""$canaryJson,"degraded":$degraded,""" +
-        s""""detail":"BENCH_full.json","sf":"$sfDir"}"""
-    val sb = new StringBuilder(s"""{"metric":"total","value":${f2(total)},"unit":"sec","queries":{""")
-    var full = false
-    var first = true
-    results.toSeq.sortBy(-_._2).foreach { case (k, v) =>
-      val ent = (if (first) "" else ",") + "\"" + k + "\":" + f2(v)
-      if (!full && sb.length + ent.length + lineTail.length <= 1800) {
-        sb.append(ent); first = false
-      } else full = true
-    }
-    sb.append(lineTail)
-    println(sb.toString)
+    val tail = s"""},"nq":${results.size},"detail":"BENCH_full.json","sf":"$sfDir"}"""
+    val sb = new StringBuilder(
+      s"""{"metric":"total","value":${f2(total)},"unit":"sec","queries":{""")
+    results.sortBy(-_._2).iterator
+      .map { case (k, v) => "\"" + k + "\":" + f2(v) }
+      .zipWithIndex.map { case (e, i) => if (i == 0) e else "," + e }
+      .takeWhile(e => sb.length + e.length + tail.length <= 1800)
+      .foreach(sb.append)
+    println(sb.append(tail).toString)
   }
-
-  private val benchLine = """BENCHQ (\S+) (\S+) rows=(-?\d+)""".r
-
-  /** Launch one child JVM over a batch; parse its BENCHQ lines. Queries the
-    * child never reported (crash before reaching them) are simply absent.
-    */
-  private def runForked(cmd: Seq[String],
-      env: Map[String, String] = Map.empty): Seq[(String, Double)] =
-    try {
-      val pb = new ProcessBuilder(cmd: _*)
-      env.foreach { case (k, v) => pb.environment().put(k, v) }
-      pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-      val proc = pb.start()
-      val out = new String(proc.getInputStream.readAllBytes(), "UTF-8")
-      val rc = proc.waitFor()
-      if (rc != 0)
-        System.err.println(s"[bench] child rc=$rc; reported lines kept, rest fall back")
-      out.linesIterator.collect {
-        case benchLine(name, sec, _) if sec.toDouble >= 0 => name -> sec.toDouble
-      }.toSeq
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] fork launch failed: ${e.getMessage}")
-        Seq.empty
-    }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.CacheHandle
 import graft.queries.{Oracles, Q}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -160,10 +161,10 @@ object SparkEntry {
     "q_mm_frames" -> (Q.multimodalFrames _))
 
   /** Rehearsal-only scaled-workload variants — NOT part of the driver
-    * contract (no oracles; Verify never runs them). graft.Bench
-    * resolves these names too, so the 10x/100x scale rehearsal
-    * (BENCH_sf1.json) can use the fork/rep harness for operators whose
-    * registered synthesis pins the group space with moduli. */
+    * contract (no oracles). They run only when a harness filter names
+    * them ([[selected]]), so the 10x/100x scale rehearsal
+    * (BENCH_sf1.json) can time operators whose registered synthesis
+    * pins the group space with moduli. */
   def rehearsalQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "r_gx_ld_clump" -> (Q.ldClumpScaled _),
     "r_gx_coloc_classic" -> (Q.colocClassicScaled _),
@@ -175,4 +176,37 @@ object SparkEntry {
     "r_ml_l2g_gold_standard" -> (Q.l2gGoldStandardScaled _))
 
   def oracleSql: Map[String, String] = Oracles.all
+
+  /** The names a harness runs under the comma-separated filter `only`:
+    * every registered query, sorted, when it is unset, else the ones it
+    * names. Rehearsal (`r_*`) workloads run only when named. */
+  def selected(only: Option[String]): Seq[String] = {
+    val named = only.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    queries.keys.toSeq.sorted.filter(n => named.forall(_.contains(n))) ++
+      named.toSeq.flatten.filter(rehearsalQueries.contains).sorted
+  }
+
+  /** The per-query loop of the harness mains (`Bench`, `Verify`): hands
+    * each named query's builder to `run`, or the error to `failed` when
+    * building or running it throws. The query's caches are released
+    * after it either way, so no query's storage outlives it. */
+  def runEach[T](spark: SparkSession, sfDir: String, names: Seq[String])(
+      run: (String, () => DataFrame) => T)(
+      failed: (String, Throwable) => T): Seq[(String, T)] =
+    names.map { name =>
+      val build = () =>
+        queries.getOrElse(name, rehearsalQueries(name))(spark, sfDir)
+      val out =
+        try run(name, build)
+        catch { case e: Throwable =>
+          System.err.println(s"[$name] failed: ${e.getMessage}")
+          failed(name, e)
+        } finally {
+          // handles first, so their bookkeeping never points at frames
+          // the wholesale wipe already dropped
+          CacheHandle.releaseQueryScoped()
+          spark.sharedState.cacheManager.clearCache()
+        }
+      name -> out
+    }
 }

@@ -53,15 +53,12 @@ import org.apache.spark.sql.streaming.Trigger
   * engine's own progress events (stateOperators.numRowsTotal /
   * memoryUsedBytes), maxed over the run.
   *
-  * Recording is canary-gated ([[MachineCanary]], same protocol as
-  * the bench suite): the pinned CPU probe must run within 25% of its
-  * fresh-box cost (quiesce-and-retry otherwise), and the final ratio
-  * is embedded in the artifact.
-  *
   * Prints one JSON line:
   * {"stream_bench":{workload:{rows_in,rows_out,sec,rows_per_sec,
-  * state_rows_max,state_mb_max,batches,...}},"scale":N,"docs":M,
-  * "canary":{...}}
+  * state_rows_max,state_mb_max,batches,...}},"scale":N,"docs":M}
+  * The line carries no machine-state `canary` field (earlier
+  * STREAMBENCH_rNN artifacts do): a start-of-run probe could not tell
+  * host noise from code cost, so comparisons need interleaved runs.
   */
 object StreamBench {
 
@@ -77,8 +74,6 @@ object StreamBench {
     val spark = GraftSession.getOrCreate()
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-    val canaryRatio = MachineCanary.gatedRatio(spark)
 
     val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text")
@@ -327,9 +322,7 @@ object StreamBench {
     val js = (Seq(r1, r2, r3, r3b, r4).filter(_._4 >= 0).map(entry(_)) ++
       (if (r5._1._4 >= 0) Seq(entry(r5._1, r5._2)) else Nil))
       .mkString("{", ",", "}")
-    println(s"""{"stream_bench":$js,"scale":$factor,"docs":$total,""" +
-      f""""canary":{"ref_sec":${MachineCanary.refSec}%.2f,""" +
-      f""""ratio":$canaryRatio%.2f}}""")
+    println(s"""{"stream_bench":$js,"scale":$factor,"docs":$total}""")
     spark.stop()
   }
 }

@@ -10,7 +10,6 @@ object Verify {
     // optional filter (comma-separated names) for focused re-checks;
     // the driver sets no filter and dumps everything
     val only = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).toSet)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -28,52 +27,38 @@ object Verify {
     // invariant — see Goldens.expected)
     val sfTag = new java.io.File(sfDir).getName
     val goldenRows = scala.collection.mutable.ArrayBuffer.empty[String]
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        for {
-          bySf <- queries.Goldens.expected.get(name)
-          if !SparkEntry.oracleSql.contains(name)
-          exp <- bySf.get(sfTag)
-        } {
-          val got = queries.Goldens.canonicalDigest(
-            spark.read.parquet(s"$outDir/$name"))
-          val ok = got == exp
-          goldenRows += s"""{"query": ${jq(name)}, "expected": ${jq(exp)},
-            | "actual": ${jq(got)}, "match": $ok,
-            | "enforced": true}""".stripMargin.replace("\n", "")
-          if (!ok) {
-            System.err.println(
-              s"[verify] $name GOLDEN MISMATCH: expected $exp got $got")
-            import spark.implicits._
-            Seq(s"golden digest mismatch: expected $exp got $got")
-              .toDF("__verify_error")
-              .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-          }
-        }
-      }
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        // still write a marker result so the driver's dir enumeration
-        // records a VISIBLE failure row (schema/row mismatch) — a query
-        // that throws must never silently vanish from the artifact
-        try {
-          import spark.implicits._
-          Seq(Option(e.getMessage).getOrElse(e.getClass.getName).take(500))
+    import spark.implicits._
+    SparkEntry.runEach(spark, sfDir, SparkEntry.selected(only)) { (name, build) =>
+      build().coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      for {
+        bySf <- queries.Goldens.expected.get(name)
+        if !SparkEntry.oracleSql.contains(name)
+        exp <- bySf.get(sfTag)
+      } {
+        val got = queries.Goldens.canonicalDigest(
+          spark.read.parquet(s"$outDir/$name"))
+        val ok = got == exp
+        goldenRows += s"""{"query": ${jq(name)}, "expected": ${jq(exp)},
+          | "actual": ${jq(got)}, "match": $ok,
+          | "enforced": true}""".stripMargin.replace("\n", "")
+        if (!ok) {
+          System.err.println(
+            s"[verify] $name GOLDEN MISMATCH: expected $exp got $got")
+          Seq(s"golden digest mismatch: expected $exp got $got")
             .toDF("__verify_error")
             .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        } catch { case e2: Throwable =>
-          System.err.println(s"[verify] $name marker failed: ${e2.getMessage}")
         }
       }
-      // operators leave unpersist to the caller — drop per-query caches
-      // (the handle release keeps object-level CacheHandle bookkeeping
-      // consistent with the cache-manager wipe)
-      graft.core.CacheHandle.releaseQueryScoped()
-      spark.sharedState.cacheManager.clearCache()
+    } { (name, e) =>
+      // still write a marker result so the driver's dir enumeration
+      // records a VISIBLE failure row (schema/row mismatch) — a query
+      // that throws must never silently vanish from the artifact
+      try Seq(Option(e.getMessage).getOrElse(e.getClass.getName).take(500))
+        .toDF("__verify_error")
+        .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      catch { case e2: Throwable =>
+        System.err.println(s"[verify] $name marker failed: ${e2.getMessage}")
+      }
     }
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${jq(k)}: ${jq(v)}" }.mkString("{", ",", "}")

@@ -122,6 +122,18 @@ class CacheHandle(level: StorageLevel = StorageLevel.MEMORY_AND_DISK) {
     }
   }
 
+  /** Take over every frame `other` holds, leaving `other` empty: this
+    * handle's [[release]] now drops them. */
+  def adopt(other: CacheHandle): Unit = {
+    val (fs, cps) = other.synchronized {
+      val taken = (other.frames.toList, other.checkpointed.toList)
+      other.frames.clear()
+      other.checkpointed.clear()
+      taken
+    }
+    synchronized { frames ++= fs; checkpointed ++= cps }
+  }
+
   /** Unpersist every frame registered since construction / last release. */
   def release(blocking: Boolean = false): Unit = synchronized {
     frames.foreach(_.unpersist(blocking))
@@ -187,6 +199,7 @@ object CacheHandle {
     override def persist(df: DataFrame): DataFrame = df
     override def persistTruncated(df: DataFrame): DataFrame = df
     override def materialize(): Unit = ()
+    override def adopt(other: CacheHandle): Unit = ()
     override def release(blocking: Boolean): Unit = ()
   }
 }

@@ -2,8 +2,8 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared stage-level profiling listener for the benchmark mains
-  * (Bench, ChainBench, GraftCli): collects per-Spark-stage wall /
+/** Stage-level profiling listener for the production CLI
+  * ([[graft.steps.GraftCli]], its only user): collects per-Spark-stage wall /
   * executor-CPU / shuffle-write and dumps the costliest stages
   * (CPU-ranked) to stderr. Enabled by SPARK_GRAFT_PROFILE=1 via
   * [[StageProfiler.ifEnabled]].

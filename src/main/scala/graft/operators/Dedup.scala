@@ -388,13 +388,14 @@ object Dedup {
     * pass without a fixpoint: partially contracted labels are WRONG
     * answers, never returned silently.
     *
-    * Scale notes: the edge state re-persists per round with the
-    * previous round released, and every few rounds the lineage is
-    * truncated with a localCheckpoint so the plan does not deepen with
-    * the iteration count. Per round: 2 hash groupBys + 2 equi-joins +
-    * a set-equality probe (count + left-anti limit 1) on the persisted
-    * state. Hot vertices (a doc paired with millions) skew the
-    * neighbourhood groupBy; AQE skew-join splits those partitions.
+    * Scale notes: each round's edge state lives on its own handle,
+    * released once the next round has replaced it, and every few rounds
+    * the state is a local checkpoint so the plan does not deepen with
+    * the iteration count; the final state moves to the caller's handle.
+    * Per round: 2 hash groupBys + 2 equi-joins + a set-equality probe
+    * (count + left-anti limit 1) on the persisted state. Hot vertices
+    * (a doc paired with millions) skew the neighbourhood groupBy; AQE
+    * skew-join splits those partitions.
     * Once the live edge set drops under [[UnionFindThreshold]] the
     * loop hands off to a single-task path-compressed union-find finish
     * (an executor task, not a driver collect): distributed rounds pay
@@ -425,13 +426,15 @@ object Dedup {
       maxIter: Int = 30,
       unionFindThreshold: Long = UnionFindThreshold,
       cache: graft.core.CacheHandle): (DataFrame, Int) = {
+    // the live round's edge state; released when the next round
+    // replaces it, handed to `cache` once the loop ends
+    var state = graft.core.CacheHandle()
     // canonical orientation: every edge points large → small
-    var edges = pairs
+    var edges = state.persist(pairs
       .select(greatest(col(aCol), col(bCol)).as("u"),
         least(col(aCol), col(bCol)).as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct()
-      .persist()
+      .distinct())
     var cnt = edges.count()
     var iter = 0
     var converged = cnt == 0L
@@ -467,21 +470,24 @@ object Dedup {
         .distinct()
       // truncate lineage every 3 rounds: persist alone still grows the
       // logical plan linearly with iterations
-      val next = (if (iter % 3 == 2) small.localCheckpoint(false)
-                  else small).persist()
+      val nextState = graft.core.CacheHandle()
+      val next = if (iter % 3 == 2) nextState.persistTruncated(small)
+                 else nextState.persist(small)
       val nextCnt = next.count()
       // fixpoint ⟺ identical distinct edge sets: equal cardinality and
       // no edge in next missing from the previous round
       converged = nextCnt == cnt &&
         next.join(edges, Seq("u", "v"), "left_anti").limit(1).count() == 0L
-      edges.unpersist()
+      state.release()
+      state = nextState
       edges = next
       cnt = nextCnt
       iter += 1
     }
-    // the surviving edge state backs the (lazy) labels — register it
-    // so the caller's release() can drop it after the terminal action
-    cache.persist(edges)
+    // the surviving edge state backs the (lazy) labels — hand it to
+    // the caller's handle, whose release() drops it after the terminal
+    // action
+    cache.adopt(state)
     if (!converged && handoff && cnt > 0L) {
       // single-task finish: the live edge set fits one task's memory
       // budget, where path-compressed union-find closes the remaining

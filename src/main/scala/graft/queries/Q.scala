@@ -988,7 +988,7 @@ object Q {
     * sumstat variants via a bucketed band join — 3 bucket probes per
     * lead (bucket width 2·window guarantees any in-window variant sits
     * in the lead's bucket ±1), never a range cartesian. Mirrors
-    * ChainBench's locus_extraction stage (the hand-off feeding
+    * perfbench chain's locus-extraction glue (the hand-off feeding
     * susie_credible_sets; reference susie_finemapper.py:461-560 pulls
     * the same per-locus sumstat windows). Integer-only columns so the
     * hash oracle is engine-exact; every derived column is

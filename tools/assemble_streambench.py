@@ -13,7 +13,7 @@ Usage:
   python3 tools/assemble_streambench.py <recorded.json> <prev_artifact.json|-> <round> [out]
 
 <recorded.json>  the one-line JSON StreamBench prints
-                 ({"stream_bench":{...},"scale":..,"docs":..,"canary":{..}})
+                 ({"stream_bench":{...},"scale":..,"docs":..})
 <prev_artifact>  last round's STREAMBENCH_r{N-1}.json, or "-" for none
 <round>          this round number (e.g. 13)
 
@@ -62,9 +62,8 @@ def main():
     doc = {
         "what": (f"r{rnd} streaming throughput/state report: stateful "
                  "streaming surfaces on a MemoryStream fed the ScaleUp "
-                 "document corpus, recorded behind the MachineCanary "
-                 "gate. All numeric notes below are derived from the "
-                 "result blocks by tools/assemble_streambench.py."),
+                 "document corpus. All numeric notes below are derived "
+                 "from the result blocks by tools/assemble_streambench.py."),
         "command": "sbt \"runMain graft.StreamBench /root/testdata/sf0.1 10 25\"",
         "result": result,
         "continuity_vs_prev_round": continuity,
