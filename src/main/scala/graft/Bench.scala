@@ -8,8 +8,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * "detail":"BENCH_full.json","sf":...}
   *
   * `SPARK_GRAFT_SF_DIR` picks the input tables (default sf0.1) and
-  * `SPARK_GRAFT_QUERIES` (comma-separated names, `r_*` rehearsal names
-  * included) narrows the run. Everything runs in one JVM on the
+  * `SPARK_GRAFT_QUERIES` (comma-separated registered names; an unknown
+  * name fails the run) narrows it. Everything runs in one JVM on the
   * production session; each query is consumed in full through the
   * `noop` sink [[Reps]] times and its fastest rep recorded. A failed
   * query records -1 and stays out of the total. The layered,

@@ -1,16 +1,19 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Synthetic scale-up generator for the scale rehearsal: clones the
-  * `documents` and `embeddings` tables N× so the iterative /
-  * quadratic-risk operators (connected components, minhash /
-  * containment pairs, k-means, IVF-PQ build, DSIR) can be benched for
-  * near-linear scaling beyond the largest driver-provided testdata.
+/** Synthetic scale-up generator: clones the testdata tables N× so the
+  * iterative / quadratic-risk operators (connected components, minhash /
+  * containment pairs, k-means, IVF-PQ build, DSIR) and the genetics
+  * queries can be benched for near-linear scaling beyond the largest
+  * driver-provided testdata. perfbench's `scale` workload
+  * (`python3 perfbench/run.py --workload scale`, whose JVM side takes
+  * the factor as `--clone k`) clones the TPC-H tables with
+  * [[shiftClone]] and the documents with [[scaleDocuments]].
   *
   * The clone transforms are chosen so the near-duplicate/cluster
-  * STRUCTURE scales linearly — the property the rehearsal must hold
+  * STRUCTURE scales linearly — the property a scaling run must hold
   * fixed. A naive N× copy makes every clone a (near-)duplicate of its
   * original: cluster sizes grow N×, candidate pairs grow N², and the
   * benchmark would measure a different workload shape at every scale.
@@ -30,7 +33,7 @@ import org.apache.spark.sql.functions._
   *    cross-copy cosine decorrelates to noise.
   *
   * ids are offset by copy × (max id + 1); copy 0 is byte-identical to
-  * the source. Usage:
+  * the source. [[main]] writes the cloned `documents` and `embeddings`:
   * {{{ sbt "runMain graft.ScaleUp /root/testdata/sf0.1 target/sf1 10" }}}
   */
 object ScaleUp {
@@ -99,17 +102,16 @@ object ScaleUp {
   }
 
   /** Key-shifted N× clone of a table: listed key columns are offset by
-    * copy × stride so every copy occupies a disjoint key range. Used
-    * for the genetics-family rehearsal, whose queries derive their
-    * group keys (study-locus ids, tag-variant ids) from RAW
-    * lineitem/orders/part keys — so a shifted clone scales the number
-    * of loci / tags / variants exactly N× while per-group density
-    * (tags per locus, loci per tag bucket) stays O(1), the 100 TB
-    * shape. Moduli-derived metadata dimensions (studyId = key % 5,
-    * the 50-gene universe, the 500-QTL-locus space) stay fixed by
-    * construction — deliberately: genomes don't grow with data volume.
-    * Strides are passed in (not per-table maxima) so foreign keys stay
-    * consistent across tables (lineitem.l_partkey ↔ part.p_partkey). */
+    * copy × stride so every copy occupies a disjoint key range. The
+    * genetics queries derive group keys (study-locus ids, tag-variant
+    * ids) from lineitem/orders/part keys, so where a query uses a raw
+    * key a shifted clone scales the number of loci / tags / variants
+    * N× while per-group density (tags per locus) stays O(1);
+    * moduli-derived dimensions (studyId = key % 5, the 50-gene
+    * universe, the 500-QTL-locus space) stay fixed, so those queries
+    * grow per-group row counts instead. Strides are passed in (not
+    * per-table maxima) so foreign keys stay consistent across tables
+    * (lineitem.l_partkey ↔ part.p_partkey). */
   def shiftClone(df: DataFrame, factor: Int, shifts: Map[String, Long]): DataFrame =
     (0 until factor).map { i =>
       if (i == 0) df
@@ -118,43 +120,10 @@ object ScaleUp {
       }
     }.reduce(_ unionByName _)
 
-  /** Clone the three TPC-H tables the genetics queries read. */
-  def scaleTpch(spark: SparkSession, srcDir: String, destDir: String,
-                factor: Int, cpus: Int): Unit = {
-    val lineitem = spark.read.parquet(s"$srcDir/lineitem.parquet")
-    val orders = spark.read.parquet(s"$srcDir/orders.parquet")
-    val part = spark.read.parquet(s"$srcDir/part.parquet")
-    val strideO = orders.agg(max("o_orderkey")).head().getLong(0) + 1L
-    val strideP = part.agg(max("p_partkey")).head().getLong(0) + 1L
-    val strideC = orders.agg(max("o_custkey")).head().getLong(0) + 1L
-    shiftClone(lineitem, factor,
-      Map("l_orderkey" -> strideO, "l_partkey" -> strideP))
-      .repartition(cpus)
-      .write.mode("overwrite").parquet(s"$destDir/lineitem.parquet")
-    shiftClone(orders, factor,
-      Map("o_orderkey" -> strideO, "o_custkey" -> strideC))
-      .repartition(cpus)
-      .write.mode("overwrite").parquet(s"$destDir/orders.parquet")
-    shiftClone(part, factor, Map("p_partkey" -> strideP))
-      .repartition(cpus)
-      .write.mode("overwrite").parquet(s"$destDir/part.parquet")
-    println(s"SCALEUP done: $destDir at $factor x " +
-      s"lineitem=${spark.read.parquet(s"$destDir/lineitem.parquet").count()} " +
-      s"orders=${spark.read.parquet(s"$destDir/orders.parquet").count()} " +
-      s"part=${spark.read.parquet(s"$destDir/part.parquet").count()}")
-  }
-
   def main(args: Array[String]): Unit = {
-    val (srcDir, destDir, factorS) = (args(0), args(1), args(2))
-    val tpch = args.length > 3 && args(3) == "tpch"
-    val factor = factorS.toInt
+    val (srcDir, destDir, factor) = (args(0), args(1), args(2).toInt)
     val spark = GraftSession.getOrCreate()
     val cpus = spark.sparkContext.defaultParallelism
-    if (tpch) {
-      scaleTpch(spark, srcDir, destDir, factor, cpus)
-      spark.stop()
-      return
-    }
     scaleDocuments(spark.read.parquet(s"$srcDir/documents.parquet"), factor)
       .repartition(cpus)
       .write.mode("overwrite").parquet(s"$destDir/documents.parquet")

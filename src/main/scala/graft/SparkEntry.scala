@@ -160,30 +160,19 @@ object SparkEntry {
     "q_mm_resize" -> (Q.multimodalResize _),
     "q_mm_frames" -> (Q.multimodalFrames _))
 
-  /** Rehearsal-only scaled-workload variants — NOT part of the driver
-    * contract (no oracles). They run only when a harness filter names
-    * them ([[selected]]), so the 10x/100x scale rehearsal
-    * (BENCH_sf1.json) can time operators whose registered synthesis
-    * pins the group space with moduli. */
-  def rehearsalQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "r_gx_ld_clump" -> (Q.ldClumpScaled _),
-    "r_gx_coloc_classic" -> (Q.colocClassicScaled _),
-    "r_gx_ecaviar_classic" -> (Q.ecaviarClassicScaled _),
-    "r_gx_rsid_gnomad_map" -> (Q.rsidGnomadMapScaled _),
-    "r_gx_finemap" -> (Q.finemapScaled _),
-    "r_gx_ancestry_agg" -> (Q.ancestryAggScaled _),
-    "r_gx_study_deconvolution" -> (Q.studyDeconvolutionScaled _),
-    "r_ml_l2g_gold_standard" -> (Q.l2gGoldStandardScaled _))
-
   def oracleSql: Map[String, String] = Oracles.all
 
   /** The names a harness runs under the comma-separated filter `only`:
     * every registered query, sorted, when it is unset, else the ones it
-    * names. Rehearsal (`r_*`) workloads run only when named. */
+    * names. A name that is not registered fails the whole selection, so
+    * a stale or mistyped filter never runs an empty suite. */
   def selected(only: Option[String]): Seq[String] = {
+    val registered = queries.keySet
     val named = only.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    queries.keys.toSeq.sorted.filter(n => named.forall(_.contains(n))) ++
-      named.toSeq.flatten.filter(rehearsalQueries.contains).sorted
+    val unknown = named.toSeq.flatten.filterNot(registered).sorted
+    require(unknown.isEmpty,
+      s"no registered query named ${unknown.mkString(", ")}")
+    registered.toSeq.sorted.filter(n => named.forall(_.contains(n)))
   }
 
   /** The per-query loop of the harness mains (`Bench`, `Verify`): hands
@@ -194,8 +183,7 @@ object SparkEntry {
       run: (String, () => DataFrame) => T)(
       failed: (String, Throwable) => T): Seq[(String, T)] =
     names.map { name =>
-      val build = () =>
-        queries.getOrElse(name, rehearsalQueries(name))(spark, sfDir)
+      val build = () => queries(name)(spark, sfDir)
       val out =
         try run(name, build)
         catch { case e: Throwable =>

@@ -66,42 +66,10 @@ object Verify {
     // golden digest report — the engine-side correctness record for
     // the no-oracle queries (the driver's check on those is rows-only).
     // Also echoed to stdout so the value check is visible in the
-    // driver's log even when only artifacts are read; a per-round
-    // snapshot of this file is committed as GOLDENS_r{N}.json.
+    // driver's log even when only artifacts are read. Nothing is
+    // written outside `outDir`.
     Files.writeString(Paths.get(s"$outDir/goldens.json"),
       goldenRows.mkString("[", ",", "]"))
-    // Per-round continuity: mirror the golden report into the repo root
-    // as GOLDENS_r<N>.json (N = 1 + highest CORRECTNESS_r* round on
-    // disk — the driver's round-R verify runs with round R-1's artifact
-    // committed), so every round leaves a committed expected/actual/
-    // match record for the golden-locked queries without anyone
-    // remembering to copy it. Filtered runs skip the mirror (a partial
-    // report must not shadow a full one).
-    if (only.isEmpty && goldenRows.nonEmpty) try {
-      val repo = new java.io.File(
-        sys.env.getOrElse("SPARK_GRAFT_REPO", "/root/repo"))
-      // SPARK_GRAFT_ROUND wins over the directory scan — a full verify
-      // re-run AFTER the current round's CORRECTNESS_rN.json landed
-      // would otherwise infer N+1 and leave the real rN report stale.
-      // toIntOption: a malformed override must fall through to the
-      // scan, not throw and silently skip the whole mirror
-      val round = sys.env.get("SPARK_GRAFT_ROUND")
-        .flatMap(_.trim.toIntOption).orElse {
-        val rx = "CORRECTNESS_r(\\d+)\\.json".r
-        val rounds = Option(repo.list()).toSeq.flatten
-          .flatMap(n => rx.findFirstMatchIn(n).map(_.group(1).toInt))
-        if (rounds.nonEmpty) Some(rounds.max + 1) else None
-      }
-      round.foreach { n =>
-        // unpadded to match the existing artifact names (GOLDENS_r12)
-        val tgt = new java.io.File(repo, s"GOLDENS_r$n.json")
-        Files.writeString(tgt.toPath,
-          s"""{"sf": ${jq(sfTag)}, "goldens": ${goldenRows.mkString("[", ",", "]")}}""")
-        println(s"[verify] golden report mirrored to ${tgt.getPath}")
-      }
-    } catch { case e: Throwable =>
-      System.err.println(s"[verify] golden mirror skipped: ${e.getMessage}")
-    }
     goldenRows.foreach(r => println(s"[verify] golden $r"))
     spark.stop()
   }

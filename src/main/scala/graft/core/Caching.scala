@@ -25,8 +25,8 @@ import org.apache.spark.storage.StorageLevel
   * REQUIRED argument — there is no default handle, so nothing an
   * operator persists is left without an owner. The caller either
   * passes a `CacheHandle()` and releases it after the terminal action
-  * (a production step, a test), registers it with [[CacheHandle.queryScoped]]
-  * so a shared-session harness frees it through
+  * (a production step, a test), passes [[CacheHandle.queryScope]] so a
+  * shared-session harness frees it through
   * [[CacheHandle.releaseQueryScoped]] (a lazily built registered
   * query), or passes [[CacheHandle.disabled]] to opt out of caching
   * entirely (pure recomputation — the right call when the persisted
@@ -38,9 +38,14 @@ class CacheHandle(level: StorageLevel = StorageLevel.MEMORY_AND_DISK) {
   private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
   private val checkpointed = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
-  /** Persist `df` at the handle's storage level and remember it. */
+  /** Persist `df` at the handle's storage level and remember it. A
+    * frame whose plan computes the same result as one the handle
+    * already holds is not registered again: Spark already serves it
+    * from that cache entry. */
   def persist(df: DataFrame): DataFrame = synchronized {
-    frames += df.persist(level)
+    val plan = df.queryExecution.analyzed
+    if (!frames.exists(_.queryExecution.analyzed.sameResult(plan)))
+      frames += df.persist(level)
     df
   }
 
@@ -172,27 +177,17 @@ object CacheHandle {
       fs0.indices.sortBy(i => -contained(i)).map(fs0).toList
     }
 
-  /** Handles owned by lazily-built registered queries (object-level
-    * singletons with no terminal-action hook of their own). A
-    * shared-session harness calls [[releaseQueryScoped]] after each
-    * query's terminal action, so one query's persisted intermediates
-    * stop occupying storage memory for the rest of a multi-query
-    * suite — previously they were released only at the owner's NEXT
-    * invocation. Releasing an already-empty handle is a no-op, so
-    * harness calls are safe at any cadence. */
-  private val queryScopedHandles =
-    scala.collection.mutable.ArrayBuffer.empty[CacheHandle]
+  /** The handle of the lazily built registered queries, which have no
+    * terminal-action hook of their own. A shared-session harness calls
+    * [[releaseQueryScoped]] after each query's terminal action, so one
+    * query's persisted intermediates stop occupying storage memory for
+    * the rest of a multi-query suite. */
+  private[graft] val queryScope: CacheHandle = new CacheHandle()
 
-  /** Register `h` for harness-driven end-of-query release (idempotent). */
-  def queryScoped(h: CacheHandle): CacheHandle =
-    queryScopedHandles.synchronized {
-      if (!queryScopedHandles.exists(_ eq h)) queryScopedHandles += h
-      h
-    }
-
-  /** Release every query-scoped handle (harness post-action hook). */
-  def releaseQueryScoped(): Unit =
-    queryScopedHandles.synchronized { queryScopedHandles.foreach(_.release()) }
+  /** Release the registered queries' handle (harness post-action hook).
+    * Releasing an empty handle is a no-op, so harnesses may call this
+    * at any cadence. */
+  def releaseQueryScoped(): Unit = queryScope.release()
 
   /** No-op handle: `persist` passes through, nothing is cached. */
   val disabled: CacheHandle = new CacheHandle() {

@@ -939,14 +939,7 @@ object Q {
     // them straight to the fused kernels — no collect_list locus
     // rebuild only to re-explode it (saves a shuffle + per-locus
     // array builds).
-    // Two registered queries build this frame; a lazy registered query
-    // has no terminal-action hook to unpersist at, so the persist goes
-    // through an object-level handle that RELEASES the previous
-    // invocation's cache first — a shared-session driver holds at most
-    // one live copy (the one the query being built actually reads)
-    // instead of accumulating one per invocation for the session.
-    e2eTagsCache.release()
-    val tags = e2eTagsCache.persist(
+    val tags = queryCache.persist(
       cred.withColumnRenamed("variantId", "tagVariantId"))
     // materialise the cache BEFORE the fused kernel's first action: it
     // reads tags through multiple subplans (self-join sides + locus
@@ -957,31 +950,15 @@ object Q {
     tags
   }
 
-  /** Cache handle scoping [[e2eFusedTags]]'s persisted frame to the
-    * most recent invocation (see the release-then-persist note there).
-    * Also registered query-scoped: harnesses release it right after
-    * each query's terminal action, so the tags frame stops occupying
-    * storage memory for the remainder of a shared-session suite. */
-  private val e2eTagsCache =
-    graft.core.CacheHandle.queryScoped(graft.core.CacheHandle())
-
-  /** Cache handle scoping [[l2gFullFeatures]]'s shared source frames
-    * to the most recent invocation (release-then-persist, exactly the
-    * [[e2eTagsCache]] discipline). Object-level + query-scoped is
-    * MANDATORY here, not just tidy: the r17 plan-truncating persists
-    * are backed by checkpointed RDDs that `cacheManager.clearCache()`
-    * cannot see — only this handle's release() drops them. */
-  private val l2gSrcCache =
-    graft.core.CacheHandle.queryScoped(graft.core.CacheHandle())
-
-  /** Cache handle of every other registered query that persists: the
+  /** Cache handle of every registered query that persists: the
     * operators' intermediates (dedup signatures, BM25 postings,
     * clumping tag frames, gold-standard expansions) and the builders'
-    * own shared inputs. Query-scoped, so a shared-session harness
+    * own shared inputs, including plan-truncating checkpoints that
+    * `cacheManager.clearCache()` cannot see. A registered query has no
+    * terminal-action hook of its own, so a shared-session harness
     * frees them through `CacheHandle.releaseQueryScoped()` after each
     * query's terminal action. */
-  private val queryCache =
-    graft.core.CacheHandle.queryScoped(graft.core.CacheHandle())
+  private val queryCache = graft.core.CacheHandle.queryScope
 
   /** The r12 lifecycle chain's fine-mapping locus extraction as an
     * oracle-checked query: significance-gated leads pull their ±window
@@ -1781,8 +1758,7 @@ object Q {
     * input is persisted, so the gate's count is free): at verify/bench
     * SFs the join plan's 12+ sequential AQE stage barriers cost ~3× the
     * actual work. The production JOIN path keeps its own oracle via
-    * [[ldClumpJoin]] (identical synthesis + SQL, default path) and its
-    * scale number via the r_gx_ld_clump rehearsal. */
+    * [[ldClumpJoin]] (identical synthesis + SQL, default path). */
   def ldClump(s: SparkSession, dir: String): DataFrame =
     ldClumpShared(s, dir, windowPathMaxRows = 100000L)
 
@@ -1909,13 +1885,8 @@ object Q {
     // a shared frame is then a LogicalRDD leaf instead of an embedded
     // InMemoryRelation subtree, collapsing the 1,856-line / 51-cache-
     // subtree formatted plan whose planning+codegen dominated this
-    // query's recorded cost. Checkpointed RDDs are NOT dropped by
-    // cacheManager.clearCache(), so the handle is object-level and
-    // query-scoped (release-then-persist, same discipline as
-    // e2eTagsCache).
-    l2gSrcCache.release()
-    val srcCache = l2gSrcCache
-    val flatCred = srcCache.persistTruncated(
+    // query's recorded cost.
+    val flatCred = queryCache.persistTruncated(
       spread(s, t(s, dir, "lineitem"), col("l_orderkey"))
       .groupBy(col("l_orderkey"))
       .agg(min(col("l_partkey")).as("_leadPart"),
@@ -1958,7 +1929,7 @@ object Q {
         (col("_sk") + 1000).as("studyId"))
     // tiny (500 rows) but read by the studyLoci union AND the study
     // index — persist so the orders aggregation runs once
-    val qtlLociP = srcCache.persistTruncated(qtlLoci)
+    val qtlLociP = queryCache.persistTruncated(qtlLoci)
     // both studyLoci and studyIndex now derive from the two caches
     // above — no separate persists or counts; each consumer pays a
     // cache scan plus a 500-row union
@@ -1976,10 +1947,10 @@ object Q {
         .withColumn("studyType", lit("gwas"))
         .withColumn("geneId", lit(null).cast("long")))
     // the source frames materialise together with the factory's own
-    // shared caches in ONE concurrent batch (srcCache is passed through
-    // as the factory cache below): parents were registered first, so
-    // they get the pool head start, and the second serial wave of
-    // materialisation jobs the old two-handle shape paid disappears
+    // shared caches in ONE concurrent batch (queryCache is passed
+    // through as the factory cache below): parents were registered
+    // first, so they get the pool head start, and there is no second
+    // serial wave of materialisation jobs
     val coloc = t(s, dir, "orders")
       .select(col("o_orderkey").as("leftStudyLocusId"),
         (-(col("o_custkey") % 500) - 1).as("rightStudyLocusId"),
@@ -2019,7 +1990,7 @@ object Q {
       studyIndex = Some(studyIndex),
       studyLoci = Some(studyLoci),
       tags = Some(tags),
-      flatCred = Some(flatCred)), cache = srcCache)
+      flatCred = Some(flatCred)), cache = queryCache)
     // quantised projection for the oracle: every double feature q6,
     // window gene counts as raw longs; surrogate keys rendered to the
     // original string ids HERE, once
@@ -2397,262 +2368,4 @@ object Q {
       .withColumn("qualityControls",
         concat_ws(",", array_sort(coalesce(col("qualityControls"),
           array().cast("array<string>")))))
-
-  // --------------------------------------- scale-rehearsal variants
-  // Rehearsal-only (registered in SparkEntry.rehearsalQueries, never
-  // run by Verify): scaled-workload versions of registered queries
-  // whose synthesis moduli PIN the group space — on key-shifted clones
-  // those queries only grow per-group row counts, so they cannot
-  // answer "does the operator scale with group COUNT". These variants
-  // derive their keys from RAW (shifted) columns instead.
-
-  /** LD clumping with raw part keys: leads scale with the clones while
-    * the 15 (study, chromosome) partitions stay fixed — every
-    * partition becomes a mega-partition at 100x, the worst case for
-    * the clump join (and the shape that killed the old running
-    * collect_set window). */
-  def ldClumpScaled(s: SparkSession, dir: String): DataFrame = {
-    val slim = t(s, dir, "lineitem")
-      .groupBy(col("l_partkey").as("vKey"),
-        concat(lit("s"), col("l_orderkey") % 5).as("studyId"),
-        (col("l_suppkey") % 3).cast("string").as("chromosome"))
-      .agg(max(col("l_discount") * 10).as("maxR2"))
-      .select(
-        concat(lit("v"), col("vKey")).as("variantId"),
-        col("studyId"), col("chromosome"),
-        // double (not the registered float) so mantissa stays
-        // injective in vKey at any clone factor
-        (col("vKey") / 2000.0 + 1.0).as("pValueMantissa"),
-        (-(col("vKey") % 12) - 4).cast("int").as("pValueExponent"),
-        array(struct(concat(lit("v"), col("vKey") + 1).as("tagVariantId"),
-          col("maxR2").as("r2Overall"))).as("ldSet"))
-    // NO persist here, deliberately: at 100x the columnar cache of the
-    // 6M-row synthesized frame measured 35.0 s vs 6.2 s for plain
-    // double recompute (the same persist-worse-than-recompute trap as
-    // the r10 window-clump cache) — at mega-partition density the
-    // cache build+decode dwarfs the synthesis groupBy it saves. The
-    // registered sf-scale ldClump DOES persist: there the cache feeds
-    // the windowPathMaxRows count gate plus a single window pass.
-    val assoc = slim
-      .withColumn("locus", array(struct(col("variantId"),
-        lit(1.0).as("posteriorProbability"))))
-      .withColumn("qualityControls", lit(null).cast("array<string>"))
-    LDClumping.clump(assoc, cache = queryCache)
-      .select(col("studyId"), col("chromosome"), col("variantId"),
-        array_contains(coalesce(col("qualityControls"), array()),
-          LDClumping.LdClumpedFlag).as("ldClumped"))
-  }
-
-  /** Ancestry aggregation with RAW customer keys: the study COUNT
-    * scales with the clones (~1.5k/15k/150k studies at 1×/10×/100×)
-    * while per-study discovery-sample lists stay O(10) rows — the real
-    * scale axis for [[StudyIndexOps.aggregateAndMapAncestries]]
-    * (registered q_gx_ancestry_agg pins 100 studies and only grows
-    * per-study row counts under clones). */
-  def ancestryAggScaled(s: SparkSession, dir: String): DataFrame = {
-    val ancestries = array(lit("European"), lit("Finnish"), lit("East Asian"),
-      lit("South Asian"), lit("African unspecified"), lit("NR"))
-    t(s, dir, "orders")
-      .groupBy(col("o_custkey").as("studyKey"))
-      .agg(collect_list(struct(
-        element_at(ancestries, (col("o_orderkey") % 6 + 1).cast("int"))
-          .as("ancestry"),
-        (col("o_totalprice") / 100).as("sampleSize"))).as("discoverySamples"))
-      .select(col("studyKey"),
-        explode(StudyIndexOps.aggregateAndMapAncestries(col("discoverySamples")))
-          .as("ld"))
-      .select(col("studyKey"), col("ld.ldPopulation"),
-        q(col("ld.relativeSampleSize"), 6).as("rel_q6"))
-  }
-
-  /** Study deconvolution with RAW customer keys — study count scales
-    * linearly, per-study (project, flag) deconvolution groups stay
-    * O(1) (registered q_gx_study_deconvolution pins 200 studies). */
-  def studyDeconvolutionScaled(s: SparkSession, dir: String): DataFrame =
-    StudyIndexOps.deconvolveStudies(
-      t(s, dir, "orders").select(
-        concat(lit("s"), col("o_custkey")).as("studyId"),
-        col("o_orderpriority").as("projectId"),
-        when(col("o_orderstatus") === "F", array(lit("FLAG_F")))
-          .otherwise(lit(null).cast("array<string>")).as("qualityControls"),
-        when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"),
-          length(col("o_orderpriority")) * 1000)
-          .otherwise(lit(null)).cast("int").as("nSamples")))
-
-  /** L2G gold standard with RAW order keys: study-locus count and the
-    * distance/overlap index scale with the clones while the gene
-    * universe (60) and per-variant candidate density (3 genes) stay
-    * fixed — genomes don't grow with data (registered
-    * q_ml_l2g_gold_standard pins studies % 300 and positions % 1e5). */
-  def l2gGoldStandardScaled(s: SparkSession, dir: String): DataFrame = {
-    import graft.ml.L2GGoldStandard
-    val o = t(s, dir, "orders")
-    val variantId = concat_ws("_",
-      (col("o_custkey") % 5).cast("string"),
-      (col("o_orderkey") * 7).cast("string"), lit("A"), lit("T"))
-    val studyId = concat(lit("GCST"), col("o_orderkey"))
-    val curation = o.select(
-      struct(studyId.as("otg_id")).as("association_info"),
-      struct(concat(lit("g"), col("o_custkey") % 60).as("gene_id"),
-        element_at(array(lit("High"), lit("Medium"), lit("Low")),
-          (col("o_orderkey") % 3 + 1).cast("int")).as("highest_confidence"))
-        .as("gold_standard_info"),
-      struct(
-        struct((col("o_custkey") % 5).cast("string").as("chromosome"),
-          (col("o_orderkey") * 7).as("position")).as("locus_GRCh38"),
-        struct(lit("A").as("reference"), lit("T").as("alternative"))
-          .as("alleles")).as("sentinel_variant"),
-      struct(element_at(array(lit("ProGeM"), lit("OTG")),
-        (col("o_orderkey") % 2 + 1).cast("int")).as("set_label"))
-        .as("metadata"))
-    val distances = o.select(variantId.as("variantId"),
-      explode(array(
-        struct(concat(lit("g"), col("o_custkey") % 60).as("targetId"),
-          (col("o_orderkey") * 13 % 800000).as("distanceFromTss")),
-        struct(concat(lit("g"), (col("o_custkey") + 7) % 60).as("targetId"),
-          (col("o_orderkey") * 17 % 800000).as("distanceFromTss")),
-        struct(concat(lit("g"), (col("o_custkey") + 21) % 60).as("targetId"),
-          (col("o_orderkey") * 23 % 800000).as("distanceFromTss")))).as("d"))
-      .select(col("variantId"), col("d.targetId"), col("d.distanceFromTss"))
-    val overlaps = o.filter(col("o_orderkey") % 5 === 0).select(
-      md5(concat_ws("_", studyId, variantId)).as("leftStudyLocusId"),
-      concat(lit("x"), col("o_orderkey")).as("rightStudyLocusId"),
-      variantId.as("tagVariantId"))
-    val interactions = t(s, dir, "part").select(
-      concat(lit("g"), col("p_partkey") % 60).as("targetA"),
-      concat(lit("g"), (col("p_partkey") * 7 + 1) % 60).as("targetB"),
-      ((col("p_partkey") % 100) / 100.0).as("scoring"))
-    L2GGoldStandard.fromOtgCuration(curation, distances, overlaps,
-        interactions, cache = queryCache)
-      .select(col("studyLocusId"), col("studyId"), col("variantId"),
-        col("geneId"), col("goldStandardSet"),
-        array_join(array_sort(col("sources")), ",").as("sources_str"))
-  }
-
-  /** Fine-mapping e2e whose LOCUS COUNT scales with the clones: the
-    * registered q_gx_finemap_e2e pins a fixed 16-locus portfolio (a
-    * numerics anchor), so it cannot answer "do loci fine-map
-    * executor-parallel at 10×/100× the loci". Here each 1000-wide raw
-    * orderkey block is one locus (~33 qualifying variants per block —
-    * per-locus cost constant by construction), so key-shifted clones
-    * grow the locus count linearly: ~15/150/1500 at 1×/10×/100×. The
-    * planted-spike recipe (two causal sites, NULL-z imputation
-    * candidates, contradictory CARMA outliers) and the
-    * CARMA→RAISS→SuSiE-inf chain are identical to the registered
-    * query. */
-  def finemapScaled(s: SparkSession, dir: String): DataFrame = {
-    val vars = spread(s, t(s, dir, "lineitem")
-      .filter(col("l_orderkey") % 17 === 0 && col("l_linenumber") === 1),
-      col("l_orderkey"))
-      .select(
-        concat(lit("L"), floor(col("l_orderkey") / 1000)).as("locusId"),
-        concat(lit("v"), col("l_orderkey")).as("variantId"),
-        ((col("l_orderkey") * 37) % 1000000).cast("double").as("pos"),
-        col("l_partkey"))
-    val wl = Window.partitionBy("locusId")
-    val withZ = vars
-      .withColumn("c1", min("pos").over(wl))
-      .withColumn("c2", max("pos").over(wl))
-      .withColumn("z",
-        when(col("l_partkey") % 7 === 0, lit(null).cast("double"))
-          .otherwise(
-            lit(6.0) * exp(-abs(col("pos") - col("c1")) / 200000.0) +
-              lit(4.0) * exp(-abs(col("pos") - col("c2")) / 200000.0) +
-              lit(0.3) * sin(col("pos") / 50000.0) +
-              when(col("l_partkey") % 23 === 0, lit(-8.0))
-                .otherwise(lit(0.0))))
-      .select("locusId", "variantId", "pos", "z")
-    val w = Window.partitionBy("locusId").orderBy("variantId")
-    val indexed = withZ.withColumn("idx",
-      (row_number().over(w) - 1).cast("int"))
-    val ld = indexed.select(col("locusId"), col("idx").as("i"),
-        col("pos").as("pi"))
-      .join(indexed.select(col("locusId"), col("idx").as("j"),
-        col("pos").as("pj")), Seq("locusId"))
-      .filter(col("i") < col("j"))
-      .select(col("locusId"), col("i"), col("j"),
-        exp(-abs(col("pi") - col("pj")) / 200000.0).as("r"))
-    graft.finemap.DistributedFineMapper
-      .finemapAll(s, withZ.select("locusId", "variantId", "z"), ld,
-        n = 100000, L = 5, coverage = 0.95,
-        runCarma = true, imputeMissing = true,
-        imputedR2Threshold = 0.5, ldScoreThreshold = 0.5)
-      .toDF()
-      .select(col("locusId").as("locus_id"), col("variantId").as("variant_id"),
-        q(col("pip"), 6).as("pip_q6"), q(col("logBF"), 6).as("log_bf_q6"),
-        col("inCredibleSet").cast("int").as("in_credible_set"))
-  }
-
-  /** Overlaps whose locus-pair count scales with RAW order keys (the
-    * registered synthesis pins 20×10 pairs); each GWAS locus pairs
-    * with one QTL locus and carries the order's 1–7 line tags —
-    * N pairs × O(1) tags, the 100 TB COLOC shape. */
-  private def synthOverlapsScaled(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem").select(
-      concat(lit("L"), col("l_orderkey")).as("leftStudyLocusId"),
-      concat(lit("R"), col("l_orderkey")).as("rightStudyLocusId"),
-      lit("eqtl").as("rightStudyType"),
-      (col("l_suppkey") % 3).cast("string").as("chromosome"),
-      concat(lit("v"), col("l_linenumber")).as("tagVariantId"),
-      struct(
-        (col("l_extendedprice") / 5000).as("left_logBF"),
-        (col("l_quantity") / 10).as("right_logBF"),
-        (col("l_discount") * 9).as("left_posteriorProbability"),
-        (col("l_tax") * 10).as("right_posteriorProbability"),
-        (col("l_extendedprice") / 10000 - 2).as("left_beta"),
-        (col("l_tax") * 10 - 0.4).as("right_beta")).as("statistics"))
-
-  /** Classic (non-fused) COLOC over N-scaling locus pairs. */
-  def colocClassicScaled(s: SparkSession, dir: String): DataFrame =
-    Coloc.colocalise(synthOverlapsScaled(s, dir))
-      .select(col("leftStudyLocusId"), col("rightStudyLocusId"),
-        col("chromosome"), col("numberColocalisingVariants"),
-        q(col("h4"), 4).as("h4_q4"))
-
-  /** Classic eCAVIAR over N-scaling locus pairs. */
-  def ecaviarClassicScaled(s: SparkSession, dir: String): DataFrame =
-    Coloc.eCaviar(synthOverlapsScaled(s, dir))
-      .select(col("leftStudyLocusId"), col("rightStudyLocusId"),
-        col("chromosome"), col("numberColocalisingVariants"),
-        q(col("clpp"), 6).as("clpp_q6"))
-
-  /** rsID↔GnomAD mapping with position/rs spaces proportional to the
-    * key space, keeping per-position candidate density CONSTANT across
-    * clone factors (genomes grow with the variant universe, not with
-    * row count — a fixed 1e5 position space at 100x would measure a
-    * quadratically-degenerate join, not the operator). */
-  def rsidGnomadMapScaled(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.GwasCatalogAssociations
-    val maxKey = t(s, dir, "orders").agg(max("o_orderkey")).head().getLong(0)
-    val f = math.max(1L, (maxKey + 60000L) / 60001L) // clone factor
-    val posSpace = 100000L * f
-    val rsSpace = 5000L * f
-    val alleles = array(lit("A"), lit("C"), lit("G"), lit("T"))
-    val assoc = spread(s, t(s, dir, "orders"), col("o_orderkey")).select(
-      concat(lit("a"), col("o_orderkey")).as("rowId"),
-      (col("o_custkey") % 3).cast("string").as("CHR_ID"),
-      ((col("o_orderkey") * 61) % posSpace).cast("string").as("CHR_POS"),
-      concat(lit("rs"), col("o_orderkey") % rsSpace).as("SNPS"),
-      (col("o_orderkey") % rsSpace).cast("string").as("SNP_ID_CURRENT"),
-      concat(lit("rs"), col("o_orderkey") % rsSpace, lit("-"),
-        element_at(alleles, (col("o_orderkey") % 4 + 1).cast("int")))
-        .as("STRONGEST SNP-RISK ALLELE"))
-    val vi = spread(s, t(s, dir, "lineitem"),
-        col("l_orderkey"), col("l_linenumber")).select(
-      concat(lit("v"), col("l_orderkey"), lit("_"), col("l_linenumber"))
-        .as("variantId"),
-      (col("l_suppkey") % 3).cast("string").as("chromosome"),
-      ((col("l_orderkey") * 61) % posSpace).cast("int").as("position"),
-      when(col("l_partkey") % 7 === 0, lit("AT"))
-        .otherwise(element_at(alleles, (col("l_partkey") % 4 + 1).cast("int")))
-        .as("referenceAllele"),
-      element_at(alleles, (col("l_partkey") % 3 + 1).cast("int"))
-        .as("alternateAllele"),
-      array(concat(lit("rs"), col("l_partkey") % rsSpace)).as("rsIds"),
-      array(struct(((col("l_orderkey") * 8 + col("l_linenumber")) / 1e9)
-        .as("alleleFrequency"))).as("alleleFrequencies"))
-    GwasCatalogAssociations.mapVariantsToGnomadVariants(assoc, vi)
-      .select(col("rowId"), col("variantId"),
-        col("position").cast("long").as("position"))
-  }
 }

@@ -24,4 +24,12 @@ class BenchSpec extends SparkSpec {
     val left = sc.getPersistentRDDs.keySet -- before
     assert(left.isEmpty, s"RDDs still persisted after the loop: $left")
   }
+
+  test("a filter that names an unregistered query fails the selection") {
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.selected(Some("q_gx_coloc,q_no_such_query")))
+    assert(e.getMessage.contains("q_no_such_query"), e.getMessage)
+    assert(!e.getMessage.contains("q_gx_coloc"), e.getMessage)
+    assert(SparkEntry.selected(Some(" q_gx_coloc ")) == Seq("q_gx_coloc"))
+  }
 }

@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Invariants of the scale-rehearsal clone generators: every copy must
+/** Invariants of the scale-up clone generators: every copy must
   * preserve intra-copy geometry/structure exactly and share nothing
-  * with other copies, or the 10×/100× rehearsal measures a different
+  * with other copies, or a 10×/100× scaling run measures a different
   * workload shape at every scale (the r9 rotation-period bug). */
 class ScaleUpSpec extends SparkSpec {
   import spark.implicits._

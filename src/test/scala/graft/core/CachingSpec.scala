@@ -1,8 +1,14 @@
 package graft.core
 
-import graft.SparkSpec
-import org.apache.spark.sql.execution.LogicalRDD
+import graft.{Bench, SparkEntry, SparkSpec}
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, Logger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
+import org.apache.spark.sql.execution.{CacheManager, LogicalRDD}
 import org.apache.spark.storage.StorageLevel
+
+import scala.jdk.CollectionConverters._
 
 /** The materialize() topological guard: concurrent counts give earlier
   * submissions a head start, so a parent registered AFTER its dependent
@@ -65,5 +71,45 @@ class CachingSpec extends SparkSpec {
       assert(levels.forall(l => !l.deserialized && l.useMemory), levels.mkString(","))
       assert(cp.count() == 6)
     } finally h.release(blocking = true)
+  }
+
+  /** The messages `CacheManager` logs while `body` runs. */
+  private def cacheManagerLog(body: => Unit): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("cache-manager-log", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger(classOf[CacheManager]).asInstanceOf[Logger]
+    logger.addAppender(appender)
+    try body
+    finally { logger.removeAppender(appender); appender.stop() }
+    seen.asScala.toSeq
+  }
+
+  test("persisting the same plan twice on one handle caches it once") {
+    import spark.implicits._
+    val log = cacheManagerLog {
+      val h = CacheHandle()
+      // two frames built separately over the same plan
+      val a = (1 to 10).toDF("v").filter($"v" > 2)
+      val b = (1 to 10).toDF("v").filter($"v" > 2)
+      try {
+        h.persist(a)
+        h.persist(b)
+        assert(b.storageLevel != StorageLevel.NONE, "b is not served from the cache")
+      } finally h.release(blocking = true)
+      assert(a.storageLevel == StorageLevel.NONE && b.storageLevel == StorageLevel.NONE)
+      // a registered query that persists the same postings filter twice
+      val rrf = SparkEntry.queries("q_search_rrf")
+      try Bench.consume(rrf(spark, "/root/testdata/sf0.001"))
+      finally {
+        CacheHandle.releaseQueryScoped()
+        spark.sharedState.cacheManager.clearCache()
+      }
+    }
+    assert(!log.exists(_.contains("already cached")), log.mkString("\n"))
   }
 }

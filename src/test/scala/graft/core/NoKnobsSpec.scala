@@ -29,8 +29,6 @@ class NoKnobsSpec extends AnyFunSuite {
     "Bench.scala" -> "SPARK_GRAFT_SF_DIR",
     "Bench.scala" -> "SPARK_GRAFT_QUERIES",
     "Verify.scala" -> "SPARK_GRAFT_QUERIES",
-    "Verify.scala" -> "SPARK_GRAFT_ROUND",
-    "Verify.scala" -> "SPARK_GRAFT_REPO",
     "StreamBench.scala" -> "SPARK_GRAFT_STREAM_ONLY",
     "core/StageProfiler.scala" -> "SPARK_GRAFT_PROFILE")
 
