@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.SparkConf
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** The one SparkSession factory: the CLI, the bench and probe mains, the
   * oracle dump and the test harness all build their session here.
@@ -108,19 +108,4 @@ object GraftSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
-}
-
-/** Loaders for the driver-generated TPC-H-ish test tables (TESTDATA.md).
-  *
-  * One `spark.read.parquet` per table — Catalyst pushes filters and
-  * prunes columns into these scans, so callers should NOT cache or
-  * materialise here.
-  */
-object Tables {
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
 }

@@ -124,15 +124,15 @@ object ScaleUp {
     val (srcDir, destDir, factor) = (args(0), args(1), args(2).toInt)
     val spark = GraftSession.getOrCreate()
     val cpus = spark.sparkContext.defaultParallelism
-    scaleDocuments(spark.read.parquet(s"$srcDir/documents.parquet"), factor)
+    scaleDocuments(Tables.load(spark, srcDir, "documents"), factor)
       .repartition(cpus)
       .write.mode("overwrite").parquet(s"$destDir/documents.parquet")
-    scaleEmbeddings(spark.read.parquet(s"$srcDir/embeddings.parquet"), factor)
+    scaleEmbeddings(Tables.load(spark, srcDir, "embeddings"), factor)
       .repartition(cpus)
       .write.mode("overwrite").parquet(s"$destDir/embeddings.parquet")
     println(s"SCALEUP done: $destDir at $factor x " +
-      s"docs=${spark.read.parquet(s"$destDir/documents.parquet").count()} " +
-      s"vecs=${spark.read.parquet(s"$destDir/embeddings.parquet").count()}")
+      s"docs=${Tables.load(spark, destDir, "documents").count()} " +
+      s"vecs=${Tables.load(spark, destDir, "embeddings").count()}")
     spark.stop()
   }
 }

@@ -75,7 +75,7 @@ object StreamBench {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
-    val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs0 = Tables.load(spark, sfDir, "documents")
       .select("doc_id", "text")
     // copy-isomorphic 10x clone: real dedup structure scales exactly
     // Nx (see ScaleUp.scaleDocuments), so the digest state sees

@@ -36,7 +36,7 @@ object Verify {
         exp <- bySf.get(sfTag)
       } {
         val got = queries.Goldens.canonicalDigest(
-          spark.read.parquet(s"$outDir/$name"))
+          Tables.read(spark, s"$outDir/$name"))
         val ok = got == exp
         goldenRows += s"""{"query": ${jq(name)}, "expected": ${jq(exp)},
           | "actual": ${jq(got)}, "match": $ok,

@@ -28,7 +28,7 @@ object Compaction {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bytes = fs.getContentSummary(p).getLength
     val n = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    val df = spark.read.parquet(inPath)
+    val df = graft.Tables.read(spark, inPath)
     val arranged =
       if (sortCols.nonEmpty)
         df.repartitionByRange(n, sortCols.map(col): _*)

@@ -175,18 +175,18 @@ object L2GGoldStandard {
     * inside [[removeFalseNegatives]] (left side + interactor-status
     * lookup) — without the persists the curation→negatives expansion
     * pipeline re-evaluates up to six times (measured 25.8→~8 s at
-    * sf0.1). Release via `cache` after the terminal action.
+    * sf0.1). Nothing is computed here: under AQE the caller's terminal
+    * action fills both caches as table-cache query stages that run
+    * before the stages reading them, and a partition is computed once
+    * even when several such stages ask for it at the same time (the
+    * others wait on BlockManager's write lock for the block, then read
+    * it). Release via `cache` after the terminal action.
     * reference: src/gentropy/dataset/l2g_gold_standard.py:33-66 */
   def fromOtgCuration(curation: DataFrame, distances: DataFrame,
                       overlaps: DataFrame, interactions: DataFrame,
                       cache: graft.core.CacheHandle): DataFrame = {
     val gs = cache.persist(fromCuration(curation, distances))
     val unique = cache.persist(filterUniqueAssociations(gs, overlaps))
-    // compute the caches NOW: the terminal action evaluates the
-    // multi-consumer subplans concurrently, and consumers racing a
-    // still-uncached frame recompute its partitions redundantly (the
-    // same effect measured 2x on the COLOC e2e and L2G matrix paths)
-    cache.materialize()
     removeFalseNegatives(unique, processGeneInteractions(interactions))
   }
 }

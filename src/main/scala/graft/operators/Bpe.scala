@@ -148,7 +148,7 @@ object Bpe {
 
   /** Load a model persisted by [[modelWrite]]. */
   def modelRead(s: SparkSession, path: String): BpeModel =
-    BpeModel(s.read.parquet(path)
+    BpeModel(graft.Tables.read(s, path)
       .select("rank", "left", "right").collect()
       .sortBy(_.getInt(0))
       .map(r => (r.getString(1), r.getString(2))))

@@ -104,8 +104,13 @@ object ImportanceSampling {
     * dominant cost) is computed ONCE and registered on `cache`,
     * feeding both the model's corpus-side counts and the scoring
     * join; without the shared frame the corpus pays that pass twice.
-    * Callers at extreme scale can pass a disabled handle to trade the
-    * persist for recomputation. */
+    * AQE reaches the cache through several table-cache stages that
+    * run at once (three in q_dsir_select); a partition is still
+    * computed once, by the first task to take the block's write lock,
+    * and the tasks that waited for it read it. Spark then logs `Block …
+    * already exists on this machine; not re-adding it`, which is
+    * harmless. Callers at extreme scale can pass a disabled handle to
+    * trade the persist for recomputation. */
   def dsirScores(corpus: DataFrame, target: DataFrame, textCol: String,
                  idCol: String, buckets: Int = 1 << 14,
                  alpha: Double = 1.0,

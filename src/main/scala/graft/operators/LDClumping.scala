@@ -59,7 +59,7 @@ object LDClumping {
     * join plan's tie-break — so both paths agree unconditionally and
     * the window path is partition-layout-independent. O(partition²)
     * on degenerate partitions — kept as the parity baseline for
-    * LDClumpingL2GSpec and [[clump]]'s gated small-input path
+    * LDClumpingL2GSpec and [[clump]]'s guarded small-input path
     * (package-private so library callers cannot reach the
     * scale-killer shape directly). */
   private[operators] def isLeadLinked(studyId: Column, chromosome: Column, variantId: Column,
@@ -81,13 +81,28 @@ object LDClumping {
     * the same flag/locus rewrite as [[clump]]. One scan + one window —
     * no slim-frame persist, no back-join — so on inputs whose
     * (study, chromosome) partitions are small it beats the join plan
-    * by the cost of the second upstream pass. O(partition²) on
-    * mega-partitions: reach it only through [[clump]]'s
-    * `windowPathMaxRows` gate, which counts the input before choosing
-    * (the count is free when the caller hands in a persisted or
-    * parquet-backed frame — exactly the callers this path serves). */
-  private def clumpViaWindow(associations: DataFrame): DataFrame =
+    * by the cost of the second upstream pass.
+    *
+    * The kernel is O(partition²), so a row count per (studyId,
+    * chromosome) partition runs first, in the same plan, and a
+    * partition of more than `maxPartitionRows` rows fails the query
+    * (`raise_error`, naming the bound) before the collect_set window
+    * starts: a caller cannot reach the quadratic window on a partition
+    * larger than the bound it states, and stating it runs no job. The
+    * count window buffers one partition at a time, linear in its
+    * size. */
+  private def clumpViaWindow(associations: DataFrame,
+                             maxPartitionRows: Long): DataFrame = {
+    val n = count(lit(1)).over(
+      Window.partitionBy(col("studyId"), col("chromosome")))
     associations
+      .withColumn("_n", n)
+      .filter(when(col("_n") > maxPartitionRows, raise_error(format_string(
+        "LDClumping.clump: partition (studyId=%s, chromosome=%s) has %d " +
+          "rows, over the window plan's bound windowMaxPartitionRows = " +
+          s"$maxPartitionRows; pass 0 for the join plan",
+        col("studyId"), col("chromosome"), col("_n")))).otherwise(lit(true)))
+      .drop("_n")
       .withColumn("_linked",
         isLeadLinked(col("studyId"), col("chromosome"), col("variantId"),
           col("pValueExponent"), col("pValueMantissa"), col("ldSet")))
@@ -97,6 +112,7 @@ object LDClumping {
       .withColumn("locus",
         when(col("_linked"), lit(null)).otherwise(col("locus")))
       .drop("_linked")
+  }
 
   /** Flag LD-clumped rows and null out their locus.
     *
@@ -109,25 +125,23 @@ object LDClumping {
     * dedupe them — measured 3 full upstream scans). Pass
     * `CacheHandle.disabled` to trade recompute for storage memory.
     *
-    * `windowPathMaxRows`: opt-in single-pass fallback for small
-    * inputs. When > 0 the operator counts `associations` (one extra
-    * job — free on a persisted or freshly-written frame, a full pass
-    * otherwise) and, if the count is within the bound, runs the
-    * reference window kernel instead of the join plan: one scan, no
-    * slim-frame persist, no back-join. The count is a HARD gate — a
-    * caller cannot reach the O(partition²) window on an input larger
-    * than the bound it states. Ties: both paths break (exponent,
-    * mantissa) ties by lead variantId ascending — the window ordering
-    * is total (see [[isLeadLinked]]) — so flipping the gate never
-    * changes results, tied p-values included; the randomized parity
-    * spec pins this on non-injective inputs. Leave at 0 (default)
-    * for the join production plan. */
+    * `windowMaxPartitionRows`: opt-in single-pass plan for inputs
+    * whose (studyId, chromosome) partitions are small. When > 0 the
+    * operator runs the reference window kernel instead of the join
+    * plan: one scan, no slim-frame persist, no back-join, and `cache`
+    * unused. The bound is a HARD guard inside the plan: a partition of
+    * more rows fails the query, naming the bound, instead of running
+    * the O(partition²) window (see [[clumpViaWindow]]). Ties: both
+    * plans break (exponent, mantissa) ties by lead variantId ascending
+    * — the window ordering is total (see [[isLeadLinked]]) — so the
+    * choice never changes results, tied p-values included; the
+    * randomized parity spec pins this on non-injective inputs. Leave
+    * at 0 (default) for the join production plan. */
   def clump(associations: DataFrame,
             cache: graft.core.CacheHandle,
-            windowPathMaxRows: Long = 0L): DataFrame = {
-    if (windowPathMaxRows > 0L &&
-        associations.count() <= windowPathMaxRows)
-      return clumpViaWindow(associations)
+            windowMaxPartitionRows: Long = 0L): DataFrame = {
+    if (windowMaxPartitionRows > 0L)
+      return clumpViaWindow(associations, windowMaxPartitionRows)
     val rowKey = Seq("studyId", "chromosome", "variantId",
       "pValueExponent", "pValueMantissa")
     // one slim pass: row keys + exploded tags (explode_outer keeps

@@ -109,9 +109,9 @@ object Search {
   /** Load an index persisted by [[bm25IndexWrite]]. */
   def bm25IndexRead(s: org.apache.spark.sql.SparkSession,
                     path: String): Bm25Index = {
-    val st = s.read.parquet(s"$path/stats").head()
-    Bm25Index(s.read.parquet(s"$path/postings"),
-      s.read.parquet(s"$path/doclens"),
+    val st = graft.Tables.read(s, s"$path/stats").head()
+    Bm25Index(graft.Tables.read(s, s"$path/postings"),
+      graft.Tables.read(s, s"$path/doclens"),
       st.getAs[Long]("n_docs"), st.getAs[Double]("avgdl"))
   }
 

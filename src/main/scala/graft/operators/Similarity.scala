@@ -805,13 +805,13 @@ object Similarity {
 
   /** Load an index persisted by [[pqIndexWrite]]. */
   def pqIndexRead(s: SparkSession, path: String): (PqIndex, DataFrame) = {
-    val rows = s.read.parquet(s"$path/model")
+    val rows = graft.Tables.read(s, s"$path/model")
       .select("subspace", "centre", "vec").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
     val coarse = rows.filter(_._1 == -1).sortBy(_._2).map(_._3)
     val books = rows.filter(_._1 >= 0).groupBy(_._1).toArray.sortBy(_._1)
       .map(_._2.sortBy(_._2).map(_._3))
-    (PqIndex(coarse, books), s.read.parquet(s"$path/codes"))
+    (PqIndex(coarse, books), graft.Tables.read(s, s"$path/codes"))
   }
 
   /** Search an IVF-PQ index (see [[pqTopK]] for the scoring model).

@@ -100,7 +100,7 @@ object Goldens {
       graft.SparkEntry.queries(name)(spark, sfDir)
         .coalesce(1).write.mode("overwrite").parquet(s"$out/$name")
       graft.core.CacheHandle.releaseQueryScoped()
-      val d = canonicalDigest(spark.read.parquet(s"$out/$name"))
+      val d = canonicalDigest(graft.Tables.read(spark, s"$out/$name"))
       println(s"""GOLDEN "$name" "$tag" -> "$d",""")
     }
     spark.stop()

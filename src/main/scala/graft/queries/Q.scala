@@ -28,7 +28,7 @@ object Q {
     floor(c * math.pow(10, d) + lit(0.500000001)).cast("long")
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    graft.Tables.load(spark, dir, name)
 
   /** Spread a scan across cores before a CPU-bound derivation. The
     * driver's test tables are single-row-group parquet files, and
@@ -1754,22 +1754,26 @@ object Q {
 
   /** LD clumping over synthesised loci with ldSets.
     *
-    * Takes [[LDClumping.clump]]'s gated single-pass WINDOW path (the
-    * input is persisted, so the gate's count is free): at verify/bench
-    * SFs the join plan's 12+ sequential AQE stage barriers cost ~3× the
-    * actual work. The production JOIN path keeps its own oracle via
-    * [[ldClumpJoin]] (identical synthesis + SQL, default path). */
+    * Takes [[LDClumping.clump]]'s single-pass WINDOW plan: at
+    * verify/bench SFs the join plan's 12+ sequential AQE stage barriers
+    * cost ~3× the actual work. The synthesis groups by (vKey, studyId,
+    * chromosome) with vKey < 2000, so no (study, chromosome) partition
+    * exceeds 2000 rows — the bound passed to the window plan's
+    * in-plan guard. The window reads its input once, so nothing is
+    * persisted and building the frame runs no job. The production
+    * JOIN plan keeps its own oracle via [[ldClumpJoin]] (identical
+    * synthesis + SQL, default plan). */
   def ldClump(s: SparkSession, dir: String): DataFrame =
-    ldClumpShared(s, dir, windowPathMaxRows = 100000L)
+    ldClumpShared(s, dir, windowMaxPartitionRows = 2000L)
 
   /** The SAME query forced onto the production join plan (default
-    * [[LDClumping.clump]] path) — keeps the scale shape hash-checked
-    * against DuckDB while [[ldClump]] measures the small-input gate. */
+    * [[LDClumping.clump]] plan) — keeps the scale shape hash-checked
+    * against DuckDB while [[ldClump]] measures the small-input plan. */
   def ldClumpJoin(s: SparkSession, dir: String): DataFrame =
-    ldClumpShared(s, dir, windowPathMaxRows = 0L)
+    ldClumpShared(s, dir, windowMaxPartitionRows = 0L)
 
   private def ldClumpShared(s: SparkSession, dir: String,
-                            windowPathMaxRows: Long): DataFrame = {
+                            windowMaxPartitionRows: Long): DataFrame = {
     // deterministic synthesis: p-value injective in the variant key so
     // the running-window tie order cannot differ between engines
     val synth = t(s, dir, "lineitem")
@@ -1791,21 +1795,23 @@ object Q {
         (-(col("vKey") % 12) - 4).cast("int").as("pValueExponent"),
         array(struct(concat(lit("v"), col("vKey") + 1).as("tagVariantId"),
           col("maxR2").as("r2Overall"))).as("ldSet"))
-    // clump reads its input twice (slim tag frame + output back-join);
-    // on a parquet-backed StudyLocus the second pass is a pruned scan,
-    // but this query's input is an expensive synthesis groupBy. Persist
-    // the SLIM synthesized columns and derive the wide arrays after the
-    // cache point — the columnar cache then stores only scalars + the
-    // 1-element ldSet, mirroring what parquet column pruning gives a
-    // real caller (caching the full wide rows measured SLOWER than the
-    // double recompute: array-of-struct decode ≈ the synthesis itself)
-    val slim = queryCache.persist(synth)
+    // the join plan reads its input twice (slim tag frame + output
+    // back-join); on a parquet-backed StudyLocus the second pass is a
+    // pruned scan, but this query's input is an expensive synthesis
+    // groupBy. Persist the SLIM synthesized columns and derive the wide
+    // arrays after the cache point — the columnar cache then stores
+    // only scalars + the 1-element ldSet, mirroring what parquet column
+    // pruning gives a real caller (caching the full wide rows measured
+    // SLOWER than the double recompute: array-of-struct decode ≈ the
+    // synthesis itself). The window plan reads it once: no persist.
+    val slim =
+      if (windowMaxPartitionRows > 0L) synth else queryCache.persist(synth)
     val assoc = slim
       .withColumn("locus", array(struct(col("variantId"),
         lit(1.0).as("posteriorProbability"))))
       .withColumn("qualityControls", lit(null).cast("array<string>"))
     LDClumping.clump(assoc, cache = queryCache,
-        windowPathMaxRows = windowPathMaxRows)
+        windowMaxPartitionRows = windowMaxPartitionRows)
       .select(col("studyId"), col("chromosome"), col("variantId"),
         array_contains(coalesce(col("qualityControls"), array()),
           LDClumping.LdClumpedFlag).as("ldClumped"))

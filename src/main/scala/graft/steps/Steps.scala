@@ -1,5 +1,6 @@
 package graft.steps
 
+import graft.Tables.read
 import graft.finemap.DistributedFineMapper
 import graft.ml.{L2GFeatures, L2GModel}
 import graft.operators._
@@ -69,9 +70,6 @@ object Steps {
           "containing CARMA configuration rank-deficient.")
         false
     }
-
-  private def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
 
   private def write(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").parquet(path)

@@ -92,7 +92,7 @@ object StreamingUpsert {
   def readSnapshot(spark: SparkSession, root: String): DataFrame = {
     val dir = currentSnapshotDir(spark, root).getOrElse(
       throw new IllegalStateException(s"no published snapshot under $root"))
-    spark.read.parquet(s"$root/$dir")
+    graft.Tables.read(spark, s"$root/$dir")
   }
 
   /** Apply one delta batch and publish its generation — also the
@@ -106,7 +106,7 @@ object StreamingUpsert {
     val snapshot =
       committedGenerations(spark, root).filter(_._1 < batchId) match {
         case gens if gens.nonEmpty =>
-          spark.read.parquet(s"$root/${gens.max._2}")
+          graft.Tables.read(spark, s"$root/${gens.max._2}")
         case _ =>
           import org.apache.spark.sql.functions.{col, lit}
           batch.select(outCols.map(col): _*).filter(lit(false))

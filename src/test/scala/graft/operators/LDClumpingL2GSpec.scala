@@ -3,6 +3,8 @@ package graft.operators
 import graft.SparkSpec
 import graft.core.CacheHandle
 import graft.ml.L2GFeatures
+import org.apache.spark.graft.JobCount
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 case class Ld2(tagVariantId: String, r2Overall: Option[Double])
@@ -35,13 +37,11 @@ class LDClumpingL2GSpec extends SparkSpec {
       ("2", "v1", false, false)))
   }
 
-  test("LD clumping join shape matches the reference window shape") {
-    // randomized parity on BOTH injective and tied p-values: the window
-    // ordering is total (lead-id tie-break appended, matching the join
-    // plan), so parity must hold even when (exponent, mantissa) collide
-    // heavily. Dense tag overlap so both linked and unlinked rows occur,
-    // several (study, chromosome) partitions, some empty/absent-tag
-    // ldSets and null variantIds.
+  /** 400 rows over 6 (study, chromosome) partitions with dense tag
+    * overlap, some empty/absent-tag ldSets and null variantIds.
+    * injective=true perturbs mantissa by a unique epsilon; false keeps
+    * the raw 9-value-coarse mantissas (hundreds of exact ties). */
+  private def randomAssociations(injective: Boolean): DataFrame = {
     val rnd = new scala.util.Random(20260814)
     val rows = (0 until 400).map { i =>
       val vid = if (i % 97 == 0) null else s"v${rnd.nextInt(60)}_${i % 3}"
@@ -51,19 +51,27 @@ class LDClumpingL2GSpec extends SparkSpec {
         (1.0f + rnd.nextInt(899) / 100.0f), -4 - rnd.nextInt(12),
         Some(tags), Some(Seq(Tag2(s"t$i", Some(1.0)))))
     }
-    // injective=true perturbs mantissa by a unique epsilon; false keeps
-    // the raw 9-value-coarse mantissas (hundreds of exact ties)
-    def check(injective: Boolean): Unit = {
-      val df = rows.zipWithIndex.map { case ((s, c, v, m, e, ld, lo), i) =>
-        (s, c, v, if (injective) m + i * 1e-4f else m, e, ld, lo)
-      }.toDF("studyId", "chromosome", "variantId", "pValueMantissa",
-        "pValueExponent", "ldSet", "locus")
-        .withColumn("qualityControls", lit(null).cast("array<string>"))
-      val joined = LDClumping.clump(df, cache = CacheHandle())
-        .select(col("studyId"), col("chromosome"), col("variantId"),
-          col("pValueMantissa"),
-          array_contains(coalesce(col("qualityControls"), array()),
-            LDClumping.LdClumpedFlag).as("clumped"))
+    rows.zipWithIndex.map { case ((s, c, v, m, e, ld, lo), i) =>
+      (s, c, v, if (injective) m + i * 1e-4f else m, e, ld, lo)
+    }.toDF("studyId", "chromosome", "variantId", "pValueMantissa",
+      "pValueExponent", "ldSet", "locus")
+      .withColumn("qualityControls", lit(null).cast("array<string>"))
+  }
+
+  private def clumpedFlags(d: DataFrame): DataFrame =
+    d.select(col("studyId"), col("chromosome"), col("variantId"),
+      col("pValueMantissa"),
+      array_contains(coalesce(col("qualityControls"), array()),
+        LDClumping.LdClumpedFlag).as("clumped"))
+
+  test("LD clumping join shape matches the reference window shape") {
+    // randomized parity on BOTH injective and tied p-values: the window
+    // ordering is total (lead-id tie-break appended, matching the join
+    // plan), so parity must hold even when (exponent, mantissa) collide
+    // heavily
+    for (injective <- Seq(true, false)) {
+      val df = randomAssociations(injective)
+      val joined = clumpedFlags(LDClumping.clump(df, cache = CacheHandle()))
       val windowed = df.select(col("studyId"), col("chromosome"),
         col("variantId"), col("pValueMantissa"),
         LDClumping.isLeadLinked(col("studyId"), col("chromosome"),
@@ -73,12 +81,13 @@ class LDClumpingL2GSpec extends SparkSpec {
         windowed.exceptAll(joined).isEmpty, s"injective=$injective")
       assert(joined.filter(col("clumped")).count() > 10) // non-trivial
     }
-    check(injective = true)
-    check(injective = false)
   }
 
+  // the gate is now the per-partition windowMaxPartitionRows bound: under
+  // it the window plan flags what the join plan flags; over it the query
+  // fails (next test) instead of falling back to the join plan
   test("windowPathMaxRows gate: window path taken only under the bound") {
-    val df = Seq(
+    val small = Seq(
       ("s1", "1", "v1", 1.0f, -12, Some(Seq(Ld2("v2", Some(0.9)))),
         Some(Seq(Tag2("v1", Some(1.0))))),
       ("s1", "1", "v2", 1.0f, -8, Some(Seq(Ld2("v1", Some(0.9)))),
@@ -87,27 +96,51 @@ class LDClumpingL2GSpec extends SparkSpec {
       .toDF("studyId", "chromosome", "variantId", "pValueMantissa",
         "pValueExponent", "ldSet", "locus")
       .withColumn("qualityControls", lit(null).cast("array<string>"))
-    def flags(d: org.apache.spark.sql.DataFrame) = d
-      .select(col("variantId"),
-        array_contains(coalesce(col("qualityControls"), array()),
-          LDClumping.LdClumpedFlag).as("clumped"))
-      .as[(String, Boolean)].collect().toSet
     val expect = Set(("v1", false), ("v2", true), ("v3", false))
-    // under the bound (window path), over it (join path), and default
-    assert(flags(LDClumping.clump(df, windowPathMaxRows = 10,
-      cache = CacheHandle())) == expect)
-    assert(flags(LDClumping.clump(df, windowPathMaxRows = 2,
-      cache = CacheHandle())) == expect)
-    assert(flags(LDClumping.clump(df, cache = CacheHandle())) == expect)
+    // a bound equal to the partition's size passes
+    assert(clumpedFlags(LDClumping.clump(small, windowMaxPartitionRows = 3,
+        cache = CacheHandle()))
+      .select("variantId", "clumped").as[(String, Boolean)]
+      .collect().toSet == expect)
+    // randomized parity, tied p-values included: the partitions hold
+    // ~70 rows each, 400 in all, so a bound of 100 also shows the
+    // bound is per partition, not per input
+    for (injective <- Seq(true, false)) {
+      val df = randomAssociations(injective)
+      val joined = clumpedFlags(LDClumping.clump(df, cache = CacheHandle()))
+      val windowed = clumpedFlags(LDClumping.clump(df,
+        windowMaxPartitionRows = 100, cache = CacheHandle()))
+      assert(joined.exceptAll(windowed).isEmpty &&
+        windowed.exceptAll(joined).isEmpty, s"injective=$injective")
+    }
+  }
+
+  test("window plan over its partition bound fails, naming the bound") {
+    val df = randomAssociations(injective = true)
+    val out = LDClumping.clump(df, windowMaxPartitionRows = 50,
+      cache = CacheHandle())
+    val e = intercept[Exception](out.collect())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(m => String.valueOf(m.getMessage)).toSeq
+    assert(messages.exists(_.contains("windowMaxPartitionRows = 50")),
+      messages.mkString("\n"))
+  }
+
+  test("building the window plan runs no Spark job") {
+    val df = randomAssociations(injective = true)
+    val (_, jobs) = JobCount(spark)(
+      LDClumping.clump(df, windowMaxPartitionRows = 100,
+        cache = CacheHandle()).queryExecution.executedPlan)
+    assert(jobs == 0)
   }
 
   test("LD clumping breaks p-value ties deterministically (lead id asc)") {
     // two mutually-tagged leads tied on (exponent, mantissa): the
     // reference's ROWS-frame window flags whichever row is physically
-    // later (partitioning-dependent); both our paths pin lead-id
+    // later (partitioning-dependent); both our plans pin lead-id
     // ascending — vB links to vA, never the reverse, at any layout and
-    // on either side of the windowPathMaxRows gate
-    def run(parts: Int, windowPathMaxRows: Long = 0L) = {
+    // on the window plan as on the join plan
+    def run(parts: Int, windowMaxPartitionRows: Long = 0L) = {
       val df = Seq(
         ("s1", "1", "vA", 1.0f, -8, Some(Seq(Ld2("vB", Some(0.9)))),
           Some(Seq(Tag2("vA", Some(1.0))))),
@@ -117,7 +150,7 @@ class LDClumpingL2GSpec extends SparkSpec {
           "pValueExponent", "ldSet", "locus")
         .withColumn("qualityControls", lit(null).cast("array<string>"))
         .repartition(parts)
-      LDClumping.clump(df, windowPathMaxRows = windowPathMaxRows,
+      LDClumping.clump(df, windowMaxPartitionRows = windowMaxPartitionRows,
         cache = CacheHandle())
         .select(col("variantId"),
           array_contains(coalesce(col("qualityControls"), array()),
@@ -126,9 +159,9 @@ class LDClumpingL2GSpec extends SparkSpec {
     }
     val expected = Set(("vA", false), ("vB", true))
     assert(run(1) == expected && run(7) == expected)
-    // gated window path: same verdict at any physical layout
-    assert(run(1, windowPathMaxRows = 10) == expected &&
-      run(7, windowPathMaxRows = 10) == expected)
+    // window plan: same verdict at any physical layout
+    assert(run(1, windowMaxPartitionRows = 10) == expected &&
+      run(7, windowMaxPartitionRows = 10) == expected)
   }
 
   test("LD clumping with caching disabled matches the cached path") {
