@@ -57,7 +57,7 @@ object TreeShap {
   def flatten(model: GBTClassificationModel): Array[ShapTree] =
     model.trees.zip(model.treeWeights).map { case (t, w) =>
       val (l, r, f, thr, v, c) =
-        org.apache.spark.ml.graft.TreeBridge.flatten(t.rootNode)
+        org.apache.spark.ml.tree.graft.TreeBridge.flatten(t.rootNode)
       ShapTree(l, r, f, thr, v, c, w)
     }
 
