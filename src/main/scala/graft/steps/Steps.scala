@@ -5,6 +5,7 @@ import graft.finemap.DistributedFineMapper
 import graft.ml.{L2GFeatures, L2GModel}
 import graft.operators._
 import graft.sources._
+import org.apache.spark.ml.tree.graft.TreeBridge
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -263,21 +264,19 @@ object Steps {
             f"avgPrecision=${f.averagePrecision}%.4f n=${f.nVal}"))
         println(f"[l2g_train] holdout: auroc=${res.holdoutAreaUnderROC}%.4f " +
           f"avgPrecision=${res.holdoutAveragePrecision}%.4f")
-        res.model.write.overwrite().save(a("out"))
+        TreeBridge.saveModel(s, res.model, a("out"))
       }),
 
     Step("l2g_score",
       "Score a feature matrix with a trained L2G model",
       (s, a) => write(
-        L2GModel.score(
-          org.apache.spark.ml.PipelineModel.load(a("model")),
-          read(s, a("in"))), a("out"))),
+        L2GModel.score(TreeBridge.loadModel(s, a("model")), read(s, a("in"))),
+        a("out"))),
 
     Step("l2g_predict",
       "Score GWAS credible sets with a trained L2G model",
       (s, a) => write(
-        graft.ml.L2GPrediction.fromCredibleSet(
-          org.apache.spark.ml.PipelineModel.load(a("model")),
+        graft.ml.L2GPrediction.fromCredibleSet(TreeBridge.loadModel(s, a("model")),
           read(s, a("credible_sets")), read(s, a("feature_matrix"))),
         a("out"))),
 

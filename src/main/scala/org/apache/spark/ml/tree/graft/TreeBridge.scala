@@ -1,18 +1,43 @@
 package org.apache.spark.ml.tree.graft
 
-import org.apache.spark.ml.{PipelineModel, Transformer}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.ml.{Pipeline, PipelineModel, Transformer}
 import org.apache.spark.ml.classification.GBTClassificationModel
+import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.impl.Utils
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.ml.param.{Param, Params}
 import org.apache.spark.ml.regression.DecisionTreeRegressionModel
-import org.apache.spark.ml.tree.{ContinuousSplit, InternalNode, LeafNode, LearningNode, Node, Split}
+import org.apache.spark.ml.tree.{ContinuousSplit, DecisionTreeModelReadWrite, InternalNode, LeafNode, LearningNode, Node, Split}
+import org.apache.spark.ml.tree.EnsembleModelReadWrite.EnsembleNodeData
 import org.apache.spark.ml.tree.impl.{DTStatsAggregator, DecisionTreeMetadata, GradientBoostedTrees, RandomForest, TreePoint}
-import org.apache.spark.ml.util.{DatasetUtils, Identifiable}
+import org.apache.spark.ml.util.{DatasetUtils, DefaultParamsReader, DefaultParamsWriter, FileSystemOverwrite, Identifiable}
+import org.apache.spark.ml.util.DefaultParamsReader.Metadata
 import org.apache.spark.mllib.tree.configuration.{Strategy, Algo => OldAlgo}
 import org.apache.spark.mllib.tree.impurity.Variance
 import org.apache.spark.mllib.tree.model.ImpurityStats
-import org.apache.spark.sql.Column
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.VersionUtils
+import org.json4s.{DefaultFormats, Formats, JArray, JInt, JObject, JString}
+import org.json4s.jackson.JsonMethods.{compact, render}
+
+import java.io.{BufferedReader, InputStreamReader}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.UUID
+import scala.reflect.runtime.universe.TypeTag
+import scala.util.control.NonFatal
 
 /** The one home of the Spark-private tree API the engine uses, mirroring
   * the sql-side `Bridge` shim. It lives under `org.apache.spark.ml.tree`
@@ -28,7 +53,12 @@ import org.apache.spark.sql.Column
   *    and boosting update (`GradientBoostedTrees.updatePrediction`,
   *    `LogLoss.gradient`), with no Spark job per tree level;
   *  - `checkedLabel` / `checkedFeatures` are the row checks
-  *    `GBTClassifier` applies to its training rows.
+  *    `GBTClassifier` applies to its training rows;
+  *  - `saveModel` / `loadModel` write and read the fitted pipeline in
+  *    Spark ML's directory layout with Spark's own metadata, node-table
+  *    and tree-building code: the metadata on the driver, the node table
+  *    in one Spark write, and the whole model read back on the driver,
+  *    without the Spark job per file that `MLWriter` and `MLReader` run.
   */
 object TreeBridge {
 
@@ -283,6 +313,194 @@ object TreeBridge {
       node.rightChild = Some(right)
       // LearningNode.apply drops its isLeaf argument; only the flags decide
       Seq(left -> leftIsLeaf, right -> rightIsLeaf).collect { case (n, false) => n }
+    }
+  }
+
+  /** `model.write.overwrite().save(path)` for a (`VectorAssembler`,
+    * `GBTClassificationModel`) pipeline, in one Spark job. The driver
+    * writes the `metadata` JSON of the pipeline and its stages and the
+    * `treesMetadata` table, each JSON from
+    * `DefaultParamsWriter.getMetadataToSave`. The node table `data`
+    * (`EnsembleNodeData.build` rows) is one Spark write, partitioned as
+    * Spark partitions it, with no shuffle while it fits one file: it is
+    * the part that grows with the model, and the rows a run's task
+    * metrics count as the step's output. The files are those Spark
+    * writes, down to their names; only the metadata timestamps differ.
+    * Any other pipeline takes the stock writer. */
+  def saveModel(spark: SparkSession, model: PipelineModel, path: String): Unit =
+    model.stages match {
+      case Array(asm: VectorAssembler, gbt: GBTClassificationModel) =>
+        new FileSystemOverwrite().handleOverwrite(path, true, spark)
+        val root = new Path(path)
+        val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+        val stages = new Path(root, "stages").toString
+        val asmDir = new Path(Pipeline.SharedReadWrite.getStagePath(asm.uid, 0, 2, stages))
+        val gbtDir = new Path(Pipeline.SharedReadWrite.getStagePath(gbt.uid, 1, 2, stages))
+        val stageUids = JArray(model.stages.map(s => JString(s.uid)).toList)
+        writeText(fs, new Path(root, "metadata"), DefaultParamsWriter.getMetadataToSave(
+          model, spark, None, Some(JObject("stageUids" -> stageUids))))
+        writeText(fs, new Path(asmDir, "metadata"),
+          DefaultParamsWriter.getMetadataToSave(asm, spark))
+        val counts = JObject("numFeatures" -> JInt(gbt.numFeatures),
+          "numTrees" -> JInt(gbt.getNumTrees))
+        writeText(fs, new Path(gbtDir, "metadata"),
+          DefaultParamsWriter.getMetadataToSave(gbt, spark, Some(counts)))
+        writeParquet(spark, fs, new Path(gbtDir, "treesMetadata"),
+          gbt.trees.toSeq.zipWithIndex.map { case (tree, id) =>
+            (id, DefaultParamsWriter.getMetadataToSave(tree, spark), gbt.treeWeights(id))
+          })
+        val nodes = spark.createDataFrame(gbt.trees.toSeq.zipWithIndex.flatMap {
+          case (tree, id) => EnsembleNodeData.build(tree, id)
+        })
+        val parts = DecisionTreeModelReadWrite.NodeData.inferNumPartitions(
+          gbt.trees.map(_.numNodes.toLong).sum)
+        (if (parts == 1) nodes.coalesce(1) else nodes.repartition(parts))
+          .write.parquet(new Path(gbtDir, "data").toString)
+      case _ => model.write.overwrite().save(path)
+    }
+
+  /** `PipelineModel.load(path)` read on the driver, with no Spark job,
+    * for a (`VectorAssembler`, `GBTClassificationModel`) pipeline saved
+    * by Spark 3 or later: `DefaultParamsReader.parseMetadata`, parquet
+    * rows through `ParquetFileFormat`'s reader, trees rebuilt by
+    * `DecisionTreeModelReadWrite.buildTreeFromNodes` and params set by
+    * `Metadata.getAndSetParams`, as the GBT reader does. Any other
+    * directory, or one whose metadata does not parse, takes the stock
+    * reader, with its semantics and errors. */
+  def loadModel(spark: SparkSession, path: String): PipelineModel = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    l2gStages(fs, root) match {
+      case Some((pipeline, asmMeta, gbtMeta, gbtDir)) =>
+        val asm = new VectorAssembler(asmMeta.uid)
+        asmMeta.getAndSetParams(asm)
+        val gbt = loadGbt(spark, fs, gbtMeta, gbtDir)
+        new PipelineModel(pipeline.uid, Array[Transformer](asm, gbt))
+      case None => PipelineModel.load(path)
+    }
+  }
+
+  /** The metadata of the pipeline and of its two stages, and the GBT
+    * stage's directory, when `root` holds an assembler-then-GBT pipeline
+    * written by Spark 3 or later (older node tables lack `rawCount`). */
+  private def l2gStages(fs: FileSystem,
+      root: Path): Option[(Metadata, Metadata, Metadata, Path)] =
+    try {
+      implicit val formats: Formats = DefaultFormats
+      val pipeline = DefaultParamsReader.parseMetadata(
+        readText(fs, new Path(root, "metadata")), classOf[PipelineModel].getName)
+      val uids = (pipeline.params \ "stageUids").extract[Seq[String]]
+      val stages = new Path(root, "stages").toString
+      val dirs = uids.zipWithIndex.map { case (uid, i) =>
+        new Path(Pipeline.SharedReadWrite.getStagePath(uid, i, uids.length, stages))
+      }
+      val stageMetas = dirs.map(d =>
+        DefaultParamsReader.parseMetadata(readText(fs, new Path(d, "metadata"))))
+      stageMetas match {
+        case Seq(asm, gbt) if asm.className == classOf[VectorAssembler].getName &&
+            gbt.className == classOf[GBTClassificationModel].getName &&
+            VersionUtils.majorVersion(gbt.sparkVersion) >= 3 =>
+          Some((pipeline, asm, gbt, dirs(1)))
+        case _ => None
+      }
+    } catch { case NonFatal(_) => None }
+
+  /** `GBTClassificationModel.load` of the stage in `dir`, given its
+    * parsed metadata. */
+  private def loadGbt(spark: SparkSession, fs: FileSystem, meta: Metadata,
+      dir: Path): GBTClassificationModel = {
+    implicit val formats: Formats = DefaultFormats
+    val numFeatures = (meta.metadata \ "numFeatures").extract[Int]
+    val numTrees = (meta.metadata \ "numTrees").extract[Int]
+    val impurity = Param.jsonDecode[String](compact(render(meta.getParamValue("impurity"))))
+    // (treeID, metadata, weight) by position, as Spark's tuple encoder reads them
+    val treesMeta = readParquet(spark, fs, new Path(dir, "treesMetadata")) { _ => r =>
+      (r.getInt(0), DefaultParamsReader.parseMetadata(r.getUTF8String(1).toString,
+        classOf[DecisionTreeRegressionModel].getName),
+        r.getDouble(2))
+    }.sortBy(_._1)
+    val nodes = readParquet(spark, fs, new Path(dir, "data")) { schema =>
+      ExpressionEncoder[EnsembleNodeData]()
+        .resolveAndBind(DataTypeUtils.toAttributes(schema)).createDeserializer()
+    }
+    val roots = nodes.groupBy(_.treeID).toSeq.sortBy(_._1).map { case (_, ns) =>
+      DecisionTreeModelReadWrite.buildTreeFromNodes(ns.map(_.nodeData).toArray, impurity)
+    }
+    val trees = treesMeta.zip(roots).map { case ((_, treeMeta, _), root) =>
+      val tree = new DecisionTreeRegressionModel(treeMeta.uid, root, numFeatures)
+      treeMeta.getAndSetParams(tree)
+      tree
+    }
+    require(numTrees == trees.length, s"GBTClassificationModel.load expected $numTrees" +
+      s" trees based on metadata but found ${trees.length} trees.")
+    val model = new GBTClassificationModel(meta.uid, trees.toArray,
+      treesMeta.map(_._3).toArray, numFeatures)
+    // Spark's reader skips impurity too: old models saved it wrongly (SPARK-25959)
+    meta.getAndSetParams(model, Some(List("impurity")))
+    model
+  }
+
+  /** A one-file directory as a Spark write leaves it:
+    * `part-00000-<uuid>-c000<extension>` and an empty `_SUCCESS`. */
+  private def writeDir(fs: FileSystem, dir: Path, extension: String)(write: Path => Unit): Unit = {
+    write(new Path(dir, s"part-00000-${UUID.randomUUID()}-c000$extension"))
+    fs.create(new Path(dir, "_SUCCESS"), false).close()
+  }
+
+  /** One line of text, as `Seq(Tuple1(line)).toDF.write.text(dir)` writes it. */
+  private def writeText(fs: FileSystem, dir: Path, line: String): Unit =
+    writeDir(fs, dir, ".txt") { file =>
+      val out = fs.create(file, false)
+      try out.write((line + "\n").getBytes(UTF_8)) finally out.close()
+    }
+
+  /** `spark.createDataFrame(rows).repartition(1).write.parquet(dir)`,
+    * written by the driver through the parquet source's own writer. */
+  private def writeParquet[T <: Product : TypeTag](spark: SparkSession, fs: FileSystem,
+      dir: Path, rows: Seq[T]): Unit = {
+    val encoder = ExpressionEncoder[T]()
+    val toRow = encoder.createSerializer()
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, encoder.schema)
+    val context = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+    writeDir(fs, dir, factory.getFileExtension(context)) { file =>
+      val writer = factory.newInstance(file.toString, encoder.schema, context)
+      try rows.foreach(r => writer.write(toRow(r))) finally writer.close()
+    }
+  }
+
+  /** The files a scan of `dir` reads, in path order. */
+  private def dataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq
+      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
+        !f.getPath.getName.startsWith("."))
+      .sortBy(_.getPath.toString)
+
+  /** The first line of the first file in `dir`: `spark.read.text(dir).first()`. */
+  private def readText(fs: FileSystem, dir: Path): String = {
+    val in = new BufferedReader(
+      new InputStreamReader(fs.open(dataFiles(fs, dir).head.getPath), UTF_8))
+    try in.readLine() finally in.close()
+  }
+
+  /** Every row of the parquet files in `dir`, read by the driver through
+    * `ParquetFileFormat`'s reader with the schema in each file's footer
+    * and handed to `convert(schema)` before the next row is read (the
+    * reader reuses its row). */
+  private def readParquet[T](spark: SparkSession, fs: FileSystem, dir: Path)(
+      convert: StructType => InternalRow => T): Seq[T] = {
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val format = new ParquetFileFormat()
+    dataFiles(fs, dir).flatMap { f =>
+      val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, hadoopConf),
+        ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      val read = format.buildReaderWithPartitionValues(spark, schema, new StructType(), schema,
+        Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), hadoopConf)
+      val toT = convert(schema)
+      read(PartitionedFile(InternalRow.empty, SparkPath.fromPath(f.getPath), 0, f.getLen,
+        Array.empty, f.getModificationTime, f.getLen, Map.empty)).map(toT).toList
     }
   }
 }

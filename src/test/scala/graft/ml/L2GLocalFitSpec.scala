@@ -1,7 +1,5 @@
 package graft.ml
 
-import graft.SparkSpec
-import org.apache.commons.io.FileUtils
 import org.apache.spark.ml.{Pipeline, PipelineModel}
 import org.apache.spark.ml.classification.GBTClassifier
 import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
@@ -9,45 +7,14 @@ import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.ml.tree.graft.TreeBridge
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.json4s.jackson.JsonMethods
-
-import java.nio.file.Files
 
 /** The driver-side L2G fit against its oracle, Spark ML's distributed
   * `GBTClassifier` and `BinaryClassificationEvaluator` (which `src/main`
   * no longer uses). On rows in one partition the two must build the
   * same model bit for bit; a fixture that differs is a fault of the fit.
   */
-class L2GLocalFitSpec extends SparkSpec {
+class L2GLocalFitSpec extends L2GFixtures {
   import spark.implicits._
-
-  private val features = Seq("f1", "f2", "f3", "f4")
-
-  /** Coarse features: few distinct values, `f2` a copy of `f1` (every
-    * split of one ties with the other), `f3` constant, `f4` all zero. */
-  private def coarse(partitions: Int): DataFrame = {
-    val rows = (0 until 120).map { i =>
-      val f1 = (i % 4).toDouble
-      val label = if ((i % 4 >= 2) ^ (i % 7 == 0)) 1.0 else 0.0
-      (s"sl$i", s"g${i % 15}", f1, f1, 1.0, 0.0, label)
-    }
-    spark.sparkContext.parallelize(rows, partitions).toDF(
-      "studyLocusId", "geneId", "f1", "f2", "f3", "f4", L2GModel.LabelCol)
-  }
-
-  /** Fine features: `f1` has 200 distinct values (quantile thresholds
-    * apply past maxBins = 32), `f2` 21 values with zeros among them. */
-  private def fine(partitions: Int): DataFrame = {
-    val rng = new scala.util.Random(11)
-    val rows = (0 until 200).map { i =>
-      val f1 = rng.nextGaussian()
-      val f2 = (i % 21 - 10) / 10.0
-      val label = if (f1 + 0.5 * f2 + 0.4 * rng.nextGaussian() > 0.2) 1.0 else 0.0
-      (s"sl$i", s"g${i % 25}", f1, f2, rng.nextDouble(), (i % 3).toDouble, label)
-    }
-    spark.sparkContext.parallelize(rows, partitions).toDF(
-      "studyLocusId", "geneId", "f1", "f2", "f3", "f4", L2GModel.LabelCol)
-  }
 
   private def gbt(maxIter: Int, maxDepth: Int) = new GBTClassifier()
     .setLabelCol(L2GModel.LabelCol)
@@ -76,23 +43,6 @@ class L2GLocalFitSpec extends SparkSpec {
       TreeBridge.flatten(t.rootNode).productIterator
         .map(_.asInstanceOf[Array[_]].toSeq).toSeq
     }
-
-  /** The saved metadata of the GBT stage and of every tree, as JSON
-    * values with uid and timestamp removed. */
-  private def savedParams(m: PipelineModel): (Any, Seq[(Int, Any, Double)]) = {
-    val dir = Files.createTempDirectory("l2g_fit").toFile
-    try {
-      m.write.overwrite().save(dir.getAbsolutePath)
-      def json(s: String): Any = JsonMethods.parse(s)
-        .removeField { case (k, _) => k == "uid" || k == "timestamp" }.values
-      val stage = s"$dir/stages/1_*"
-      val meta = json(spark.read.text(s"$stage/metadata").as[String].collect().mkString)
-      val treesMeta = spark.read.parquet(s"$stage/treesMetadata").collect()
-        .map(r => (r.getInt(0), json(r.getString(1)), r.getDouble(2)))
-        .sortBy(_._1).toSeq
-      (meta, treesMeta)
-    } finally FileUtils.deleteDirectory(dir)
-  }
 
   private def assertSameModel(local: PipelineModel, ref: PipelineModel): Unit = {
     assert(trees(local) == trees(ref))

@@ -148,4 +148,24 @@ class TreeShapSpec extends SparkSpec {
     val names = row.getSeq[org.apache.spark.sql.Row](0).map(_.getString(0))
     assert(names == Seq("fa", "fb", "fc"))
   }
+
+  test("a model loaded by the engine explains as one loaded by PipelineModel.load") {
+    val rnd = new scala.util.Random(5)
+    val df = (1 to 200).map { i =>
+      val a = rnd.nextDouble(); val b = rnd.nextDouble()
+      (s"sl$i", s"g${i % 7}", a, b, if (a + 0.3 * b + 0.2 * rnd.nextDouble() > 0.7) 1.0 else 0.0)
+    }.toDF("studyLocusId", "geneId", "fa", "fb", L2GModel.LabelCol)
+    val dir = java.nio.file.Files.createTempDirectory("shap_io").toFile
+    try {
+      L2GModel.train(df, Seq("fa", "fb"), maxIter = 8, maxDepth = 3)
+        .write.overwrite().save(dir.getAbsolutePath)
+      def explain(m: org.apache.spark.ml.PipelineModel) =
+        L2GPrediction.explainByShap(m, df.drop(L2GModel.LabelCol), Seq("fa", "fb"))
+          .orderBy("studyLocusId", "geneId").collect().toSeq
+      val engine = explain(
+        org.apache.spark.ml.tree.graft.TreeBridge.loadModel(spark, dir.getAbsolutePath))
+      assert(engine.size == 200)
+      assert(engine == explain(org.apache.spark.ml.PipelineModel.load(dir.getAbsolutePath)))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  }
 }

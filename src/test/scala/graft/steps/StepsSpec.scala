@@ -426,6 +426,33 @@ class StepsSpec extends SparkSpec {
     assert(picked.size == 10 && picked.forall(_ <= 20L), picked.toString)
   }
 
+  test("l2g_score scores with a pipeline of other stages through Spark ML's reader") {
+    val in = tmp("lr_matrix")
+    val modelDir = tmp("lr_model")
+    val out = tmp("lr_scores")
+    (1 to 60).map(i => (s"sl$i", s"g${i % 9}", (i % 10) / 10.0, (i % 4).toDouble,
+      if (i % 10 >= 5) 1.0 else 0.0))
+      .toDF("studyLocusId", "geneId", "f1", "f2", graft.ml.L2GModel.LabelCol)
+      .write.parquet(in)
+    val matrix = spark.read.parquet(in)
+    val lr = new org.apache.spark.ml.Pipeline().setStages(Array(
+      new org.apache.spark.ml.feature.VectorAssembler()
+        .setInputCols(Array("f1", "f2")).setOutputCol("features"),
+      new org.apache.spark.ml.classification.LogisticRegression()
+        .setLabelCol(graft.ml.L2GModel.LabelCol).setMaxIter(10))).fit(matrix)
+    lr.write.overwrite().save(modelDir)
+    Steps.runFromArgs(spark, Seq("l2g_score", s"model=$modelDir", s"in=$in", s"out=$out"))
+    def byLocus(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("studyLocusId").select("studyLocusId", "score").as[(String, Double)]
+        .collect().toSeq
+    val scores = byLocus(spark.read.parquet(out))
+    assert(scores.size == 60 && scores.forall { case (_, p) => p >= 0 && p <= 1 })
+    // scored as the stock reader's model scores (the fitted one carries
+    // a training summary that does not serialize into a UDF)
+    assert(scores == byLocus(graft.ml.L2GModel.score(
+      org.apache.spark.ml.PipelineModel.load(modelDir), matrix)))
+  }
+
   test("pq index steps: build, append, search") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id").as("id"), col("embedding"))
