@@ -22,8 +22,9 @@ import org.apache.spark.storage.StorageLevel
   * }}}
   *
   * Contract: every cache-bearing operator takes its handle as a
-  * REQUIRED argument — there is no default handle, so nothing an
-  * operator persists is left without an owner. The caller either
+  * REQUIRED argument — there is no default handle (`NoDefaultHandleSpec`
+  * scans for one), so nothing an operator persists is left without an
+  * owner. The caller either
   * passes a `CacheHandle()` and releases it after the terminal action
   * (a production step, a test), passes [[CacheHandle.queryScope]] so a
   * shared-session harness frees it through
@@ -100,7 +101,10 @@ class CacheHandle(level: StorageLevel = StorageLevel.MEMORY_AND_DISK) {
     * plan runs no job. It stays because that matrix is a union whose
     * family subplans all read the shared caches inside one shuffle
     * stage: without it q_ml_l2g_features measured 2.09 → 2.32 s at
-    * sf0.001. Other builders leave their caches to AQE, which fills
+    * sf0.001. The factory persists a frame only when two of its
+    * subplans read it, so for inputs that share nothing (the lifecycle
+    * chain's credible sets + distances) the handle is empty and this
+    * runs no job. Other builders leave their caches to AQE, which fills
     * them as table-cache stages ahead of the stages that read them.
     *
     * The counts run CONCURRENTLY (bounded pool), submitted in

@@ -11,15 +11,17 @@ import org.apache.spark.sql.functions._
   * colocalisation.py:23-735, vep.py:21-272, other.py:20-362) with a
   * different physical shape: the reference computes each of its 28
   * features as an independent pipeline over the same inputs (28 scans
-  * of the credible sets at worst); here each family computes ALL its
-  * local features in ONE join + ONE groupBy using conditional
-  * aggregates, and all its neighbourhood variants in ONE
-  * protein-coding join + ONE window pass. Per family: 2 shuffles
-  * total, independent of feature count — the shape that survives a
-  * 100× scale-up.
+  * of the credible sets at worst); here the distance, VEP and
+  * isProteinCoding families compute ALL their local features in ONE
+  * join + ONE groupBy using conditional aggregates, each other family
+  * in one of its own, and the neighbourhood variants in ONE
+  * protein-coding join + ONE window pass per leg — a shuffle count
+  * independent of feature count, the shape that survives a 100×
+  * scale-up. [[computeFeatureMatrix]] is the one code path that
+  * computes each feature.
   *
   * All feature frames are wide: (studyLocusId, geneId, feature...).
-  * [[featureMatrix]] outer-joins families and zero-fills, matching the
+  * [[featureMatrix]] merges families and zero-fills, matching the
   * reference's long-to-wide pivot + fillna in its feature matrix
   * (reference: src/gentropy/dataset/l2g_feature_matrix.py).
   */
@@ -43,63 +45,6 @@ object L2GFeatures {
         col("tag.variantId").as("tagVariantId"),
         col("tag.posteriorProbability").as("posteriorProbability"),
         (col("tag.variantId") === col("variantId")).as("isSentinel"))
-
-  // ---------------------------------------------------------------- //
-  // Distance family (8 features)                                     //
-  // ---------------------------------------------------------------- //
-
-  /** All local distance features in one pass. `distances` carries
-    * (variantId, geneId, distanceFromTss[, distanceFromFootprint]).
-    * Mean features weight the linear distance score by posterior
-    * probability and sum; sentinel features take the lead variant's
-    * unweighted score; both log-scale into [0, 1] over the window.
-    * reference: src/gentropy/dataset/l2g_features/distance.py:21-80 */
-  def distanceFeatures(credSets: DataFrame, distances: DataFrame,
-                       genomicWindow: Int = GenomicWindow): DataFrame =
-    distanceFeaturesFromTags(explodedTags(credSets), distances, genomicWindow)
-
-  /** [[distanceFeatures]] over pre-exploded (ideally persisted) tags. */
-  def distanceFeaturesFromTags(tags: DataFrame, distances: DataFrame,
-                               genomicWindow: Int = GenomicWindow): DataFrame = {
-    val withFootprint = distances.columns.contains("distanceFromFootprint")
-    def score(c: String) = lit(genomicWindow) - col(c) + lit(1)
-    val base = Seq(
-      logScale(sum(score("distanceFromTss") * col("posteriorProbability")),
-        genomicWindow).as("distanceTssMean"),
-      logScale(max(when(col("isSentinel"), score("distanceFromTss"))),
-        genomicWindow).as("distanceSentinelTss"))
-    val fp = if (!withFootprint) Nil else Seq(
-      logScale(sum(score("distanceFromFootprint") * col("posteriorProbability")),
-        genomicWindow).as("distanceFootprintMean"),
-      logScale(max(when(col("isSentinel"), score("distanceFromFootprint"))),
-        genomicWindow).as("distanceSentinelFootprint"))
-    val aggs = base ++ fp
-    tags
-      .join(distances.withColumnRenamed("variantId", "tagVariantId"),
-        Seq("tagVariantId"))
-      .groupBy("studyLocusId", "geneId")
-      .agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Back-compat single-feature wrappers (kept for composability). */
-  def distanceMeanFeature(credSets: DataFrame, distances: DataFrame,
-                          distanceCol: String, featureName: String,
-                          genomicWindow: Int = GenomicWindow): DataFrame =
-    explodedTags(credSets)
-      .join(distances.withColumnRenamed("variantId", "tagVariantId"),
-        Seq("tagVariantId"))
-      .groupBy("studyLocusId", "geneId")
-      .agg(logScale(sum((lit(genomicWindow) - col(distanceCol) + 1) *
-        col("posteriorProbability")), genomicWindow).as(featureName))
-
-  def distanceSentinelFeature(credSets: DataFrame, distances: DataFrame,
-                              distanceCol: String, featureName: String,
-                              genomicWindow: Int = GenomicWindow): DataFrame =
-    credSets.select("studyLocusId", "variantId")
-      .join(distances, Seq("variantId"))
-      .groupBy("studyLocusId", "geneId")
-      .agg(logScale(first(lit(genomicWindow) - col(distanceCol) + 1),
-        genomicWindow).as(featureName))
 
   // ---------------------------------------------------------------- //
   // Colocalisation family (12 features)                              //
@@ -150,17 +95,10 @@ object L2GFeatures {
   }
 
   /** Artificial zero rows for protein-coding genes functionally linked
-    * to a locus' lead variant but absent from the colocalisation
-    * results, so neighbourhood normalisation covers them.
+    * (through the exploded `consequences`) to a locus' lead variant but
+    * absent from the colocalisation results, so neighbourhood
+    * normalisation covers them.
     * reference: src/gentropy/dataset/l2g_features/colocalisation.py:72-119 */
-  def extendMissingColocToNeighbourhoodGenes(
-      localFeatures: DataFrame, variantIndex: DataFrame, genes: DataFrame,
-      studyLoci: DataFrame): DataFrame =
-    extendMissingColocFromConsequences(localFeatures,
-      explodedConsequences(variantIndex), genes, studyLoci)
-
-  /** [[extendMissingColocToNeighbourhoodGenes]] over pre-exploded
-    * consequences. */
   def extendMissingColocFromConsequences(
       localFeatures: DataFrame, consequences: DataFrame, genes: DataFrame,
       studyLoci: DataFrame): DataFrame = {
@@ -185,7 +123,7 @@ object L2GFeatures {
   }
 
   // ---------------------------------------------------------------- //
-  // VEP family (4 features)                                          //
+  // Tag-keyed families: distance, VEP, isProteinCoding (7 local)     //
   // ---------------------------------------------------------------- //
 
   /** Transcript consequences exploded once — the shared right side of
@@ -199,24 +137,87 @@ object L2GFeatures {
         col("tc.biotype").as("biotype"),
         col("tc.distanceFromFootprint").as("distanceFromFootprint"))
 
-  /** Both local VEP severity features in one pass: credible-set max
-    * consequence score and PP-weighted mean, per (studyLocusId, geneId).
-    * `variantIndex` carries transcriptConsequences:
-    * array<struct<targetId, consequenceScore, ...>>.
-    * reference: src/gentropy/dataset/l2g_features/vep.py:21-75 */
-  def vepFeatures(credSets: DataFrame, variantIndex: DataFrame): DataFrame =
-    vepFeaturesFromTags(explodedTags(credSets),
-      explodedConsequences(variantIndex))
-
-  /** [[vepFeatures]] over pre-exploded tags and consequences. */
-  def vepFeaturesFromTags(tags: DataFrame, consequences: DataFrame): DataFrame =
-    tags
-      .join(consequences.withColumnRenamed("variantId", "tagVariantId")
-        .select("tagVariantId", "geneId", "severityScore"), Seq("tagVariantId"))
-      .groupBy("studyLocusId", "geneId")
-      .agg(
+  /** Every local tag-keyed feature the inputs allow, in ONE join + ONE
+    * (studyLocusId, geneId) groupBy: the per-variant right sides —
+    * `distances` (variantId, geneId, distanceFromTss[,
+    * distanceFromFootprint]) and the exploded `consequences` — merge
+    * once on (variantId, geneId) and join the tags once. Values equal
+    * separate per-family passes: each aggregate ignores the null
+    * columns of the other family's rows, and a key one family adds to
+    * another resolves to the same 0.0 the matrix zero-fill gives absent
+    * keys. None when neither right side is given.
+    *
+    *  - distance (reference: src/gentropy/dataset/l2g_features/distance.py:21-80):
+    *    mean features weight the linear score `window - d + 1` by
+    *    posterior probability and sum; sentinel features take the lead
+    *    variant's unweighted score; both log-scale into [0, 1].
+    *  - VEP (reference: src/gentropy/dataset/l2g_features/vep.py:21-75):
+    *    the maximum consequence score and the mean of score ×
+    *    posterior probability.
+    *  - isProteinCoding (reference: src/gentropy/dataset/l2g_features/other.py:85-145):
+    *    1.0 when a transcript within the window is protein coding, 0.0
+    *    when only others are.
+    *
+    * `clusterByLocus` pre-partitions the joined rows on studyLocusId for
+    * a neighbourhood window that follows. */
+  private def tagFamilies(tags: DataFrame, distances: Option[DataFrame],
+                          consequences: Option[DataFrame],
+                          clusterByLocus: Boolean): Option[DataFrame] = {
+    val distT = distances.map(_.withColumnRenamed("variantId", "tagVariantId"))
+    val consT = consequences.map(_
+      .withColumnRenamed("variantId", "tagVariantId")
+      .withColumnRenamed("distanceFromFootprint", "_consFootprint"))
+    val tagRight = (distT, consT) match {
+      case (Some(d), Some(c)) => Some(d.join(c, Seq("tagVariantId", "geneId"), "outer"))
+      case (d, c) => d.orElse(c)
+    }
+    tagRight.map { right =>
+      val window = GenomicWindow
+      def score(c: String) = lit(window) - col(c) + lit(1)
+      def distAggs(c: String, name: String) = Seq(
+        logScale(sum(score(c) * col("posteriorProbability")), window)
+          .as(s"distance${name}Mean"),
+        logScale(max(when(col("isSentinel"), score(c))), window)
+          .as(s"distanceSentinel$name"))
+      val dist = distT.toSeq.flatMap { d =>
+        distAggs("distanceFromTss", "Tss") ++
+          (if (d.columns.contains("distanceFromFootprint"))
+            distAggs("distanceFromFootprint", "Footprint") else Nil)
+      }
+      val vep = if (consT.isEmpty) Nil else Seq(
         max(col("severityScore")).as("vepMaximum"),
-        mean(col("severityScore") * col("posteriorProbability")).as("vepMean"))
+        mean(col("severityScore") * col("posteriorProbability")).as("vepMean"),
+        // the reference emits DISTINCT rows, which can yield both a 0.0
+        // and a 1.0 row for a gene with mixed-biotype transcripts; the
+        // max flag resolves the contradiction (documented deviation) so
+        // the pair keys stay unique
+        max(when(col("_consFootprint") <= window,
+          when(col("biotype") === "protein_coding", lit(1.0))
+            .otherwise(lit(0.0)))).as("isProteinCoding"))
+      val aggs = dist ++ vep
+      // when the neighbourhood window follows, pre-partition the joined
+      // tag block on studyLocusId — hash(studyLocusId) satisfies the
+      // groupBy(studyLocusId, geneId) clustering (a subset of its keys)
+      // AND the window's partitionBy(studyLocusId), so ONE
+      // exchange serves both where the old shape paid two
+      // (Exchange(sl,g) for the agg + Exchange(sl) for the window).
+      // The trade — the shared exchange moves raw joined rows instead
+      // of agg-reduced pairs — is cheap here: the (locus, gene) agg
+      // reduces rows <2x, far less than a full exchange costs.
+      val joined = tags.join(right, Seq("tagVariantId"))
+      val preparted =
+        if (clusterByLocus) joined.repartition(col("studyLocusId")) else joined
+      preparted
+        .groupBy("studyLocusId", "geneId")
+        .agg(aggs.head, aggs.tail: _*)
+    }
+  }
+
+  /** The local distance features alone, un-zero-filled: the factory's
+    * tag block over `credSets`' exploded tags and `distances` only. */
+  def distanceFeatures(credSets: DataFrame, distances: DataFrame): DataFrame =
+    tagFamilies(explodedTags(credSets), Some(distances), None,
+      clusterByLocus = false).get
 
   // ---------------------------------------------------------------- //
   // Other features                                                   //
@@ -257,43 +258,10 @@ object L2GFeatures {
         col("geneCount500kb"), col("proteinGeneCount500kb"))
   }
 
-  /** 1.0 when the (locus, gene) link is to a protein-coding transcript
-    * within the window, 0.0 otherwise.
-    * reference: src/gentropy/dataset/l2g_features/other.py:85-145 */
-  def isProteinCodingFeature(credSets: DataFrame, variantIndex: DataFrame,
-                             genomicWindow: Int = GenomicWindow): DataFrame =
-    isProteinCodingFromTags(explodedTags(credSets),
-      explodedConsequences(variantIndex), genomicWindow)
-
-  /** [[isProteinCodingFeature]] over pre-exploded tags/consequences. */
-  def isProteinCodingFromTags(tags: DataFrame, consequences: DataFrame,
-                              genomicWindow: Int = GenomicWindow): DataFrame = {
-    require(genomicWindow <= 500000, "Genomic window must be at most 500kb")
-    val genesInWindow = consequences
-      .filter(col("distanceFromFootprint") <= genomicWindow)
-      .select(col("variantId").as("tagVariantId"), col("geneId"),
-        col("biotype"))
-    tags
-      .filter(col("tagVariantId").isNotNull)
-      .join(genesInWindow, Seq("tagVariantId"))
-      // the reference emits DISTINCT rows, which can yield both a 0.0
-      // and a 1.0 row for a gene with mixed-biotype transcripts; we
-      // resolve the contradiction to the max flag (documented
-      // deviation) so the pair keys stay unique
-      .groupBy("studyLocusId", "geneId")
-      .agg(max(when(col("biotype") === "protein_coding", lit(1.0))
-        .otherwise(lit(0.0))).as("isProteinCoding"))
-  }
-
   /** Credible-set confidence class → numeric score, fanned out to the
-    * locus' functionally-linked genes.
+    * locus' functionally-linked genes (through the exploded
+    * `consequences`).
     * reference: src/gentropy/dataset/l2g_features/other.py:268-362 */
-  def credibleSetConfidenceFeature(credSets: DataFrame,
-                                   variantIndex: DataFrame): DataFrame =
-    credibleSetConfidenceFromConsequences(credSets,
-      explodedConsequences(variantIndex))
-
-  /** [[credibleSetConfidenceFeature]] over pre-exploded consequences. */
   def credibleSetConfidenceFromConsequences(
       credSets: DataFrame, consequences: DataFrame): DataFrame = {
     val score = when(col("confidence") === "SuSiE fine-mapped credible set with in-sample LD", 1.0)
@@ -312,42 +280,15 @@ object L2GFeatures {
   // Neighbourhood normalisation (shared by every family)             //
   // ---------------------------------------------------------------- //
 
-  /** For each feature column, append `<name>Neighbourhood` = local
-    * value over the regional max across the locus' protein-coding
-    * genes, in a single window pass over all columns.
+  /** For each feature column, append `<c>Neighbourhood` = local value
+    * over the regional max across the locus' protein-coding genes,
+    * IN-FRAME: one broadcast biotype lookup + one window pass adds
+    * every ratio to `wide` itself. Non-protein-coding genes get 0.0,
+    * the value the matrix zero-fill gives a key absent from a family,
+    * so the local frame stays one union leg of [[featureMatrix]] with
+    * a single consumer and needs no persist.
     * reference: the common_neighbourhood_*_logic functions
     * (e.g. src/gentropy/dataset/l2g_features/vep.py:77-130) */
-  def neighbourhoodFeatures(wide: DataFrame, genes: DataFrame,
-                            featureCols: Seq[String]): DataFrame = {
-    val w = Window.partitionBy("studyLocusId")
-    val coding = wide.join(
-      broadcast(genes.filter(col("biotype") === "protein_coding")
-        .select(col("id").as("geneId"))), Seq("geneId"))
-    // all ratios in ONE select: every window expression shares the same
-    // spec, so Catalyst plans a single Window operator — a per-column
-    // withColumn fold interleaves Projects that defeat CollapseWindow
-    // and stack one Window pass per feature (measured on the factory's
-    // in-frame twin below)
-    coding.select(col("studyLocusId") +: col("geneId") +:
-      featureCols.map(c =>
-        ratioToRegionalMax(col(c), max(col(c)).over(w))
-          .as(s"${c}Neighbourhood")): _*)
-  }
-
-  /** Back-compat single-feature neighbourhood wrapper. */
-  def neighbourhoodFeature(localFeature: DataFrame, genes: DataFrame,
-                           localName: String, featureName: String): DataFrame =
-    neighbourhoodFeatures(localFeature, genes, Seq(localName))
-      .withColumnRenamed(s"${localName}Neighbourhood", featureName)
-
-  /** [[neighbourhoodFeatures]] appended IN-FRAME instead of as a
-    * separate (studyLocusId, geneId) frame: one broadcast biotype
-    * lookup + one window pass adds every `<c>Neighbourhood` column to
-    * `wide` itself. Non-protein-coding genes get 0.0 — exactly the
-    * value the separate-frame shape gives them via the matrix
-    * zero-fill (they are absent from that frame). Halves the union
-    * volume of [[featureMatrix]] and drops a persist: the parent
-    * frame no longer needs caching for a second consumer. */
   def appendNeighbourhoodCols(wide: DataFrame, genes: DataFrame,
                               featureCols: Seq[String]): DataFrame = {
     val w = Window.partitionBy("studyLocusId")
@@ -459,29 +400,37 @@ object L2GFeatures {
         * materialisation at sf0.1). Defaults to
         * `explodedTags(credSets)`. */
       tags: Option[DataFrame] = None,
-      /** Pre-persisted FLAT credible-set projection (studyLocusId,
-        * studyId, variantId, chromosome, position[, confidence]) —
-        * callers that already cache this frame (e.g. because it also
-        * feeds their studyLoci union) pass it here and the factory
-        * consumes it directly instead of re-projecting and re-caching
-        * its own copy from `credSets`. */
+      /** A FLAT credible-set projection (studyLocusId, studyId,
+        * variantId, chromosome, position[, confidence]) the caller
+        * already holds — e.g. persisted because it also feeds their
+        * studyLoci union. The factory reads it as given and never
+        * persists it; without it, the factory projects `credSets`
+        * itself and persists that projection only when the inputs
+        * give it two or more readers. */
       flatCred: Option[DataFrame] = None)
 
   /** Compute every feature family the inputs allow, local +
-    * neighbourhood, as one wide matrix.
+    * neighbourhood, as one wide matrix. This is the only code that
+    * computes the tag-keyed, colocalisation, confidence and gene-count
+    * features; [[distanceFeatures]] reuses its tag block.
     *
-    * Sharing policy (measured at sf0.1): the ARRAY-heavy credible sets
-    * are never persisted — their columnar cache conversion costs more
-    * than re-running the codegen'd source aggregation. What IS
-    * persisted (on `cache`) are the FLAT frames
-    * each consumed by ≥2 subplans — the exploded transcript
-    * consequences (fused tag block + coloc-extension + confidence),
-    * the flat credible-set projection, and the local coloc aggregate
-    * (union leg + extension anti-join probe). Neighbourhood features
-    * are appended IN-FRAME by [[appendNeighbourhoodCols]], so the big
-    * per-family local aggregates have a single consumer and are never
-    * persisted. Callers release via `cache.release()` after the
-    * terminal action on the matrix.
+    * Sharing policy: a shared frame is persisted (on `cache`) only
+    * when the given inputs build two or more readers of it; a frame
+    * with one reader is computed once anyway, so persisting it would
+    * only add a job. The candidates are FLAT frames — the exploded
+    * transcript consequences (fused tag block, coloc extension,
+    * confidence), the flat credible-set projection (coloc right-side
+    * mapping, coloc extension, confidence, gene-count window) and the
+    * local coloc aggregate (union leg + extension anti-join probe),
+    * which always has both of its readers. The ARRAY-heavy
+    * credible sets are never persisted: their cache conversion costs
+    * more than re-running the codegen'd source aggregation (measured at
+    * sf0.1). Neighbourhood features are appended IN-FRAME by
+    * [[appendNeighbourhoodCols]], so the big per-family local
+    * aggregates have a single consumer. Inputs that share nothing (the
+    * lifecycle chain's credible sets + distances) persist nothing, and
+    * building the matrix then runs no Spark job. Callers release via
+    * `cache.release()` after the terminal action on the matrix.
     *
     * The shared frames are persisted PLAN-TRUNCATED through
     * [[graft.core.CacheHandle.persistTruncated]] (local checkpoint), so
@@ -494,73 +443,30 @@ object L2GFeatures {
                            cache: graft.core.CacheHandle): DataFrame = {
     // tags feed exactly one join (the fused tag-family block) — no persist
     val tags = in.tags.getOrElse(explodedTags(in.credSets))
-    val cons = in.variantIndex.map(vi =>
-      cache.persistTruncated(explodedConsequences(vi)))
-    // flat credible-set projection (no locus array): consumed by the
-    // coloc right-side mapping, the coloc extension, the confidence
-    // feature, and the gene-count window — persisting it once spares
-    // each of those a recompute of the caller's source aggregation,
-    // and unlike the array-bearing frame it columnar-caches cheaply.
-    // A caller-persisted projection (Inputs.flatCred) is used as-is.
-    val flatCred = in.flatCred.getOrElse(cache.persistTruncated(
+    val flat = in.flatCred.getOrElse(
       in.credSets.select(in.credSets.columns.filter(Seq("studyLocusId",
         "studyId", "variantId", "chromosome", "position", "confidence")
-        .contains).map(col).toIndexedSeq: _*)))
+        .contains).map(col).toIndexedSeq: _*))
+    val coloc = for (c <- in.coloc; si <- in.studyIndex) yield (c, si)
+    val extension = coloc.isDefined && in.genes.isDefined && in.variantIndex.isDefined
+    val confidence = in.variantIndex.isDefined && flat.columns.contains("confidence")
+    val geneCounts = in.genes.isDefined &&
+      Seq("chromosome", "position").forall(flat.columns.contains)
+    def shared(df: DataFrame, readers: Int) =
+      if (readers >= 2) cache.persistTruncated(df) else df
+    val cons = in.variantIndex.map(vi => shared(explodedConsequences(vi),
+      1 + Seq(extension, confidence).count(identity)))
+    // colocFeatures scans its study loci twice (right-side mapping +
+    // left semi-join); a caller's own projection is used as-is
+    val flatCred = if (in.flatCred.isDefined) flat else shared(flat,
+      (if (coloc.isDefined && in.studyLoci.isEmpty) 2 else 0) +
+        Seq(extension, confidence, geneCounts).count(identity))
     val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
-    // ---- fused tag-keyed families (distance + VEP + isProteinCoding):
-    // the three families share the SAME 600k-row tags join and the SAME
-    // (studyLocusId, geneId) groupBy, so merge their per-variant right
-    // sides once and compute all nine features with ONE join + ONE
-    // groupBy + ONE neighbourhood window instead of three of each.
-    // Values are unchanged: the aggregates ignore null columns from the
-    // other family's rows, and keys one family adds to another resolve
-    // to the same 0.0 the matrix zero-fill gives absent keys.
-    val distT = in.distances.map(_.withColumnRenamed("variantId", "tagVariantId"))
-    val consT = cons.map(_
-      .withColumnRenamed("variantId", "tagVariantId")
-      .withColumnRenamed("distanceFromFootprint", "_consFootprint"))
-    val tagRight = (distT, consT) match {
-      case (Some(d), Some(c)) => Some(d.join(c, Seq("tagVariantId", "geneId"), "outer"))
-      case (d, c) => d.orElse(c)
-    }
-    tagRight.foreach { right =>
-      val window = GenomicWindow
-      def score(c: String) = lit(window) - col(c) + lit(1)
-      val withFootprint =
-        distT.exists(_.columns.contains("distanceFromFootprint"))
-      val distAggs = if (distT.isEmpty) Nil else Seq(
-        logScale(sum(score("distanceFromTss") * col("posteriorProbability")),
-          window).as("distanceTssMean"),
-        logScale(max(when(col("isSentinel"), score("distanceFromTss"))),
-          window).as("distanceSentinelTss")) ++ (if (!withFootprint) Nil else Seq(
-        logScale(sum(score("distanceFromFootprint") * col("posteriorProbability")),
-          window).as("distanceFootprintMean"),
-        logScale(max(when(col("isSentinel"), score("distanceFromFootprint"))),
-          window).as("distanceSentinelFootprint")))
-      val vepAggs = if (consT.isEmpty) Nil else Seq(
-        max(col("severityScore")).as("vepMaximum"),
-        mean(col("severityScore") * col("posteriorProbability")).as("vepMean"),
-        max(when(col("_consFootprint") <= window,
-          when(col("biotype") === "protein_coding", lit(1.0))
-            .otherwise(lit(0.0)))).as("isProteinCoding"))
-      val aggs = distAggs ++ vepAggs
-      // r17: when the neighbourhood window follows, pre-partition the
-      // joined tag block on studyLocusId — hash(studyLocusId) satisfies
-      // the groupBy(studyLocusId, geneId) clustering (subset rule,
-      // guide §2.4) AND the window's partitionBy(studyLocusId), so ONE
-      // exchange serves both where the old shape paid two
-      // (Exchange(sl,g) for the agg + Exchange(sl) for the window).
-      // The trade — the shared exchange moves raw joined rows instead
-      // of agg-reduced pairs — is cheap here: the (locus, gene) agg
-      // reduces rows <2x, far less than a full exchange costs.
-      val joined = tags.join(right, Seq("tagVariantId"))
-      val preparted =
-        if (in.genes.isDefined) joined.repartition(col("studyLocusId"))
-        else joined
-      val local = preparted
-        .groupBy("studyLocusId", "geneId")
-        .agg(aggs.head, aggs.tail: _*)
+    // the distance, VEP and isProteinCoding families share ONE tags
+    // join + ONE groupBy + ONE neighbourhood window
+    tagFamilies(tags, in.distances, cons,
+      clusterByLocus = in.genes.isDefined).foreach { local =>
       frames += (in.genes match {
         case Some(g) =>
           val neighCols = local.columns
@@ -572,12 +478,12 @@ object L2GFeatures {
         case None => local
       })
     }
-    for (c <- in.coloc; si <- in.studyIndex) {
+    for ((c, si) <- coloc) {
+      val studyLoci = in.studyLoci.getOrElse(flatCred)
       (in.genes, cons) match {
         case (Some(g), Some(tc)) =>
           // two consumers (the union + the extension's anti-join probe)
-          val local = cache.persistTruncated(
-            colocFeatures(c, in.studyLoci.getOrElse(flatCred), si))
+          val local = cache.persistTruncated(colocFeatures(c, studyLoci, si))
           // the extension's zero rows carry local features = 0.0 —
           // exactly the matrix zero-fill for those keys — so the
           // extended frame subsumes the local one: merge local +
@@ -586,25 +492,18 @@ object L2GFeatures {
             extendMissingColocFromConsequences(local, tc, g, flatCred))
           frames += appendNeighbourhoodCols(extended, g, colocFeatureNames)
         case _ =>
-          frames += colocFeatures(c, in.studyLoci.getOrElse(flatCred), si)
+          frames += colocFeatures(c, studyLoci, si)
       }
     }
-    // VEP + isProteinCoding are folded into the fused tag-keyed block
-    // above; only the (lead-variant-keyed) confidence feature remains
-    cons.foreach { tc =>
-      if (flatCred.columns.contains("confidence"))
-        frames += credibleSetConfidenceFromConsequences(flatCred, tc)
-    }
-    for (g <- in.genes
-         if flatCred.columns.contains("position") &&
-           flatCred.columns.contains("chromosome")) {
+    for (tc <- cons if confidence)
+      frames += credibleSetConfidenceFromConsequences(flatCred, tc)
+    for (g <- in.genes if geneCounts)
       frames += geneCountFeatures(flatCred, g)
-    }
-    // materialise the shared caches NOW (triggers one cheap job per
-    // persisted frame): the union-assembled matrix evaluates every
-    // family subplan inside ONE shuffle stage, and concurrent branches
-    // racing a still-uncached parent would recompute its partitions
-    // redundantly (measured 2x end-to-end at sf0.1)
+    // materialise the shared caches NOW (one cheap job per persisted
+    // frame, none when nothing is shared): the matrix evaluates every
+    // family subplan inside ONE shuffle stage, and branches racing a
+    // still-uncached parent would recompute its partitions (measured
+    // 2x end-to-end at sf0.1)
     cache.materialize()
     featureMatrix(frames.toSeq)
   }

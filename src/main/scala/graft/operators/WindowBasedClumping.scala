@@ -138,9 +138,7 @@ object WindowBasedClumping {
     * sf0.1 bench. Rows tied on position with a cluster lead are
     * flagged as leads too (deterministic; the reference breaks such
     * ties arbitrarily by row order). */
-  def clump(df: DataFrame, distance: Int = 500000,
-            cache: graft.core.CacheHandle =
-              graft.core.CacheHandle.disabled): DataFrame = {
+  def clump(df: DataFrame, distance: Int = 500000): DataFrame = {
     // The sessionisation window runs in ONE branch only (the slim lead
     // aggregate, column-pruned to the 4 columns it needs). The wide
     // output branch never sees the window: final lead positions are
@@ -153,13 +151,11 @@ object WindowBasedClumping {
     // wide rows: the 100×-scale ChainBench measured that second
     // evaluation at ~3.3k CPU-seconds — more than everything else in
     // the operator combined.)
-    // Caching is OPT-IN and only worth it when the UPSTREAM feed is
-    // genuinely expensive (it is still read by both branches): the
-    // wide columnar cache build measured more expensive than a
-    // pushdown-pruned re-scan at mega-cluster scale (26.8 vs 14.2 s at
-    // the 100× rehearsal).
-    val input = cache.persist(df)
-    val withCluster = input.withColumn("cluster_id",
+    // Both branches re-read `df` rather than a persisted copy: the wide
+    // columnar cache build measured more expensive than a pushdown-
+    // pruned re-scan at mega-cluster scale (26.8 vs 14.2 s at the 100×
+    // rehearsal).
+    val withCluster = df.withColumn("cluster_id",
       clusterPeaks(col("studyId"), col("chromosome"), col("position"), distance))
 
     // Lead membership via a join against the per-cluster lead set,
@@ -181,7 +177,7 @@ object WindowBasedClumping {
     // to a shuffled join past the threshold.
     val clusterLeads = streamedClusterLeads(withCluster, distance.toLong)
       .withColumn("_isLead", lit(true))
-    val joined = input
+    val joined = df
       .withColumn("_posL", col("position").cast("long"))
       .join(clusterLeads, Seq("studyId", "chromosome", "_posL"), "left")
       .drop("_posL")
@@ -201,9 +197,7 @@ object WindowBasedClumping {
   }
 
   /** Leads only — rows that survived clumping. */
-  def leads(df: DataFrame, distance: Int = 500000,
-            cache: graft.core.CacheHandle =
-              graft.core.CacheHandle.disabled): DataFrame =
-    clump(df, distance, cache)
+  def leads(df: DataFrame, distance: Int = 500000): DataFrame =
+    clump(df, distance)
       .filter(ArrayFns.validRows(col("qualityControls"), Seq(WindowClumpedFlag)))
 }

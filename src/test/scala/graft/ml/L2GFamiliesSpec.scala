@@ -17,13 +17,21 @@ class L2GFamiliesSpec extends SparkSpec {
       Seq(TagF("v1", Some(0.8)), TagF("v2", Some(0.2))))
   ).toDF("studyLocusId", "variantId", "studyId", "chromosome", "position", "locus")
 
+  /** The factory's matrix over `in`, keyed by (studyLocusId, geneId). */
+  private def matrix(in: L2GFeatures.Inputs)
+      : Map[(String, String), org.apache.spark.sql.Row] = {
+    val h = graft.core.CacheHandle()
+    try L2GFeatures.computeFeatureMatrix(in, h).collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r).toMap
+    finally h.release()
+  }
+
   test("one-pass distance family computes mean and sentinel together") {
     val distances = Seq(
       ("v1", "g1", 1000L, 2000L), ("v2", "g1", 5000L, 6000L),
       ("v1", "g2", 250000L, 260000L)
     ).toDF("variantId", "geneId", "distanceFromTss", "distanceFromFootprint")
-    val out = L2GFeatures.distanceFeatures(credSets, distances).collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r).toMap
+    val out = matrix(L2GFeatures.Inputs(credSets, distances = Some(distances)))
     val g1 = out(("sl1", "g1"))
     // mean: log10(0.8*(W-1000+1) + 0.2*(W-5000+1)) / log10(W+1)
     val expMean = math.log10(0.8 * (W - 1000 + 1) + 0.2 * (W - 5000 + 1)) /
@@ -33,8 +41,15 @@ class L2GFamiliesSpec extends SparkSpec {
     val expSent = math.log10((W - 1000 + 1).toDouble) / math.log10(W + 1.0)
     assert(math.abs(g1.getAs[Double]("distanceSentinelTss") - expSent) < 1e-12)
     // footprint columns computed in the same pass
-    assert(!g1.isNullAt(g1.fieldIndex("distanceFootprintMean")))
-    assert(!g1.isNullAt(g1.fieldIndex("distanceSentinelFootprint")))
+    val expFpMean = math.log10(0.8 * (W - 2000 + 1) + 0.2 * (W - 6000 + 1)) /
+      math.log10(W + 1.0)
+    assert(math.abs(g1.getAs[Double]("distanceFootprintMean") - expFpMean) < 1e-12)
+    val expFpSent = math.log10((W - 2000 + 1).toDouble) / math.log10(W + 1.0)
+    assert(math.abs(g1.getAs[Double]("distanceSentinelFootprint") - expFpSent) < 1e-12)
+    // q_ml_l2g_distance's entry point runs the same aggregate block
+    val direct = L2GFeatures.distanceFeatures(credSets, distances).collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.toSeq).toMap
+    assert(direct == out.map { case (k, r) => k -> r.toSeq })
   }
 
   test("coloc family: six conditional maxima in one groupBy") {
@@ -72,26 +87,22 @@ class L2GFamiliesSpec extends SparkSpec {
         Tc("g2", 0.3, "lncRNA", 400000L))),
       ("v2", Seq(Tc("g1", 0.5, "protein_coding", 2000L)))
     ).toDF("variantId", "transcriptConsequences")
-    val vep = L2GFeatures.vepFeatures(credSets, variantIndex).collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r).toMap
-    val g1 = vep(("sl1", "g1"))
+    // both genes are protein coding, so both enter the regional max
+    val genes = Seq(("g1", "protein_coding", "1", 100000L),
+      ("g2", "protein_coding", "1", 150000L))
+      .toDF("id", "biotype", "chromosome", "tss")
+    val out = matrix(L2GFeatures.Inputs(credSets,
+      variantIndex = Some(variantIndex), genes = Some(genes)))
+    val g1 = out(("sl1", "g1"))
     assert(g1.getAs[Double]("vepMaximum") == 0.9)
     // mean of (0.9*0.8, 0.5*0.2)
     assert(math.abs(g1.getAs[Double]("vepMean") - (0.72 + 0.1) / 2) < 1e-12)
 
-    val pc = L2GFeatures.isProteinCodingFeature(credSets, variantIndex)
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
-    assert(pc(("sl1", "g1")) == 1.0)
-    assert(pc(("sl1", "g2")) == 0.0)
+    assert(g1.getAs[Double]("isProteinCoding") == 1.0)
+    assert(out(("sl1", "g2")).getAs[Double]("isProteinCoding") == 0.0)
 
-    val genes = Seq(("g1", "protein_coding"), ("g2", "protein_coding"))
-      .toDF("id", "biotype")
-    val local = L2GFeatures.vepFeatures(credSets, variantIndex)
-    val neigh = L2GFeatures
-      .neighbourhoodFeatures(local, genes, Seq("vepMaximum", "vepMean"))
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r).toMap
-    assert(neigh(("sl1", "g1")).getAs[Double]("vepMaximumNeighbourhood") == 1.0)
-    assert(math.abs(neigh(("sl1", "g2"))
+    assert(g1.getAs[Double]("vepMaximumNeighbourhood") == 1.0)
+    assert(math.abs(out(("sl1", "g2"))
       .getAs[Double]("vepMaximumNeighbourhood") - 0.3 / 0.9) < 1e-12)
   }
 

@@ -210,33 +210,31 @@ class LDClumpingL2GSpec extends SparkSpec {
       ("v2", "g1", 5000L), ("v2", "g2", 90000L)
     ).toDF("variantId", "geneId", "distanceFromTss")
 
-    val mean = L2GFeatures.distanceMeanFeature(credSets, distances,
-      "distanceFromTss", "distanceTssMean")
-    val m = mean.collect().map(r =>
-      r.getString(1) -> r.getDouble(2)).toMap
+    val genes = Seq(("g1", "protein_coding"), ("g2", "protein_coding"),
+      ("g3", "lncRNA")).toDF("id", "biotype")
+    val h = CacheHandle()
+    val matrix = L2GFeatures.computeFeatureMatrix(L2GFeatures.Inputs(credSets,
+      genes = Some(genes), distances = Some(distances)), h)
+    val rows = try matrix.collect().map(r => r.getAs[String]("geneId") -> r).toMap
+    finally h.release()
+    val m = rows.map { case (g, r) => g -> r.getAs[Double]("distanceTssMean") }
     val w = 500000.0
     val expectedG1 = math.log10((w - 1000 + 1) * 0.8 + (w - 5000 + 1) * 0.2) /
       math.log10(w + 1)
     assert(math.abs(m("g1") - expectedG1) < 1e-12)
     assert(m("g1") > m("g2")) // nearer gene scores higher
 
-    val sentinel = L2GFeatures.distanceSentinelFeature(credSets, distances,
-      "distanceFromTss", "distanceTssSentinel")
-    val s = sentinel.collect().map(r => r.getString(1) -> r.getDouble(2)).toMap
+    val s = rows.map { case (g, r) => g -> r.getAs[Double]("distanceSentinelTss") }
     assert(math.abs(s("g1") - math.log10(w - 1000 + 1) / math.log10(w + 1)) < 1e-12)
 
-    val genes = Seq(("g1", "protein_coding"), ("g2", "protein_coding"),
-      ("g3", "lncRNA")).toDF("id", "biotype")
-    val neigh = L2GFeatures.neighbourhoodFeature(mean, genes,
-      "distanceTssMean", "distanceTssMeanNeighbourhood")
-    val n = neigh.select("geneId", "distanceTssMeanNeighbourhood")
-      .as[(String, Double)].collect().toMap
+    val n = rows.map { case (g, r) =>
+      g -> r.getAs[Double]("distanceTssMeanNeighbourhood") }
     assert(n("g1") == 1.0) // regional max normalises to itself
     assert(n("g2") < 1.0 && n("g2") > 0.0)
 
-    val matrix = L2GFeatures.featureMatrix(Seq(mean, sentinel))
-    assert(matrix.columns.toSet ==
-      Set("studyLocusId", "geneId", "distanceTssMean", "distanceTssSentinel"))
-    assert(matrix.count() == 2)
+    assert(matrix.columns.toSet == Set("studyLocusId", "geneId",
+      "distanceTssMean", "distanceSentinelTss", "distanceTssMeanNeighbourhood",
+      "distanceSentinelTssNeighbourhood"))
+    assert(rows.size == 2)
   }
 }

@@ -350,8 +350,12 @@ class StepsSpec extends SparkSpec {
   test("l2g_feature_matrix releases its shared frames after the write") {
     // the factory persists its shared frames as local checkpoints,
     // which clearCache() cannot see: only the step's own handle release
-    // frees them in a long-lived session
+    // frees them in a long-lived session. The confidence column and the
+    // variant index give the consequences (tag block + confidence) and
+    // the credible-set projection (confidence + gene counts) two
+    // readers each, so the step has frames to release.
     val cs = tmp("l2g_cs")
+    val vi = tmp("l2g_vi")
     val dist = tmp("l2g_dist")
     val genes = tmp("l2g_genes")
     val out = tmp("l2g_out")
@@ -360,7 +364,17 @@ class StepsSpec extends SparkSpec {
       .withColumn("locus", array(
         struct(col("variantId"), lit(0.8).as("posteriorProbability")),
         struct(lit("v2").as("variantId"), lit(0.2).as("posteriorProbability"))))
+      .withColumn("confidence",
+        lit("SuSiE fine-mapped credible set with in-sample LD"))
       .write.parquet(cs)
+    Seq(("v1", "g1", 0.9, "protein_coding", 1000L),
+      ("v3", "g2", 0.3, "lncRNA", 4000L))
+      .toDF("variantId", "targetId", "consequenceScore", "biotype",
+        "distanceFromFootprint")
+      .select(col("variantId"), array(struct(col("targetId"),
+        col("consequenceScore"), col("biotype"), col("distanceFromFootprint")))
+        .as("transcriptConsequences"))
+      .write.parquet(vi)
     Seq(("v1", "g1", 1000L, 2000L), ("v2", "g2", 5000L, 6000L),
       ("v3", "g1", 250000L, 260000L))
       .toDF("variantId", "geneId", "distanceFromTss", "distanceFromFootprint")
@@ -370,8 +384,20 @@ class StepsSpec extends SparkSpec {
     val sc = spark.sparkContext
     val persistedBefore = sc.getPersistentRDDs.keySet
     val storedBefore = sc.getRDDStorageInfo.map(_.id).toSet
+    // the fixture's premise: the factory persists on these inputs
+    val probe = graft.core.CacheHandle()
+    try {
+      graft.ml.L2GFeatures.computeFeatureMatrix(graft.ml.L2GFeatures.Inputs(
+        credSets = spark.read.parquet(cs),
+        variantIndex = Some(spark.read.parquet(vi)),
+        genes = Some(spark.read.parquet(genes)),
+        distances = Some(spark.read.parquet(dist))), probe)
+      val shared = sc.getPersistentRDDs.keySet -- persistedBefore
+      assert(shared.size == 2, s"the factory persisted $shared on this fixture")
+    } finally probe.release(blocking = true)
     Steps.runFromArgs(spark, Seq("l2g_feature_matrix", s"credible_sets=$cs",
-      s"distances=$dist", s"gene_index=$genes", s"out=$out"))
+      s"variant_index=$vi", s"distances=$dist", s"gene_index=$genes",
+      s"out=$out"))
     assert(spark.read.parquet(out).count() > 0)
     val persisted = sc.getPersistentRDDs.keySet -- persistedBefore
     val stored = sc.getRDDStorageInfo.map(_.id).toSet -- storedBefore
