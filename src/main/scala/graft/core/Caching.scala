@@ -34,6 +34,12 @@ import org.apache.spark.storage.StorageLevel
   * subtree would be larger than the cluster's storage memory, e.g. a
   * full shingle inverted index over a 100 TB corpus whose source scan
   * is cheap columnar parquet).
+  *
+  * No method here runs a job to fill a cache: a registered frame fills
+  * in the first action that reads it (only the shuffle stages of a
+  * [[persistTruncated]] frame run earlier). Under AQE a persisted frame
+  * becomes a table-cache query stage that runs ahead of the stages
+  * reading it.
   */
 class CacheHandle(level: StorageLevel = StorageLevel.MEMORY_AND_DISK) {
   private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -62,8 +68,8 @@ class CacheHandle(level: StorageLevel = StorageLevel.MEMORY_AND_DISK) {
     * leaf `LogicalRDD` (optimization guide §3: "materialising an
     * intermediate result … truncates the plan"), so each consumer
     * costs one scan-leaf node regardless of how complex the frame's
-    * own plan was; [[materialize]] counts these frames like persisted
-    * ones.
+    * own plan was. Like a persisted frame, the checkpoint fills in the
+    * first action that reads it.
     *
     * Jobs DO run here under AQE: `Dataset.checkpoint` executes the
     * frame's physical plan to obtain its RDD, and `AdaptiveSparkPlanExec`
@@ -88,55 +94,6 @@ class CacheHandle(level: StorageLevel = StorageLevel.MEMORY_AND_DISK) {
     val cp = df.localCheckpoint(eager = false, level)
     synchronized { checkpointed += cp }
     cp
-  }
-
-  /** Compute and cache every registered frame NOW, one job per frame.
-    * Without this, the caller's single terminal action materialises the
-    * caches lazily, and concurrent consumers of a still-uncached frame
-    * in the same job race to compute its partitions redundantly; one
-    * cheap count per frame up front removes the duplicated work.
-    *
-    * Its one remaining caller is `L2GFeatures.computeFeatureMatrix`,
-    * and it runs at build time there, against the rule that building a
-    * plan runs no job. It stays because that matrix is a union whose
-    * family subplans all read the shared caches inside one shuffle
-    * stage: without it q_ml_l2g_features measured 2.09 → 2.32 s at
-    * sf0.001. The factory persists a frame only when two of its
-    * subplans read it, so for inputs that share nothing (the lifecycle
-    * chain's credible sets + distances) the handle is empty and this
-    * runs no job. Other builders leave their caches to AQE, which fills
-    * them as table-cache stages ahead of the stages that read them.
-    *
-    * The counts run CONCURRENTLY (bounded pool), submitted in
-    * registration order so parents (registered first by convention)
-    * get a head start over dependents. Sequential counts pay one full
-    * job-scheduling latency per frame — at benchmark scale that fixed
-    * cost rivals the compute itself; overlapping the jobs collapses it
-    * to ~max instead of sum. Worst case a dependent recomputes a few
-    * parent partitions the parent's own count has not cached yet —
-    * duplicated work, never wrong results.
-    *
-    * The parent-first head start is not left to caller convention: the
-    * frames are topologically reordered here (parents — frames whose
-    * analyzed plan is a subtree of another registered frame's plan —
-    * submitted first; stable, so already-parent-first registration
-    * order is unchanged). A caller that registers a dependent before
-    * its parent no longer silently grows the duplicated-compute
-    * window. */
-  def materialize(): Unit = {
-    val fs = CacheHandle.parentsFirst(
-      synchronized { frames.toList ++ checkpointed.toList })
-    if (fs.sizeIs <= 1) fs.foreach(_.count())
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(4, fs.size))
-      try {
-        val futures = fs.map(f => pool.submit(new java.util.concurrent.Callable[Long] {
-          def call(): Long = f.count()
-        }))
-        futures.foreach(_.get())
-      } finally pool.shutdown()
-    }
   }
 
   /** Take over every frame `other` holds, leaving `other` empty: this
@@ -172,23 +129,6 @@ object CacheHandle {
   def apply(): CacheHandle = new CacheHandle()
   def apply(level: StorageLevel): CacheHandle = new CacheHandle(level)
 
-  /** Topological order for [[CacheHandle.materialize]]: parents (frames
-    * whose analyzed plan is a subtree of another frame's plan) first.
-    * Containment COUNT is a valid topological key — if A's plan is a
-    * subtree of B's, anything containing B also contains A, so
-    * count(A) >= count(B) + 1 and descending-count order puts every
-    * parent before its dependents; the sort is stable, so an
-    * already-parent-first registration order is unchanged. */
-  private[graft] def parentsFirst(fs0: List[DataFrame]): List[DataFrame] =
-    if (fs0.sizeIs <= 1) fs0
-    else {
-      val plans = fs0.map(_.queryExecution.analyzed)
-      val contained = fs0.indices.map(i =>
-        fs0.indices.count(j => j != i &&
-          plans(j).exists(_.sameResult(plans(i)))))
-      fs0.indices.sortBy(i => -contained(i)).map(fs0).toList
-    }
-
   /** The handle of the lazily built registered queries, which have no
     * terminal-action hook of their own. A shared-session harness calls
     * [[releaseQueryScoped]] after each query's terminal action, so one
@@ -205,7 +145,6 @@ object CacheHandle {
   val disabled: CacheHandle = new CacheHandle() {
     override def persist(df: DataFrame): DataFrame = df
     override def persistTruncated(df: DataFrame): DataFrame = df
-    override def materialize(): Unit = ()
     override def adopt(other: CacheHandle): Unit = ()
     override def release(blocking: Boolean): Unit = ()
   }

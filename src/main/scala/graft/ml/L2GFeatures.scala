@@ -427,10 +427,12 @@ object L2GFeatures {
     * more than re-running the codegen'd source aggregation (measured at
     * sf0.1). Neighbourhood features are appended IN-FRAME by
     * [[appendNeighbourhoodCols]], so the big per-family local
-    * aggregates have a single consumer. Inputs that share nothing (the
-    * lifecycle chain's credible sets + distances) persist nothing, and
-    * building the matrix then runs no Spark job. Callers release via
-    * `cache.release()` after the terminal action on the matrix.
+    * aggregates have a single consumer. Building the matrix fills no
+    * cache: every shared frame fills in the caller's first action on the
+    * matrix. Inputs that share nothing (the lifecycle chain's credible
+    * sets + distances) persist nothing, and building the matrix then
+    * runs no Spark job. Callers release via `cache.release()` after the
+    * terminal action on the matrix.
     *
     * The shared frames are persisted PLAN-TRUNCATED through
     * [[graft.core.CacheHandle.persistTruncated]] (local checkpoint), so
@@ -438,7 +440,9 @@ object L2GFeatures {
     * consumer plan instead of re-embedding the frame's full subtree
     * (the InMemoryRelation shape carried 51 embedded cache subtrees
     * over 1,856 lines in the q_ml_l2g_features plan; planning + codegen
-    * were ~3-4 s of its ~6 s recorded cost). */
+    * were ~3-4 s of its ~6 s recorded cost). Under AQE a truncated
+    * frame's shuffle stages still run while the matrix is built; only
+    * its final stage waits for the caller's action. */
   def computeFeatureMatrix(in: Inputs,
                            cache: graft.core.CacheHandle): DataFrame = {
     // tags feed exactly one join (the fused tag-family block) — no persist
@@ -499,12 +503,6 @@ object L2GFeatures {
       frames += credibleSetConfidenceFromConsequences(flatCred, tc)
     for (g <- in.genes if geneCounts)
       frames += geneCountFeatures(flatCred, g)
-    // materialise the shared caches NOW (one cheap job per persisted
-    // frame, none when nothing is shared): the matrix evaluates every
-    // family subplan inside ONE shuffle stage, and branches racing a
-    // still-uncached parent would recompute its partitions (measured
-    // 2x end-to-end at sf0.1)
-    cache.materialize()
     featureMatrix(frames.toSeq)
   }
 }

@@ -939,15 +939,7 @@ object Q {
     // them straight to the fused kernels — no collect_list locus
     // rebuild only to re-explode it (saves a shuffle + per-locus
     // array builds).
-    val tags = queryCache.persist(
-      cred.withColumnRenamed("variantId", "tagVariantId"))
-    // materialise the cache BEFORE the fused kernel's first action: it
-    // reads tags through multiple subplans (self-join sides + locus
-    // aggregates), and concurrent consumers of a still-uncached frame
-    // race to compute its partitions redundantly (the run-to-run 3.5 ->
-    // 10 s wobble this query showed under the bench harness)
-    tags.count()
-    tags
+    queryCache.persist(cred.withColumnRenamed("variantId", "tagVariantId"))
   }
 
   /** Cache handle of every registered query that persists: the
@@ -1952,11 +1944,6 @@ object Q {
       .unionByName(flatCred.select(col("studyId")).distinct()
         .withColumn("studyType", lit("gwas"))
         .withColumn("geneId", lit(null).cast("long")))
-    // the source frames materialise together with the factory's own
-    // shared caches in ONE concurrent batch (queryCache is passed
-    // through as the factory cache below): parents were registered
-    // first, so they get the pool head start, and there is no second
-    // serial wave of materialisation jobs
     val coloc = t(s, dir, "orders")
       .select(col("o_orderkey").as("leftStudyLocusId"),
         (-(col("o_custkey") % 500) - 1).as("rightStudyLocusId"),

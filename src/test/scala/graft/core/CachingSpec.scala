@@ -5,19 +5,48 @@ import org.apache.logging.log4j.LogManager
 import org.apache.logging.log4j.core.{LogEvent, Logger}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.Property
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{CacheManager, LogicalRDD}
+import org.apache.spark.sql.functions.max
 import org.apache.spark.storage.StorageLevel
 
 import scala.jdk.CollectionConverters._
 
-/** The materialize() topological guard: concurrent counts give earlier
-  * submissions a head start, so a parent registered AFTER its dependent
-  * would lose the race by construction and every dependent partition
-  * compute would duplicate parent work. parentsFirst reorders by
-  * analyzed-plan containment so the head start no longer depends on
-  * caller registration order.
+/** Caches fill inside the action that reads them. A frame registered
+  * on a [[CacheHandle]] runs no job when it is persisted; the first
+  * action over a plan that reads it fills its cache entry, under AQE
+  * through a table-cache query stage that runs ahead of the stages
+  * reading it. These tests pin that: whatever order a parent and its
+  * dependents are registered in, one noop-sink action over a frame
+  * that reads them all fills every entry and returns the rows the
+  * uncached plan returns.
   */
 class CachingSpec extends SparkSpec {
+
+  /** Whether every partition of `df`'s cache entry is stored. */
+  private def loaded(df: DataFrame): Boolean =
+    spark.sharedState.cacheManager
+      .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+      .exists(_.cachedRepresentation.cacheBuilder.isCachedColumnBuffersLoaded)
+
+  /** Registers `order` on a fresh handle, checks nothing is cached yet,
+    * runs one noop-sink action over `reader` and checks every frame in
+    * `order` is cached and `reader` still returns its uncached rows.
+    * Each read goes through a fresh `select("*")`: a Dataset plans once
+    * and reuses that plan, cache lookups included. */
+  private def fillsInOneAction(order: Seq[DataFrame], reader: DataFrame): Unit = {
+    def rows = reader.select("*").collect().map(_.toString).sorted.toSeq
+    val expected = rows
+    assert(expected.nonEmpty)
+    val h = CacheHandle()
+    try {
+      order.foreach(h.persist)
+      assert(!order.exists(loaded), "a cache filled before any action")
+      Bench.consume(reader.select("*"))
+      assert(order.forall(loaded), "one action left a cache entry unfilled")
+      assert(rows == expected)
+    } finally h.release(blocking = true)
+  }
 
   test("parentsFirst puts a parent frame before its dependents " +
     "regardless of registration order") {
@@ -25,37 +54,23 @@ class CachingSpec extends SparkSpec {
     val parent = (1 to 100).toDF("v").filter($"v" % 2 === 0)
     val child = parent.groupBy(($"v" % 10).as("k")).count()
     val grandchild = child.filter($"k" > 2)
-    // worst-case registration order: most-dependent first
-    val ordered = CacheHandle.parentsFirst(List(grandchild, child, parent))
-    assert(ordered.map(System.identityHashCode) ==
-      List(parent, child, grandchild).map(System.identityHashCode))
-    // already-correct order is unchanged (stable)
-    val kept = CacheHandle.parentsFirst(List(parent, child, grandchild))
-    assert(kept.map(System.identityHashCode) ==
-      List(parent, child, grandchild).map(System.identityHashCode))
-    // unrelated frames keep registration order (stable at count 0)
-    val a = (1 to 3).toDF("a")
-    val b = (1 to 3).toDF("b")
-    assert(CacheHandle.parentsFirst(List(a, b))
-      .map(System.identityHashCode) ==
-      List(a, b).map(System.identityHashCode))
+    // reads each of the three frames directly
+    val reader = grandchild
+      .join(child.select($"k", $"count".as("c2")), "k")
+      .join(parent.groupBy(($"v" % 10).as("k")).agg(max($"v").as("m")), "k")
+    for (order <- Seq(grandchild, child, parent).permutations)
+      fillsInOneAction(order, reader)
   }
 
   test("materialize caches every frame when a dependent is registered " +
     "before its parent") {
     import spark.implicits._
-    val h = CacheHandle()
     val parent = (1 to 50).toDF("v").filter($"v" > 5)
     val child = parent.groupBy(($"v" % 5).as("k")).count()
-    // dependent first — the order the guard exists to survive
-    h.persist(child)
-    h.persist(parent)
-    try {
-      h.materialize()
-      assert(parent.storageLevel.useMemory || parent.storageLevel.useDisk)
-      assert(child.storageLevel.useMemory || child.storageLevel.useDisk)
-      assert(child.count() == 5)
-    } finally h.release(blocking = true)
+    val reader = child.join(
+      parent.groupBy(($"v" % 5).as("k")).agg(max($"v").as("m")), "k")
+    // dependent first
+    fillsInOneAction(Seq(child, parent), reader)
   }
 
   test("persistTruncated stores the checkpoint at the handle's storage level") {
@@ -63,13 +78,12 @@ class CachingSpec extends SparkSpec {
     val h = CacheHandle(StorageLevel.MEMORY_ONLY_SER)
     val cp = h.persistTruncated((1 to 20).toDF("v").filter($"v" % 3 === 0))
     try {
-      h.materialize()
+      assert(cp.count() == 6)
       val levels = cp.queryExecution.analyzed.collect {
         case l: LogicalRDD => l.rdd.getStorageLevel
       }
       assert(levels.nonEmpty, "no LogicalRDD leaf behind the truncated frame")
       assert(levels.forall(l => !l.deserialized && l.useMemory), levels.mkString(","))
-      assert(cp.count() == 6)
     } finally h.release(blocking = true)
   }
 

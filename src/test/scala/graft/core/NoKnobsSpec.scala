@@ -23,7 +23,7 @@ class NoKnobsSpec extends AnyFunSuite {
 
   /** (file under src/main/scala/graft, variable) reads still allowed.
     * The stage profiler's switch goes when the run-metrics path
-    * replaces the profiler (ROADMAP item 3). */
+    * replaces the profiler (ROADMAP item 6). */
   private val allowed = Set(
     "GraftSession.scala" -> "SPARK_GRAFT_CPUS",
     "Bench.scala" -> "SPARK_GRAFT_SF_DIR",

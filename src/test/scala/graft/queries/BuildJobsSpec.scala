@@ -11,7 +11,11 @@ import java.nio.file.Files
 /** Building a registered query's frame runs no Spark job: every job
   * belongs to the caller's terminal action. Checked on the six
   * queries of perfbench's query_mix, over tiny TPC-H-ish tables
-  * generated here (the columns those queries read). */
+  * generated here (the columns those queries read), and on every
+  * registered query over the sf0.001 test data, where the queries that
+  * still run a driver loop (or a truncating checkpoint's shuffle
+  * stages) while they are built are listed with their exact job
+  * count. */
 class BuildJobsSpec extends SparkSpec {
 
   private val queryMix = Seq("q_ml_l2g_gold_standard", "q_gx_ld_clump",
@@ -56,6 +60,19 @@ class BuildJobsSpec extends SparkSpec {
     d.getAbsolutePath
   }
 
+  /** Build-time jobs of the queries that still run some, exactly: a
+    * count that drops must drop here too, so the list only shrinks. */
+  private val buildJobs = Map(
+    "q_ann_ivf" -> 1, "q_ann_pq" -> 1, "q_ann_sq8" -> 2,
+    "q_dedup_cluster_histogram" -> 10, "q_dedup_components" -> 10,
+    "q_dedup_containment" -> 5, "q_dedup_decontaminate_bloom" -> 3,
+    "q_dedup_keep_best" -> 10, "q_dedup_ngram_jaccard" -> 5,
+    "q_dedup_semantic" -> 2, "q_kmeans_step" -> 2,
+    "q_ml_l2g_features" -> 7, "q_pack_shards" -> 2, "q_pca_cov" -> 2,
+    "q_s14_ontology_closure" -> 7, "q_search_rrf" -> 7,
+    "q_sim_hard_negatives" -> 5, "q_split_leakage_safe" -> 10,
+    "q_text_bpe" -> 2)
+
   override def afterAll(): Unit = {
     FileUtils.deleteDirectory(new java.io.File(dir))
     super.afterAll()
@@ -70,4 +87,21 @@ class BuildJobsSpec extends SparkSpec {
         Bench.consume(df) // the frame still runs
       } finally CacheHandle.releaseQueryScoped()
     }
+
+  test("building every registered query runs only its listed jobs") {
+    val sf = "/root/testdata/sf0.001"
+    val mismatches = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
+      case (name, build) =>
+        val (_, jobs) =
+          try JobCount(spark)(build(spark, sf))
+          finally {
+            CacheHandle.releaseQueryScoped()
+            spark.sharedState.cacheManager.clearCache()
+          }
+        val want = buildJobs.getOrElse(name, 0)
+        if (jobs == want) None else Some(s"$name: $jobs jobs, listed $want")
+    }
+    assert(mismatches.isEmpty, mismatches.mkString("\n"))
+    assert(buildJobs.keySet.subsetOf(SparkEntry.queries.keySet))
+  }
 }
