@@ -9,9 +9,9 @@ import org.apache.spark.sql.SparkSession
   * Mirrors the role of the reference's `Session`
   * (reference: src/gentropy/common/session.py:16-59) without the Hail
   * config. Designed for a real cluster: AQE on (runtime coalesce + skew
-  * join), Kryo, the band-join optimizer rule, and a shuffle-partition
-  * count sized by the caller (on a 1000-executor cluster this would be
-  * set to ~2-3x total cores via --conf).
+  * join), Kryo, and a shuffle-partition count sized by the caller (on a
+  * 1000-executor cluster this would be set to ~2-3x total cores via
+  * --conf).
   *
   * Every setting is a default: a key the launcher already set
   * (spark-submit's `--master`/`--conf`, which arrive as `spark.*` system
@@ -24,8 +24,6 @@ object GraftSession {
     * bench suite at sf0.1: local[16] ran 25% under local[4], and past 16
     * GC/scheduler overhead on a 32-thread box ate the gain). */
   private val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(16)(_.toInt)
-
-  private val Extensions = classOf[graft.plans.GraftExtensions].getName
 
   private def defaults(master: String, shufflePartitions: Int): Seq[(String, String)] = Seq(
     "spark.master" -> master,
@@ -85,17 +83,11 @@ object GraftSession {
     "spark.ui.enabled" -> "false")
 
   /** What [[builder]] sets on top of `launcher`: every default whose key
-    * the launcher left unset, and `spark.sql.extensions` with the
-    * band-join extension (plans/BandJoin.scala) appended unless the
-    * launcher already lists it — so the rule is registered exactly once
-    * and a launcher's own extensions are kept. */
+    * the launcher left unset. It registers no `spark.sql.extensions`, so
+    * a launcher's own list passes through untouched. */
   private[graft] def settings(master: String, shufflePartitions: Int,
-                              launcher: SparkConf): Seq[(String, String)] = {
-    val listed = launcher.get("spark.sql.extensions", "")
-      .split(",").map(_.trim).filter(_.nonEmpty)
-    defaults(master, shufflePartitions).filterNot { case (k, _) => launcher.contains(k) } :+
-      ("spark.sql.extensions" -> (listed :+ Extensions).distinct.mkString(","))
-  }
+                              launcher: SparkConf): Seq[(String, String)] =
+    defaults(master, shufflePartitions).filterNot { case (k, _) => launcher.contains(k) }
 
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     settings(master, shufflePartitions, new SparkConf())

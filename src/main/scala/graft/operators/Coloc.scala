@@ -54,7 +54,8 @@ object Coloc {
         logsumexp(lbf + rbf).as("logsum12"),
         (max(when(isBoth && lpp > PosteriorCutoff && rpp > PosteriorCutoff, 1)
           .otherwise(0)) > 0).as("anySnpBothSidesHigh"),
-        betaRatioSignAverage(s).as("betaRatioSignAverage"))
+        betaRatioSignAverage(s.getField("left_beta"), s.getField("right_beta"))
+          .as("betaRatioSignAverage"))
     hypothesisPosteriors(grouped, priorC1, priorC2, priorC12)
   }
 
@@ -144,8 +145,6 @@ object Coloc {
     val rbf = coalesce(col("right_logBF"), lit(0.0))
     val lpp = coalesce(col("left_posteriorProbability"), lit(0.0))
     val rpp = coalesce(col("right_posteriorProbability"), lit(0.0))
-    val lb = col("left_beta")
-    val rb = col("right_beta")
     val pairAgg = m
       .groupBy("chromosome", "leftStudyLocusId", "rightStudyLocusId",
         "rightStudyType")
@@ -156,8 +155,8 @@ object Coloc {
         logsumexp(lbf + rbf).as("lse12ab"),
         (max(when(lpp > PosteriorCutoff && rpp > PosteriorCutoff, 1)
           .otherwise(0)) > 0).as("anySnpBothSidesHigh"),
-        avg(when(lb.isNotNull && rb.isNotNull && lb =!= 0 && rb =!= 0,
-          signum(lb / rb))).as("betaRatioSignAverage"))
+        betaRatioSignAverage(col("left_beta"), col("right_beta"))
+          .as("betaRatioSignAverage"))
 
     // pair → per-locus aggregates of both sides; the locus aggregate is
     // tiny relative to the pair table (one row per locus), so AQE
@@ -225,16 +224,14 @@ object Coloc {
   def eCaviarFused(tags: DataFrame, intraStudy: Boolean = false): DataFrame = {
     val lpp = col("left_posteriorProbability")
     val rpp = col("right_posteriorProbability")
-    val lb = col("left_beta")
-    val rb = col("right_beta")
     Overlaps.matchedTagPairs(tags, intraStudy)
       .groupBy("leftStudyLocusId", "rightStudyLocusId", "rightStudyType",
         "chromosome")
       .agg(
         count(lit(1)).as("numberColocalisingVariants"),
         sum(lpp * rpp).as("clpp"),
-        avg(when(lb.isNotNull && rb.isNotNull && lb =!= 0 && rb =!= 0,
-          signum(lb / rb))).as("betaRatioSignAverage"))
+        betaRatioSignAverage(col("left_beta"), col("right_beta"))
+          .as("betaRatioSignAverage"))
       .withColumn("colocalisationMethod", lit("eCAVIAR"))
   }
 
@@ -249,23 +246,23 @@ object Coloc {
         sum(when(isBoth, 1L).otherwise(0L)).as("numberColocalisingVariants"),
         sum(s.getField("left_posteriorProbability") *
           s.getField("right_posteriorProbability")).as("clpp"),
-        betaRatioSignAverage(s).as("betaRatioSignAverage"))
+        betaRatioSignAverage(s.getField("left_beta"), s.getField("right_beta"))
+          .as("betaRatioSignAverage"))
       .withColumn("colocalisationMethod", lit("eCAVIAR"))
   }
 
-  /** Average sign of left/right beta ratio per pair, folded into the same
+  /** Average sign of the left/right beta ratio per pair, over the
+    * left (`lb`) and right (`rb`) beta columns — the one expression of
+    * every COLOC and eCAVIAR aggregate here, folded into the same
     * groupBy as the hypothesis aggregation: `avg` ignores nulls, so the
     * `when` filter reproduces the reference's pre-filter + mean exactly
     * (reference: src/gentropy/dataset/study_locus_overlap.py:55-83)
     * while executing the overlaps subtree exactly once — the join-back
     * formulation re-ran the whole explode→self-join→align pyramid.
     * Pairs with zero qualifying tags yield null, as the left join did. */
-  private def betaRatioSignAverage(s: Column): Column = {
-    val lb = s.getField("left_beta")
-    val rb = s.getField("right_beta")
+  private def betaRatioSignAverage(lb: Column, rb: Column): Column =
     avg(when(lb.isNotNull && rb.isNotNull && lb =!= 0 && rb =!= 0,
       signum(lb / rb)))
-  }
 
   /** Standalone average beta-ratio sign per pair (kept for direct use).
     * reference: src/gentropy/dataset/study_locus_overlap.py:55-83 */
@@ -273,7 +270,8 @@ object Coloc {
     val s = col("statistics")
     overlaps
       .groupBy("leftStudyLocusId", "rightStudyLocusId", "chromosome")
-      .agg(betaRatioSignAverage(s).as("betaRatioSignAverage"))
+      .agg(betaRatioSignAverage(s.getField("left_beta"), s.getField("right_beta"))
+        .as("betaRatioSignAverage"))
       .filter(col("betaRatioSignAverage").isNotNull)
   }
 }

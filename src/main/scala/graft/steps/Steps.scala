@@ -110,22 +110,17 @@ object Steps {
 
     Step("colocalisation",
       "COLOC + eCAVIAR over credible-set overlaps",
-      // the release is load-bearing in a chained session: findOverlaps
-      // persists the exploded tags AND the peak pairs (corpus-scale at
-      // 10x), and leaking them starved every later stage of storage
-      // memory (the ChainBench 10x run measured the NEXT stage at
-      // 17x/decade before this release)
+      // the release is load-bearing in a chained session: the exploded
+      // tags are persisted (corpus-scale at 10x), and leaking them
+      // starved every later stage of storage memory (the ChainBench
+      // 10x run measured the NEXT stage at 17x/decade before this
+      // release)
       (s, a) => releasing { h =>
-        // both methods take their fused O(tags)+O(intersection) scale
-        // paths; method=coloc_classic / ecaviar_classic keep the
-        // aligned-overlaps formulation for parity runs
+        // both methods take their fused O(tags)+O(intersection) paths
         def tags = h.persist(Overlaps.explodeLoci(read(s, a("in"))))
-        def overlaps = Overlaps.findOverlaps(read(s, a("in")), cache = h)
         write(a.get("method").map(_.toLowerCase) match {
           case Some("ecaviar") => Coloc.eCaviarFused(tags)
           case Some("coloc") | None => Coloc.colocaliseFused(tags)
-          case Some("ecaviar_classic") => Coloc.eCaviar(overlaps)
-          case Some("coloc_classic") => Coloc.colocalise(overlaps)
           case Some(other) =>
             throw new IllegalArgumentException(s"Unknown method '$other'")
         }, a("out"))

@@ -12,14 +12,15 @@ import scala.jdk.CollectionConverters._
 class GraftSessionSpec extends SparkSpec {
   import spark.implicits._
 
-  private val Rule = "graft.plans.BandJoinRewrite"
   private val Kryo = "org.apache.spark.serializer.KryoSerializer"
 
+  // the name predates the band-join rule's removal: the session now
+  // registers no optimizer rule, and plans range joins as written
   test("the shared test session carries the band-join rule, UTC, Kryo and the 64k floor") {
-    assert(SessionRules.optimizerRules(spark) == Seq(Rule))
+    assert(SessionRules.optimizerRules(spark) == Nil)
     val df = Seq(1L, 50L).toDF("pos")
       .join(Seq((0L, 60L)).toDF("lo", "hi"), col("pos").between(col("lo"), col("hi")))
-    assert(df.queryExecution.optimizedPlan.toString.contains("_graft_band"))
+    assert(!df.queryExecution.optimizedPlan.toString.contains("_graft_band"))
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(spark.sparkContext.getConf.get("spark.serializer") == Kryo)
     assert(spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize") == "64k")
@@ -37,7 +38,7 @@ class GraftSessionSpec extends SparkSpec {
     assert(effective("spark.serializer") == Kryo)
     assert(effective("spark.sql.session.timeZone") == "UTC")
     assert(effective("spark.sql.adaptive.coalescePartitions.minPartitionSize") == "64k")
-    assert(effective("spark.sql.extensions") == "graft.plans.GraftExtensions")
+    assert(!effective.contains("spark.sql.extensions"))
     assert(effective("spark.sql.codegen.cache.maxEntries") == "2048")
     val sized = new SparkConf(false).set("spark.sql.codegen.cache.maxEntries", "7")
     assert((sized.getAll.toMap ++ GraftSession.settings("local[2]", 1, sized))
@@ -60,18 +61,23 @@ class GraftSessionSpec extends SparkSpec {
     assert(round() == 0)
   }
 
+  // settings never sets spark.sql.extensions: a launcher's list,
+  // the retired graft.plans.GraftExtensions included, passes through
   test("the extension is listed once, after any the launcher registers") {
-    def extensions(listed: String): String = GraftSession.settings("local[2]", 1,
-      new SparkConf(false).set("spark.sql.extensions", listed)).toMap.apply("spark.sql.extensions")
-    assert(extensions("graft.plans.GraftExtensions") == "graft.plans.GraftExtensions")
-    assert(extensions("com.example.Ext, graft.plans.GraftExtensions") ==
-      "com.example.Ext,graft.plans.GraftExtensions")
-    assert(extensions("com.example.Ext") == "com.example.Ext,graft.plans.GraftExtensions")
+    for (listed <- Seq("graft.plans.GraftExtensions",
+        "com.example.Ext, graft.plans.GraftExtensions", "com.example.Ext")) {
+      val launcher = new SparkConf(false).set("spark.sql.extensions", listed)
+      val set = GraftSession.settings("local[2]", 1, launcher)
+      assert(!set.exists(_._1 == "spark.sql.extensions"), listed)
+      assert((launcher.getAll.toMap ++ set).apply("spark.sql.extensions") == listed)
+    }
   }
 
   test("a session launched with --master/--conf keeps them and registers the rule once") {
     // a fresh JVM, because the launcher's settings arrive as spark.*
-    // system properties before the first session of the process
+    // system properties before the first session of the process. The
+    // launcher still lists the removed extension class: Spark logs a
+    // warning, builds the session, and registers no rule.
     val jvm = ManagementFactory.getRuntimeMXBean
     val cmd = Seq(s"${sys.props("java.home")}/bin/java") ++
       jvm.getInputArguments.asScala.filter(_.startsWith("--add-opens")) ++
@@ -88,7 +94,7 @@ class GraftSessionSpec extends SparkSpec {
     val lines = java.nio.file.Files.readAllLines(out).asScala.toList
     val probe = lines.find(_.startsWith("PROBE ")).getOrElse(
       fail(s"no PROBE line (exit ${p.exitValue}):\n${lines.takeRight(30).mkString("\n")}"))
-    assert(probe == s"PROBE local[1] 6000 $Kryo $Rule")
+    assert(probe == s"PROBE local[1] 6000 $Kryo")
   }
 }
 
@@ -97,10 +103,10 @@ class GraftSessionSpec extends SparkSpec {
 object GraftSessionProbe {
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.getOrCreate("local[3]", 32)
-    println(Seq("PROBE", spark.sparkContext.master,
+    println((Seq("PROBE", spark.sparkContext.master,
       spark.conf.get("spark.sql.shuffle.partitions"),
-      spark.sparkContext.getConf.get("spark.serializer"),
-      SessionRules.optimizerRules(spark).mkString(",")).mkString(" "))
+      spark.sparkContext.getConf.get("spark.serializer")) ++
+      SessionRules.optimizerRules(spark)).mkString(" "))
     spark.stop()
   }
 }

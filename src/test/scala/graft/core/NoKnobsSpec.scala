@@ -11,7 +11,8 @@ import scala.jdk.CollectionConverters._
   * runs. The scan covers the library packages and the entry points
   * (the top-level files of `src/main/scala/graft`). The library takes its
   * configuration as arguments; the entry points keep only the reads
-  * listed in [[allowed]].
+  * listed in [[allowed]]. No file names a `spark.graft.*` session-conf
+  * key either: that is the same fork, set through `spark.conf`.
   */
 class NoKnobsSpec extends AnyFunSuite {
 
@@ -71,5 +72,20 @@ class NoKnobsSpec extends AnyFunSuite {
 
   test("entry points read only their allow-listed env vars") {
     check(scalaFiles(root, 1), !_.contains('/'))
+  }
+
+  // a session conf is a knob too: `spark.conf.set` forks a plan the
+  // same way an env var does, and no allow-list admits one
+  test("no source file names a spark.graft.* session-conf key") {
+    val files = scanned.map(root.resolve).filter(Files.isDirectory(_))
+      .flatMap(scalaFiles(_, Int.MaxValue)) ++ scalaFiles(root, 1)
+    assert(files.nonEmpty, s"scan found no sources under $root")
+    val bad = files.flatMap { f =>
+      Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if line.contains("\"spark.graft.") =>
+          s"  ${root.relativize(f)}:${i + 1}: ${line.trim}"
+      }
+    }
+    assert(bad.isEmpty, "spark.graft.* conf keys:\n" + bad.mkString("\n"))
   }
 }

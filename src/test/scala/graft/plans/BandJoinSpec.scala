@@ -40,69 +40,77 @@ class BandJoinSpec extends SparkSpec {
     }
   }
 
-  // the rule is registered on the shared session by GraftSession
+  /** (chrom, pos, name) rows of `df`, sorted: a multiset to compare. */
+  private def rows(df: DataFrame): Seq[(String, Long, String)] =
+    df.select("chrom", "pos", "name").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq.sorted
+
+  private def equiFree(p: DataFrame, iv: DataFrame): DataFrame =
+    p.join(iv, col("pos").between(col("lo"), col("hi")))
+
+  // no session rule rewrites range joins: an equi-free range join takes
+  // the band path only through an explicit keyless bandJoin call
   test("rewrite rule: fires on equi-free range joins, result unchanged") {
-    // no equi conjunct — the BroadcastNestedLoopJoin shape
-    val df = points.join(intervals, col("pos").between(col("lo"), col("hi")))
-    val optimized = df.queryExecution.optimizedPlan
-    assert(optimized.toString.contains("_graft_band"),
-      "rule should have injected band keys")
-    assert(optimized.toString.toLowerCase.contains("explode"))
-    val expected = points.select("pos").as[Long].collect().flatMap { p =>
-      intervals.collect().filter(r => p >= r.getLong(1) && p <= r.getLong(2))
-        .map(r => (p, r.getString(3)))
-    }.toSet
-    val got = df.select(col("pos"), col("name")).collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(got == expected)
+    val expected = rows(equiFree(points, intervals))
+    // without the chromosome key the c2 points also match the c1
+    // intervals b and c, so this is not the keyed join's result
+    assert(expected.toSet != naive)
+    for (width <- Seq(1L, 7L, 100L, 1000000L)) {
+      val banded = BandJoin.bandJoin(points, intervals,
+        "pos", "lo", "hi", width, pointKeys = Nil, intervalKeys = Nil)
+      assert(rows(banded) == expected, s"width=$width")
+    }
   }
 
   test("rewrite rule: leaves equi joins, hinted joins, and outer joins alone") {
-    val equi = points.join(intervals,
-      col("chrom") === col("ichrom") && col("pos").between(col("lo"), col("hi")))
-    assert(!equi.queryExecution.optimizedPlan.toString.contains("_graft_band"))
-    val hinted = points.join(broadcast(intervals),
-      col("pos").between(col("lo"), col("hi")))
-    assert(!hinted.queryExecution.optimizedPlan.toString.contains("_graft_band"))
-    val outer = points.join(intervals,
-      col("pos").between(col("lo"), col("hi")), "left")
-    assert(!outer.queryExecution.optimizedPlan.toString.contains("_graft_band"))
+    val between = col("pos").between(col("lo"), col("hi"))
+    val joins = Map(
+      "equi" -> points.join(intervals, col("chrom") === col("ichrom") && between),
+      "hinted" -> points.join(broadcast(intervals), between),
+      "outer" -> points.join(intervals, between, "left"),
+      "equi-free inner" -> equiFree(points, intervals))
+    for ((shape, df) <- joins) {
+      val optimized = df.queryExecution.optimizedPlan.toString
+      assert(!optimized.contains("_graft_band"), s"$shape join: $optimized")
+      assert(!optimized.toLowerCase.contains("explode"), s"$shape join: $optimized")
+    }
   }
 
   test("auto width follows the typical interval length under skew") {
-    val rule = BandJoinRewrite(spark)
-    // 950 short intervals (~1k) + 50 long outliers (100k): p95 ≈ 1k,
-    // so the derived width must track the typical length, not the
-    // outliers (which stay fan-out-bounded by the maxLen/4096 floor)
+    // 950 short intervals (~1k) + 50 long outliers (100k): width 1024
+    // tracks the typical length, so each outlier explodes to ~100 bands
     val skewed = (1 to 1000).map { i =>
+      val lo = i.toLong * 1000000L
       val len = if (i % 20 == 0) 100000L else 1000L
-      (i.toLong * 1000000L, i.toLong * 1000000L + len)
-    }.toDF("lo", "hi")
-    val plan = skewed.queryExecution.analyzed
-    val lo = plan.output.find(_.name == "lo").get
-    val hi = plan.output.find(_.name == "hi").get
-    val w = rule.deriveWidth(plan, lo, hi)
-    assert(w.exists(v => v >= 512 && v <= 4096), s"derived $w")
-    // all-long intervals: width scales up with them
-    val long = (1 to 100).map(i => (0L, 10000000L)).toDF("lo", "hi")
-    val planL = long.queryExecution.analyzed
-    val wL = rule.deriveWidth(planL,
-      planL.output.find(_.name == "lo").get,
-      planL.output.find(_.name == "hi").get)
-    assert(wL.exists(_ >= (1L << 23)), s"derived $wL")
-    // degenerate (all zero-length) falls back
-    val degen = Seq((5L, 5L), (7L, 7L)).toDF("lo", "hi")
-    val planD = degen.queryExecution.analyzed
-    assert(rule.deriveWidth(planD,
-      planD.output.find(_.name == "lo").get,
-      planD.output.find(_.name == "hi").get).isEmpty)
+      ("c1", lo, lo + len, s"i$i")
+    }.toDF("ichrom", "lo", "hi", "name")
+    // points on, just inside and just outside both bounds of every
+    // interval, plus one deep inside the long ones' span
+    val pts = (1 to 1000).flatMap { i =>
+      val lo = i.toLong * 1000000L
+      Seq(lo - 1, lo, lo + 1, lo + 999, lo + 1000, lo + 1001, lo + 50000,
+        lo + 99999, lo + 100000, lo + 100001)
+    }.map(p => ("c1", p)).toDF("chrom", "pos")
+    val expected = rows(equiFree(pts, skewed))
+    assert(expected.length == 950 * 4 + 50 * 8)
+    val banded = BandJoin.bandJoin(pts, skewed, "pos", "lo", "hi", 1024L)
+    assert(rows(banded) == expected)
   }
 
   test("rewrite rule: disabled by conf") {
-    spark.conf.set("spark.graft.bandJoin.enabled", "false")
+    // the retired spark.graft.bandJoin.* keys are inert: setting them
+    // changes no plan
+    val (p, iv) = (points, intervals)
+    val plain = equiFree(p, iv).queryExecution.optimizedPlan
+    spark.conf.set("spark.graft.bandJoin.enabled", "true")
+    spark.conf.set("spark.graft.bandJoin.width", "7")
     try {
-      val df = points.join(intervals, col("pos").between(col("lo"), col("hi")))
-      assert(!df.queryExecution.optimizedPlan.toString.contains("_graft_band"))
-    } finally spark.conf.unset("spark.graft.bandJoin.enabled")
+      val withKeys = equiFree(p, iv).queryExecution.optimizedPlan
+      assert(withKeys.canonicalized == plain.canonicalized)
+      assert(!withKeys.toString.contains("_graft_band"))
+    } finally {
+      spark.conf.unset("spark.graft.bandJoin.enabled")
+      spark.conf.unset("spark.graft.bandJoin.width")
+    }
   }
 }

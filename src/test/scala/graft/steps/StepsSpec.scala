@@ -32,6 +32,15 @@ class StepsSpec extends SparkSpec {
       Steps.runFromArgs(spark, Seq("pics", "malformed-arg")))
   }
 
+  test("colocalisation runs only the fused methods: method=coloc_classic is unknown") {
+    for (method <- Seq("coloc_classic", "ecaviar_classic")) {
+      val e = intercept[IllegalArgumentException](
+        Steps.runFromArgs(spark, Seq("colocalisation", s"in=${tmp("coloc_in")}",
+          s"out=${tmp("coloc_out")}", s"method=$method")))
+      assert(e.getMessage == s"Unknown method '$method'")
+    }
+  }
+
   test("window_based_clumping step runs end-to-end on parquet") {
     val in = tmp("sumstats_in")
     val out = tmp("clumped_out")
