@@ -35,15 +35,14 @@ import org.apache.spark.storage.StorageLevel
   * full shingle inverted index over a 100 TB corpus whose source scan
   * is cheap columnar parquet).
   *
-  * No method here runs a job to fill a cache: a registered frame fills
-  * in the first action that reads it (only the shuffle stages of a
-  * [[persistTruncated]] frame run earlier). Under AQE a persisted frame
-  * becomes a table-cache query stage that runs ahead of the stages
-  * reading it.
+  * No method here runs a job: a registered frame fills in the first
+  * action that reads it. Under AQE a persisted frame becomes a
+  * table-cache query stage that runs ahead of the stages reading it.
+  * A persisted frame keeps its lineage, so a block lost with an
+  * executor is recomputed rather than failing the job.
   */
 class CacheHandle(level: StorageLevel = StorageLevel.MEMORY_AND_DISK) {
   private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-  private val checkpointed = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
   /** Persist `df` at the handle's storage level and remember it. A
     * frame whose plan computes the same result as one the handle
@@ -56,72 +55,21 @@ class CacheHandle(level: StorageLevel = StorageLevel.MEMORY_AND_DISK) {
     df
   }
 
-  /** Persist `df` with PLAN TRUNCATION: a non-eager local checkpoint.
-    *
-    * [[persist]] leaves an InMemoryRelation in the logical plan, and
-    * every scan site of the cached frame EMBEDS its full cached
-    * subtree — a frame scanned from 6 consumers contributes its plan
-    * 6 times to analysis/optimization/codegen (the q_ml_l2g_features
-    * formatted plan carried 51 embedded cache subtrees over 1,856
-    * lines; ~3-4 s of its ~6 s recorded cost was planning + codegen,
-    * not execution). A local checkpoint replaces the subtree with a
-    * leaf `LogicalRDD` (optimization guide §3: "materialising an
-    * intermediate result … truncates the plan"), so each consumer
-    * costs one scan-leaf node regardless of how complex the frame's
-    * own plan was. Like a persisted frame, the checkpoint fills in the
-    * first action that reads it.
-    *
-    * Jobs DO run here under AQE: `Dataset.checkpoint` executes the
-    * frame's physical plan to obtain its RDD, and `AdaptiveSparkPlanExec`
-    * runs every shuffle stage of that plan synchronously while doing
-    * so. Only the final (post-shuffle) stage — the one whose partitions
-    * the checkpoint stores — waits for the first action. A frame with
-    * no exchange runs no job here.
-    *
-    * The trade: checkpointed partitions store row-based (vs columnar
-    * cache) and are not fault-tolerant to executor loss — at cluster
-    * scale a reliable checkpoint / write-and-read-back is the
-    * equivalent with the same plan-truncation property. They are
-    * stored at the handle's level (Spark adds disk to it, as every
-    * local checkpoint does).
-    *
-    * Release discipline: `cacheManager.clearCache()` does NOT drop
-    * checkpointed RDDs, so frames persisted this way MUST be released
-    * through this handle. The checkpoint (and the shuffle stages it
-    * runs) happens outside the handle's lock; only the bookkeeping
-    * holds it, so concurrent callers do not serialise their stages. */
-  def persistTruncated(df: DataFrame): DataFrame = {
-    val cp = df.localCheckpoint(eager = false, level)
-    synchronized { checkpointed += cp }
-    cp
-  }
-
   /** Take over every frame `other` holds, leaving `other` empty: this
     * handle's [[release]] now drops them. */
   def adopt(other: CacheHandle): Unit = {
-    val (fs, cps) = other.synchronized {
-      val taken = (other.frames.toList, other.checkpointed.toList)
+    val fs = other.synchronized {
+      val taken = other.frames.toList
       other.frames.clear()
-      other.checkpointed.clear()
       taken
     }
-    synchronized { frames ++= fs; checkpointed ++= cps }
+    synchronized { frames ++= fs }
   }
 
   /** Unpersist every frame registered since construction / last release. */
   def release(blocking: Boolean = false): Unit = synchronized {
     frames.foreach(_.unpersist(blocking))
     frames.clear()
-    // checkpointed frames persist through their backing RDD, not the
-    // cache manager — unpersist the RDD behind the LogicalRDD leaf
-    checkpointed.foreach { cp =>
-      cp.queryExecution.analyzed.foreach {
-        case l: org.apache.spark.sql.execution.LogicalRDD =>
-          l.rdd.unpersist(blocking)
-        case _ => ()
-      }
-    }
-    checkpointed.clear()
   }
 }
 
@@ -144,7 +92,6 @@ object CacheHandle {
   /** No-op handle: `persist` passes through, nothing is cached. */
   val disabled: CacheHandle = new CacheHandle() {
     override def persist(df: DataFrame): DataFrame = df
-    override def persistTruncated(df: DataFrame): DataFrame = df
     override def adopt(other: CacheHandle): Unit = ()
     override def release(blocking: Boolean): Unit = ()
   }

@@ -434,15 +434,12 @@ object L2GFeatures {
     * runs no Spark job. Callers release via `cache.release()` after the
     * terminal action on the matrix.
     *
-    * The shared frames are persisted PLAN-TRUNCATED through
-    * [[graft.core.CacheHandle.persistTruncated]] (local checkpoint), so
-    * every one of their scan sites contributes a leaf node to the
-    * consumer plan instead of re-embedding the frame's full subtree
-    * (the InMemoryRelation shape carried 51 embedded cache subtrees
-    * over 1,856 lines in the q_ml_l2g_features plan; planning + codegen
-    * were ~3-4 s of its ~6 s recorded cost). Under AQE a truncated
-    * frame's shuffle stages still run while the matrix is built; only
-    * its final stage waits for the caller's action. */
+    * The shared frames are plain [[graft.core.CacheHandle.persist]]s,
+    * so a lost block is recomputed from lineage. Each scan site then
+    * embeds the frame's cached subtree in the consumer plan; at sf0.1
+    * that costs no measurable time against a local checkpoint's leaf
+    * (`q_ml_l2g_features` on 4 CPUs, 7 interleaved pairs, medians 12.03 s vs
+    * 12.11 s, inside the checkpoint side's quartiles). */
   def computeFeatureMatrix(in: Inputs,
                            cache: graft.core.CacheHandle): DataFrame = {
     // tags feed exactly one join (the fused tag-family block) — no persist
@@ -457,7 +454,7 @@ object L2GFeatures {
     val geneCounts = in.genes.isDefined &&
       Seq("chromosome", "position").forall(flat.columns.contains)
     def shared(df: DataFrame, readers: Int) =
-      if (readers >= 2) cache.persistTruncated(df) else df
+      if (readers >= 2) cache.persist(df) else df
     val cons = in.variantIndex.map(vi => shared(explodedConsequences(vi),
       1 + Seq(extension, confidence).count(identity)))
     // colocFeatures scans its study loci twice (right-side mapping +
@@ -487,7 +484,7 @@ object L2GFeatures {
       (in.genes, cons) match {
         case (Some(g), Some(tc)) =>
           // two consumers (the union + the extension's anti-join probe)
-          val local = cache.persistTruncated(colocFeatures(c, studyLoci, si))
+          val local = cache.persist(colocFeatures(c, studyLoci, si))
           // the extension's zero rows carry local features = 0.0 —
           // exactly the matrix zero-fill for those keys — so the
           // extended frame subsumes the local one: merge local +

@@ -390,8 +390,9 @@ object Dedup {
     *
     * Scale notes: each round's edge state lives on its own handle,
     * released once the next round has replaced it, and every few rounds
-    * the state is a local checkpoint so the plan does not deepen with
-    * the iteration count; the final state moves to the caller's handle.
+    * the state is persisted as a plan leaf over its RDD so the plan
+    * does not deepen with the iteration count; the final state moves
+    * to the caller's handle.
     * Per round: 2 hash groupBys + 2 equi-joins + a set-equality probe
     * (count + left-anti limit 1) on the persisted state. Hot vertices
     * (a doc paired with millions) skew the neighbourhood groupBy; AQE
@@ -468,11 +469,16 @@ object Dedup {
         .select(col("v").as("u"), col("m").as("v"))
         .unionByName(minsS.select(col("u"), col("m").as("v")))
         .distinct()
-      // truncate lineage every 3 rounds: persist alone still grows the
-      // logical plan linearly with iterations
+      // every third round the persisted frame is a plan leaf over
+      // small's RDD. A round's plan reads the last round's about 12
+      // times (nbrs reads edges twice, large nbrs twice, small large
+      // three times), so an uncut plan's rendering grows geometrically
+      // with rounds: without the cut, explaining a 20-node path graph's
+      // plan ran out of memory. The RDD keeps its lineage, so a lost
+      // block is still recomputed.
       val nextState = graft.core.CacheHandle()
-      val next = if (iter % 3 == 2) nextState.persistTruncated(small)
-                 else nextState.persist(small)
+      val next = nextState.persist(if (iter % 3 == 2)
+        small.sparkSession.createDataFrame(small.rdd, small.schema) else small)
       val nextCnt = next.count()
       // fixpoint ⟺ identical distinct edge sets: equal cardinality and
       // no edge in next missing from the previous round

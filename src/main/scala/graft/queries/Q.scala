@@ -945,11 +945,10 @@ object Q {
   /** Cache handle of every registered query that persists: the
     * operators' intermediates (dedup signatures, BM25 postings,
     * clumping tag frames, gold-standard expansions) and the builders'
-    * own shared inputs, including plan-truncating checkpoints that
-    * `cacheManager.clearCache()` cannot see. A registered query has no
-    * terminal-action hook of its own, so a shared-session harness
-    * frees them through `CacheHandle.releaseQueryScoped()` after each
-    * query's terminal action. */
+    * own shared inputs. A registered query has no terminal-action hook
+    * of its own, so a shared-session harness frees them through
+    * `CacheHandle.releaseQueryScoped()` after each query's terminal
+    * action. */
   private val queryCache = graft.core.CacheHandle.queryScope
 
   /** The r12 lifecycle chain's fine-mapping locus extraction as an
@@ -1878,13 +1877,11 @@ object Q {
     // lineitem groupBy once per persisted consumer — at bench scale
     // those duplicated source aggregations and their serial
     // materialisation jobs cost more than the feature math itself.
-    // r17: persists are plan-truncating (local checkpoint — see
-    // CacheHandle.persistTruncated): every scan site of
-    // a shared frame is then a LogicalRDD leaf instead of an embedded
-    // InMemoryRelation subtree, collapsing the 1,856-line / 51-cache-
-    // subtree formatted plan whose planning+codegen dominated this
-    // query's recorded cost.
-    val flatCred = queryCache.persistTruncated(
+    // A plain persist keeps lineage. Each scan site embeds the cached
+    // subtree, which at sf0.1 costs no measurable time against a local
+    // checkpoint's leaf (4 CPUs, 7 interleaved pairs, medians 12.03 s vs
+    // 12.11 s, inside the checkpoint side's quartiles).
+    val flatCred = queryCache.persist(
       spread(s, t(s, dir, "lineitem"), col("l_orderkey"))
       .groupBy(col("l_orderkey"))
       .agg(min(col("l_partkey")).as("_leadPart"),
@@ -1927,7 +1924,7 @@ object Q {
         (col("_sk") + 1000).as("studyId"))
     // tiny (500 rows) but read by the studyLoci union AND the study
     // index — persist so the orders aggregation runs once
-    val qtlLociP = queryCache.persistTruncated(qtlLoci)
+    val qtlLociP = queryCache.persist(qtlLoci)
     // both studyLoci and studyIndex now derive from the two caches
     // above — no separate persists or counts; each consumer pays a
     // cache scan plus a 500-row union

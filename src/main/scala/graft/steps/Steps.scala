@@ -79,9 +79,7 @@ object Steps {
     * operators' persisted frames once its writes are done. Per-step
     * spark-submit never needs the release (JVM exit drops caches), but
     * a long-lived session chaining many steps would otherwise
-    * accumulate them — and plan-truncated frames (local checkpoints)
-    * are invisible to `clearCache()`, so this release is their only
-    * reclamation path. */
+    * accumulate them. */
   private def releasing(body: graft.core.CacheHandle => Unit): Unit = {
     val handle = graft.core.CacheHandle()
     try body(handle) finally handle.release()

@@ -284,14 +284,14 @@ class DedupSpec extends SparkSpec {
   test("contraction rounds leave no persisted RDD once the handle is released") {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
-    // path 0-1-...-19 takes 5+ star rounds, so round 3's local
-    // checkpoint runs; threshold 0 keeps every round distributed
+    // path 0-1-...-19 takes 5+ star rounds, so round 3's cut to an
+    // RDD leaf runs; threshold 0 keeps every round distributed
     val edges = (0L until 19L).map(i => (i, i + 1)).toDF("idA", "idB")
     val cache = CacheHandle()
     val (labels, rounds) = Dedup.connectedComponentsWithRounds(
       edges, unionFindThreshold = 0L, cache = cache)
     assert(labels.count() == 20L)
-    assert(rounds >= 3, s"took $rounds rounds; the checkpoint round never ran")
+    assert(rounds >= 3, s"took $rounds rounds; the cut round never ran")
     cache.release()
     // the ContextCleaner may drop older RDDs meanwhile; none may be added
     val left = sc.getPersistentRDDs.keySet -- before

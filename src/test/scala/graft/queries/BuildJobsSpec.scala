@@ -13,9 +13,8 @@ import java.nio.file.Files
   * queries of perfbench's query_mix, over tiny TPC-H-ish tables
   * generated here (the columns those queries read), and on every
   * registered query over the sf0.001 test data, where the queries that
-  * still run a driver loop (or a truncating checkpoint's shuffle
-  * stages) while they are built are listed with their exact job
-  * count. */
+  * still run a driver loop while they are built are listed with their
+  * exact job count. */
 class BuildJobsSpec extends SparkSpec {
 
   private val queryMix = Seq("q_ml_l2g_gold_standard", "q_gx_ld_clump",
@@ -68,7 +67,7 @@ class BuildJobsSpec extends SparkSpec {
     "q_dedup_containment" -> 5, "q_dedup_decontaminate_bloom" -> 3,
     "q_dedup_keep_best" -> 10, "q_dedup_ngram_jaccard" -> 5,
     "q_dedup_semantic" -> 2, "q_kmeans_step" -> 2,
-    "q_ml_l2g_features" -> 7, "q_pack_shards" -> 2, "q_pca_cov" -> 2,
+    "q_pack_shards" -> 2, "q_pca_cov" -> 2,
     "q_s14_ontology_closure" -> 7, "q_search_rrf" -> 7,
     "q_sim_hard_negatives" -> 5, "q_split_leakage_safe" -> 10,
     "q_text_bpe" -> 2)

@@ -356,18 +356,16 @@ class StepsSpec extends SparkSpec {
     assert(spark.read.parquet(cents).count() == 2)
   }
 
-  test("l2g_feature_matrix releases its shared frames after the write") {
-    // the factory persists its shared frames as local checkpoints,
-    // which clearCache() cannot see: only the step's own handle release
-    // frees them in a long-lived session. The confidence column and the
-    // variant index give the consequences (tag block + confidence) and
-    // the credible-set projection (confidence + gene counts) two
-    // readers each, so the step has frames to release.
+  /** Parquet inputs of `l2g_feature_matrix` on which the factory shares
+    * two frames. The confidence column and the variant index give the
+    * consequences (tag block + confidence) and the credible-set
+    * projection (confidence + gene counts) two readers each. Returns
+    * the credible-set, variant-index, distance and gene-index paths. */
+  private def l2gSharedInputs(): (String, String, String, String) = {
     val cs = tmp("l2g_cs")
     val vi = tmp("l2g_vi")
     val dist = tmp("l2g_dist")
     val genes = tmp("l2g_genes")
-    val out = tmp("l2g_out")
     Seq(("sl1", "v1", "s1", "1", 100000L), ("sl2", "v3", "s2", "1", 300000L))
       .toDF("studyLocusId", "variantId", "studyId", "chromosome", "position")
       .withColumn("locus", array(
@@ -390,19 +388,35 @@ class StepsSpec extends SparkSpec {
       .write.parquet(dist)
     Seq(("g1", "protein_coding", "1", 100000L), ("g2", "lncRNA", "1", 150000L))
       .toDF("id", "biotype", "chromosome", "tss").write.parquet(genes)
+    (cs, vi, dist, genes)
+  }
+
+  /** The feature matrix the factory builds from [[l2gSharedInputs]]. */
+  private def l2gSharedMatrix(cache: graft.core.CacheHandle) = {
+    val (cs, vi, dist, genes) = l2gSharedInputs()
+    graft.ml.L2GFeatures.computeFeatureMatrix(graft.ml.L2GFeatures.Inputs(
+      credSets = spark.read.parquet(cs),
+      variantIndex = Some(spark.read.parquet(vi)),
+      genes = Some(spark.read.parquet(genes)),
+      distances = Some(spark.read.parquet(dist))), cache)
+  }
+
+  test("l2g_feature_matrix releases its shared frames after the write") {
+    // a long-lived session keeps the factory's shared frames until the
+    // step's own handle releases them
+    val (cs, vi, dist, genes) = l2gSharedInputs()
+    val out = tmp("l2g_out")
     val sc = spark.sparkContext
     val persistedBefore = sc.getPersistentRDDs.keySet
     val storedBefore = sc.getRDDStorageInfo.map(_.id).toSet
-    // the fixture's premise: the factory persists on these inputs
+    // the fixture's premise: the factory persists on these inputs, so
+    // the matrix reads two cache-manager entries
     val probe = graft.core.CacheHandle()
     try {
-      graft.ml.L2GFeatures.computeFeatureMatrix(graft.ml.L2GFeatures.Inputs(
-        credSets = spark.read.parquet(cs),
-        variantIndex = Some(spark.read.parquet(vi)),
-        genes = Some(spark.read.parquet(genes)),
-        distances = Some(spark.read.parquet(dist))), probe)
-      val shared = sc.getPersistentRDDs.keySet -- persistedBefore
-      assert(shared.size == 2, s"the factory persisted $shared on this fixture")
+      val shared = l2gSharedMatrix(probe).queryExecution.withCachedData.collect {
+        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r.cacheBuilder
+      }.distinct
+      assert(shared.size == 2, s"the factory persisted ${shared.size} frames on this fixture")
     } finally probe.release(blocking = true)
     Steps.runFromArgs(spark, Seq("l2g_feature_matrix", s"credible_sets=$cs",
       s"variant_index=$vi", s"distances=$dist", s"gene_index=$genes",
@@ -412,6 +426,32 @@ class StepsSpec extends SparkSpec {
     val stored = sc.getRDDStorageInfo.map(_.id).toSet -- storedBefore
     assert(persisted.isEmpty, s"step left persisted RDDs: $persisted")
     assert(stored.isEmpty, s"step left RDD storage: $stored")
+  }
+
+  test("shared frames recompute after every stored block is dropped") {
+    // as if the executors holding the cached blocks were lost: each
+    // shared frame must recompute from its lineage, not fail the read.
+    // Each read plans afresh: a re-run of the same plan could reuse its
+    // shuffle output and never touch the cached blocks.
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("*").collect().map(_.toString).sorted.toSeq
+    val path = (0L until 19L).map(i => (i, i + 1)).toDF("idA", "idB")
+    val cache = graft.core.CacheHandle()
+    try {
+      val matrix = l2gSharedMatrix(cache)
+      // threshold 0 keeps every round distributed, so the path graph's
+      // 5+ rounds include a cut round
+      val (labels, rounds) = graft.operators.Dedup.connectedComponentsWithRounds(
+        path, unionFindThreshold = 0L, cache = cache)
+      assert(rounds >= 3, s"took $rounds rounds; the cut round never ran")
+      for (df <- Seq(matrix, labels)) {
+        val expected = rows(df)
+        assert(expected.nonEmpty)
+        val dropped = org.apache.spark.graft.BlockLoss.dropStoredRdds(spark.sparkContext)
+        assert(dropped.nonEmpty, "nothing was stored to drop")
+        assert(rows(df) == expected)
+      }
+    } finally cache.release(blocking = true)
   }
 
   test("mix_temperature step flattens the source mix") {
