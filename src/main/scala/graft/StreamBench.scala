@@ -24,12 +24,14 @@ import org.apache.spark.sql.streaming.Trigger
   *     [[graft.streaming.StreamingDedup.nearDupFlags]]: LSH
   *     band-bucket keyed flatMapGroupsWithState over the native
   *     MinHash signatures; state = one entry per live bucket, each
-  *     holding ≤ maxBucket signatures.
+  *     holding ≤ maxBucket stride-packed signatures. Buckets never
+  *     expire.
   *  3b. `minhash_near_dup_evict_tws` —
   *     [[graft.streaming.StreamingDedup.nearDupFlagsEvictingTws]]:
-  *     workload 3's banding and cap on transformWithState (RocksDB
-  *     provider), with per-bucket event-time timers that evict
-  *     buckets idle past the watermark horizon.
+  *     workload 3's banding, bucket kernel and state layout on
+  *     transformWithState (RocksDB provider), with per-bucket
+  *     event-time timers that evict buckets idle past the watermark
+  *     horizon.
   *  4. `minhash_near_dup_hot` — workload 3 plus a degenerate hot
   *     bucket (2,000 near-identical arrivals that all land in the
   *     same 16 band buckets — the batch operator's hot-bucket spec
@@ -178,24 +180,18 @@ object StreamBench {
     val r2 = run("incremental_exact_dedup", corpus, in =>
       graft.streaming.StreamingDedup.incrementalExactDedup(in, index, "text"))
 
-    // workload 3: stateful MinHash band-bucket near-dup flagging.
-    // idleTimeout=None: processing-time timeouts never let
-    // processAllAvailable settle (operator scaladoc); the bounded-state
-    // claim under test is the per-bucket signature cap, which is
-    // timeout-independent. Output flags are renamed so the shared
-    // sentinel filter sees a numeric doc_id.
-    def nearDupBuild(maxBucket: Int)(in: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-      val banded = graft.streaming.StreamingDedup
-        .bandedStream(in, "text", "doc_id")
+    // workload 3: stateful MinHash band-bucket near-dup flagging; the
+    // bounded-state claim under test is the per-bucket signature cap.
+    // Output flags are renamed so the shared sentinel filter sees a
+    // numeric doc_id.
+    def nearDupBuild(in: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
       graft.streaming.StreamingDedup
-        .nearDupFlags(spark, banded, threshold = 0.7,
-          maxBucket = maxBucket, idleTimeout = None)
+        .nearDupFlags(in, "text", "doc_id", threshold = 0.7, maxBucket = 64)
         .toDF()
         .select(col("docId").cast("long").as("doc_id"),
           col("band"), col("matchedDocId"), col("similarity"))
-    }
-    val r3 = run("minhash_near_dup", corpus, nearDupBuild(64))
+    val r3 = run("minhash_near_dup", corpus, nearDupBuild)
 
     // workload 3b: the WATERMARK-BOUNDED variant on transformWithState
     // (RocksDB provider) — per-bucket event-time timers evict buckets
@@ -251,7 +247,7 @@ object StreamBench {
     val hotDoc = corpus.head._2
     val hot = corpus ++ Array.tabulate(2000)(i =>
       (1000000000L + i, hotDoc))
-    val r4 = run("minhash_near_dup_hot", hot, nearDupBuild(64))
+    val r4 = run("minhash_near_dup_hot", hot, nearDupBuild)
 
     // workload 5: CDC generation publish. Keys collide (doc_id mod
     // half the corpus) so latest-wins updates are real, and every

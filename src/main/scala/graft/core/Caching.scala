@@ -41,17 +41,17 @@ import org.apache.spark.storage.StorageLevel
   * A persisted frame keeps its lineage, so a block lost with an
   * executor is recomputed rather than failing the job.
   */
-class CacheHandle(level: StorageLevel = StorageLevel.MEMORY_AND_DISK) {
+class CacheHandle {
   private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
-  /** Persist `df` at the handle's storage level and remember it. A
+  /** Persist `df` at `MEMORY_AND_DISK` and remember it. A
     * frame whose plan computes the same result as one the handle
     * already holds is not registered again: Spark already serves it
     * from that cache entry. */
   def persist(df: DataFrame): DataFrame = synchronized {
     val plan = df.queryExecution.analyzed
     if (!frames.exists(_.queryExecution.analyzed.sameResult(plan)))
-      frames += df.persist(level)
+      frames += df.persist(StorageLevel.MEMORY_AND_DISK)
     df
   }
 
@@ -75,7 +75,6 @@ class CacheHandle(level: StorageLevel = StorageLevel.MEMORY_AND_DISK) {
 
 object CacheHandle {
   def apply(): CacheHandle = new CacheHandle()
-  def apply(level: StorageLevel): CacheHandle = new CacheHandle(level)
 
   /** The handle of the lazily built registered queries, which have no
     * terminal-action hook of their own. A shared-session harness calls

@@ -263,15 +263,4 @@ object Coloc {
   private def betaRatioSignAverage(lb: Column, rb: Column): Column =
     avg(when(lb.isNotNull && rb.isNotNull && lb =!= 0 && rb =!= 0,
       signum(lb / rb)))
-
-  /** Standalone average beta-ratio sign per pair (kept for direct use).
-    * reference: src/gentropy/dataset/study_locus_overlap.py:55-83 */
-  def calculateBetaRatio(overlaps: DataFrame): DataFrame = {
-    val s = col("statistics")
-    overlaps
-      .groupBy("leftStudyLocusId", "rightStudyLocusId", "chromosome")
-      .agg(betaRatioSignAverage(s.getField("left_beta"), s.getField("right_beta"))
-        .as("betaRatioSignAverage"))
-      .filter(col("betaRatioSignAverage").isNotNull)
-  }
 }

@@ -215,20 +215,17 @@ object Dedup {
     * common per pair, Jaccard = |∩| / (|A|+|B|−|∩|). Candidates are
     * only pairs sharing ≥1 shingle.
     *
-    * `maxShingleDF` caps the document frequency of index shingles: a
+    * The document frequency of index shingles is capped: a
     * stop-phrase shingle shared by m documents contributes m²/2 join
     * rows — the hot-bucket quadratic that kills this plan at corpus
     * scale. Shingles above the cap are treated as stopwords (removed
     * from both the index and the per-document sizes, so Jaccard is
-    * computed over the informative shingle space). The default
-    * ([[AdaptiveShingleDF]]) derives the cap from the corpus size via
-    * [[adaptiveShingleCap]] — a FIXED default is a 100 TB foot-gun
-    * (one df=99k shingle under a 100k cap still yields ~4.9e9
-    * candidate pairs); pass an explicit positive cap to override.
-    * Dropped shingles are counted and reported on stderr (`[dedup]`)
-    * so truncation is never silent. The sf0.1 testdata's max shingle
-    * df is 25 — far under either cap form, so output there is
-    * identical with or without it.
+    * computed over the informative shingle space). The cap derives
+    * from the corpus size via [[adaptiveShingleCap]], inside the plan
+    * — a FIXED cap is a 100 TB foot-gun (one df=99k shingle under a
+    * 100k cap still yields ~4.9e9 candidate pairs). The sf0.1
+    * testdata's max shingle df is 25 — far under the cap's 1000
+    * floor, so output there is identical with or without it.
     *
     * The stop-shingle set is derived with a groupBy (map-side partial
     * counts — never a window sort-shuffle over the full inverted
@@ -241,9 +238,8 @@ object Dedup {
     * memory). */
   def ngramJaccardPairs(df: DataFrame, textCol: String, idCol: String,
                         shingleSize: Int = 3, threshold: Double = 0.8,
-                        maxShingleDF: Int = AdaptiveShingleDF,
                         cache: graft.core.CacheHandle): DataFrame =
-    shinglePairStats(df, textCol, idCol, shingleSize, maxShingleDF, cache)
+    shinglePairStats(df, textCol, idCol, shingleSize, cache)
       .withColumn("jaccard",
         col("common").cast("double") / (col("nA") + col("nB") - col("common")))
       .filter(col("jaccard") >= threshold)
@@ -267,9 +263,8 @@ object Dedup {
     * informative (capped) shingle space. */
   def containmentPairs(df: DataFrame, textCol: String, idCol: String,
                        shingleSize: Int = 3, threshold: Double = 0.9,
-                       maxShingleDF: Int = AdaptiveShingleDF,
                        cache: graft.core.CacheHandle): DataFrame =
-    shinglePairStats(df, textCol, idCol, shingleSize, maxShingleDF, cache)
+    shinglePairStats(df, textCol, idCol, shingleSize, cache)
       .select(explode(array(
         struct(col("idA").as("idSub"), col("idB").as("idSuper"),
           (col("common").cast("double") / col("nA")).as("containment")),
@@ -280,80 +275,43 @@ object Dedup {
         col("_d.containment").as("containment"))
       .filter(col("containment") >= threshold)
 
-  /** Sentinel default for `maxShingleDF`: derive the stop-shingle cap
-    * from the corpus size via [[adaptiveShingleCap]].
-    *
-    * MIGRATION — BREAKING default change (was a fixed 100000 before
-    * r9): a corpus whose shingle DFs fall between the adaptive cap and
-    * 1e5 (e.g. a 1M-doc corpus now drops shingles at df > 1000) gets
-    * different — deliberately stop-phrase-free — similarity scores,
-    * and the default path adds one corpus count() to resolve the cap.
-    * Pass `maxShingleDF = Dedup.LegacyFixedShingleDF` to recover the
-    * old behaviour exactly; the resolved cap AND this migration
-    * pointer are logged (`[dedup]`) on every default-path run. */
-  val AdaptiveShingleDF: Int = 0
-
-  /** The pre-r9 fixed `maxShingleDF` default — pass this to
-    * [[ngramJaccardPairs]] / [[containmentPairs]] to reproduce
-    * pre-adaptive similarity scores bit-for-bit (and skip the
-    * cap-resolving corpus count()). Kept as a named constant so the
-    * migration away from it is greppable, not folklore. */
-  val LegacyFixedShingleDF: Int = 100000
-
-  /** Corpus-size-derived stop-shingle DF cap: max(1000, nDocs/10⁴).
+  /** Corpus-size-derived stop-shingle DF cap over the document count
+    * `nDocs`: max(1000, nDocs/10⁴), saturating at Int.MaxValue.
     * Bounds the hot-bucket quadratic RELATIVE to scale — at 1e9 docs
     * the cap is 1e5 (a df-at-cap shingle is 0.01% of the corpus: a
     * genuine stop-phrase), while a fixed 1e5 cap at a 1e6-doc corpus
     * would admit a shingle shared by 10% of all documents
     * (~5e9 candidate pairs from one bucket). The 1000 floor keeps
     * small/test corpora exact: at sf0.1 the max observed df is 25. */
-  def adaptiveShingleCap(nDocs: Long): Int =
-    math.min(math.max(1000L, nDocs / 10000L), Int.MaxValue.toLong).toInt
+  def adaptiveShingleCap(nDocs: Column): Column =
+    least(greatest(lit(1000L), (nDocs / 10000).cast("long")),
+      lit(Int.MaxValue.toLong))
 
   /** Per undirected candidate pair (docs sharing ≥1 surviving
     * shingle): (idA, idB, common, nA, nB) with idA < idB — the shared
     * inverted-index core of [[ngramJaccardPairs]] and
-    * [[containmentPairs]]. Shingles above the resolved DF cap
-    * (`maxShingleDF`, or [[adaptiveShingleCap]] when left at the
-    * [[AdaptiveShingleDF]] sentinel) are stop-phrases: dropped from
-    * the index AND the per-doc sizes, so every downstream measure is
-    * over the informative shingle space and the m²/2 hot-bucket join
-    * blow-up is structurally bounded. The dropped-shingle count is
-    * computed on the (tiny) stop set and reported on stderr — silent
-    * truncation would read as "covered everything" when it didn't. */
+    * [[containmentPairs]]. Shingles above [[adaptiveShingleCap]] of
+    * the corpus size are stop-phrases: dropped from the index AND the
+    * per-doc sizes, so every downstream measure is over the
+    * informative shingle space and the m²/2 hot-bucket join blow-up is
+    * structurally bounded. The cap is resolved in the plan from a
+    * document-count subquery, so building the frame runs no job. */
   private def shinglePairStats(df: DataFrame, textCol: String,
                                idCol: String, shingleSize: Int,
-                               maxShingleDF: Int,
                                cache: graft.core.CacheHandle): DataFrame = {
-    val cap =
-      if (maxShingleDF > 0) maxShingleDF
-      else {
-        val resolved = adaptiveShingleCap(df.count())
-        // always announce the resolved adaptive cap (not only when it
-        // drops something): callers should see which threshold applied,
-        // and callers migrating from the pre-r9 fixed default get the
-        // recovery pointer in the same line
-        System.err.println(s"[dedup] adaptive stop-shingle DF cap " +
-          s"resolved to $resolved (pre-r9 fixed default was " +
-          s"${LegacyFixedShingleDF}; pass maxShingleDF = " +
-          "Dedup.LegacyFixedShingleDF to recover it)")
-        resolved
-      }
     // native one-pass shingle set (the HOF formulation re-slices the
     // token array per position through the interpreter — it was more
     // than half the query's cost at sf0.1)
     val sh0 = spread(df, idCol).select(col(idCol).as("id"),
       explode(graft.plans.SketchFunctions
         .distinctShingles(col(textCol), shingleSize)).as("shingle"))
-    val stopShingles = cache.persist(sh0
+    // the document count enters as a scalar subquery: a one-row cross
+    // join would plan as a nested-loop join
+    val nDocs = df.agg(count(lit(1))).scalar()
+    val stopShingles = sh0
       .groupBy("shingle").agg(count(lit(1)).as("_df"))
-      .filter(col("_df") > cap)
-      .select("shingle"))
-    val nStop = stopShingles.count()
-    if (nStop > 0)
-      System.err.println(s"[dedup] shingle DF cap $cap dropped $nStop " +
-        s"stop-shingle(s) from the inverted index (similarity is over " +
-        s"the informative shingle space)")
+      .filter(col("_df") > adaptiveShingleCap(nDocs))
+      .select("shingle")
     val sh = cache.persist(
       sh0.join(broadcast(stopShingles), Seq("shingle"), "left_anti"))
     val sizes = sh.groupBy("id").agg(count(lit(1)).as("n"))

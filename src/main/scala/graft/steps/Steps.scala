@@ -578,11 +578,7 @@ object Steps {
           a.get("text_col").getOrElse("text"),
           a.get("id_col").getOrElse("doc_id"),
           shingleSize = a.int("shingle_size", 3),
-          threshold = a.double("threshold", 0.9),
-          // explicit stop-shingle cap opt-out of the adaptive default
-          // (pre-r9 fixed behaviour: max_shingle_df=100000)
-          maxShingleDF = a.int("max_shingle_df", Dedup.AdaptiveShingleDF),
-          cache = h), a("out")))),
+          threshold = a.double("threshold", 0.9), cache = h), a("out")))),
 
     Step("dedup_minhash",
       "MinHash+LSH near-duplicate pairs on a document table",
@@ -1028,15 +1024,7 @@ object GraftCli {
       return
     }
     val spark = graft.GraftSession.getOrCreate()
-    // SPARK_GRAFT_PROFILE=1: dump the step's costliest Spark stages
-    // (executor-CPU-ranked) to stderr on exit — the shared profiler,
-    // for attributing step-cost differences between CLI, chain, and
-    // bench contexts.
-    val profiler = graft.core.StageProfiler.ifEnabled(spark, "cliprofile")
     try Steps.runFromArgs(spark, args.toSeq)
-    finally {
-      profiler.foreach(_.dump(args.head))
-      spark.stop()
-    }
+    finally spark.stop()
   }
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, KeyValueGroupedDataset,
+  SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -14,7 +15,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * built-in expresses the semantics). Near-dup detection keys the
   * stream by MinHash LSH band buckets — the same banding as the batch
   * operator, via the native one-pass signature expression — and keeps
-  * a bounded per-bucket signature list in `flatMapGroupsWithState`;
+  * a bounded per-bucket signature set in `flatMapGroupsWithState`;
   * an arriving document is flagged when any stored bucket-mate's
   * signature agrees on ≥ `threshold` of the minima. Per-bucket caps
   * bound both state size and comparison cost, mirroring the batch
@@ -52,119 +53,124 @@ object StreamingDedup {
         "left_anti")
       .drop("_digest")
 
-  case class BandedDoc(band: Int, bandHash: Long, docId: String,
-                       sig: Seq[Long])
   case class BandedDocT(ts: java.sql.Timestamp, band: Int, bandHash: Long,
                         docId: String, sig: Seq[Long])
-  case class BucketState(sigs: List[(String, Seq[Long])])
-  /** [[nearDupFlagsEvictingTws]]'s per-bucket `ValueState` — a
-    * SEPARATE class from [[BucketState]] so the processing-time
-    * variant's state-store schema (and any existing checkpoints of it)
-    * stays untouched, and FLAT: `sigsFlat` holds the stored signatures
-    * row-major with a fixed stride (`sigsFlat.length / docIds.length`
-    * minima per signature) instead of a nested
-    * `List[(String, Seq[Long])]`, so a state read or write is a bulk
+  /** The per-bucket state of both near-dup operators. FLAT: `sigsFlat`
+    * holds the stored signatures row-major with a fixed stride
+    * (`sigsFlat.length / docIds.length` minima per signature) instead
+    * of a nested list, so a state read or write is a bulk
     * primitive-array copy rather than thousands of small objects per
-    * bucket. `expireAtMs` is the bucket's horizon and the timestamp of
-    * its one registered timer, so the data branch can detect a lapsed
-    * bucket before the timer fires. */
+    * bucket. `expireAtMs` is [[nearDupFlagsEvictingTws]]'s bucket
+    * horizon and the timestamp of its one registered timer, so the data
+    * branch can detect a lapsed bucket before the timer fires;
+    * [[nearDupFlags]] never expires a bucket and stores `Long.MaxValue`. */
   case class EvictBucketState(docIds: Array[String], sigsFlat: Array[Long],
                               expireAtMs: Long)
   case class NearDupFlag(docId: String, band: Int, matchedDocId: String,
                          similarity: Double)
 
-  /** Expand a document stream into LSH band-bucket rows carrying the
-    * full MinHash signature. */
-  def bandedStream(docs: DataFrame, textCol: String, idCol: String,
-                   shingleSize: Int = 3, numHashes: Int = 64,
-                   bands: Int = 16): Dataset[BandedDoc] = {
+  /** Expand `docs` into LSH band-bucket rows carrying the full MinHash
+    * signature, grouped by (band, bandHash) — the one banding of both
+    * near-dup operators. With `eventTime` = (column, watermark delay)
+    * the rows carry that column as a watermarked `ts`; without it `ts`
+    * is null. */
+  private def bandedBuckets(docs: DataFrame, textCol: String, idCol: String,
+                            shingleSize: Int, numHashes: Int, bands: Int,
+                            eventTime: Option[(String, String)])
+    : KeyValueGroupedDataset[(Int, Long), BandedDocT] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val rowsPerBand = numHashes / bands
-    docs
-      .select(col(idCol).cast("string").as("docId"),
+    // project/cast FIRST, watermark AFTER: an alias or cast applied on
+    // top of a watermarked column mints a new attribute without the
+    // watermark tag, and the event-time check then fails
+    val ts = eventTime.fold(lit(null))(e => col(e._1)).cast("timestamp")
+    val projected = docs
+      .select(ts.as("ts"), col(idCol).cast("string").as("docId"),
         graft.plans.SketchFunctions
           .minhashSignature(col(textCol), shingleSize, numHashes).as("sig"))
-      .select(col("docId"), col("sig"),
+    eventTime.fold(projected)(e => projected.withWatermark("ts", e._2))
+      .select(col("ts"), col("docId"), col("sig"),
         explode(graft.operators.Dedup.lshBandKeys(col("sig"), bands,
-          rowsPerBand)).as("bk"))
-      .select(col("bk.band").as("band"), col("bk.bandHash").as("bandHash"),
-        col("docId"), col("sig"))
-      .as[BandedDoc]
+          numHashes / bands)).as("bk"))
+      .select(col("ts"), col("bk.band").as("band"),
+        col("bk.bandHash").as("bandHash"), col("docId"), col("sig"))
+      .as[BandedDocT]
+      .groupByKey(d => (d.band, d.bandHash))
   }
 
-  /** Per-arrival bucket kernel of [[nearDupFlags]]: compare `sig`
-    * against every stored bucket-mate (flagging estimated Jaccard ≥
-    * threshold), then store it under the per-bucket cap. Returns the
-    * updated signature list. [[evictStep]] is its flat port. */
-  private[streaming] def compareAndStore(
-      docId: String, sig: Seq[Long], band: Int,
-      sigs0: List[(String, Seq[Long])], threshold: Double, maxBucket: Int,
-      out: scala.collection.mutable.ArrayBuffer[NearDupFlag])
-    : List[(String, Seq[Long])] = {
-    var sigs = sigs0
-    sigs.foreach { case (otherId, otherSig) =>
-      if (otherId != docId) {
-        val n = math.min(sig.length, otherSig.length)
-        var m = 0
-        var i = 0
-        while (i < n) {
-          if (sig(i) == otherSig(i)) m += 1
-          i += 1
+  /** The near-dup bucket kernel of both operators, over one bucket's
+    * stored signatures (`prior`, or none). [[offer]]
+    * compares an arrival with every stored bucket-mate of another id,
+    * flags estimated Jaccard (the fraction of matching minima) ≥
+    * `threshold`, then stores the arrival while the bucket holds fewer
+    * than `maxBucket` signatures and not its id. Contract: one
+    * signature length per feed, non-empty — the first stored signature
+    * fixes the stride, a later one of another length is zero-padded or
+    * trimmed to it, and an empty one is never stored. */
+  private[streaming] final class BucketKernel(band: Int, threshold: Double,
+      maxBucket: Int, prior: Option[EvictBucketState]) {
+    var ids: Array[String] = prior.fold(Array.empty[String])(_.docIds)
+    var flat: Array[Long] = prior.fold(Array.empty[Long])(_.sigsFlat)
+    val flags = scala.collection.mutable.ArrayBuffer.empty[NearDupFlag]
+    /** Whether any arrival was stored. */
+    var stored = false
+
+    def offer(docId: String, sig: Seq[Long]): Unit = {
+      val n = ids.length
+      val stride = if (n > 0) flat.length / n else sig.length
+      val m = math.min(sig.length, stride)
+      var i = 0
+      while (i < n) {
+        if (ids(i) != docId) {
+          var matches = 0
+          var j = 0
+          while (j < m) {
+            if (sig(j) == flat(i * stride + j)) matches += 1
+            j += 1
+          }
+          val est = if (m == 0) 0.0 else matches.toDouble / m
+          if (est >= threshold)
+            flags += NearDupFlag(docId, band, ids(i), est)
         }
-        val est = if (n == 0) 0.0 else m.toDouble / n
-        if (est >= threshold)
-          out += NearDupFlag(docId, band, otherId, est)
+        i += 1
+      }
+      if (n < maxBucket && !ids.contains(docId) && stride > 0) {
+        ids = ids :+ docId
+        flat = flat ++ java.util.Arrays.copyOf(sig.toArray, stride)
+        stored = true
       }
     }
-    if (sigs.length < maxBucket && !sigs.exists(_._1 == docId))
-      sigs = (docId, sig) :: sigs
-    sigs
   }
 
-  /** Stateful near-dup flagging: one state entry per live band bucket,
-    * holding at most `maxBucket` (docId, signature) pairs; each
-    * arriving doc is compared against its bucket-mates and flagged
-    * when estimated Jaccard (matching minima fraction) ≥ `threshold`.
-    * With `idleTimeout` set, a processing-time timeout expires idle
-    * buckets so state cannot grow without bound; leave it None in
-    * tests — the periodic timeout wake-up batches never let
-    * `processAllAvailable` settle (same caveat as
-    * [[EventStreams.sessionize]]). */
-  def nearDupFlags(spark: SparkSession, banded: Dataset[BandedDoc],
+  /** Stateful near-dup flagging: one `flatMapGroupsWithState` entry per
+    * live band bucket, holding at most `maxBucket` signatures; each
+    * arriving doc is compared against its bucket-mates
+    * ([[BucketKernel]]) and flagged when estimated Jaccard ≥
+    * `threshold`. Buckets never expire, so state grows with the
+    * distinct buckets of the corpus, each under the cap;
+    * [[nearDupFlagsEvictingTws]] also bounds the bucket count. */
+  def nearDupFlags(docs: DataFrame, textCol: String, idCol: String,
                    threshold: Double = 0.7, maxBucket: Int = 64,
-                   idleTimeout: Option[String] = Some("30 minutes"))
-    : Dataset[NearDupFlag] = {
+                   shingleSize: Int = 3, numHashes: Int = 64,
+                   bands: Int = 16): Dataset[NearDupFlag] = {
+    val spark = docs.sparkSession
     import spark.implicits._
-    banded
-      .groupByKey(d => (d.band, d.bandHash))
-      .flatMapGroupsWithState(OutputMode.Append,
-        if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-        else GroupStateTimeout.NoTimeout)(
-        (key: (Int, Long), batch: Iterator[BandedDoc],
-         state: GroupState[BucketState]) => {
-          if (batch.isEmpty && state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var sigs = state.getOption.map(_.sigs).getOrElse(Nil)
-            val out = scala.collection.mutable.ArrayBuffer.empty[NearDupFlag]
-            batch.foreach { d =>
-              sigs = compareAndStore(d.docId, d.sig, key._1, sigs,
-                threshold, maxBucket, out)
-            }
-            state.update(BucketState(sigs))
-            idleTimeout.foreach(state.setTimeoutDuration)
-            out.iterator
-          }
+    bandedBuckets(docs, textCol, idCol, shingleSize, numHashes, bands, None)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
+        (key: (Int, Long), batch: Iterator[BandedDocT],
+         state: GroupState[EvictBucketState]) => {
+          val k = new BucketKernel(key._1, threshold, maxBucket, state.getOption)
+          batch.foreach(d => k.offer(d.docId, d.sig))
+          if (k.stored)
+            state.update(EvictBucketState(k.ids, k.flat, Long.MaxValue))
+          k.flags.iterator
         })
   }
 
   /** One bucket-batch of [[nearDupFlagsEvictingTws]]: lapse check
-    * against the current watermark, flat compare+store (the
-    * stride-packed port of [[compareAndStore]]), horizon that never
-    * regresses. `write` is false when neither the signature rows nor
-    * the horizon changed. */
+    * against the current watermark, the [[BucketKernel]] over the live
+    * signatures, horizon that never regresses. `write` is false when
+    * neither the signature rows nor the horizon changed. */
   private[streaming] case class EvictStep(next: EvictBucketState,
                                           write: Boolean,
                                           flags: Seq[NearDupFlag])
@@ -178,49 +184,14 @@ object StreamingDedup {
     // the stale state intact — drop the lapsed signatures BEFORE
     // comparing
     val lapsed = prior.exists(_.expireAtMs <= wm)
-    var ids: Array[String] =
-      prior match { case Some(s) if !lapsed => s.docIds; case _ => Array.empty }
-    var flat: Array[Long] =
-      prior match { case Some(s) if !lapsed => s.sigsFlat; case _ => Array.empty }
-    var changed = lapsed && prior.exists(_.docIds.nonEmpty)
-    val out = scala.collection.mutable.ArrayBuffer.empty[NearDupFlag]
+    val k = new BucketKernel(band, threshold, maxBucket,
+      prior.filterNot(_ => lapsed))
     var maxTs = Long.MinValue
     batch.foreach { d =>
       if (d.ts != null && d.ts.getTime > maxTs) maxTs = d.ts.getTime
-      val sig = d.sig
-      val n = ids.length
-      val stride = if (n > 0) flat.length / n else sig.length
-      var i = 0
-      while (i < n) {
-        if (ids(i) != d.docId) {
-          val m = math.min(sig.length, stride)
-          var matches = 0
-          var j = 0
-          while (j < m) {
-            if (sig(j) == flat(i * stride + j)) matches += 1
-            j += 1
-          }
-          val est = if (m == 0) 0.0 else matches.toDouble / m
-          if (est >= threshold)
-            out += NearDupFlag(d.docId, band, ids(i), est)
-        }
-        i += 1
-      }
-      if (n < maxBucket && !ids.contains(d.docId) && stride > 0) {
-        // keep the flat layout rectangular: pad/trim a signature of
-        // a different length to the bucket's stride. The public
-        // operator always emits fixed-length (numHashes) signatures,
-        // so this is a no-op there; for a hand-fed heterogeneous
-        // bucket this DIVERGES from the list kernel (trimming changes
-        // the similarity denominator, zero-padding can match zero
-        // minima) and an empty signature is never stored — documented
-        // contract: one signature length per feed, non-empty.
-        val row = java.util.Arrays.copyOf(sig.toArray, stride)
-        ids = ids :+ d.docId
-        flat = flat ++ row
-        changed = true
-      }
+      k.offer(d.docId, d.sig)
     }
+    val changed = k.stored || (lapsed && prior.exists(_.docIds.nonEmpty))
     // expire once the WATERMARK passes last-arrival + horizon; fall
     // back to watermark + horizon for all-null-ts batches, and never
     // REGRESS a live bucket's stored horizon (an out-of-order
@@ -234,7 +205,7 @@ object StreamingDedup {
     val expireAt =
       math.max(floor0, math.max(base + evictAfterMs, wm + 1))
     val write = prior.isEmpty || changed || expireAt != prior.get.expireAtMs
-    EvictStep(EvictBucketState(ids, flat, expireAt), write, out.toSeq)
+    EvictStep(EvictBucketState(k.ids, k.flat, expireAt), write, k.flags.toSeq)
   }
 
   /** The state store provider [[nearDupFlagsEvictingTws]] requires. */
@@ -295,24 +266,8 @@ object StreamingDedup {
         "engine would otherwise fail at query start with a provider " +
         "error that doesn't name the fix).")
     import spark.implicits._
-    val rowsPerBand = numHashes / bands
-    // project/cast FIRST, watermark AFTER: an alias or cast applied on
-    // top of a watermarked column mints a new attribute without the
-    // watermark tag, and the event-time check then fails
-    val banded = docs
-      .select(col(tsCol).cast("timestamp").as("ts"),
-        col(idCol).cast("string").as("docId"),
-        graft.plans.SketchFunctions
-          .minhashSignature(col(textCol), shingleSize, numHashes).as("sig"))
-      .withWatermark("ts", watermark)
-      .select(col("ts"), col("docId"), col("sig"),
-        explode(graft.operators.Dedup.lshBandKeys(col("sig"), bands,
-          rowsPerBand)).as("bk"))
-      .select(col("ts"), col("bk.band").as("band"),
-        col("bk.bandHash").as("bandHash"), col("docId"), col("sig"))
-      .as[BandedDocT]
-    banded
-      .groupByKey(d => (d.band, d.bandHash))
+    bandedBuckets(docs, textCol, idCol, shingleSize, numHashes, bands,
+        Some((tsCol, watermark)))
       .transformWithState(
         new NearDupEvictProcessor(threshold, maxBucket, evictAfterMs),
         org.apache.spark.sql.streaming.TimeMode.EventTime(),

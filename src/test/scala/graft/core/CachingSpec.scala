@@ -74,11 +74,9 @@ class CachingSpec extends SparkSpec {
     fillsInOneAction(Seq(child, parent), reader)
   }
 
-  test("persistTruncated stores the checkpoint at the handle's storage level") {
-    // the name predates the one sharing path: `persist` is it now, and
-    // its cache entry must carry the handle's level
+  test("persist stores the frame deserialized in memory, spilling to disk") {
     import spark.implicits._
-    val h = CacheHandle(StorageLevel.MEMORY_ONLY_SER)
+    val h = CacheHandle()
     val df = h.persist((1 to 20).toDF("v").filter($"v" % 3 === 0))
     try {
       assert(df.count() == 6)
@@ -86,7 +84,7 @@ class CachingSpec extends SparkSpec {
         case r: InMemoryRelation => r.cacheBuilder.storageLevel
       }
       assert(levels.nonEmpty, "no InMemoryRelation behind the persisted frame")
-      assert(levels.forall(l => !l.deserialized && l.useMemory), levels.mkString(","))
+      assert(levels.forall(_ == StorageLevel.MEMORY_AND_DISK), levels.mkString(","))
     } finally h.release(blocking = true)
   }
 

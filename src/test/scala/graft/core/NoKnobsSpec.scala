@@ -22,16 +22,13 @@ class NoKnobsSpec extends AnyFunSuite {
   private val read =
     """sys\.env|sys\.props|System\.getenv|System\.getProperty""".r
 
-  /** (file under src/main/scala/graft, variable) reads still allowed.
-    * The stage profiler's switch goes when the run-metrics path
-    * replaces the profiler (ROADMAP item 6). */
+  /** (file under src/main/scala/graft, variable) reads still allowed. */
   private val allowed = Set(
     "GraftSession.scala" -> "SPARK_GRAFT_CPUS",
     "Bench.scala" -> "SPARK_GRAFT_SF_DIR",
     "Bench.scala" -> "SPARK_GRAFT_QUERIES",
     "Verify.scala" -> "SPARK_GRAFT_QUERIES",
-    "StreamBench.scala" -> "SPARK_GRAFT_STREAM_ONLY",
-    "core/StageProfiler.scala" -> "SPARK_GRAFT_PROFILE")
+    "StreamBench.scala" -> "SPARK_GRAFT_STREAM_ONLY")
 
   private def scalaFiles(dir: Path, depth: Int): List[Path] = {
     val files = Files.walk(dir, depth)

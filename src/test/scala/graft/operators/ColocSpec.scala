@@ -219,7 +219,9 @@ class ColocSpec extends SparkSpec {
       ("snp2", Some(1.0), Some(1.0), Some(-0.1), Some(0.2), Some(0.25), Some(0.75)),
       ("snp3", Some(1.0), Some(1.0), Some(0.0), Some(0.2), Some(0.2), Some(0.2)),
       ("snp4", Some(1.0), Some(1.0), None, Some(0.2), Some(0.2), Some(0.2))))
-    val r = Coloc.calculateBetaRatio(df).select("betaRatioSignAverage").head
+    // eCAVIAR keeps every pair (COLOC's evidence filter drops this one),
+    // and its aggregate carries the shared beta-ratio expression
+    val r = Coloc.eCaviar(df).select("betaRatioSignAverage").head
     assert(math.abs(r.getDouble(0) - 0.0) < 1e-12) // (+1 - 1) / 2
   }
 }

@@ -110,36 +110,41 @@ class DedupSpec extends SparkSpec {
     val docs = (0 until 60)
       .map(i => (i.toLong, s"lorem ipsum dolor unique$i token$i word$i"))
       .toDF("doc_id", "text")
+    // DF=60 sits under the 1000 floor of the cap: every pair survives
     val unCapped = Dedup.ngramJaccardPairs(docs, "text", "doc_id",
       threshold = 0.0, cache = CacheHandle())
     assert(unCapped.count() == 60L * 59 / 2)
-    // the boilerplate shingle has DF=60 > 10: dropped from the index,
-    // no candidate pairs remain, nothing quadratic reaches the join
-    val capped = Dedup.ngramJaccardPairs(docs, "text", "doc_id",
-      threshold = 0.0, maxShingleDF = 10, cache = CacheHandle())
+    // 1,001 short docs sharing that phrase cross the floor: the
+    // boilerplate shingle is dropped from the index, no candidate pairs
+    // remain, nothing quadratic reaches the join
+    val crowd = (0 until 1001)
+      .map(i => (i.toLong, s"lorem ipsum dolor unique$i token$i word$i"))
+      .toDF("doc_id", "text")
+    val capped = Dedup.ngramJaccardPairs(crowd, "text", "doc_id",
+      threshold = 0.0, cache = CacheHandle())
     assert(capped.count() == 0)
-    // default cap leaves ordinary corpora untouched
+    // the cap leaves ordinary corpora untouched: exactly the pair that
+    // shares shingles survives
     val normal = Seq((1L, "a b c d e"), (2L, "a b c d x"), (3L, "zz yy xx ww vv"))
       .toDF("doc_id", "text")
-    val withDefault = Dedup.ngramJaccardPairs(normal, "text", "doc_id",
+    val withCap = Dedup.ngramJaccardPairs(normal, "text", "doc_id",
       threshold = 0.1,
       cache = CacheHandle()).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val withHugeCap = Dedup.ngramJaccardPairs(normal, "text", "doc_id",
-      threshold = 0.1, maxShingleDF = Int.MaxValue, cache = CacheHandle())
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(withDefault == withHugeCap && withDefault == Set((1L, 2L)))
+    assert(withCap == Set((1L, 2L)))
   }
 
   test("adaptive shingle cap: formula pins, and the default drops a " +
     "planted stop-phrase at >1000 DF") {
     // cap = max(1000, nDocs/1e4), saturating at Int.MaxValue
-    assert(Dedup.adaptiveShingleCap(0L) == 1000)
-    assert(Dedup.adaptiveShingleCap(10_000_000L) == 1000)
-    assert(Dedup.adaptiveShingleCap(100_000_000L) == 10000)
-    assert(Dedup.adaptiveShingleCap(1_000_000_000L) == 100000)
-    assert(Dedup.adaptiveShingleCap(Long.MaxValue) == Int.MaxValue)
+    def cap(nDocs: Long): Long = spark.range(1)
+      .select(Dedup.adaptiveShingleCap(lit(nDocs))).head.getLong(0)
+    assert(cap(0L) == 1000)
+    assert(cap(10_000_000L) == 1000)
+    assert(cap(100_000_000L) == 10000)
+    assert(cap(1_000_000_000L) == 100000)
+    assert(cap(Long.MaxValue) == Int.MaxValue)
     // 1100 docs share one boilerplate shingle and are otherwise unique:
-    // under the adaptive default (cap=1000 here) the boilerplate is a
+    // under the cap (1000 at this corpus size) the boilerplate is a
     // stop-phrase — zero candidate pairs reach the join, vs the
     // 1100·1099/2 hot-bucket rows a fixed 1e5 cap would admit
     val big = (0 until 1100)
@@ -147,9 +152,11 @@ class DedupSpec extends SparkSpec {
       .toDF("doc_id", "text")
     assert(Dedup.ngramJaccardPairs(big, "text", "doc_id",
       threshold = 0.0, cache = CacheHandle()).count() == 0)
-    assert(Dedup.ngramJaccardPairs(big, "text", "doc_id",
-      threshold = 0.0, maxShingleDF = 100000,
-      cache = CacheHandle()).count() == 1100L * 1099 / 2)
+    // 1000 of them sit at the cap, not above it: the shingle stays and
+    // every pair is a candidate
+    assert(Dedup.ngramJaccardPairs(big.filter(col("doc_id") < 1000), "text",
+      "doc_id", threshold = 0.0,
+      cache = CacheHandle()).count() == 1000L * 999 / 2)
   }
 
   test("native sketch expressions match the HOF formulations exactly") {

@@ -64,8 +64,7 @@ class BuildJobsSpec extends SparkSpec {
   private val buildJobs = Map(
     "q_ann_ivf" -> 1, "q_ann_pq" -> 1, "q_ann_sq8" -> 2,
     "q_dedup_cluster_histogram" -> 10, "q_dedup_components" -> 10,
-    "q_dedup_containment" -> 5, "q_dedup_decontaminate_bloom" -> 3,
-    "q_dedup_keep_best" -> 10, "q_dedup_ngram_jaccard" -> 5,
+    "q_dedup_decontaminate_bloom" -> 3, "q_dedup_keep_best" -> 10,
     "q_dedup_semantic" -> 2, "q_kmeans_step" -> 2,
     "q_pack_shards" -> 2, "q_pca_cov" -> 2,
     "q_s14_ontology_closure" -> 7, "q_search_rrf" -> 7,

@@ -201,41 +201,48 @@ class StreamingDedupSpec extends SparkSpec {
       s"straggler shrank the horizon: ${step.next.expireAtMs} < $storedExpire")
   }
 
-  test("flat evictStep kernel is flag-parity with the list kernel on random feeds") {
-    // the evicting operator's evictStep is a flat (stride-packed) port
-    // of the capped variant's List-based compareAndStore — random feeds
-    // (duplicate ids, varying bucket pressure, thresholds) must produce
-    // the SAME flag multiset and the same stored membership, or the two
-    // operators silently diverge
+  test("the bucket kernel matches a brute-force pairwise reference on random feeds") {
+    // both near-dup operators run BucketKernel. The reference, pairwise
+    // over the feed: arrival j is stored iff it is the first arrival of
+    // its id and that id is among the first maxBucket distinct ids;
+    // arrival i flags every earlier stored arrival j of another id
+    // whose minima agree on ≥ threshold of the positions. Random feeds
+    // (duplicate ids, varying bucket pressure, thresholds) must give
+    // the same flag multiset and the same stored membership.
     val rnd = new scala.util.Random(11)
     for (trial <- 1 to 50) {
       val sigLen = 4 + rnd.nextInt(5)
       val maxBucket = 1 + rnd.nextInt(4)
       val threshold = 0.4 + rnd.nextDouble() * 0.5
       val nDocs = 1 + rnd.nextInt(10)
-      val docs = (0 until nDocs).map { i =>
+      val docs = (0 until nDocs).map { _ =>
         val id = "d" + rnd.nextInt(6) // collisions on purpose
         val sig = Seq.tabulate(sigLen)(j =>
           (rnd.nextInt(3) + j * 10).toLong) // overlapping minima
-        doc(id, 1000000L + i * 1000L, sig)
+        (id, sig)
       }
-      // list kernel (the processing-time variant's path)
-      val outList = scala.collection.mutable.ArrayBuffer.empty[NearDupFlag]
-      var sigs = List.empty[(String, Seq[Long])]
-      docs.foreach { d =>
-        sigs = compareAndStore(d.docId, d.sig, 0, sigs,
-          threshold, maxBucket, outList)
-      }
-      // flat kernel (fresh state, watermark far behind — no lapse)
-      val step = evictStep(None, 0L, 0, docs.iterator, threshold, maxBucket,
-        evictAfterMs = 600000L)
-      def canon(fs: Iterable[NearDupFlag]) =
-        fs.map(f => (f.docId, f.matchedDocId,
-          math.round(f.similarity * 1e9))).toSeq.sorted
-      assert(canon(step.flags) == canon(outList),
-        s"trial $trial: flags diverged\nflat=${step.flags}\nlist=$outList")
-      assert(step.next.docIds.toSet == sigs.map(_._1).toSet,
+      val firstIds = docs.map(_._1).distinct
+      val stored = docs.indices.map(j =>
+        docs.indexWhere(_._1 == docs(j)._1) == j &&
+          firstIds.indexOf(docs(j)._1) < maxBucket)
+      val want = for {
+        i <- docs.indices
+        j <- 0 until i
+        if stored(j) && docs(j)._1 != docs(i)._1
+        sim = docs(i)._2.zip(docs(j)._2).count { case (a, b) => a == b }
+          .toDouble / sigLen
+        if sim >= threshold
+      } yield (docs(i)._1, docs(j)._1, sim)
+
+      val k = new BucketKernel(0, threshold, maxBucket, None)
+      docs.foreach { case (id, sig) => k.offer(id, sig) }
+      def canon(fs: Iterable[(String, String, Double)]) =
+        fs.map { case (a, b, sim) => (a, b, math.round(sim * 1e9)) }.toSeq.sorted
+      assert(canon(k.flags.map(f => (f.docId, f.matchedDocId, f.similarity))) ==
+        canon(want), s"trial $trial: flags diverged\nkernel=${k.flags}\nwant=$want")
+      assert(k.ids.toSet == docs.indices.filter(stored).map(docs(_)._1).toSet,
         s"trial $trial: stored membership diverged")
+      assert(k.flat.length == k.ids.length * sigLen)
     }
   }
 
@@ -243,9 +250,8 @@ class StreamingDedupSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val base = "the quick brown fox jumps over the lazy dog " * 5
     val input = MemoryStream[(String, String)]
-    val banded = bandedStream(input.toDF().toDF("doc_id", "text"),
-      "text", "doc_id")
-    val q = nearDupFlags(spark, banded, threshold = 0.7, idleTimeout = None)
+    val q = nearDupFlags(input.toDF().toDF("doc_id", "text"), "text", "doc_id",
+      threshold = 0.7)
       .writeStream.format("memory").queryName("neardup")
       .outputMode("append").start()
     try {
